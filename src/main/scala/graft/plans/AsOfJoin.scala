@@ -60,7 +60,7 @@ case class AsOfJoinExec(
   // runtime coalescing (round 2 pinned numShufflePartitions, opting the
   // exchanges out of AQE — 32 fixed sorts however small the input).
   // zipPartitions still hard-fails on any count mismatch, and
-  // AsOfPlanSpec's equality + timing tests exercise exactly that.
+  // AsOfPlanSpec's equality + plan-shape tests exercise exactly that.
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(leftKey)) ::
       ClusteredDistribution(Seq(rightKey)) :: Nil

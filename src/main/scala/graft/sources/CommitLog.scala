@@ -2,8 +2,9 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min, when}
+import org.apache.spark.sql.types.StructType
 
 /** Lakehouse-style OPTIMISTIC COMMIT LOG (SURVEY.md §3.2; VERDICT r10
   * missing #4 — the [U] capability model's task-queue lease analogue):
@@ -1180,12 +1181,12 @@ object CommitLog {
         .flatMap(v => readCommitFile(spark, root, v)).headOption)
   }
 
-  /** Read `dirs` as one frame. When the commit RECORDS a table schema
-    * (additive evolution happened — r12), the read pins it: parquet fills
+  /** Read `dirs` as one frame under the commit's RECORDED table schema
+    * (every commit records one): no inference job, and parquet fills
     * columns a pre-evolution directory lacks with typed NULLs, exactly the
-    * q_source_evolved union semantics, WITHOUT the per-file footer-merge
-    * pass `mergeSchema` would pay — the log already knows the answer.
-    * Schema-less commits (the common case) read footer-first as before. */
+    * q_source_evolved union semantics, WITHOUT the footer-merge pass
+    * `mergeSchema` would pay — the log already knows the answer. Only a
+    * commit written before schemas were recorded reads footer-first. */
   private def readDirs(spark: SparkSession, root: String,
       schemaDDL: Option[String], colMap: Map[String, String],
       dirs: Seq[String], withPos: Boolean = false): DataFrame = {
@@ -1221,8 +1222,8 @@ object CommitLog {
           } ++ posNames.map(bt)): _*)
         }
       case None =>
-        // a nonEmpty colMap always travels with a recorded DDL (the
-        // activating verb records both) — footer-first otherwise
+        // a commit from before schemas were recorded (never column-
+        // mapped: the activating verb records both) — footer-first
         var df = spark.read.parquet(paths: _*)
         if (withPos) df = df
           .withColumn(DvPathCol, col("_metadata.file_path"))
@@ -1234,6 +1235,24 @@ object CommitLog {
   private def load(spark: SparkSession, root: String, c: Commit): DataFrame =
     readCommitDirs(spark, root, c, c.dataDirs)
 
+  /** The schema `c` reads under, from its recorded DDL — no file touched.
+    * A commit from before schemas were recorded falls back to footer-first
+    * inference (one Spark job); the next commit records it. */
+  private def schemaOf(spark: SparkSession, root: String, c: Commit): StructType =
+    c.schemaDDL.map(ddl => GraftBridge.asNullable(StructType.fromDDL(ddl)))
+      .getOrElse(load(spark, root, c).schema)
+
+  /** The DDL a commit records for schema `st`, all nullable — what a
+    * parquet read reports whatever the writer declared, so a pinned read
+    * cannot be told apart from an inferred one. */
+  private def recordedDDL(st: StructType): String =
+    GraftBridge.asNullable(st).toDDL
+
+  /** The DDL a commit built on `head` carries: the head's own, or — for
+    * a head without one — `headSchema`, its read schema. */
+  private def carriedDDL(head: Commit, headSchema: => StructType): String =
+    head.schemaDDL.getOrElse(recordedDDL(headSchema))
+
   // deletion-vector storage (r16): `_dv/<name>` is a tiny parquet dataset
   // of (path, pos) — the (`_metadata.file_path`, `_metadata.row_index`)
   // identity of every logically-deleted row in the dirs the commit maps
@@ -1242,6 +1261,7 @@ object CommitLog {
   private def dvDir(root: String) = new HPath(root, "_dv")
   private[sources] def dvPath(root: String, name: String) =
     new HPath(dvDir(root), name)
+  private val DvSchema = StructType.fromDDL("path STRING, pos BIGINT")
   private val DvPathCol = "__graft_dv_path"
   private val DvPosCol = "__graft_dv_pos"
   private val DvDirCol = "__graft_dv_dir"
@@ -1281,7 +1301,8 @@ object CommitLog {
     val oldNames = dirs.flatMap(head.dv.get).distinct
     if (oldNames.isEmpty) newPos
     else newPos.unionByName(
-      spark.read.parquet(oldNames.map(n => dvPath(root, n).toString): _*)
+      spark.read.schema(DvSchema)
+        .parquet(oldNames.map(n => dvPath(root, n).toString): _*)
         .filter(dirOfPath(col("path")).isin(dirs: _*))
         .select(relPath(col("path")).as("path"), col("pos")))
   }
@@ -1388,16 +1409,6 @@ object CommitLog {
       }: _*)
     }
 
-  /** [[dirStats]] over a PHYSICAL-named staged dir, keyed back to the
-    * logical column names the commit records. */
-  private def dirStatsLogical(spark: SparkSession, path: String,
-      cols: Seq[String], colMap: Map[String, String]): Map[String, (Long, Long)] = {
-    if (colMap.isEmpty) return dirStats(spark, path, cols)
-    val phys = cols.map(c => colMap.getOrElse(c, c))
-    val m = dirStats(spark, path, phys)
-    cols.zip(phys).flatMap { case (l, p) => m.get(p).map(l -> _) }.toMap
-  }
-
   /** The version a dir/vector name embeds (`…-v<N>`): the claim target
     * it was staged for — what existence defaults and vacuum's sweep
     * rule key on. None for foreign names (read as stored; every
@@ -1499,7 +1510,7 @@ object CommitLog {
       var df = readDirs(spark, root, c.schemaDDL, c.colMap, ds,
         withPos = needPos)
       if (names.nonEmpty) {
-        val dv = spark.read
+        val dv = spark.read.schema(DvSchema)
           .parquet(names.map(n => dvPath(root, n).toString): _*)
         // both sides relativize (ADVICE r16): the scan's file_path is
         // absolute under WHATEVER spelling this reader used; the vector
@@ -1527,88 +1538,116 @@ object CommitLog {
   def readLatest(spark: SparkSession, root: String): Option[DataFrame] =
     latest(spark, root).map(c => load(spark, root, c))
 
-  /** Per-column [min, max] (cast to long) over one staged directory, for
-    * every column in `cols`, in ONE column-pruned scan (r13: the agg list
-    * carries 2·|cols| exprs — still a single pass over the new data).
-    * Columns empty/all-null in the dir are absent from the map — which
-    * reads as "no stats for that column, always scan". Production harvests
-    * parquet footer min/max instead — free at write time; the commit shape
-    * and read path are identical. */
-  private def dirStats(spark: SparkSession, path: String,
-      cols: Seq[String]): Map[String, (Long, Long)] = {
-    if (cols.isEmpty) return Map.empty
-    val df = spark.read.parquet(path)
-    val types = df.schema.map(f => f.name -> f.dataType).toMap
-    val aggs = cols.flatMap { c =>
-      val e = statDomain(col(c), types.get(c))
-      Seq(min(e), max(e))
+  /** What the parquet FOOTERS of a commit's new `dirs` record (the Delta
+    * AddFile-stats idea): one O(KB) driver-side footer read per file — no
+    * Spark job, no data bytes. Per dir the EXACT row count (`rows`, so
+    * planning statistics report truth); per column of `cols` (stored under
+    * its PHYSICAL name through `colMap`) its [min, max] in the
+    * [[statDomain]] long domain over the dir (`stats`, dirs without any
+    * absent) and over each file (`fstats`, keyed `dir/file`, only for dirs
+    * with stats). Each domain mapping is monotone, so the mapped footer min
+    * is the min of the mapped values. All-null chunks add nothing; a chunk
+    * without usable min/max (INT96, a string past parquet's 4 KB stats
+    * limit, a NaN, a value outside the long domain) leaves its file and
+    * dir with no stats for that column: "no stats, always read". */
+  private[graft] final case class Footers(
+      stats: Map[String, Map[String, (Long, Long)]],
+      fstats: Map[String, Map[String, (Long, Long)]],
+      rows: Map[String, Long])
+
+  private[graft] def footers(spark: SparkSession, root: String,
+      dirs: Seq[String], cols: Seq[String],
+      colMap: Map[String, String] = Map.empty): Footers = {
+    import scala.jdk.CollectionConverters._
+    type Range = Option[(Long, Long)] // None: no non-null value seen
+    // None = unusable; Some(range) folds by min/max
+    def fold(a: Option[Range], b: Option[Range]): Option[Range] =
+      for (x <- a; y <- b) yield (x ++ y).reduceOption((p, q) =>
+        (math.min(p._1, q._1), math.max(p._2, q._2)))
+    def chunk(cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
+        : Option[Range] = {
+      val st = cc.getStatistics
+      val m = footerDomain(cc.getPrimitiveType)
+      if (st.hasNonNullValue)
+        for (lo <- m(st.genericGetMin); hi <- m(st.genericGetMax))
+          yield Some((lo, hi))
+      else if (st.isNumNullsSet && st.getNumNulls == cc.getValueCount) Some(None)
+      else None
     }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.zipWithIndex.flatMap { case (c, i) =>
-      if (r.isNullAt(2 * i) || r.isNullAt(2 * i + 1)) None
-      else Some(c -> (r.getLong(2 * i), r.getLong(2 * i + 1)))
-    }.toMap
-  }
-
-  /** Per-FILE [min, max] over one staged directory (r18 — VERDICT r17
-    * #6, the Delta AddFile-stats shape at file granularity): keyed
-    * `dir/fileName` → col → range in the TYPED stat domain, ONE grouped
-    * scan of the new dir ([[dirStats]]'s agg list GROUPed BY
-    * `_metadata.file_name`). The collect is bounded by the dir's file
-    * count (≤ targetFiles for compacts, the write's partition count for
-    * appends). Columns all-null in a file are absent for that file —
-    * "no stats, always read". Production harvests parquet footers at
-    * write time instead; the commit shape and read path are identical. */
-  private def dirFileStats(spark: SparkSession, path: String,
-      dirName: String, cols: Seq[String])
-      : Map[String, Map[String, (Long, Long)]] = {
-    if (cols.isEmpty) return Map.empty
-    val df = spark.read.parquet(path)
-    val types = df.schema.map(f => f.name -> f.dataType).toMap
-    val aggs = cols.flatMap { c =>
-      val e = statDomain(col(c), types.get(c))
-      Seq(min(e), max(e))
-    }
-    val rows = df.groupBy(col("_metadata.file_name").as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    rows.iterator.map { r =>
-      val byCol = cols.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-        else Some(c -> (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
-      }.toMap
-      s"$dirName/${r.getString(0)}" -> byCol
-    }.filter(_._2.nonEmpty).toMap
-  }
-
-  /** [[dirFileStats]] over a PHYSICAL-named staged dir, keyed back to
-    * the logical column names the commit records. */
-  private def dirFileStatsLogical(spark: SparkSession, path: String,
-      dirName: String, cols: Seq[String], colMap: Map[String, String])
-      : Map[String, Map[String, (Long, Long)]] = {
-    if (colMap.isEmpty) return dirFileStats(spark, path, dirName, cols)
-    val phys = cols.map(c => colMap.getOrElse(c, c))
-    dirFileStats(spark, path, dirName, phys).map { case (df, byCol) =>
-      df -> cols.zip(phys).flatMap { case (l, p) =>
-        byCol.get(p).map(l -> _) }.toMap
-    }.filter(_._2.nonEmpty)
-  }
-
-  /** EXACT row count of one staged directory from its parquet FOOTERS
-    * (r19 — VERDICT r18 #4): a driver-side loop over the dir's files,
-    * each footer read O(KB) — no Spark job, no data bytes. Recorded in
-    * the commit so planning statistics report truth. */
-  private def dirRowCount(spark: SparkSession, path: String): Long = {
-    val p = new HPath(path)
     val conf = spark.sparkContext.hadoopConfiguration
-    val f = p.getFileSystem(conf)
-    Option(f.listStatus(p)).toSeq.flatten
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+    val f = fs(spark, root)
+    val perDir = dirs.map { d =>
+      val files = Option(f.listStatus(new HPath(root, d))).toSeq.flatten
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .map { st =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+          try {
+            val blocks = r.getFooter.getBlocks.asScala.toSeq
+            val ranges = cols.map { c =>
+              val phys = colMap.getOrElse(c, c)
+              c -> blocks.foldLeft(Option[Range](None)) { (acc, b) =>
+                fold(acc, b.getColumns.asScala.find(cc =>
+                  cc.getPath.size == 1 && cc.getPath.toArray()(0) == phys)
+                  .flatMap(chunk))
+              }
+            }
+            (st.getPath.getName, r.getRecordCount, ranges.toMap)
+          } finally r.close()
+        }
+      val dirStats = cols.flatMap(c => files.map(_._3(c))
+        .foldLeft(Option[Range](None))(fold).flatten.map(c -> _)).toMap
+      val fileStats =
+        if (dirStats.isEmpty) Nil
+        else files.map { case (name, _, ranges) =>
+          s"$d/$name" -> ranges.collect { case (c, Some(Some(r))) => c -> r }.toMap
+        }.filter(_._2.nonEmpty)
+      (d, dirStats, fileStats, files.map(_._2).sum)
+    }
+    Footers(perDir.collect { case (d, s, _, _) if s.nonEmpty => d -> s }.toMap,
+      perDir.flatMap(_._3).toMap, perDir.map(t => t._1 -> t._4).toMap)
+  }
+
+  /** A footer min/max value mapped into the [[statDomain]] long domain by
+    * the chunk's parquet type — None for a type without a mapping, or
+    * for a value the domain cannot hold (the cases a cast would refuse). */
+  private def footerDomain(t: org.apache.parquet.schema.PrimitiveType)
+      : Any => Option[Long] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val integral: Any => Option[Long] =
+      v => Some(v.asInstanceOf[Number].longValue)
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64, null | _: DateLogicalTypeAnnotation) => integral
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned => integral
+      // epoch SECONDS (floor) — the domain's timestamp and NTZ image
+      case (INT64, ts: TimestampLogicalTypeAnnotation)
+          if ts.getUnit != TimeUnit.NANOS =>
+        val perSec = if (ts.getUnit == TimeUnit.MILLIS) 1000L else 1000000L
+        v => Some(Math.floorDiv(v.asInstanceOf[Long].longValue, perSec))
+      case (BOOLEAN, null) => v => Some(if (v.asInstanceOf[Boolean]) 1L else 0L)
+      // a fractional cast truncates toward zero; NaN/±Inf/out of range
+      // would make the cast fail, so they carry no stats
+      case (FLOAT | DOUBLE, null) => { v =>
+        val x = v.asInstanceOf[Number].doubleValue
+        if (math.floor(x) <= Long.MaxValue.toDouble &&
+            math.ceil(x) >= Long.MinValue.toDouble) Some(x.toLong)
+        else None
+      }
+      case (_, dec: DecimalLogicalTypeAnnotation) => { v =>
+        val unscaled = v match {
+          case b: org.apache.parquet.io.api.Binary =>
+            new java.math.BigInteger(b.getBytes)
+          case n => java.math.BigInteger.valueOf(n.asInstanceOf[Number].longValue)
+        }
+        val x = new java.math.BigDecimal(unscaled, dec.getScale).toBigInteger
+        if (x.bitLength < 64) Some(x.longValue) else None
+      }
+      case (BINARY, _: StringLogicalTypeAnnotation) => v =>
+        Some(CommitLogSource.encodeStringStat(
+          v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8, 0x00))
+      case _ => _ => None
+    }
   }
 
   /** Undo hive-style %XX path escaping of a partition value as written
@@ -1798,7 +1837,7 @@ object CommitLog {
     * Anything else keeps the legacy cast (null ⇒ no stats recorded).
     * The JVM twin is [[CommitLogSource.encodeStringStat]]; the two MUST
     * agree byte-for-byte or pruning would be unsound. */
-  private def statDomain(c: org.apache.spark.sql.Column,
+  private[graft] def statDomain(c: org.apache.spark.sql.Column,
       dt: Option[org.apache.spark.sql.types.DataType])
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.types._
@@ -2054,7 +2093,10 @@ object CommitLog {
               case None => return None
             }
             if (!f.exists(p)) return None
-            pieces += spark.read.parquet(p.toString)
+            // a feed holds the commit's logical columns + _change_type
+            val feed = c.schemaDDL.fold(spark.read)(ddl => spark.read
+              .schema(StructType.fromDDL(ddl).add("_change_type", "string")))
+            pieces += feed.parquet(p.toString)
               .withColumn("_commit_version", lit(c.version))
           }
           prev = c
@@ -2225,8 +2267,10 @@ object CommitLog {
         throw new IllegalStateException(
           s"CommitLog: $action on an empty table at $root"))
       requireWritable(cur)
-      val c = mutate(cur).copy(version = cur.version + 1, writer = writer,
+      val m = mutate(cur)
+      val c = m.copy(version = cur.version + 1, writer = writer,
         action = action, rowInvisible = rowInvisible, txn = None,
+        schemaDDL = Some(carriedDDL(m, schemaOf(spark, root, cur))),
         tsMs = Some(System.currentTimeMillis()))
       if (tryClaim(spark, root, c.version, render(c))) {
         writeHeadPointer(f, root, c.version); return c
@@ -2399,7 +2443,7 @@ object CommitLog {
       }
     validateDefaults(spark, defaultTargets, defaults)
     metadataCommit(spark, root, writer, "evolve", maxAttempts) { cur =>
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       // CASE-INSENSITIVE duplicate checks (code review r14 close): Spark
       // resolves case-insensitively by default, so committing both 'id'
       // and 'ID' would make every later reference AMBIGUOUS_REFERENCE
@@ -2556,7 +2600,7 @@ object CommitLog {
       s"duplicate CLUSTER BY columns in ${cols.mkString("(", ", ", ")")}")
     metadataCommit(spark, root, writer, "cluster-by", maxAttempts) { cur =>
       if (cols.nonEmpty) {
-        val headSchema = load(spark, root, cur).schema
+        val headSchema = schemaOf(spark, root, cur)
         cols.foreach(c => require(headSchema.fieldNames.contains(c),
           s"CLUSTER BY column '$c' not in head schema ${headSchema.simpleString}"))
       }
@@ -2578,7 +2622,7 @@ object CommitLog {
       cur: Commit): Boolean =
     cur.dataDirs.forall(d => cur.rows.get(d) match {
       case Some(n) => n == 0L
-      case None => dirRowCount(spark, s"$root/$d") == 0L
+      case None => footers(spark, root, Seq(d), Nil).rows(d) == 0L
     })
 
   /** Partition-value types the spec accepts (r19): atomic types whose
@@ -2615,7 +2659,7 @@ object CommitLog {
         s"CommitLog: PARTITIONED BY on $root after data was committed — " +
           "declare partitioning at CREATE (before the first insert), or " +
           "rewrite explicitly")
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       cols.foreach { c =>
         val fld = headSchema.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
@@ -2770,7 +2814,7 @@ object CommitLog {
         "column mapping")
     metadataCommit(spark, root, writer, "rename-column", maxAttempts,
         rowInvisible = false) { cur =>
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       require(headSchema.fieldNames.contains(from),
         s"RENAME COLUMN: no column '$from' in ${headSchema.simpleString}")
       require(!headSchema.fieldNames.exists(_.equalsIgnoreCase(to)),
@@ -2949,7 +2993,7 @@ object CommitLog {
         "path-keyed column mapping")
     metadataCommit(spark, root, writer, "rename-column", maxAttempts,
         rowInvisible = false) { cur =>
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       requireDotFreeFor("RENAME nested field", path, headSchema)
       val blocking = cur.constraints.filter { case (cn, e) =>
         constraintRefPaths(spark, root, cur, cn, e)
@@ -3001,7 +3045,7 @@ object CommitLog {
       path: Seq[String], maxAttempts: Int = 20): Commit =
     metadataCommit(spark, root, writer, "drop-column", maxAttempts,
         rowInvisible = false) { cur =>
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       requireDotFreeFor("DROP nested field", path, headSchema)
       val blocking = cur.constraints.filter { case (cn, e) =>
         constraintRefPaths(spark, root, cur, cn, e)
@@ -3043,7 +3087,7 @@ object CommitLog {
       name: String, maxAttempts: Int = 20): Commit =
     metadataCommit(spark, root, writer, "drop-column", maxAttempts,
         rowInvisible = false) { cur =>
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       require(headSchema.fieldNames.contains(name),
         s"DROP COLUMN: no column '$name' in ${headSchema.simpleString}")
       require(headSchema.length > 1,
@@ -3121,7 +3165,7 @@ object CommitLog {
     import org.apache.spark.sql.types._
     metadataCommit(spark, root, writer, "retype", maxAttempts,
         rowInvisible = false) { cur =>
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       val i = headSchema.fieldNames.indexOf(name)
       require(i >= 0,
         s"ALTER COLUMN TYPE: no top-level column '$name' in " +
@@ -3196,7 +3240,7 @@ object CommitLog {
     import org.apache.spark.sql.types.StructType
     metadataCommit(spark, root, writer, "retype", maxAttempts,
         rowInvisible = false) { cur =>
-      val headSchema = load(spark, root, cur).schema
+      val headSchema = schemaOf(spark, root, cur)
       requireDotFreeFor("ALTER nested COLUMN TYPE", path, headSchema)
       // generation-input guard, path-wise like the nested rename/drop
       // verbs (code review r19)
@@ -3519,7 +3563,7 @@ object CommitLog {
       val next =
         if (rowInvisible) next0
         else conformGenerated(next0, gens, cur.map(c =>
-          load(spark, root, c).schema.fieldNames.toSeq).getOrElse(Nil))
+          schemaOf(spark, root, c).fieldNames.toSeq).getOrElse(Nil))
       // a bad statsCol must fail BEFORE the snapshot write, not after
       // minutes of I/O with an orphaned staging left behind
       statsCols.foreach(sc => require(next.columns.contains(sc),
@@ -3547,29 +3591,22 @@ object CommitLog {
           Seq(d -> Nil)
         }
       }
-      val st = staged.map { case (d, _) =>
-        d -> dirStats(spark, s"$root/$d", statsCols)
-      }.filter(_._2.nonEmpty).toMap
-      val byFile = staged.flatMap { case (d, _) =>
-        if (st.getOrElse(d, Map.empty).isEmpty) Nil
-        else dirFileStats(spark, s"$root/$d", d, statsCols)
-      }.toMap
-      val rowsNew = staged.map { case (d, _) =>
-        d -> dirRowCount(spark, s"$root/$d") }.toMap
+      val ft = footers(spark, root, staged.map(_._1), statsCols)
       val c = Commit(nextV, staged.map(_._1), writer,
         if (createOnEmpty && cur.isEmpty) "create" else action,
-        st, rowInvisible,
-        statsCols = if (st.nonEmpty) statsCols else Nil,
-        clusterSpec = clusterSpec, tsMs = Some(System.currentTimeMillis()),
+        ft.stats, rowInvisible,
+        statsCols = if (ft.stats.nonEmpty) statsCols else Nil,
+        clusterSpec = clusterSpec, schemaDDL = Some(recordedDDL(next.schema)),
+        tsMs = Some(System.currentTimeMillis()),
         constraints = cons,
         clusterBy = cur.flatMap(_.clusterBy),
         defaults = cur.map(_.defaults).getOrElse(Nil),
-        statsTyped = st.keySet,
-        fstats = byFile,
+        statsTyped = ft.stats.keySet,
+        fstats = ft.fstats,
         partitionBy = pby,
         partVals = staged.collect { case (d, vs) if vs.nonEmpty => d -> vs }
           .toMap,
-        rows = rowsNew,
+        rows = ft.rows,
         gens = gens)
       if (tryClaim(spark, root, nextV, render(c))) {
         writeHeadPointer(f, root, nextV); return c
@@ -3692,7 +3729,7 @@ object CommitLog {
     // from its recorded expression BEFORE the schema check compares like
     // for like; supplied columns validate in validateSchemaAgainst
     val delta = headNow.map(h => conformGenerated(delta0, h.gens,
-        load(spark, root, h).schema.fieldNames.toSeq))
+        schemaOf(spark, root, h).fieldNames.toSeq))
       .getOrElse(delta0)
     // ADDITIVE SCHEMA EVOLUTION (r12): under an EXPLICIT evolve=true, a
     // delta may carry a superset of the head's columns — the new commit
@@ -3711,10 +3748,9 @@ object CommitLog {
     // pinned read. Re-validating against the fresh head turns that race
     // into the same loud additive-only/exact-match error a sequential
     // mismatch gets.
-    def validateSchemaAgainst(h: Commit): Option[String] = {
-      val headSchema = load(spark, root, h).schema
-      var evolvedDDL: Option[String] = None
-      if (!evolve) {
+    def validateSchemaAgainst(h: Commit): String = {
+      val headSchema = schemaOf(spark, root, h)
+      val added = if (!evolve) {
         val same = headSchema.length == delta.schema.length &&
           headSchema.zip(delta.schema).forall { case (a, b) =>
             a.name == b.name && sameTypeLoose(a.dataType, b.dataType) }
@@ -3723,6 +3759,7 @@ object CommitLog {
             s"head ${headSchema.simpleString} vs delta ${delta.schema.simpleString} " +
             "— add columns with commitAppend(evolve = true); rename/retype " +
             "with a rewrite commit")
+        Nil
       } else {
         val deltaTypes = delta.schema.map(f => f.name -> f.dataType).toMap
         val broken = headSchema.filterNot(hf =>
@@ -3740,9 +3777,7 @@ object CommitLog {
         require(added.isEmpty || h.colMap.isEmpty,
           "commitAppend(evolve) on a column-mapped table — ALTER TABLE " +
             "ADD COLUMNS first (it extends the mapping), then append")
-        if (added.nonEmpty)
-          evolvedDDL = Some(org.apache.spark.sql.types.StructType(
-            headSchema.fields ++ added).toDDL)
+        added
       }
       // stats columns are ONE set per table (the map is carried forward,
       // so heterogeneous sets would poison every later range prune)
@@ -3759,10 +3794,17 @@ object CommitLog {
       // supplied GENERATED-column values must equal the recorded
       // expression (r19) — re-run against the fresh head like the rest
       enforceGenerated(delta, h.gens)
-      evolvedDDL
+      // the schema this append records: the widened one under an
+      // evolution, the head's otherwise (pre-evolution dirs stay in the
+      // union)
+      if (added.isEmpty) carriedDDL(h, headSchema)
+      else recordedDDL(StructType(headSchema.fields ++ added))
     }
+    // an append creating the table records the delta's schema
+    def ddlFor(h: Option[Commit]): String =
+      h.map(validateSchemaAgainst).getOrElse(recordedDDL(delta.schema))
     var validatedAt: Option[Long] = headNow.map(_.version)
-    var evolvedDDL: Option[String] = headNow.flatMap(validateSchemaAgainst)
+    var ddl = ddlFor(headNow)
     // a bad statsCol must fail BEFORE the delta write (no orphan staging)
     statsCols.foreach(sc => require(delta.columns.contains(sc),
       s"statsCol '$sc' not in delta schema ${delta.schema.simpleString}"))
@@ -3783,21 +3825,9 @@ object CommitLog {
     var deltaDirs = stageDelta()
     def deleteStaged(): Unit =
       deltaDirs.foreach(dn => f.delete(new HPath(s"$root/${dn._1}"), true))
-    def statsOfStaged(): (Map[String, Map[String, (Long, Long)]],
-        Map[String, Map[String, (Long, Long)]], Map[String, Long]) = {
-      val byCol = deltaDirs.map { case (d, _) =>
-        d -> dirStatsLogical(spark, s"$root/$d", statsCols, stagedMap)
-      }.filter(_._2.nonEmpty).toMap
-      val byFile = deltaDirs.flatMap { case (d, _) =>
-        if (byCol.getOrElse(d, Map.empty).isEmpty) Nil
-        else dirFileStatsLogical(spark, s"$root/$d", d, statsCols, stagedMap)
-      }.toMap
-      // exact per-dir row counts (r19): driver-side parquet footer reads
-      val rc = deltaDirs.map { case (d, _) =>
-        d -> dirRowCount(spark, s"$root/$d") }.toMap
-      (byCol, byFile, rc)
-    }
-    var (deltaStats, deltaByFile, deltaRows) = statsOfStaged()
+    def footersOfStaged(): Footers =
+      footers(spark, root, deltaDirs.map(_._1), statsCols, stagedMap)
+    var deltaFt = footersOfStaged()
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -3823,10 +3853,9 @@ object CommitLog {
       // a concurrent evolution fails loudly here (delete the staging
       // first) instead of committing a stale recorded schema
       if (cur.map(_.version) != validatedAt) {
-        val ddl =
-          try cur.flatMap(validateSchemaAgainst)
+        ddl =
+          try ddlFor(cur)
           catch { case e: Throwable => deleteStaged(); throw e }
-        evolvedDDL = ddl
         validatedAt = cur.map(_.version)
       }
       // a DEFAULTED evolution landed after we staged (r16): our dir's
@@ -3844,11 +3873,10 @@ object CommitLog {
         stagedMap = cur.map(_.colMap).getOrElse(Map.empty)
         stagedPartBy = cur.map(_.partitionBy).getOrElse(Nil)
         deltaDirs = stageDelta()
-        val t = statsOfStaged()
-        deltaStats = t._1; deltaByFile = t._2; deltaRows = t._3
+        deltaFt = footersOfStaged()
       }
       val nextV = cur.map(_.version).getOrElse(0L) + 1
-      val allStats = cur.map(_.stats).getOrElse(Map.empty) ++ deltaStats
+      val allStats = cur.map(_.stats).getOrElse(Map.empty) ++ deltaFt.stats
       val effCols =
         if (statsCols.nonEmpty) statsCols
         else cur.map(_.statsCols).getOrElse(Nil)
@@ -3860,9 +3888,7 @@ object CommitLog {
         allStats,
         statsCols = if (allStats.nonEmpty) effCols else Nil,
         txn = txn,
-        // this commit's evolution wins; otherwise carry the head's
-        // recorded schema forward (pre-evolution dirs stay in the union)
-        schemaDDL = evolvedDDL.orElse(cur.flatMap(_.schemaDDL)),
+        schemaDDL = Some(ddl),
         tsMs = Some(System.currentTimeMillis()),
         constraints = cur.map(_.constraints).getOrElse(Nil),
         // an append never touches stored rows: prior dirs' deletion
@@ -3872,12 +3898,12 @@ object CommitLog {
         defaults = cur.map(_.defaults).getOrElse(Nil),
         colMap = stagedMap,
         statsTyped = cur.map(_.statsTyped).getOrElse(Set.empty) ++
-          deltaStats.keySet,
-        fstats = cur.map(_.fstats).getOrElse(Map.empty) ++ deltaByFile,
+          deltaFt.stats.keySet,
+        fstats = cur.map(_.fstats).getOrElse(Map.empty) ++ deltaFt.fstats,
         partitionBy = stagedPartBy,
         partVals = cur.map(_.partVals).getOrElse(Map.empty) ++
           deltaDirs.collect { case (d, vs) if vs.nonEmpty => d -> vs },
-        rows = cur.map(_.rows).getOrElse(Map.empty) ++ deltaRows,
+        rows = cur.map(_.rows).getOrElse(Map.empty) ++ deltaFt.rows,
         dvRows = cur.map(_.dvRows).getOrElse(Map.empty),
         gens = cur.map(_.gens).getOrElse(Nil))
       if (tryClaim(spark, root, nextV, render(c))) {
@@ -4014,7 +4040,8 @@ object CommitLog {
 
   /** The whole-head rewrite (pre-r18 compact): one consolidated dir of
     * `targetFiles` files, everything materialized (vectors, defaults,
-    * logical names — commitImpl records no dv/colMap/schemaDDL). Plain
+    * logical names — commitImpl records no dv/colMap; its schemaDDL is
+    * the rewritten rows' schema). Plain
     * compact coalesces (no shuffle); SORTED compact range-partitions +
     * sorts so each file covers a NARROW key range — parquet row-group
     * min/max then prune pushed key predicates inside the consolidated
@@ -4142,28 +4169,24 @@ object CommitLog {
           Seq(d -> Nil)
         }
       }
+      val headSchema = schemaOf(spark, root, head)
       // self-maintaining bloom evidence, the rewrite-verbs rule
       locally {
         val legacySb = bloomColumn(spark, root)
         bloomColumns(spark, root).foreach(bc =>
           newDirs.foreach { case (nd, _) =>
-            buildSidecarAt(spark, root, nd,
-              head.colMap.getOrElse(bc, bc), fpp = 0.001,
-              sidecarPathFor(root, legacySb, bc, nd)) })
+            buildSidecarAt(spark, root, nd, headSchema, head.colMap, bc,
+              fpp = 0.001, sidecarPathFor(root, legacySb, bc, nd)) })
       }
-      val newStats = newDirs.map { case (nd, _) =>
-        nd -> dirStatsLogical(spark, s"$root/$nd", effCols, head.colMap)
-      }.filter(_._2.nonEmpty).toMap
-      val newRows = newDirs.map { case (nd, _) =>
-        nd -> dirRowCount(spark, s"$root/$nd") }.toMap
+      val ft = footers(spark, root, newDirs.map(_._1), effCols, head.colMap)
       val allStats = head.stats
-        .filter { case (d, _) => carried.contains(d) } ++ newStats
+        .filter { case (d, _) => carried.contains(d) } ++ ft.stats
       val c = Commit(nextV, carried ++ newDirs.map(_._1), writer,
         "compact", allStats,
         rowInvisible = true,
         statsCols = if (allStats.nonEmpty) effCols else Nil,
         clusterSpec = requested,
-        schemaDDL = head.schemaDDL,
+        schemaDDL = Some(carriedDDL(head, headSchema)),
         tsMs = Some(System.currentTimeMillis()),
         constraints = head.constraints,
         // carried dirs are never dv-bearing (dv ⇒ under-packed ⇒
@@ -4174,18 +4197,14 @@ object CommitLog {
         defaults = head.defaults,
         colMap = head.colMap,
         statsTyped = head.statsTyped.intersect(carried.toSet) ++
-          newStats.keySet,
-        fstats = carryFstats(head.fstats, carried) ++
-          newDirs.flatMap { case (nd, _) =>
-            if (newStats.getOrElse(nd, Map.empty).isEmpty) Nil
-            else dirFileStatsLogical(spark, s"$root/$nd", nd,
-              effCols, head.colMap) }.toMap,
+          ft.stats.keySet,
+        fstats = carryFstats(head.fstats, carried) ++ ft.fstats,
         partitionBy = head.partitionBy,
         partVals = head.partVals.filter { case (d, _) =>
           carried.contains(d) } ++
           newDirs.collect { case (d, vs) if vs.nonEmpty => d -> vs },
         rows = head.rows.filter { case (d, _) =>
-          carried.contains(d) } ++ newRows,
+          carried.contains(d) } ++ ft.rows,
         dvRows = head.dvRows.filter { case (d, _) => carried.contains(d) },
         gens = head.gens)
       if (tryClaim(spark, root, nextV, render(c))) {
@@ -4389,34 +4408,38 @@ object CommitLog {
           }
       }
       val legacy = bloomColumn(spark, root)
+      val headSchema = schemaOf(spark, root, head)
+      // a dir written before the column existed reads its recorded
+      // DEFAULT, which its stored bytes cannot show — it gets no sidecar
+      // (always scanned)
       head.dataDirs.count { d =>
         val p = sidecarPathFor(root, legacy, colName, d)
-        !f.exists(p) && {
-          // dirs store PHYSICAL names under an active mapping (r16)
-          buildSidecarAt(spark, root, d,
-            head.colMap.getOrElse(colName, colName), fpp, p)
+        !f.exists(p) && !defaultsFor(head, d).exists(_._1 == colName) && {
+          buildSidecarAt(spark, root, d, headSchema, head.colMap, colName,
+            fpp, p)
           true
         }
       }
     }.getOrElse(0)
 
-  /** Legacy-layout sidecar build for the marker column — the verbs'
-    * self-bloom path resolves its own target via [[sidecarPathFor]]. */
-  private def buildSidecar(spark: SparkSession, root: String, d: String,
-      colName: String, fpp: Double): Unit =
-    buildSidecarAt(spark, root, d, colName, fpp, bloomPath(root, d))
-
+  /** Build dir `d`'s sidecar over logical column `colName` of `schema`
+    * (stored under its PHYSICAL name through `colMap`) at `p`: one scan
+    * of that one column under its recorded type, sized by the footer row
+    * count. */
   private def buildSidecarAt(spark: SparkSession, root: String, d: String,
-      colName: String, fpp: Double, p: HPath): Unit = {
+      schema: StructType, colMap: Map[String, String], colName: String,
+      fpp: Double, p: HPath): Unit = {
     val f = fs(spark, root)
-    val df = spark.read.parquet(s"$root/$d")
-    require(df.columns.contains(colName),
-      s"bloom column '$colName' not in ${df.schema.simpleString}")
-    val n = df.count()
+    val phys = colMap.getOrElse(colName, colName)
+    val field = physicalSchema(schema, colMap).find(_.name == phys)
+    require(field.isDefined,
+      s"bloom column '$colName' not in ${schema.simpleString}")
+    val n = footers(spark, root, Seq(d), Nil).rows(d)
     // empty dir: the bloom aggregation yields a null buffer (NPE on
     // readFrom), and a no-evidence empty dir scans for free anyway
     if (n == 0) return
-    val bf = df.stat.bloomFilter(colName, n, fpp)
+    val bf = spark.read.schema(StructType(field.toSeq)).parquet(s"$root/$d")
+      .stat.bloomFilter(phys, n, fpp)
     f.mkdirs(p.getParent)
     val out = f.create(p, true)
     try bf.writeTo(out) finally out.close()
@@ -4773,7 +4796,7 @@ object CommitLog {
       repairTornTail(spark, root)
       val cur = latest(spark, root)
       cur.foreach(requireWritable)
-      val (dirs, stage, effStatsCols, cdf, ddlOverride, mintedMap,
+      val (dirs, stage, effStatsCols, cdf, ddl, mintedMap,
         dvPlan) = cur match {
         case None =>
           // empty table: the merge is a create of the inserts
@@ -4782,10 +4805,10 @@ object CommitLog {
               "merge into an empty table with no inserts — nothing to commit")
           val payload = changes.filter(!delFlag)
             .select(changes.columns.filterNot(deleteCol.contains).map(col): _*)
-          (Nil, payload, statsCol.toSeq, None, None,
+          (Nil, payload, statsCol.toSeq, None, recordedDDL(payload.schema),
             Map.empty[String, String], None)
         case Some(head) =>
-          val baseSchema = load(spark, root, head).schema
+          val baseSchema = schemaOf(spark, root, head)
           // fold a staged evolution (r16): columns a concurrent commit
           // already landed drop out; a same-name/different-type head
           // column is a real conflict — loud, never a silent retype
@@ -4801,6 +4824,12 @@ object CommitLog {
           }
           val headSchema = org.apache.spark.sql.types.StructType(
             baseSchema.fields ++ pendingEff)
+          // a FOLDED evolution records the widened schema in the
+          // one merge commit, so carried dirs read the new columns as
+          // typed NULL and no separate evolve commit exists
+          val ddl =
+            if (pendingEff.isEmpty) carriedDDL(head, baseSchema)
+            else recordedDDL(headSchema)
           // under an ACTIVE column mapping, folded-evolution columns
           // mint fresh physicals (r16 code review: re-adding a DROPPED
           // logical name must never resurrect its old physical bytes)
@@ -4872,7 +4901,7 @@ object CommitLog {
             // the committed delta dir itself
             if (!hasInserts && pendingEff.isEmpty) return head // full no-op
             (head.dataDirs, inserts, eff, None,
-              if (pendingEff.isEmpty) None else Some(headSchema.toDDL),
+              ddl,
               minted, None)
           } else {
             // affected dirs read DV-aware WITH (file, position) identity
@@ -4920,7 +4949,7 @@ object CommitLog {
               preT.unpersist()
               if (!hasInserts && pendingEff.isEmpty) return head
               (head.dataDirs, inserts, eff, None,
-                if (pendingEff.isEmpty) None else Some(headSchema.toDDL),
+                ddl,
                 minted, None)
             } else {
             val preTyped = preT.select(headCols :+
@@ -4956,7 +4985,7 @@ object CommitLog {
                 .distinct().collect().map(_.getString(0)).toSeq
               (head.dataDirs, inserts, eff,
                 Some((preTyped.union(post), preT)),
-                if (pendingEff.isEmpty) None else Some(headSchema.toDDL),
+                ddl,
                 minted, Some((newPos, touched)))
             } else {
               val keys = changes.select(keyCols.map(col): _*).distinct()
@@ -4966,7 +4995,7 @@ object CommitLog {
                 .union(inserts)
               (head.dataDirs.filterNot(affected.contains), rebuilt, eff,
                 Some((preTyped.union(post), preT)),
-                if (pendingEff.isEmpty) None else Some(headSchema.toDDL),
+                ddl,
                 minted, None)
             }
             }
@@ -5016,28 +5045,18 @@ object CommitLog {
         val legacySb = bloomColumn(spark, root)
         bloomColumns(spark, root).filter(keyCols.contains)
           .foreach(k => buildSidecarAt(spark, root, newDir,
-            attemptMap.getOrElse(k, k), fpp = 0.001,
+            StructType.fromDDL(ddl), attemptMap, k, fpp = 0.001,
             sidecarPathFor(root, legacySb, k, newDir)))
       }
-      val newByCol =
-        if (stageData) dirStatsLogical(spark, s"$root/$newDir", effStatsCols,
-          attemptMap)
-        else Map.empty[String, (Long, Long)]
-      val newStats =
-        if (newByCol.nonEmpty) Map(newDir -> newByCol)
-        else Map.empty[String, Map[String, (Long, Long)]]
+      val ft = footers(spark, root, if (stageData) Seq(newDir) else Nil,
+        effStatsCols, attemptMap)
       val carried = cur.map(_.stats).getOrElse(Map.empty)
         .filter { case (d, _) => dirs.contains(d) }
-      val allStats = carried ++ newStats
+      val allStats = carried ++ ft.stats
       val commitDirs = if (stageData) dirs :+ newDir else dirs
       val c = Commit(nextV, commitDirs, writer, "merge", allStats,
         statsCols = if (allStats.nonEmpty) effStatsCols else Nil,
-        // carried (untouched) dirs may predate an evolution even though
-        // the rewritten dir holds the full head schema — keep the record;
-        // a FOLDED evolution (r16) records the widened DDL here, in the
-        // one merge commit, so carried dirs read the new columns as
-        // typed NULL and no separate evolve commit exists
-        schemaDDL = ddlOverride.orElse(cur.flatMap(_.schemaDDL)),
+        schemaDDL = Some(ddl),
         tsMs = Some(System.currentTimeMillis()),
         constraints = cur.map(_.constraints).getOrElse(Nil),
         // carried dirs keep their deletion vectors; rewritten dirs'
@@ -5057,22 +5076,16 @@ object CommitLog {
         defaults = cur.map(_.defaults).getOrElse(Nil),
         colMap = attemptMap,
         statsTyped = cur.map(_.statsTyped).getOrElse(Set.empty)
-          .intersect(commitDirs.toSet) ++
-          (if (newByCol.nonEmpty) Set(newDir) else Set.empty),
+          .intersect(commitDirs.toSet) ++ ft.stats.keySet,
         fstats = carryFstats(cur.map(_.fstats).getOrElse(Map.empty), dirs) ++
-          (if (newByCol.isEmpty) Map.empty
-           else dirFileStatsLogical(spark, s"$root/$newDir", newDir,
-             effStatsCols, attemptMap)),
+          ft.fstats,
         partitionBy = cur.map(_.partitionBy).getOrElse(Nil),
         // the merged output dir carries no partition identity (kept by
         // every partition filter — conservative); carried dirs ride
         partVals = cur.map(_.partVals).getOrElse(Map.empty)
           .filter { case (d, _) => dirs.contains(d) },
         rows = cur.map(_.rows).getOrElse(Map.empty)
-          .filter { case (d, _) => dirs.contains(d) } ++
-          (if (stageData)
-            Map(newDir -> dirRowCount(spark, s"$root/$newDir"))
-          else Map.empty),
+          .filter { case (d, _) => dirs.contains(d) } ++ ft.rows,
         // touched dirs' vectored share changed without a per-dir count
         // in hand — drop their entries (their statistics degrade to the
         // size estimate, never to a wrong exact count)
@@ -5208,7 +5221,7 @@ object CommitLog {
         if (conjuncts.isEmpty) head.dataDirs
         else CommitLogSource.pruneDirsByEvidence(spark, root, head, conjuncts)
       if (affected.isEmpty) return Some(head) // provably nothing matches
-      val headSchema = load(spark, root, head).schema
+      val headSchema = schemaOf(spark, root, head)
       // ONE pass over the affected dirs' VISIBLE rows decides the shape:
       // per-dir total and cond-TRUE counts (when(cond, 1) counts TRUE
       // only — the SQL rule; NULL keeps its row)
@@ -5256,7 +5269,7 @@ object CommitLog {
         val c = Commit(nextV, keptDirs, writer, "delete",
           head.stats.filter { case (d, _) => keptDirs.contains(d) },
           statsCols = head.statsCols,
-          schemaDDL = head.schemaDDL,
+          schemaDDL = Some(carriedDDL(head, headSchema)),
           tsMs = Some(System.currentTimeMillis()),
           constraints = head.constraints,
           // dropped dirs lose their mapping; every partial dir points at
@@ -5348,7 +5361,7 @@ object CommitLog {
       repairTornTail(spark, root)
       val head = latest(spark, root).getOrElse(return None)
       requireWritable(head)
-      val headSchema = load(spark, root, head).schema
+      val headSchema = schemaOf(spark, root, head)
       assignments.foreach { case (n, _) =>
         require(headSchema.fieldNames.contains(n),
           s"update assigns '$n', not in head schema ${headSchema.simpleString}")
@@ -5411,37 +5424,28 @@ object CommitLog {
         locally {
           val legacySb = bloomColumn(spark, root)
           bloomColumns(spark, root).foreach(bc =>
-            buildSidecarAt(spark, root, newDir,
-              head.colMap.getOrElse(bc, bc), fpp = 0.001,
-              sidecarPathFor(root, legacySb, bc, newDir)))
+            buildSidecarAt(spark, root, newDir, headSchema, head.colMap, bc,
+              fpp = 0.001, sidecarPathFor(root, legacySb, bc, newDir)))
         }
         val effCols = head.statsCols
-        val newByCol = dirStatsLogical(spark, s"$root/$newDir", effCols,
-          head.colMap)
-        val newStats =
-          if (newByCol.nonEmpty) Map(newDir -> newByCol)
-          else Map.empty[String, Map[String, (Long, Long)]]
+        val ft = footers(spark, root, Seq(newDir), effCols, head.colMap)
         val c = Commit(nextV, head.dataDirs :+ newDir, writer, "update",
-          head.stats ++ newStats,
-          statsCols = if ((head.stats ++ newStats).nonEmpty) effCols else Nil,
-          schemaDDL = head.schemaDDL,
+          head.stats ++ ft.stats,
+          statsCols = if ((head.stats ++ ft.stats).nonEmpty) effCols else Nil,
+          schemaDDL = Some(carriedDDL(head, headSchema)),
           tsMs = Some(System.currentTimeMillis()),
           constraints = head.constraints,
           dv = (head.dv -- touched) ++ touched.toSeq.map(_ -> dvName),
           clusterBy = head.clusterBy,
           defaults = head.defaults,
           colMap = head.colMap,
-          statsTyped = head.statsTyped ++
-            (if (newByCol.nonEmpty) Set(newDir) else Set.empty),
-          fstats = head.fstats ++
-            (if (newByCol.isEmpty) Map.empty
-             else dirFileStatsLogical(spark, s"$root/$newDir", newDir,
-               effCols, head.colMap)),
+          statsTyped = head.statsTyped ++ ft.stats.keySet,
+          fstats = head.fstats ++ ft.fstats,
           partitionBy = head.partitionBy,
           // the post-image dir carries no partition identity (kept by
           // every partition filter — conservative); existing entries ride
           partVals = head.partVals,
-          rows = head.rows + (newDir -> dirRowCount(spark, s"$root/$newDir")),
+          rows = head.rows ++ ft.rows,
           // same unknown-stays-unknown rule as the delete fold (code
           // review r19): never seed a dv-bearing dir's count at 0
           dvRows = head.dvRows ++ touchedCounts.collect {
@@ -5523,7 +5527,7 @@ object CommitLog {
         case None => throw new IllegalStateException(
           s"CommitLog: $action on an empty table — nothing to rewrite")
       })
-      val headSchema = load(spark, root, head).schema
+      val headSchema = schemaOf(spark, root, head)
       incoming.foreach { inc =>
         val same = headSchema.length == inc.schema.length &&
           headSchema.forall(hf => inc.schema.exists(pf =>
@@ -5676,21 +5680,16 @@ object CommitLog {
         val legacySb = bloomColumn(spark, root)
         bloomColumns(spark, root).foreach(bc =>
           newDirs.foreach { case (nd, _) =>
-            buildSidecarAt(spark, root, nd,
-              head.colMap.getOrElse(bc, bc), fpp = 0.001,
-              sidecarPathFor(root, legacySb, bc, nd)) })
+            buildSidecarAt(spark, root, nd, headSchema, head.colMap, bc,
+              fpp = 0.001, sidecarPathFor(root, legacySb, bc, nd)) })
       }
-      val newStats = newDirs.map { case (nd, _) =>
-        nd -> dirStatsLogical(spark, s"$root/$nd", effCols, head.colMap)
-      }.filter(_._2.nonEmpty).toMap
-      val newRows = newDirs.map { case (nd, _) =>
-        nd -> dirRowCount(spark, s"$root/$nd") }.toMap
+      val ft = footers(spark, root, newDirs.map(_._1), effCols, head.colMap)
       val allStats = head.stats
-        .filter { case (d, _) => carried.contains(d) } ++ newStats
+        .filter { case (d, _) => carried.contains(d) } ++ ft.stats
       val c = Commit(nextV, carried ++ newDirs.map(_._1), writer, action,
         allStats,
         statsCols = if (allStats.nonEmpty) effCols else Nil,
-        schemaDDL = head.schemaDDL,
+        schemaDDL = Some(carriedDDL(head, headSchema)),
         tsMs = Some(System.currentTimeMillis()),
         constraints = head.constraints,
         // carried dirs keep their deletion vectors; the affected dirs'
@@ -5700,18 +5699,14 @@ object CommitLog {
         defaults = head.defaults,
         colMap = head.colMap,
         statsTyped = head.statsTyped.intersect(carried.toSet) ++
-          newStats.keySet,
-        fstats = carryFstats(head.fstats, carried) ++
-          newDirs.flatMap { case (nd, _) =>
-            if (newStats.getOrElse(nd, Map.empty).isEmpty) Nil
-            else dirFileStatsLogical(spark, s"$root/$nd", nd,
-              effCols, head.colMap) }.toMap,
+          ft.stats.keySet,
+        fstats = carryFstats(head.fstats, carried) ++ ft.fstats,
         partitionBy = head.partitionBy,
         partVals = head.partVals.filter { case (d, _) =>
           carried.contains(d) } ++
           newDirs.collect { case (d, vs) if vs.nonEmpty => d -> vs },
         rows = head.rows.filter { case (d, _) =>
-          carried.contains(d) } ++ newRows,
+          carried.contains(d) } ++ ft.rows,
         dvRows = head.dvRows.filter { case (d, _) => carried.contains(d) },
         gens = head.gens)
       if (tryClaim(spark, root, nextV, render(c))) {

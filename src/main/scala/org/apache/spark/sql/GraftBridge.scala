@@ -23,6 +23,10 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
 
+  /** `st` with every field, array element and map value nullable — the
+    * schema a file-source read reports whatever the writer declared. */
+  def asNullable(st: StructType): StructType = st.asNullable
+
   /** A Column over a Catalyst expression — the public-API boundary the
     * row-level SQL translation crosses (statement expressions, with
     * attribute references rewritten to unresolved names, re-resolve

@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.functions._
 import graft.operators.Joins
-import graft.plans.AsOf
+import graft.plans.{AsOf, AsOfJoinExec}
 
 /** The custom whole-operator as-of join (LogicalPlan + Strategy + SparkPlan,
   * SURVEY.md §5). */
-class AsOfPlanSpec extends SparkSpec {
+class AsOfPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("native as-of join equals the window formulation on real data") {
     val native = rows(Joins.queries("q_join_asof_native")(spark, sf))
@@ -15,24 +16,26 @@ class AsOfPlanSpec extends SparkSpec {
     assert(native == window)
   }
 
-  test("native as-of wall time stays within 4x of the window twin") {
-    // Round 2 claimed a perf fix without a measurement and the bench showed
-    // 36x — this pins the ratio in-repo. The fix: requiredChildDistribution
-    // no longer pins numShufflePartitions, so AQE coalesces the two
-    // exchanges instead of forcing 32 sorts of tiny partitions. Bound is 4x
-    // (bench target is 2x) because single-run spec timings on a shared box
-    // are noisy; a 36x-class regression still fails loudly.
-    def time(q: String): Double = {
-      val fn = Joins.queries(q)
-      fn(spark, sf).count() // warm: codegen + scan cache
-      val t0 = System.nanoTime()
-      fn(spark, sf).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val native = time("q_join_asof_native")
-    val window = time("q_join_asof")
-    assert(native <= window.max(0.2) * 4.0,
-      f"native as-of $native%.3fs vs window twin $window%.3fs — ratio ${native / window}%.1fx")
+  test("AQE coalesces both as-of exchanges below spark.sql.shuffle.partitions") {
+    // Round 2 pinned both child distributions to numShufflePartitions,
+    // which opts the exchanges out of AQE coalescing: one sort per fixed
+    // partition however small the input (a 36x slowdown). Unpinned, AQE
+    // reads each side's shuffle coalesced.
+    val ev = Tables.events(spark, sf)
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select("event_id", "user_id", "ts")
+    val clicks = ev.filter(col("event_type") === "click")
+    val joined = AsOf.joinLatestPrior(purchases, clicks,
+      "user_id", "ts", "event_id", "prior_ts")
+    joined.collect()
+    val plan = joined.queryExecution.executedPlan
+    val join = collect(plan) { case j: AsOfJoinExec => j }
+    assert(join.size == 1, plan)
+    val reads = join.head.children.map(c =>
+      collectFirst(c) { case r: AQEShuffleReadExec => r })
+    val pinned = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(reads.forall(_.exists(r =>
+      r.isCoalescedRead && r.partitionSpecs.size < pinned)), plan)
   }
 
   test("plan contains AsOfJoin with co-shuffled sorted children") {

@@ -2239,10 +2239,13 @@ class CommitLogSpec extends SparkSpec {
       CommitLog.commitAppend(spark, root, "w", "append", evolve = true)(
         Seq((2L, 7L, 1.0)).toDF("id", "v", "score"))
     }
-    // evolve with an identical schema: legal no-op evolution, no record
+    // evolve with an identical schema: legal no-op evolution, the
+    // recorded schema stays the head's
+    val head = CommitLog.latest(spark, root).get
     val c = CommitLog.commitAppend(spark, root, "w", "append", evolve = true)(
       Seq((2L, "b")).toDF("id", "v"))
-    assert(c.schemaDDL.isEmpty, "no new column, nothing to record")
+    assert(c.schemaDDL.isDefined && c.schemaDDL == head.schemaDDL,
+      "no new column: the head's recorded schema carries")
   }
 
   test("restore rolls the head back as a new commit; history survives; consumers resync") {
