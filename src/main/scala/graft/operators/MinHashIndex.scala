@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Json
 
 /** Incremental MinHash+LSH dedup maintenance (VERDICT r7 next #5): an
   * APPEND-ONLY on-disk index of everything the near-dup pipeline derives
@@ -54,8 +55,7 @@ object MinHashIndex {
       buckets: Int = 64)
 
   private val MetaFile = "_graft_minhash.json"
-  private val MetaRe =
-    """"k"\s*:\s*(\d+).*"bands"\s*:\s*(\d+).*"rowsPerBand"\s*:\s*(\d+).*"buckets"\s*:\s*(\d+)""".r.unanchored
+  private val MetaFields = Seq("k", "bands", "rowsPerBand", "buckets")
 
   private def hadoopFs(dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -70,9 +70,8 @@ object MinHashIndex {
     val target = new org.apache.hadoop.fs.Path(root, MetaFile)
     val tmp = new org.apache.hadoop.fs.Path(root, s".$MetaFile.tmp")
     val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"k": ${p.k}, "bands": ${p.bands}, "rowsPerBand": ${p.rowsPerBand}, "buckets": ${p.buckets}}"""
-        .getBytes("UTF-8"))
+    try out.write(Json.write(MetaFields.zip(
+      Seq(p.k, p.bands, p.rowsPerBand, p.buckets)): _*).getBytes("UTF-8"))
     finally out.close()
     if (!fs.rename(tmp, target)) {
       fs.delete(target, false)
@@ -83,20 +82,13 @@ object MinHashIndex {
 
   def readMeta(dir: String): Params = {
     val (fs, root) = hadoopFs(dir)
-    val f = new org.apache.hadoop.fs.Path(root, MetaFile)
-    require(fs.exists(f), s"$dir is not a MinHashIndex (no $MetaFile)")
-    val in = fs.open(f)
-    val text = try {
-      val out = new java.io.ByteArrayOutputStream(256)
-      val buf = new Array[Byte](256)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } finally in.close()
-    text match {
-      case MetaRe(k, b, r, bu) => Params(k.toInt, b.toInt, r.toInt, bu.toInt)
+    val text = Json.readFile(fs, new org.apache.hadoop.fs.Path(root, MetaFile))
+    require(text.isDefined, s"$dir is not a MinHashIndex (no $MetaFile)")
+    Json.parse(text.get).toSeq
+      .flatMap(o => MetaFields.flatMap(f => Json.long(o.path(f)))) match {
+      case Seq(k, b, r, bu) => Params(k.toInt, b.toInt, r.toInt, bu.toInt)
       case _ => throw new IllegalStateException(
-        s"$dir/$MetaFile exists but is not a MinHashIndex descriptor: $text")
+        s"$dir/$MetaFile exists but is not a MinHashIndex descriptor: ${text.get}")
     }
   }
 

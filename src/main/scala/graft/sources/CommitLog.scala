@@ -52,128 +52,57 @@ import org.apache.spark.sql.types.StructType
   * the log protocol is unchanged.
   */
 object CommitLog {
-  /** A committed version is the UNION of its immutable data directories —
-    * one dir for a full rewrite, prior dirs + one delta dir for an append
-    * (the O(delta) commit shape: appending to a 100 TB table writes the
-    * new rows and one ~300-byte log file, never the table).
+  /** One committed version: the union of its immutable data directories
+    * (one dir for a full rewrite, prior dirs plus one delta dir for an
+    * append) and the table state every verb carries forward. On disk it
+    * is `_commits/v<version>.json`, written by [[encode]] and read by
+    * [[decode]]; the version is read from the file name.
     *
-    * `stats` is the DATA-SKIPPING surface (the Delta/Iceberg file-stats
-    * story at directory granularity): per data dir, the [min, max] of one
-    * caller-designated long-typed column, recorded at commit time.
-    * [[readLatestWhere]] prunes non-intersecting dirs at PLANNING — a
-    * key-range read of a 100 TB append table lists and scans only the
-    * dirs whose range overlaps, never the history. Dirs absent from the
-    * map are always read: stats are an optimization, never a filter, so
-    * mixed histories (stats-less old commits, stats-bearing new ones)
-    * stay correct.
+    * Each field has one of three read contracts. STRICT: a damaged value
+    * makes the whole commit unreadable (a torn tail is repaired, a
+    * mid-log commit takes the resync path), because reading around it
+    * would return wrong rows or let a writer drop a recorded obligation.
+    * ADVISORY: a damaged or absent value reads as empty, which costs only
+    * pruning, planning or audit precision. GATE: a feature list a reader
+    * or writer must understand before it touches the table.
     *
-    * `rowInvisible` marks a commit whose snapshot is ROW-IDENTICAL to its
-    * parent (today: [[compact]]) — the Delta `dataChange=false` idea.
-    * Incremental consumers ([[appendedSince]]) skip such commits instead
-    * of treating their rewrite shape as a resync-forcing mutation, so a
-    * scheduled OPTIMIZE never re-delivers a 100 TB table downstream.
-    * Only the library sets it; the public [[commit]] always records
-    * row-visible commits, so a lying writer can't make consumers skip
-    * real changes.
+    * {{{
+    * field (JSON key)       contract   written when          meaning
+    * dataDirs               strict     always, non-empty     dirs whose union is the snapshot
+    * writer, action         strict     always                audit tags
+    * rowInvisible           advisory   true (library verbs)  rows equal the parent's (compact):
+    *                                                         incremental consumers skip it
+    * (features)             gate       gatedFeatures(c)      reader features; an unknown one
+    *                                   non-empty             throws UnsupportedTableFeatureException
+    * unknownWriterFeatures  gate       gatedWriterFeatures   writer obligations; unknown names
+    *   (writerFeatures)                (c) non-empty         land here and refuse every write verb
+    * tsMs (ts)              advisory   by every verb         claim-time epoch ms; time travel
+    *                                                         refuses a commit without it
+    * clusterSpec (cluster)  advisory   set                   how a compact laid this snapshot out
+    * clusterBy              advisory   set                   declared clustering a column-less
+    *                                                         compact applies
+    * txn                    advisory   set                   (appId, batchId) watermark of
+    *                                                         commitAppendOnce
+    * schemaDDL (schema)     advisory   by every verb         all-nullable read schema; absent
+    *                                                         reads footer-first
+    * constraints            advisory   non-empty             (name, SQL) CHECKs every write verb
+    *                        per entry                        enforces before staging
+    * defaults               strict     non-empty             (column path, sinceVersion, SQL):
+    *                                                         older dirs read the constant
+    * colMap                 strict     non-empty             logical column path -> physical name
+    * gens                   strict     non-empty             (column, SQL) generated columns
+    * partitionBy            strict     non-empty             partition columns (kept in the files)
+    * partVals (parts)       strict     with partitionBy      dir -> partition values
+    * dv                     strict     non-empty             dir -> deletion vector under _dv/
+    * statsCols              advisory   with stats            columns the stats describe
+    * stats                  advisory   non-empty             dir -> column -> [min, max] (statDomain)
+    * fstats                 advisory   non-empty             dir/file -> column -> [min, max]
+    * rows                   advisory   non-empty             dir -> exact row count (footers)
+    * dvRows                 advisory   with dv               dir -> rows its vector deletes
+    * }}}
     *
-    * `statsCols` records WHICH columns the stats describe (r11 single-
-    * column; r13 generalizes to a column SET, the Delta per-column
-    * min/max story): stats maps are carried forward across appends, so
-    * the set is a table-level convention — recording it lets
-    * [[readLatestWhere]] and [[merge]] prove the recorded ranges apply to
-    * the column they are pruning on, turning a mismatched-column misuse
-    * into a harmless full scan instead of a silently wrong prune. `stats`
-    * is dir → column → [min, max]; pre-r13 commits' flat single-column
-    * shape parses into the same model under their recorded `statsCol`
-    * (mixed histories stay correct: a dir whose map lacks a column is
-    * always scanned for predicates on it). Pre-r11 commits lack the
-    * recorded names entirely (Nil): their stats prune only through the
-    * legacy caller-asserted path.
-    *
-    * `txn` is the idempotent-writer watermark (the Delta `txn` action):
-    * `(appId, batchId)` of the writer's last applied batch.
-    * [[commitAppendOnce]] skips a batch whose id is ≤ the newest retained
-    * watermark for its appId — exactly-once appends under foreachBatch
-    * re-delivery.
-    *
-    * `tsMs` is the commit's UTC wall-clock epoch-ms, stamped at claim
-    * time (r13) — the evidence `TIMESTAMP AS OF` and the audit surface
-    * need. Damage-tolerant like txn/stats: a commit missing the field
-    * stays readable everywhere EXCEPT time-based resolution, which fails
-    * loudly on it ([[commitAtTimestamp]]) rather than silently guessing.
-    *
-    * `constraints` (r14 — the Delta CHECK-constraint story) is the
-    * table's enforced invariant list, (name → SQL expression), recorded
-    * in the commit JSON and carried forward by EVERY verb: a batch is
-    * accepted only if no constraint evaluates FALSE on any of its rows
-    * (NULL passes — the SQL CHECK rule; NOT NULL is `col IS NOT NULL`),
-    * checked BEFORE staging on every write face — append, insert,
-    * rewrite, merge, replaceWhere, update, the streaming sink — so a
-    * malformed batch never lands in an audited table through any route.
-    * [[addConstraint]] validates existing data first (the Delta ADD
-    * CONSTRAINT scan); [[dropConstraint]] removes; both are audited
-    * rowInvisible metadata commits. Damage-tolerant parse like
-    * txn/stats/schema: a bit-rotted block degrades to "no constraints"
-    * for READING (skipping must not gate readability) — the enforcement
-    * surface degrades with it, the documented trade of the
-    * damage-tolerant log.
-    *
-    * `dv` (r16 — VERDICT r15 #1, the Delta DELETION-VECTOR story:
-    * merge-on-read deletes) maps a data directory to the DELETION
-    * VECTOR dataset (`_dv/<name>`, a tiny parquet of (path, pos) file
-    * positions) whose rows are LOGICALLY DELETED from it: readers
-    * anti-join the dir's rows against the vector by
-    * (`_metadata.file_path`, `_metadata.row_index`), so k scattered
-    * point deletes cost O(changeset) bytes written — one vector + one
-    * log file — instead of ~k copy-on-write directory rewrites.
-    * [[compact]] MATERIALIZES vectors away (its rewrite reads visible
-    * rows); [[vacuum]] sweeps unreferenced vectors by the data-dir
-    * rule. Unlike stats/txn the field is parse-STRICT, never
-    * damage-tolerant: reading a dv-bearing commit without its vectors
-    * would resurrect deleted rows, so a damaged dv block makes the
-    * whole commit unreadable (tail: repaired; mid-log: the resync
-    * path) rather than silently wrong.
-    *
-    * `clusterBy` (r16 — VERDICT r15 #3, the declarative-clustering /
-    * liquid-clustering face) is the table's DECLARED clustering spec
-    * (same `sort:`/`z:` vocabulary as `clusterSpec`), recorded by
-    * `CREATE/ALTER TABLE … CLUSTER BY` via [[setClusterBy]] and carried
-    * forward by every verb. It is the INTENT; `clusterSpec` stays the
-    * per-commit record of how a compact actually laid the snapshot out.
-    * [[compact]] with no explicit columns defaults to it, so a
-    * scheduled argument-less `CALL compact` maintains the declared
-    * layout. Damage-tolerant like stats (a lost declaration degrades to
-    * "compact coalesces only" — row data is never at stake).
-    *
-    * `defaults` (r16 — VERDICT r15 #5, the `ADD COLUMNS … DEFAULT`
-    * story) records EXISTENCE defaults: (column, sinceVersion, SQL
-    * expression). A directory whose name-embedded version predates
-    * `sinceVersion` was written before the column existed, so readers
-    * coalesce its typed-NULL fill to the recorded constant; dirs
-    * written after store explicit values and read them back verbatim
-    * (an explicit NULL stays NULL). Rewrites/compacts MATERIALIZE
-    * defaults (their builds read the default-applied snapshot).
-    * Parse-STRICT like `dv`: reading a defaulted table without its
-    * defaults would silently return NULL where the recorded constant
-    * belongs.
-    *
-    * `colMap` (r16 — VERDICT r15 #2, the Delta COLUMN-MAPPING story)
-    * maps each LOGICAL column name to the PHYSICAL name stored in
-    * parquet. Empty = identity (the common case — zero overhead). The
-    * first RENAME/DROP activates it by freezing every column's physical
-    * name at its then-current name; from then on `RENAME COLUMN` is one
-    * metadata commit re-pointing a logical name at its frozen physical,
-    * `DROP COLUMN` removes the logical entry (the physical bytes stay,
-    * unread — column pruning never scans them), and columns ADDED under
-    * an active mapping take a fresh `col-<uuid>` physical so a re-added
-    * logical name can never resurrect dropped data. Partial-rewrite
-    * verbs stage under PHYSICAL names (one physical name per column,
-    * ever — all dirs stay uniformly readable); full rewrites
-    * ([[compact]], overwrite, restore) MATERIALIZE logical names and
-    * clear the map. Readers translate: scan with the physical schema,
-    * project back to logical. Parse-STRICT like `dv`: reading a mapped
-    * table without its map would return the wrong (physical) names —
-    * or, after a re-add, the wrong column's bytes. */
+    * Prune-only evidence (stats, fstats, parts) never filters: a dir or
+    * file without an entry is always read. */
   final case class Commit(version: Long, dataDirs: Seq[String], writer: String,
       action: String, stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
       rowInvisible: Boolean = false, statsCols: Seq[String] = Nil,
@@ -186,50 +115,12 @@ object CommitLog {
       clusterBy: Option[String] = None,
       defaults: Seq[(String, Long, String)] = Nil,
       colMap: Map[String, String] = Map.empty,
-      statsTyped: Set[String] = Set.empty,
       fstats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      // PARTITION COLUMNS (r19 — VERDICT r18 #1, the hive/Delta
-      // PARTITIONED BY story): the table's declared partition column
-      // list, set once while the table holds no data ([[setPartitionBy]])
-      // and carried by every verb. Unlike hive layouts the partition
-      // columns STAY IN the parquet files (the Iceberg choice), so every
-      // existing read path — including a partition-unaware binary — reads
-      // correct rows; the spec is a WRITER obligation (split staged data
-      // per partition tuple) plus a pruning accelerator, never a reader
-      // requirement. Parse-STRICT: a writer reading a damaged spec as
-      // absent would stage unsplit dirs and drop the spec from the
-      // carried record.
       partitionBy: Seq[String] = Nil,
-      // dir → partition VALUES (rendered strings, aligned with
-      // partitionBy): exact per-dir identity for partition pruning and
-      // partition-addressed restatement. ADVISORY prune-only per dir — a
-      // dir with no entry (staged by a pre-partitioning commit, or by a
-      // verb that does not split, e.g. merge) is kept by every partition
-      // filter. Parse-STRICT like the spec (a half-parsed map could
-      // misprune a dir into silence).
       partVals: Map[String, Seq[String]] = Map.empty,
-      // EXACT per-dir row counts (r19 — VERDICT r18 #4): recorded from
-      // parquet footers at staging time by every dir-creating verb, so
-      // the connector reports exact Statistics(rowCount) and Spark's
-      // broadcast/AQE decisions see truth instead of a size estimate.
-      // Advisory and damage-tolerant (absent = size-estimate planning).
       rows: Map[String, Long] = Map.empty,
-      // dir → rows logically deleted by its deletion vector (cumulative
-      // across folds) — subtracted from `rows` for visible-count
-      // statistics. Maintained wherever `dv` is; advisory like `rows`.
       dvRows: Map[String, Long] = Map.empty,
-      // GENERATED COLUMNS (r19 — VERDICT r18 #2, the Delta `GENERATED
-      // ALWAYS AS` story): (column, SQL expression). Every write verb
-      // materializes the column when the batch omits it and VALIDATES
-      // supplied values against the expression (a conflicting explicit
-      // value refuses before staging). Values are stored in the files,
-      // so reads need nothing — a writer obligation, gated like
-      // constraints. Parse-STRICT: a writer reading a damaged list as
-      // absent would stop enforcing the recorded invariant.
       gens: Seq[(String, String)] = Nil,
-      // parse-only (never rendered as such — render derives the recorded
-      // set from state): writer obligations the head records that THIS
-      // binary does not implement; nonEmpty refuses every write verb
       unknownWriterFeatures: Set[String] = Set.empty)
 
   /** Raised when a commit requires a table feature this binary does not
@@ -330,596 +221,108 @@ object CommitLog {
   def init(spark: SparkSession, root: String): Unit =
     fs(spark, root).mkdirs(logDir(root))
 
-  /** Writer/action tags are embedded UNESCAPED in the claim JSON; an
-    * uncontrolled string (a quote, a backslash) would render a COMMITTED
-    * claim unparseable — which reads as a torn tail and gets repaired
-    * away, silently dropping the version. Reject at the API edge. */
+  /** API input validation of writer/action tags, constraint names and
+    * stats columns: short identifiers keep the audit surface (history,
+    * the checkpoint index) greppable. JSON safety does not depend on it —
+    * [[encode]] escapes every string. */
   private def requireTag(v: String, what: String): Unit =
     require(v.nonEmpty && v.forall(ch =>
       ch.isLetterOrDigit || ch == '_' || ch == '-' || ch == '.'),
       s"CommitLog $what must be non-empty [A-Za-z0-9_.-]: '$v'")
 
-  private def render(c: Commit): String = {
-    // dir names are UUID-based internal identifiers ([A-Za-z0-9-]), so
-    // they embed unescaped for the same reason tags do (requireTag);
-    // statsCols/txn.appId are requireTag-validated at the API edge
-    val stats =
-      if (c.stats.isEmpty) ""
-      else c.stats.toSeq.sortBy(_._1).map { case (d, byCol) =>
-        "\"" + d + "\":{" + byCol.toSeq.sortBy(_._1).map { case (cn, (lo, hi)) =>
-          "\"" + cn + "\":[" + lo + "," + hi + "]"
-        }.mkString(",") + "}"
-      }.mkString(""","stats":{""", ",", "}")
-    val statsCols =
-      if (c.statsCols.isEmpty || c.stats.isEmpty) ""
-      else c.statsCols.map(n => "\"" + n + "\"")
-        .mkString(""","statsCols":[""", ",", "]")
-    // PER-FILE stats (r18 — VERDICT r17 #5/#6): "dir/file" → col →
-    // [lo, hi], written by append/compact/rewrite for their NEW dirs so
-    // pruning inside a big bin-packed dir skips parquet footer reads at
-    // planning. Advisory (absent = footer-time pruning only) and always
-    // in the TYPED stat domain (the field did not exist before r18).
-    // Keys are dir names + parquet part-file names — [A-Za-z0-9_.=/-],
-    // unescaped like dataDirs.
-    val fstats =
-      if (c.fstats.isEmpty) ""
-      else c.fstats.toSeq.sortBy(_._1).map { case (df, byCol) =>
-        "\"" + df + "\":{" + byCol.toSeq.sortBy(_._1).map { case (cn, (lo, hi)) =>
-          "\"" + cn + "\":[" + lo + "," + hi + "]"
-        }.mkString(",") + "}"
-      }.mkString(""","fstats":{""", ",", "}")
-    // stats-ENCODING generation (r18 — ADVICE r17): the dirs whose
-    // recorded ranges were computed under the TYPED statDomain (string
-    // prefix encoding). String-domain narrowing applies ONLY to these;
-    // a pre-r17 dir recorded numeric-cast string stats (e.g. "100" →
-    // 100), which a prefix-encoded probe would misprune. Dir names are
-    // UUID-based internal identifiers — unescaped, the dataDirs rule.
-    val statsTyped =
-      if (c.statsTyped.isEmpty || c.stats.isEmpty) ""
-      else c.statsTyped.toSeq.sorted.map(d => "\"" + d + "\"")
-        .mkString(""","statsTyped":[""", ",", "]")
-    val cluster = c.clusterSpec
-      .map(sp => s""","cluster":"$sp"""").getOrElse("")
-    // the DECLARED spec (r16) — built from requireTag'd column names +
-    // the fixed sort:/z: prefixes, so it embeds unescaped like cluster
-    val clusterBy = c.clusterBy
-      .map(sp => s""","clusterBy":"$sp"""").getOrElse("")
-    val txn = c.txn.map { case (app, b) =>
-      s""","txn":{"app":"$app","batch":$b}"""
-    }.getOrElse("")
-    val inv = if (c.rowInvisible) ""","rowInvisible":true""" else ""
-    // protocol feature gates (r18): the reader-required feature set of
-    // THIS commit's state — names are engine constants ([a-z]), unescaped
-    val feats = {
-      val g = gatedFeatures(c)
-      if (g.isEmpty) ""
-      else g.toSeq.sorted.map("\"" + _ + "\"")
-        .mkString(""","features":[""", ",", "]")
-    }
-    // writer-obligation gates (r18): derived from state like `features`
-    val wfeats = {
-      val g = gatedWriterFeatures(c)
-      if (g.isEmpty) ""
-      else g.toSeq.sorted.map("\"" + _ + "\"")
-        .mkString(""","writerFeatures":[""", ",", "]")
-    }
-    val ts = c.tsMs.map(t => s""","ts":$t""").getOrElse("")
-    // the recorded table schema (r12 additive evolution) is the one field
-    // whose content is NOT tag-restricted — a DDL string carries spaces,
-    // commas, backticks — so it is the one field that round-trips through
-    // real JSON string escaping (parse's field() regex already reads
-    // escaped content; render was the missing half)
-    val schema = c.schemaDDL
-      .map(ddl => s""","schema":"${escapeJson(ddl)}"""").getOrElse("")
-    // constraint names are requireTag-validated; expressions are
-    // arbitrary SQL text, so they take the schema field's full escaping
-    val cons =
-      if (c.constraints.isEmpty) ""
-      else c.constraints.map { case (n, e) =>
-        s"""{"name":"$n","expr":"${escapeJson(e)}"}"""
-      }.mkString(""","constraints":[""", ",", "]")
-    // dir and dv-dataset names are UUID-based internal identifiers
-    // ([A-Za-z0-9-]) — unescaped embedding, the dataDirs rule
-    val dvf =
-      if (c.dv.isEmpty) ""
-      else c.dv.toSeq.sortBy(_._1).map { case (d, n) =>
-        "\"" + d + "\":\"" + n + "\""
-      }.mkString(""","dv":{""", ",", "}")
-    // existence defaults (r16): names are requireTag-validated, the
-    // expression is arbitrary SQL — full escaping like constraints
-    val defs =
-      if (c.defaults.isEmpty) ""
-      else c.defaults.map { case (n, v, e) =>
-        s"""{"col":"$n","since":$v,"dexpr":"${escapeJson(e)}"}"""
-      }.mkString(""","defaults":[""", ",", "]")
-    // column mapping (r16): logical names are user-controlled — full
-    // escaping on both sides (physicals are frozen logicals or col-uuid)
-    val cmap =
-      if (c.colMap.isEmpty) ""
-      else c.colMap.toSeq.sortBy(_._1).map { case (l, p) =>
-        s"""{"l":"${escapeJson(l)}","p":"${escapeJson(p)}"}"""
-      }.mkString(""","colMap":[""", ",", "]")
-    // generated columns (r19): names are user column names, expressions
-    // arbitrary SQL — full escaping on both, the constraints pattern
-    val gens =
-      if (c.gens.isEmpty) ""
-      else c.gens.map { case (n, e) =>
-        s"""{"col":"${escapeJson(n)}","gexpr":"${escapeJson(e)}"}"""
-      }.mkString(""","gens":[""", ",", "]")
-    // partition spec + per-dir values (r19): column names and values are
-    // user content — escaped; dir keys follow the dataDirs rule
-    val partBy =
-      if (c.partitionBy.isEmpty) ""
-      else c.partitionBy.map(n => "\"" + escapeJson(n) + "\"")
-        .mkString(""","partitionBy":[""", ",", "]")
-    val parts =
-      if (c.partVals.isEmpty || c.partitionBy.isEmpty) ""
-      else c.partVals.toSeq.sortBy(_._1).map { case (d, vs) =>
-        "\"" + d + "\":[" + vs.map(v => "\"" + escapeJson(v) + "\"")
-          .mkString(",") + "]"
-      }.mkString(""","parts":{""", ",", "}")
-    // exact per-dir row counts (r19): advisory statistics — dir keys by
-    // the dataDirs rule, values plain longs
-    val rowsJ =
-      if (c.rows.isEmpty) ""
-      else c.rows.toSeq.sortBy(_._1).map { case (d, n) =>
-        "\"" + d + "\":" + n
-      }.mkString(""","rows":{""", ",", "}")
-    val dvRowsJ =
-      if (c.dvRows.isEmpty || c.dv.isEmpty) ""
-      else c.dvRows.toSeq.sortBy(_._1).map { case (d, n) =>
-        "\"" + d + "\":" + n
-      }.mkString(""","dvRows":{""", ",", "}")
-    s"""{"version":${c.version},"dataDirs":[${c.dataDirs.map(d => "\"" + d + "\"").mkString(",")}],""" +
-      s""""writer":"${c.writer}","action":"${c.action}"$inv$feats$wfeats$ts$cluster$clusterBy$txn$schema$cons$defs$cmap$gens$partBy$parts$dvf$statsCols$statsTyped$stats$fstats$rowsJ$dvRowsJ}"""
+  /** The commit file's JSON: each field written under the condition the
+    * [[Commit]] table gives, in a fixed order, maps keyed in sorted order. */
+  private[graft] def encode(c: Commit): String = {
+    def nonEmpty(xs: Iterable[_]) = Option.when(xs.nonEmpty)(xs)
+    Json.write(
+      "version" -> c.version, "dataDirs" -> c.dataDirs,
+      "writer" -> c.writer, "action" -> c.action,
+      "rowInvisible" -> Option.when(c.rowInvisible)(true),
+      "features" -> nonEmpty(gatedFeatures(c).toSeq.sorted),
+      "writerFeatures" -> nonEmpty(gatedWriterFeatures(c).toSeq.sorted),
+      "ts" -> c.tsMs, "cluster" -> c.clusterSpec, "clusterBy" -> c.clusterBy,
+      "txn" -> c.txn.map { case (a, b) => Json.obj("app" -> a, "batch" -> b) },
+      "schema" -> c.schemaDDL,
+      "constraints" -> nonEmpty(c.constraints.map { case (n, e) =>
+        Json.obj("name" -> n, "expr" -> e) }),
+      "defaults" -> nonEmpty(c.defaults.map { case (n, v, e) =>
+        Json.obj("col" -> n, "since" -> v, "dexpr" -> e) }),
+      "colMap" -> nonEmpty(c.colMap.toSeq.sortBy(_._1).map { case (l, p) =>
+        Json.obj("l" -> l, "p" -> p) }),
+      "gens" -> nonEmpty(c.gens.map { case (n, e) =>
+        Json.obj("col" -> n, "gexpr" -> e) }),
+      "partitionBy" -> nonEmpty(c.partitionBy),
+      "parts" -> nonEmpty(c.partVals).filter(_ => c.partitionBy.nonEmpty),
+      "dv" -> nonEmpty(c.dv),
+      "statsCols" -> nonEmpty(c.statsCols).filter(_ => c.stats.nonEmpty),
+      "stats" -> nonEmpty(c.stats), "fstats" -> nonEmpty(c.fstats),
+      "rows" -> nonEmpty(c.rows),
+      "dvRows" -> nonEmpty(c.dvRows).filter(_ => c.dv.nonEmpty))
   }
 
-  /** Full JSON string escaping (ADVICE r12: backslash+quote alone left a
-    * DDL carrying a control char — e.g. a backtick-quoted column name with
-    * \n — emitted raw, making the file invalid JSON for external readers).
-    * Shared with [[GraftCatalog]]'s descriptor writer (same field class —
-    * a schema DDL — must not have two divergent escapers). */
-  private[graft] def escapeJson(s: String): String = {
-    val b = new java.lang.StringBuilder(s.length + 8)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' => b.append("\\\\")
-        case '"' => b.append("\\\"")
-        case '\n' => b.append("\\n")
-        case '\r' => b.append("\\r")
-        case '\t' => b.append("\\t")
-        case ch if ch < 0x20 => b.append(f"\\u${ch.toInt}%04x")
-        case ch => b.append(ch)
-      }
-      i += 1
+  /** Version `v`'s commit from its file text, by the [[Commit]] table's
+    * contracts: None when the text is not one JSON object (a torn or
+    * damaged file) or a strict field is damaged. The reader feature gate
+    * is checked first and THROWS on an unknown feature: read as torn,
+    * repairTornTail would delete a newer binary's valid commit; skipped,
+    * readers would resolve an older head. */
+  private[graft] def decode(v: Long, s: String): Option[Commit] =
+    Json.parse(s).flatMap { o =>
+      import Json.{bool, long, map, pair, seq, str, strict}
+      def f(k: String) = o.path(k)
+      def ranges(n: com.fasterxml.jackson.databind.JsonNode) =
+        map(n)(map(_)(pair))
+      for {
+        feats <- strict(f("features"), Seq.empty[String])(seq(_)(str))
+        unknown = feats.filterNot(SupportedFeatures)
+        _ = if (unknown.nonEmpty) throw new UnsupportedTableFeatureException(
+          s"graft.commitlog: version $v requires table feature(s) " +
+            s"${unknown.mkString("'", "', '", "'")} this reader does not " +
+            s"implement (supported: ${SupportedFeatures.toSeq.sorted
+              .mkString(", ")}) — upgrade the binary; reading through " +
+            "would corrupt results (resurrected deletes, wrong columns, " +
+            "missing defaults)")
+        dirs <- seq(f("dataDirs"))(str).filter(_.nonEmpty)
+        writer <- str(f("writer"))
+        action <- str(f("action"))
+        dv <- strict(f("dv"), Map.empty[String, String])(map(_)(str))
+        defaults <- strict(f("defaults"), Seq.empty[(String, Long, String)])(
+          seq(_)(e => for (c <- str(e.path("col"));
+            since <- long(e.path("since")); x <- str(e.path("dexpr")))
+            yield (c, since, x)))
+        colMap <- strict(f("colMap"), Seq.empty[(String, String)])(
+          seq(_)(e => for (l <- str(e.path("l")); p <- str(e.path("p")))
+            yield l -> p))
+        gens <- strict(f("gens"), Seq.empty[(String, String)])(
+          seq(_)(e => for (c <- str(e.path("col"));
+            x <- str(e.path("gexpr"))) yield c -> x))
+        partitionBy <- strict(f("partitionBy"), Seq.empty[String])(
+          seq(_)(str))
+        partVals <- strict(f("parts"), Map.empty[String, Seq[String]])(
+          map(_)(seq(_)(str)))
+      } yield Commit(v, dirs, writer, action,
+        // advisory fields: absent or damaged reads as empty
+        stats = ranges(f("stats")).getOrElse(Map.empty),
+        rowInvisible = bool(f("rowInvisible")).contains(true),
+        statsCols = seq(f("statsCols"))(str).getOrElse(Nil),
+        txn = for (a <- str(f("txn").path("app"));
+          b <- long(f("txn").path("batch"))) yield (a, b),
+        clusterSpec = str(f("cluster")), schemaDDL = str(f("schema")),
+        tsMs = long(f("ts")),
+        // per entry: one damaged constraint does not drop the others
+        constraints = seq(f("constraints"))(e => Some(
+          for (n <- str(e.path("name")); x <- str(e.path("expr")))
+            yield n -> x)).getOrElse(Nil).flatten,
+        dv = dv, clusterBy = str(f("clusterBy")), defaults = defaults,
+        colMap = colMap.toMap,
+        fstats = ranges(f("fstats")).getOrElse(Map.empty),
+        partitionBy = partitionBy, partVals = partVals,
+        rows = map(f("rows"))(long).getOrElse(Map.empty),
+        dvRows = map(f("dvRows"))(long).getOrElse(Map.empty),
+        gens = gens,
+        unknownWriterFeatures = seq(f("writerFeatures"))(str)
+          .getOrElse(Nil).toSet -- SupportedWriterFeatures)
     }
-    b.toString
-  }
-  private[graft] def unescapeJson(s: String): String = {
-    val b = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => b.append('\\'); i += 2
-          case '"' => b.append('"'); i += 2
-          case 'n' => b.append('\n'); i += 2
-          case 'r' => b.append('\r'); i += 2
-          case 't' => b.append('\t'); i += 2
-          // an INVALID \u escape (bit rot in one string field) must not
-          // throw out of parse — readCommitFile's damage contract is
-          // degrade, and a throwing unescape would brick every reader AND
-          // writer (repairTornTail runs in claim loops). Emit the pair
-          // literally instead (code review r13; ADVICE r13: literally
-          // means BOTH chars — dropping the backslash would degrade
-          // damaged strings lossily instead of round-tripping them).
-          case 'u' if i + 6 <= s.length &&
-              s.substring(i + 2, i + 6).forall(c =>
-                Character.digit(c, 16) >= 0) =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case other => b.append('\\').append(other); i += 2
-        }
-      } else { b.append(ch); i += 1 }
-    }
-    b.toString
-  }
-
-  private def parse(v: Long, s: String): Option[Commit] = {
-    // minimal strict parse of exactly the shape `render` writes; anything
-    // else (torn tail from a crash mid-write) is None => repair path
-    def field(k: String): Option[String] = {
-      val m = java.util.regex.Pattern
-        .compile("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(s)
-      if (m.find()) Some(m.group(1)) else None
-    }
-    def dirs: Option[Seq[String]] = {
-      val m = java.util.regex.Pattern
-        .compile("\"dataDirs\":\\[([^\\]]*)\\]").matcher(s)
-      if (!m.find()) None
-      else {
-        val body = m.group(1).trim
-        if (body.isEmpty) Some(Nil)
-        else {
-          val items = body.split(",").toSeq.map(_.trim)
-          if (items.forall(i => i.length >= 2 && i.startsWith("\"") && i.endsWith("\"")))
-            Some(items.map(i => i.substring(1, i.length - 1)))
-          else None
-        }
-      }
-    }
-    // stats are OPTIONAL (absent in pre-stats commits) and damage-tolerant:
-    // a malformed stats block degrades to "no stats" (every dir read),
-    // never to an unparseable commit — skipping must not gate readability.
-    // The block's content (the stats object's body, braces balanced —
-    // the r13 per-column shape nests one brace level).
-    def statsBody: Option[String] = {
-      val at = s.indexOf("\"stats\":{")
-      if (at < 0) None
-      else {
-        val open = at + "\"stats\":".length
-        var depth = 0
-        var i = open
-        while (i < s.length) {
-          s.charAt(i) match {
-            case '{' => depth += 1
-            case '}' =>
-              depth -= 1
-              if (depth == 0) return Some(s.substring(open + 1, i))
-            case _ => ()
-          }
-          i += 1
-        }
-        None // unbalanced: damaged block, degrade to no stats
-      }
-    }
-    // r13 shape: "dir":{"col":[lo,hi],...}; legacy flat shape (pre-r13):
-    // "dir":[lo,hi] under the single recorded "statsCol" — both parse into
-    // the per-column model so mixed histories prune identically
-    def stats: Map[String, Map[String, (Long, Long)]] = statsBody match {
-      case None => Map.empty
-      case Some(body) =>
-        val b = Map.newBuilder[String, Map[String, (Long, Long)]]
-        val nested = java.util.regex.Pattern
-          .compile("\"([^\"]+)\":\\{([^}]*)\\}").matcher(body)
-        var anyNested = false
-        while (nested.find()) {
-          anyNested = true
-          val inner = java.util.regex.Pattern
-            .compile("\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]")
-            .matcher(nested.group(2))
-          val cb = Map.newBuilder[String, (Long, Long)]
-          while (inner.find())
-            cb += inner.group(1) -> (inner.group(2).toLong, inner.group(3).toLong)
-          b += nested.group(1) -> cb.result()
-        }
-        if (!anyNested) {
-          // legacy flat single-column shape: attribute the ranges to the
-          // recorded statsCol (absent name ⇒ caller-asserted legacy "" key
-          // never matches a real column request, so such stats only serve
-          // the requireRecorded=false library path via statsCols Nil)
-          val legacyCol = field("statsCol")
-          val flat = java.util.regex.Pattern
-            .compile("\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]").matcher(body)
-          while (flat.find())
-            b += flat.group(1) -> Map(legacyCol.getOrElse("") ->
-              (flat.group(2).toLong, flat.group(3).toLong))
-        }
-        b.result()
-    }
-    // the recorded stats column set: r13 "statsCols":[...], else the
-    // legacy single "statsCol" field
-    def statsCols: Seq[String] = {
-      val m = java.util.regex.Pattern
-        .compile("\"statsCols\":\\[([^\\]]*)\\]").matcher(s)
-      if (m.find()) {
-        val item = java.util.regex.Pattern
-          .compile("\"([^\"]+)\"").matcher(m.group(1))
-        val b = Seq.newBuilder[String]
-        while (item.find()) b += item.group(1)
-        b.result()
-      } else field("statsCol").toSeq
-    }
-    // per-file stats (r18): OPTIONAL and damage-tolerant like stats —
-    // absent or malformed reads as EMPTY, which only degrades pruning
-    // inside kept dirs back to parquet footer time (conservative: scan)
-    def fstats: Map[String, Map[String, (Long, Long)]] = {
-      val at = s.indexOf("\"fstats\":{")
-      if (at < 0) return Map.empty
-      val open = at + "\"fstats\":".length
-      var depth = 0
-      var i = open
-      var body: String = null
-      while (i < s.length && body == null) {
-        s.charAt(i) match {
-          case '{' => depth += 1
-          case '}' =>
-            depth -= 1
-            if (depth == 0) body = s.substring(open + 1, i)
-          case _ => ()
-        }
-        i += 1
-      }
-      if (body == null) return Map.empty // unbalanced: degrade
-      val b = Map.newBuilder[String, Map[String, (Long, Long)]]
-      val nested = java.util.regex.Pattern
-        .compile("\"([^\"]+)\":\\{([^}]*)\\}").matcher(body)
-      while (nested.find()) {
-        val inner = java.util.regex.Pattern
-          .compile("\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]")
-          .matcher(nested.group(2))
-        val cb = Map.newBuilder[String, (Long, Long)]
-        while (inner.find())
-          cb += inner.group(1) -> (inner.group(2).toLong, inner.group(3).toLong)
-        b += nested.group(1) -> cb.result()
-      }
-      b.result()
-    }
-    // stats-encoding generation (r18): OPTIONAL and damage-tolerant like
-    // stats — absent or malformed reads as EMPTY, which only disables
-    // string-domain narrowing for the commit's dirs (conservative: scan)
-    def statsTyped: Set[String] = {
-      val m = java.util.regex.Pattern
-        .compile("\"statsTyped\":\\[([^\\]]*)\\]").matcher(s)
-      if (!m.find()) Set.empty
-      else {
-        val item = java.util.regex.Pattern
-          .compile("\"([^\"]+)\"").matcher(m.group(1))
-        val b = Set.newBuilder[String]
-        while (item.find()) b += item.group(1)
-        b.result()
-      }
-    }
-    // commit wall-clock (r13): OPTIONAL and damage-tolerant like txn —
-    // a malformed field reads as "no timestamp" (version-travel still
-    // works; time-travel fails loudly at resolution)
-    def tsMs: Option[Long] = {
-      val m = java.util.regex.Pattern
-        .compile("\"ts\":(-?\\d+)").matcher(s)
-      if (m.find()) scala.util.Try(m.group(1).toLong).toOption else None
-    }
-    // txn watermark: like stats, OPTIONAL and damage-tolerant — a
-    // malformed block degrades to "no watermark" (a duplicate batch may
-    // re-append, the documented at-least-once floor), never unreadable
-    def txn: Option[(String, Long)] = {
-      val m = java.util.regex.Pattern
-        .compile("\"txn\":\\{\"app\":\"([^\"]*)\",\"batch\":(-?\\d+)\\}")
-        .matcher(s)
-      if (m.find()) Some((m.group(1), m.group(2).toLong)) else None
-    }
-    // constraints (r14): entries matched individually — damage-tolerant
-    // (a malformed entry is skipped, never unreadable), and the
-    // {"name":…,"expr":…} shape appears nowhere else in the commit JSON
-    def constraints: Seq[(String, String)] = {
-      val m = java.util.regex.Pattern
-        .compile("\\{\"name\":\"([^\"]+)\",\"expr\":\"((?:[^\"\\\\]|\\\\.)*)\"\\}")
-        .matcher(s)
-      val b = Seq.newBuilder[(String, String)]
-      while (m.find()) b += m.group(1) -> unescapeJson(m.group(2))
-      b.result()
-    }
-    // deletion vectors (r16): dir → DV dataset name. STRICT, unlike
-    // stats/txn/constraints: a commit that RECORDS deletion vectors but
-    // whose dv block is damaged must not read at all — its dirs read
-    // without the vector filter would RESURRECT deleted rows, the one
-    // failure direction the damage-tolerant degrade cannot take. A
-    // malformed block fails the whole parse (tail: repaired; mid-log:
-    // unreadable, the resync/vacuumed path every consumer handles).
-    def dvMap: Option[Map[String, String]] = {
-      val at = s.indexOf("\"dv\":{")
-      if (at < 0) return Some(Map.empty)
-      val open = at + "\"dv\":{".length
-      val close = s.indexOf('}', open)
-      if (close < 0) return None
-      val body = s.substring(open, close).trim
-      if (body.isEmpty) return Some(Map.empty)
-      val rx = "\"([A-Za-z0-9_.-]+)\":\"([A-Za-z0-9_.-]+)\"".r
-      val pairs = body.split(",", -1).toSeq.map(_.trim).map {
-        case rx(k, n) => Some(k -> n)
-        case _ => None
-      }
-      if (pairs.forall(_.isDefined)) Some(pairs.flatten.toMap) else None
-    }
-    // existence defaults (r16): STRICT like dv — a damaged block would
-    // silently read NULL where the recorded constant belongs. Entries
-    // are regex-matched, then the block is RECONSTRUCTED from the
-    // matches and must appear verbatim (render writes exactly this
-    // shape), so any in-block corruption fails the whole parse.
-    def defaultsStrict: Option[Seq[(String, Long, String)]] = {
-      if (!s.contains("\"defaults\":[")) return Some(Nil)
-      val m = java.util.regex.Pattern.compile(
-        "\\{\"col\":\"([^\"]+)\",\"since\":(\\d+),\"dexpr\":\"((?:[^\"\\\\]|\\\\.)*)\"\\}")
-        .matcher(s)
-      val texts = Seq.newBuilder[String]
-      val b = Seq.newBuilder[(String, Long, String)]
-      while (m.find()) {
-        texts += m.group(0)
-        b += ((m.group(1), m.group(2).toLong, unescapeJson(m.group(3))))
-      }
-      val expected = "\"defaults\":[" + texts.result().mkString(",") + "]"
-      if (s.contains(expected)) Some(b.result()) else None
-    }
-    // generated columns (r19): STRICT like defaults — a writer reading
-    // a damaged list as absent would stop enforcing the recorded
-    // invariant on its own writes. Same reconstruction rule.
-    def gensStrict: Option[Seq[(String, String)]] = {
-      if (!s.contains("\"gens\":[")) return Some(Nil)
-      val m = java.util.regex.Pattern.compile(
-        "\\{\"col\":\"((?:[^\"\\\\]|\\\\.)*)\",\"gexpr\":\"((?:[^\"\\\\]|\\\\.)*)\"\\}")
-        .matcher(s)
-      val texts = Seq.newBuilder[String]
-      val b = Seq.newBuilder[(String, String)]
-      while (m.find()) {
-        texts += m.group(0)
-        b += unescapeJson(m.group(1)) -> unescapeJson(m.group(2))
-      }
-      val expected = "\"gens\":[" + texts.result().mkString(",") + "]"
-      if (s.contains(expected)) Some(b.result()) else None
-    }
-    // one ESCAPED string starting at s(i) == '"' → (unescaped value,
-    // index past the closing quote). The strict scanner under the r19
-    // partition fields: escaped content cannot carry a raw quote, so
-    // the scan is unambiguous; malformation = None = whole-parse fail.
-    def scanStr(i: Int): Option[(String, Int)] = {
-      if (i >= s.length || s.charAt(i) != '"') return None
-      val sb = new StringBuilder
-      var j = i + 1
-      while (j < s.length) {
-        s.charAt(j) match {
-          case '\\' =>
-            if (j + 1 >= s.length) return None
-            sb.append(s.charAt(j)).append(s.charAt(j + 1)); j += 2
-          case '"' => return Some((unescapeJson(sb.toString), j + 1))
-          case ch => sb.append(ch); j += 1
-        }
-      }
-      None
-    }
-    // `["a","b",…]` starting at s(at) == '[' → (values, index past ']')
-    def scanStrArray(at: Int): Option[(Seq[String], Int)] = {
-      if (at >= s.length || s.charAt(at) != '[') return None
-      var j = at + 1
-      val b = Seq.newBuilder[String]
-      if (j < s.length && s.charAt(j) == ']') return Some((Nil, j + 1))
-      while (true) {
-        scanStr(j) match {
-          case None => return None
-          case Some((v, nj)) =>
-            b += v
-            if (nj < s.length && s.charAt(nj) == ',') j = nj + 1
-            else if (nj < s.length && s.charAt(nj) == ']')
-              return Some((b.result(), nj + 1))
-            else return None
-        }
-      }
-      None // unreachable
-    }
-    // partition spec (r19): STRICT — a writer reading a damaged spec as
-    // absent would stage unsplit dirs and carry a spec-less record
-    def partitionByStrict: Option[Seq[String]] = {
-      val key = "\"partitionBy\":"
-      val at = s.indexOf(key)
-      if (at < 0) Some(Nil) else scanStrArray(at + key.length).map(_._1)
-    }
-    // per-dir partition values (r19): STRICT — a half-parsed map could
-    // misprune a dir into silence (the one wrong direction)
-    def partValsStrict: Option[Map[String, Seq[String]]] = {
-      val key = "\"parts\":{"
-      val at = s.indexOf(key)
-      if (at < 0) return Some(Map.empty)
-      var j = at + key.length
-      val b = Map.newBuilder[String, Seq[String]]
-      if (j < s.length && s.charAt(j) == '}') return Some(b.result())
-      while (true) {
-        scanStr(j) match {
-          case None => return None
-          case Some((d, nj)) =>
-            if (nj >= s.length || s.charAt(nj) != ':') return None
-            scanStrArray(nj + 1) match {
-              case None => return None
-              case Some((vs, nk)) =>
-                b += d -> vs
-                if (nk < s.length && s.charAt(nk) == ',') j = nk + 1
-                else if (nk < s.length && s.charAt(nk) == '}')
-                  return Some(b.result())
-                else return None
-            }
-        }
-      }
-      None // unreachable
-    }
-    // exact per-dir row counts (r19): OPTIONAL and damage-tolerant like
-    // stats — absent or malformed reads as EMPTY, which only degrades
-    // planning statistics back to size estimates (never wrong rows)
-    def rowsOf(key: String): Map[String, Long] = {
-      val marker = "\"" + key + "\":{"
-      val at = s.indexOf(marker)
-      if (at < 0) return Map.empty
-      val open = at + marker.length
-      val close = s.indexOf('}', open)
-      if (close < 0) return Map.empty
-      val m = java.util.regex.Pattern
-        .compile("\"([^\"]+)\":(\\d+)").matcher(s.substring(open, close))
-      val b = Map.newBuilder[String, Long]
-      while (m.find()) b += m.group(1) -> m.group(2).toLong
-      b.result()
-    }
-    // column mapping (r16): STRICT like dv/defaults — a damaged map
-    // would read the wrong (physical) names, or after a drop+re-add the
-    // wrong column's bytes. Same reconstruction rule as defaults.
-    def colMapStrict: Option[Map[String, String]] = {
-      if (!s.contains("\"colMap\":[")) return Some(Map.empty)
-      val m = java.util.regex.Pattern.compile(
-        "\\{\"l\":\"((?:[^\"\\\\]|\\\\.)*)\",\"p\":\"((?:[^\"\\\\]|\\\\.)*)\"\\}")
-        .matcher(s)
-      val texts = Seq.newBuilder[String]
-      val b = Map.newBuilder[String, String]
-      while (m.find()) {
-        texts += m.group(0)
-        b += unescapeJson(m.group(1)) -> unescapeJson(m.group(2))
-      }
-      val expected = "\"colMap\":[" + texts.result().mkString(",") + "]"
-      if (s.contains(expected)) Some(b.result()) else None
-    }
-    if (!s.trim.endsWith("}")) None
-    else {
-    // PROTOCOL FEATURE GATES (r18 — VERDICT r17 #2): a commit lists the
-    // reader-REQUIRED features of its state; one this binary does not
-    // implement REFUSES — a THROW, never a parse degrade. Degrading
-    // would be catastrophic both ways: treated as torn, repairTornTail
-    // would DELETE a valid newer writer's commit; skipped, every
-    // consumer would resolve an OLDER head and silently resurrect
-    // deleted rows / misname columns. Absent field = no gated features
-    // (full backward compatibility for existing histories). The literal
-    // key cannot collide with user content: schema/constraint/default
-    // strings are JSON-escaped, so their quotes render as \" and never
-    // match the raw `"features":[` pattern.
-    val fm = java.util.regex.Pattern
-      .compile("\"features\":\\[([^\\]]*)\\]").matcher(s)
-    if (fm.find()) {
-      val it = java.util.regex.Pattern.compile("\"([^\"]+)\"")
-        .matcher(fm.group(1))
-      val names = Seq.newBuilder[String]
-      while (it.find()) names += it.group(1)
-      val unknown = names.result().filterNot(SupportedFeatures)
-      if (unknown.nonEmpty) throw new UnsupportedTableFeatureException(
-        s"graft.commitlog: version $v requires table feature(s) " +
-          s"${unknown.mkString("'", "', '", "'")} this reader does not " +
-          s"implement (supported: ${SupportedFeatures.toSeq.sorted
-            .mkString(", ")}) — upgrade the binary; reading through " +
-          "would corrupt results (resurrected deletes, wrong columns, " +
-          "missing defaults)")
-    }
-    // WRITER feature gates parse TOLERANTLY for readers (reads of a
-    // writer-gated table are safe by definition); the unknown remainder
-    // rides on the Commit and refuses every write verb (requireWritable)
-    val unknownWriter: Set[String] = {
-      val m = java.util.regex.Pattern
-        .compile("\"writerFeatures\":\\[([^\\]]*)\\]").matcher(s)
-      if (!m.find()) Set.empty
-      else {
-        val it = java.util.regex.Pattern.compile("\"([^\"]+)\"")
-          .matcher(m.group(1))
-        val b = Set.newBuilder[String]
-        while (it.find()) b += it.group(1)
-        b.result() -- SupportedWriterFeatures
-      }
-    }
-    for { d <- dirs; if d.nonEmpty; w <- field("writer");
-        a <- field("action"); dvm <- dvMap; dfs <- defaultsStrict;
-        cm <- colMapStrict; gs <- gensStrict; pby <- partitionByStrict;
-        pvs <- partValsStrict }
-      yield Commit(v, d, w, a, stats, s.contains("\"rowInvisible\":true"),
-        statsCols, txn, field("cluster"),
-        field("schema").map(unescapeJson), tsMs, constraints, dvm,
-        field("clusterBy"), dfs, cm, statsTyped, fstats,
-        partitionBy = pby, partVals = pvs,
-        rows = rowsOf("rows"), dvRows = rowsOf("dvRows"), gens = gs,
-        unknownWriterFeatures = unknownWriter)
-    }
-  }
 
   /** All version numbers present in the log (committed OR torn), ascending. */
   private def versions(spark: SparkSession, root: String): Seq[Long] =
@@ -940,23 +343,11 @@ object CommitLog {
     readCommitWith(fs(spark, root), root, v)
 
   private def readCommitWith(f: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Long): Option[Commit] = {
-    val p = commitPath(root, v)
+      root: String, v: Long): Option[Commit] =
     // a concurrent vacuum may delete a listed commit file between the
-    // listing and this open — absence reads as "not a commit" (the same
+    // listing and this read — absence reads as "not a commit" (the same
     // degrade every caller already handles: skip / no watermark / resync)
-    val in = try f.open(p) catch {
-      case _: java.io.FileNotFoundException => return None
-    }
-    val bytes = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-    parse(v, new String(bytes, StandardCharsets.UTF_8))
-  }
+    Json.readFile(f, commitPath(root, v)).flatMap(decode(v, _))
 
   /** Best-effort write of the head pointer after a won claim. Plain
     * overwrite, deliberately NOT atomic: two winners racing the pointer can
@@ -999,10 +390,7 @@ object CommitLog {
     new HPath(logDir(root), "_checkpoint.json")
 
   /** One retained commit's metadata-index row — everything [[history]]
-    * and the timestamp clock need, nothing a data read needs. Tag-rule
-    * fields (writer, action, constraint names, cluster spec columns)
-    * are requireTag-validated at the API edge, so they embed unescaped
-    * like the commit JSON's own tag fields. */
+    * and the timestamp clock need, nothing a data read needs. */
   private[sources] case class IndexEntry(v: Long, ts: Option[Long],
       writer: String, action: String, inv: Boolean, ndirs: Int,
       cluster: Option[String], txn: Option[(String, Long)],
@@ -1012,72 +400,42 @@ object CommitLog {
     IndexEntry(c.version, c.tsMs, c.writer, c.action, c.rowInvisible,
       c.dataDirs.size, c.clusterSpec, c.txn, c.constraints.map(_._1))
 
-  private def renderIndex(entries: Seq[IndexEntry]): String =
-    entries.map { e =>
-      val ts = e.ts.map(t => s""","ts":$t""").getOrElse("")
-      val cl = e.cluster.map(s => s""","cluster":"$s"""").getOrElse("")
-      val tx = e.txn.map { case (a, b) =>
-        s""","txnApp":"$a","txnBatch":$b""" }.getOrElse("")
-      val cn =
-        if (e.cons.isEmpty) ""
-        else e.cons.map("\"" + _ + "\"").mkString(""","cons":[""", ",", "]")
-      s"""{"v":${e.v}$ts,"writer":"${e.writer}","action":"${e.action}",""" +
-        s""""inv":${e.inv},"ndirs":${e.ndirs}$cl$tx$cn}"""
-    }.mkString("""{"entries":[""", ",", "]}")
-
-  private val IndexEntryRe =
-    ("""\{"v":(\d+)(?:,"ts":(\d+))?,"writer":"([^"]*)","action":"([^"]*)",""" +
-      """"inv":(true|false),"ndirs":(\d+)(?:,"cluster":"([^"]*)")?""" +
-      """(?:,"txnApp":"([^"]*)","txnBatch":(-?\d+))?""" +
-      """(?:,"cons":\[([^\]]*)\])?\}""").r
-
-  /** The checkpoint's entries, ascending — None when absent, torn, or
-    * damaged in ANY way (strict: every entry must parse and versions
-    * must strictly ascend; a half-readable index could silently hide
-    * history, so consumers walk instead). */
-  private def readCheckpoint(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[Seq[IndexEntry]] = {
-    val p = checkpointPath(root)
-    val in = try f.open(p) catch { case _: java.io.IOException => return None }
-    val txt = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } catch { case _: java.io.IOException => return None }
-    finally in.close()
-    if (!txt.startsWith("""{"entries":[""") || !txt.endsWith("]}"))
-      return None
-    val body = txt.stripPrefix("""{"entries":[""").stripSuffix("]}")
-    if (body.isEmpty) return Some(Nil)
-    val ms = IndexEntryRe.findAllMatchIn(body).toSeq
-    val parsed = ms.map { m =>
-      IndexEntry(m.group(1).toLong, Option(m.group(2)).map(_.toLong),
-        m.group(3), m.group(4), m.group(5).toBoolean, m.group(6).toInt,
-        Option(m.group(7)),
-        (Option(m.group(8)), Option(m.group(9))) match {
-          case (Some(a), Some(b)) => Some((a, b.toLong))
-          case _ => None
-        },
-        Option(m.group(10)).filter(_.nonEmpty).toSeq
-          .flatMap(_.split(',').map(_.trim.stripPrefix("\"")
-            .stripSuffix("\""))))
-    }
-    // strict: the matches must tile the whole body (nothing unparsed
-    // between them) and versions must strictly ascend
-    val tiled = ms.map(m => body.substring(m.start, m.end))
-      .mkString(",") == body
-    if (!tiled || parsed.isEmpty ||
-        parsed.sliding(2).exists(w => w.size == 2 && w(0).v >= w(1).v))
-      None
-    else Some(parsed)
+  /** An index row is read strictly: a half-readable index could silently
+    * hide history, so any damage drops the whole checkpoint. */
+  private def entryFrom(n: com.fasterxml.jackson.databind.JsonNode)
+      : Option[IndexEntry] = {
+    import Json.{bool, long, optional, seq, str, strict}
+    for {
+      v <- long(n.path("v")); ts <- optional(n.path("ts"))(long)
+      writer <- str(n.path("writer")); action <- str(n.path("action"))
+      inv <- bool(n.path("inv")); ndirs <- long(n.path("ndirs"))
+      cluster <- optional(n.path("cluster"))(str)
+      txn <- optional(n.path("txnApp"))(a =>
+        for (app <- str(a); b <- long(n.path("txnBatch"))) yield (app, b))
+      cons <- strict(n.path("cons"), Seq.empty[String])(seq(_)(str))
+    } yield IndexEntry(v, ts, writer, action, inv, ndirs.toInt, cluster,
+      txn, cons)
   }
 
-  private def writeIndexFile(f: org.apache.hadoop.fs.FileSystem,
+  /** The checkpoint's entries, ascending — None when absent, torn, or
+    * damaged in ANY way (every entry must read and versions must strictly
+    * ascend). */
+  private[sources] def readCheckpoint(f: org.apache.hadoop.fs.FileSystem,
+      root: String): Option[Seq[IndexEntry]] =
+    scala.util.Try(Json.readFile(f, checkpointPath(root))).toOption.flatten
+      .flatMap(Json.parse)
+      .flatMap(o => Json.seq(o.path("entries"))(entryFrom))
+      .filter(_.sliding(2).forall(w => w.size < 2 || w(0).v < w(1).v))
+
+  private[sources] def writeIndexFile(f: org.apache.hadoop.fs.FileSystem,
       root: String, entries: Seq[IndexEntry]): Unit = {
+    val json = Json.write("entries" -> entries.map(e => Json.obj(
+      "v" -> e.v, "ts" -> e.ts, "writer" -> e.writer, "action" -> e.action,
+      "inv" -> e.inv, "ndirs" -> e.ndirs, "cluster" -> e.cluster,
+      "txnApp" -> e.txn.map(_._1), "txnBatch" -> e.txn.map(_._2),
+      "cons" -> Option.when(e.cons.nonEmpty)(e.cons))))
     val out = f.create(checkpointPath(root), true)
-    try out.write(renderIndex(entries).getBytes(StandardCharsets.UTF_8))
+    try out.write(json.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
@@ -1136,18 +494,9 @@ object CommitLog {
   /** The advisory head pointer's value, if present and parseable (torn or
     * corrupt content reads as None — the walk fallback). */
   private def readHeadPointer(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[Long] = {
-    val p = headPath(root)
-    val in = try f.open(p) catch { case _: java.io.IOException => return None }
-    try scala.util.Try {
-      val out = new java.io.ByteArrayOutputStream(64)
-      val buf = new Array[Byte](64)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8").trim.toLong
-    }.toOption.filter(_ >= 1)
-    finally in.close()
-  }
+      root: String): Option[Long] =
+    scala.util.Try(Json.readFile(f, headPath(root)).map(_.trim.toLong))
+      .toOption.flatten.filter(_ >= 1)
 
   /** Newest COMMITTED version (a torn tail file is skipped — that commit
     * never happened; only the tail can be torn since claims are ordered).
@@ -1268,23 +617,20 @@ object CommitLog {
 
   // the dir segment of a `_metadata.file_path` / recorded vector `path`
   // (dir names never contain '/'; parquet parts sit directly under the
-  // dir) — ONE definition for every DV consumer (code review r16).
-  // `(?:^|/)` accepts both absolute scan paths and the ROOT-RELATIVE
-  // form vectors persist (ADVICE r16 below).
+  // dir) — ONE definition for every DV consumer. `(?:^|/)` accepts both
+  // absolute scan paths and the root-relative form vectors persist.
   private def dirOfPath(pathCol: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.functions
       .regexp_extract(pathCol, "(?:^|/)(data-[^/]+)/[^/]*$", 1)
 
-  // the ROOT-RELATIVE `dir/file` identity of a data-file path (ADVICE
-  // r16): vectors PERSIST this form — an absolute `_metadata.file_path`
-  // URI bakes in the table's location spelling, so relocating the table
-  // (or reading it through a different mount/symlink/scheme spelling)
-  // would make every stored vector row match nothing and silently
-  // resurrect its deleted rows (Delta stores DV references relative to
-  // the table root for the same reason). Read-side comparisons relativize
-  // BOTH sides, so pre-r17 vectors holding absolute URIs keep matching
-  // (within their original location) and fold forward to the new form.
+  // the ROOT-RELATIVE `dir/file` identity of a scanned data file's
+  // `_metadata.file_path`: vectors persist this form. An absolute URI
+  // bakes in the table's location spelling, so relocating the table (or
+  // reading it through another mount/symlink/scheme spelling) would make
+  // every stored vector row match nothing and silently resurrect its
+  // deleted rows (Delta stores DV references relative to the table root
+  // for the same reason).
   private def relPath(pathCol: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.functions
@@ -1293,9 +639,7 @@ object CommitLog {
   /** Prior vectors of `dirs` folded into `newPos` — the new dataset
     * keeps ONE vector generation per dir (readers never chain
     * anti-joins); rows for other dirs sharing an old dataset are
-    * filtered out so it stays O(these dirs' deletes). Folded rows are
-    * RELATIVIZED, so any pre-r17 absolute-URI vector converges to the
-    * root-relative form the first time its dir takes another delete. */
+    * filtered out so it stays O(these dirs' deletes). */
   private def foldVectors(spark: SparkSession, root: String, head: Commit,
       dirs: Seq[String], newPos: DataFrame): DataFrame = {
     val oldNames = dirs.flatMap(head.dv.get).distinct
@@ -1303,8 +647,7 @@ object CommitLog {
     else newPos.unionByName(
       spark.read.schema(DvSchema)
         .parquet(oldNames.map(n => dvPath(root, n).toString): _*)
-        .filter(dirOfPath(col("path")).isin(dirs: _*))
-        .select(relPath(col("path")).as("path"), col("pos")))
+        .filter(dirOfPath(col("path")).isin(dirs: _*)))
   }
 
   /** Plain schema-pinned, mapping-translated read of `dirs` under `c` —
@@ -1512,13 +855,11 @@ object CommitLog {
       if (names.nonEmpty) {
         val dv = spark.read.schema(DvSchema)
           .parquet(names.map(n => dvPath(root, n).toString): _*)
-        // both sides relativize (ADVICE r16): the scan's file_path is
-        // absolute under WHATEVER spelling this reader used; the vector
-        // stores `dir/file`. Comparing the relativized forms makes the
-        // match location-independent — and still matches pre-r17
-        // absolute-URI vector rows read at their original location.
+        // the scan's file_path is absolute under WHATEVER spelling this
+        // reader used; the vector stores `dir/file` — relativizing the
+        // scan side makes the match location-independent
         df = df.join(dv,
-          relPath(df(DvPathCol)) === relPath(dv("path")) &&
+          relPath(df(DvPathCol)) === dv("path") &&
             df(DvPosCol) === dv("pos"),
           "left_anti")
       }
@@ -1888,12 +1229,7 @@ object CommitLog {
   def readLatestWhere(spark: SparkSession, root: String, statsCol: String,
       lo: Long, hi: Long): Option[DataFrame] =
     latest(spark, root).map { c =>
-      // stats prune only when the commit RECORDS that its ranges describe
-      // this column (r11) — asking for a range over a different column
-      // than the table's stats column degrades to scan-everything instead
-      // of wrongly pruning; pre-r11 commits (no recorded name) keep the
-      // caller-asserted legacy contract
-      val keep = statsKeepDirs(c, statsCol, lo, hi, requireRecorded = false)
+      val keep = statsKeepDirs(c, statsCol, lo, hi)
       // every dir pruned ⇒ provably-empty result; one dir anchors the
       // schema (its rows are filtered out by the predicate)
       val dirs = if (keep.nonEmpty) keep else c.dataDirs.take(1)
@@ -1903,34 +1239,16 @@ object CommitLog {
 
   /** The dirs of `c` whose recorded [min, max] for `statsCol` intersect
     * [lo, hi] — [[readLatestWhere]]'s planning decision, shared with the
-    * `graft.commitlog` connector's FileIndex (r12) so the two routes can
-    * never prune differently. Dirs without stats for the column are always
-    * kept. `requireRecorded = true` (the connector, where the range is
-    * DERIVED from pushed filters rather than caller-asserted) prunes only
-    * when the commit records `statsCol` in its stats column set; `false`
-    * keeps the library route's legacy caller-asserted contract for pre-r11
-    * commits (whose flat stats parse under the "" sentinel column). */
+    * `graft.commitlog` connector's FileIndex so the two routes can never
+    * prune differently. Stats prune only when the commit records
+    * `statsCol` among its stats columns — a range over another column
+    * scans everything instead of wrongly pruning — and a dir without a
+    * range for it is always kept. */
   private[graft] def statsKeepDirs(c: Commit, statsCol: String, lo: Long,
-      hi: Long, requireRecorded: Boolean,
-      typedDomain: Boolean = false): Seq[String] = {
-    val usable =
-      if (requireRecorded) c.statsCols.contains(statsCol)
-      else c.statsCols.isEmpty || c.statsCols.contains(statsCol)
-    // legacy pre-r11 commits record no column name: their flat ranges sit
-    // under "" and serve only the caller-asserted (!requireRecorded) path
-    def range(byCol: Map[String, (Long, Long)]): Option[(Long, Long)] =
-      byCol.get(statsCol).orElse(
-        if (!requireRecorded && c.statsCols.isEmpty) byCol.get("") else None)
-    c.dataDirs.filter(d =>
-      !usable ||
-        // typedDomain (r18 — ADVICE r17): the probe [lo, hi] is in the
-        // r17 string-prefix encoding, which a dir whose stats predate it
-        // (numeric-cast strings) cannot be compared against — such dirs
-        // are KEPT, exactly as if they recorded no stats for the column
-        (typedDomain && !c.statsTyped.contains(d)) ||
-        c.stats.get(d).flatMap(range).forall { case (dLo, dHi) =>
-          dHi >= lo && dLo <= hi })
-  }
+      hi: Long): Seq[String] =
+    if (!c.statsCols.contains(statsCol)) c.dataDirs
+    else c.dataDirs.filter(d => c.stats.get(d).flatMap(_.get(statsCol))
+      .forall { case (dLo, dHi) => dHi >= lo && dLo <= hi })
 
   /** The Commit record at version `v` (None if vacuumed or never
     * committed) — the metadata half of [[readVersion]], for callers that
@@ -2272,7 +1590,7 @@ object CommitLog {
         action = action, rowInvisible = rowInvisible, txn = None,
         schemaDDL = Some(carriedDDL(m, schemaOf(spark, root, cur))),
         tsMs = Some(System.currentTimeMillis()))
-      if (tryClaim(spark, root, c.version, render(c))) {
+      if (tryClaim(spark, root, c.version, encode(c))) {
         writeHeadPointer(f, root, c.version); return c
       }
       Thread.sleep(50L * attempt)
@@ -3545,7 +2863,7 @@ object CommitLog {
       createOnEmpty: Boolean = false)(
       build: Option[DataFrame] => DataFrame): Commit = {
     requireTag(writer, "writer"); requireTag(action, "action")
-    statsCols.foreach(sc => requireTag(sc, "statsCol")) // embeds in the JSON
+    statsCols.foreach(sc => requireTag(sc, "statsCol"))
     init(spark, root)
     val f = fs(spark, root)
     var attempt = 0
@@ -3601,14 +2919,13 @@ object CommitLog {
         constraints = cons,
         clusterBy = cur.flatMap(_.clusterBy),
         defaults = cur.map(_.defaults).getOrElse(Nil),
-        statsTyped = ft.stats.keySet,
         fstats = ft.fstats,
         partitionBy = pby,
         partVals = staged.collect { case (d, vs) if vs.nonEmpty => d -> vs }
           .toMap,
         rows = ft.rows,
         gens = gens)
-      if (tryClaim(spark, root, nextV, render(c))) {
+      if (tryClaim(spark, root, nextV, encode(c))) {
         writeHeadPointer(f, root, nextV); return c
       }
       // lost the race: another writer committed nextV first — discard the
@@ -3897,8 +3214,6 @@ object CommitLog {
         clusterBy = cur.flatMap(_.clusterBy),
         defaults = cur.map(_.defaults).getOrElse(Nil),
         colMap = stagedMap,
-        statsTyped = cur.map(_.statsTyped).getOrElse(Set.empty) ++
-          deltaFt.stats.keySet,
         fstats = cur.map(_.fstats).getOrElse(Map.empty) ++ deltaFt.fstats,
         partitionBy = stagedPartBy,
         partVals = cur.map(_.partVals).getOrElse(Map.empty) ++
@@ -3906,7 +3221,7 @@ object CommitLog {
         rows = cur.map(_.rows).getOrElse(Map.empty) ++ deltaFt.rows,
         dvRows = cur.map(_.dvRows).getOrElse(Map.empty),
         gens = cur.map(_.gens).getOrElse(Nil))
-      if (tryClaim(spark, root, nextV, render(c))) {
+      if (tryClaim(spark, root, nextV, encode(c))) {
         writeHeadPointer(f, root, nextV); return c
       }
       Thread.sleep(50L * attempt)
@@ -4196,8 +3511,6 @@ object CommitLog {
         clusterBy = head.clusterBy,
         defaults = head.defaults,
         colMap = head.colMap,
-        statsTyped = head.statsTyped.intersect(carried.toSet) ++
-          ft.stats.keySet,
         fstats = carryFstats(head.fstats, carried) ++ ft.fstats,
         partitionBy = head.partitionBy,
         partVals = head.partVals.filter { case (d, _) =>
@@ -4207,7 +3520,7 @@ object CommitLog {
           carried.contains(d) } ++ ft.rows,
         dvRows = head.dvRows.filter { case (d, _) => carried.contains(d) },
         gens = head.gens)
-      if (tryClaim(spark, root, nextV, render(c))) {
+      if (tryClaim(spark, root, nextV, encode(c))) {
         writeHeadPointer(f, root, nextV); return c
       }
       // lost the race: the under-packed set may differ under the new head
@@ -5075,8 +4388,6 @@ object CommitLog {
         clusterBy = cur.flatMap(_.clusterBy),
         defaults = cur.map(_.defaults).getOrElse(Nil),
         colMap = attemptMap,
-        statsTyped = cur.map(_.statsTyped).getOrElse(Set.empty)
-          .intersect(commitDirs.toSet) ++ ft.stats.keySet,
         fstats = carryFstats(cur.map(_.fstats).getOrElse(Map.empty), dirs) ++
           ft.fstats,
         partitionBy = cur.map(_.partitionBy).getOrElse(Nil),
@@ -5097,7 +4408,7 @@ object CommitLog {
       // or THROWS (a transient store error must not leak the blocks) —
       // each attempt materializes its own
       val won =
-        try tryClaim(spark, root, nextV, render(c))
+        try tryClaim(spark, root, nextV, encode(c))
         finally cdf.foreach { case (_, ckpt) => ckpt.unpersist() }
       if (won) { writeHeadPointer(f, root, nextV); return c }
       // lost the race: the affected set may have changed under the new
@@ -5282,7 +4593,6 @@ object CommitLog {
           clusterBy = head.clusterBy,
           defaults = head.defaults,
           colMap = head.colMap,
-          statsTyped = head.statsTyped.intersect(keptDirs.toSet),
           fstats = carryFstats(head.fstats, keptDirs),
           partitionBy = head.partitionBy,
           partVals = head.partVals.filter { case (d, _) =>
@@ -5298,7 +4608,7 @@ object CommitLog {
             case (d, _, m) if head.dvRows.contains(d) || !head.dv.contains(d) =>
               d -> (head.dvRows.getOrElse(d, 0L) + m) },
           gens = head.gens)
-        if (tryClaim(spark, root, nextV, render(c))) {
+        if (tryClaim(spark, root, nextV, encode(c))) {
           writeHeadPointer(f, root, nextV); return Some(c)
         }
         // lost the race: discard the staged vector + feed and re-decide
@@ -5439,7 +4749,6 @@ object CommitLog {
           clusterBy = head.clusterBy,
           defaults = head.defaults,
           colMap = head.colMap,
-          statsTyped = head.statsTyped ++ ft.stats.keySet,
           fstats = head.fstats ++ ft.fstats,
           partitionBy = head.partitionBy,
           // the post-image dir carries no partition identity (kept by
@@ -5452,7 +4761,7 @@ object CommitLog {
             case (d, n) if head.dvRows.contains(d) || !head.dv.contains(d) =>
               d -> (head.dvRows.getOrElse(d, 0L) + n) },
           gens = head.gens)
-        if (tryClaim(spark, root, nextV, render(c))) {
+        if (tryClaim(spark, root, nextV, encode(c))) {
           writeHeadPointer(f, root, nextV); return Some(c)
         }
         f.delete(dvPath(root, dvName), true)
@@ -5698,8 +5007,6 @@ object CommitLog {
         clusterBy = head.clusterBy,
         defaults = head.defaults,
         colMap = head.colMap,
-        statsTyped = head.statsTyped.intersect(carried.toSet) ++
-          ft.stats.keySet,
         fstats = carryFstats(head.fstats, carried) ++ ft.fstats,
         partitionBy = head.partitionBy,
         partVals = head.partVals.filter { case (d, _) =>
@@ -5709,7 +5016,7 @@ object CommitLog {
           carried.contains(d) } ++ ft.rows,
         dvRows = head.dvRows.filter { case (d, _) => carried.contains(d) },
         gens = head.gens)
-      if (tryClaim(spark, root, nextV, render(c))) {
+      if (tryClaim(spark, root, nextV, encode(c))) {
         writeHeadPointer(f, root, nextV); return c
       }
       // lost the race: the affected set may differ under the new head

@@ -436,63 +436,51 @@ object CommitLogSource {
     * construction. */
   /** The conjunct-derived [lo, hi] probe for every RECORDED stats column
     * (r13/r18): each recorded column contributes its own range narrowed
-    * from the pushed conjuncts; the boolean marks a STRING-domain probe
-    * (comparable only against typed-generation dir stats — ADVICE r17).
-    * Shared by the per-DIR pruning below and the per-FILE pruning in
+    * from the pushed conjuncts. Shared by the per-DIR pruning below and the per-FILE pruning in
     * [[CommitLogFileIndex.listFiles]] so the two granularities can never
     * disagree about what a predicate implies. */
   private[graft] def evidenceProbes(commit: CommitLog.Commit,
-      dataFilters: Seq[Expression]): Seq[(String, Long, Long, Boolean)] =
+      dataFilters: Seq[Expression]): Seq[(String, Long, Long)] =
     commit.statsCols.flatMap { sc =>
         var lo = Long.MinValue
         var hi = Long.MaxValue
         var any = false
-        // string-domain tracking (r18 — ADVICE r17): a bound derived from
-        // a STRING literal is in the r17 prefix encoding, comparable only
-        // against stats recorded under it — statsKeepDirs then keeps any
-        // dir whose stats predate the encoding (commit.statsTyped)
-        var strDom = false
         def narrowLo(v: Long): Unit = { lo = math.max(lo, v); any = true }
         def narrowHi(v: Long): Unit = { hi = math.min(hi, v); any = true }
-        def litLongDom(l: Literal): Option[Long] = {
-          val r = litLong(l)
-          if (r.isDefined && l.dataType == StringType) strDom = true
-          r
-        }
         dataFilters.foreach {
           case EqualTo(a: Attribute, l: Literal) if a.name == sc =>
-            litLongDom(l).foreach { v => narrowLo(v); narrowHi(v) }
+            litLong(l).foreach { v => narrowLo(v); narrowHi(v) }
           case EqualTo(l: Literal, a: Attribute) if a.name == sc =>
-            litLongDom(l).foreach { v => narrowLo(v); narrowHi(v) }
+            litLong(l).foreach { v => narrowLo(v); narrowHi(v) }
           // <=> with a non-null literal narrows exactly like = (r19 —
           // the static partition-overwrite face); null literals skip
           // (litLong returns None)
           case EqualNullSafe(a: Attribute, l: Literal) if a.name == sc =>
-            litLongDom(l).foreach { v => narrowLo(v); narrowHi(v) }
+            litLong(l).foreach { v => narrowLo(v); narrowHi(v) }
           case EqualNullSafe(l: Literal, a: Attribute) if a.name == sc =>
-            litLongDom(l).foreach { v => narrowLo(v); narrowHi(v) }
+            litLong(l).foreach { v => narrowLo(v); narrowHi(v) }
           // strict bounds kept LOOSE (>v treated as >=v): pruning may only
           // ever be conservative, and dir stats are inclusive ranges
           case GreaterThan(a: Attribute, l: Literal) if a.name == sc =>
-            litLongDom(l).foreach(narrowLo)
+            litLong(l).foreach(narrowLo)
           case GreaterThanOrEqual(a: Attribute, l: Literal) if a.name == sc =>
-            litLongDom(l).foreach(narrowLo)
+            litLong(l).foreach(narrowLo)
           case LessThan(a: Attribute, l: Literal) if a.name == sc =>
-            litLongDom(l).foreach(narrowHi)
+            litLong(l).foreach(narrowHi)
           case LessThanOrEqual(a: Attribute, l: Literal) if a.name == sc =>
-            litLongDom(l).foreach(narrowHi)
+            litLong(l).foreach(narrowHi)
           case GreaterThan(l: Literal, a: Attribute) if a.name == sc =>
-            litLongDom(l).foreach(narrowHi) // lit > col  ==  col < lit
+            litLong(l).foreach(narrowHi) // lit > col  ==  col < lit
           case GreaterThanOrEqual(l: Literal, a: Attribute) if a.name == sc =>
-            litLongDom(l).foreach(narrowHi)
+            litLong(l).foreach(narrowHi)
           case LessThan(l: Literal, a: Attribute) if a.name == sc =>
-            litLongDom(l).foreach(narrowLo) // lit < col  ==  col > lit
+            litLong(l).foreach(narrowLo) // lit < col  ==  col > lit
           case LessThanOrEqual(l: Literal, a: Attribute) if a.name == sc =>
-            litLongDom(l).foreach(narrowLo)
+            litLong(l).foreach(narrowLo)
           case In(a: Attribute, elems) if a.name == sc &&
               elems.forall(e => e.isInstanceOf[Literal] &&
-                litLongDom(e.asInstanceOf[Literal]).isDefined) =>
-            val vs = elems.map(e => litLongDom(e.asInstanceOf[Literal]).get)
+                litLong(e.asInstanceOf[Literal]).isDefined) =>
+            val vs = elems.map(e => litLong(e.asInstanceOf[Literal]).get)
             narrowLo(vs.min); narrowHi(vs.max)
           // LIKE 'p%' over a recorded string column (r17): every match
           // extends the prefix, so its encoding sits in [prefix padded
@@ -501,12 +489,11 @@ object CommitLogSource {
           case org.apache.spark.sql.catalyst.expressions.StartsWith(
               a: Attribute, Literal(p, StringType)) if a.name == sc &&
               p != null =>
-            strDom = true
             narrowLo(encodeStringStat(p.toString, 0x00))
             narrowHi(encodeStringStat(p.toString, 0xff))
           case _ => () // unrecognized shape: contributes no narrowing
         }
-        if (!any) None else Some((sc, lo, hi, strDom))
+        if (!any) None else Some((sc, lo, hi))
     }
 
   /** A pushed literal rendered EXACTLY as the write side recorded the
@@ -701,10 +688,8 @@ object CommitLogSource {
     // because the pushed conjuncts are ANDed) ----
     val statsKept: Seq[String] =
       evidenceProbes(commit, dataFilters).foldLeft(partKept) {
-        case (kept, (sc, lo, hi, strDom)) =>
-          val keep = CommitLog.statsKeepDirs(commit, sc, lo, hi,
-            requireRecorded = true, typedDomain = strDom).toSet
-          kept.filter(keep)
+        case (kept, (sc, lo, hi)) =>
+          kept.filter(CommitLog.statsKeepDirs(commit, sc, lo, hi).toSet)
       }
     // ---- bloom sidecars: point-probe an equality/IN literal set ----
     // Per-conjunct soundness: a value set is used only when it is COMPLETE
@@ -798,9 +783,10 @@ object CommitLogSource {
   * one [lo, hi] range) and RECORDED bloom column (=/IN literal sets), and
   * whole directories are dropped through the library's own
   * [[CommitLog.statsKeepDirs]] / [[CommitLog.bloomKeepDirs]] planning —
-  * `requireRecorded`/`requireMarker` = true, because here the constraint is
-  * DERIVED rather than caller-asserted, so a commit that never recorded
-  * evidence for the column is never pruned on it. Unrecognized filter
+  * stats prune only on a RECORDED stats column and blooms take
+  * `requireMarker` = true, because here the constraint is DERIVED rather
+  * than caller-asserted, so a commit that never recorded evidence for the
+  * column is never pruned on it. Unrecognized filter
   * shapes contribute nothing (conservative: scan). Row-level correctness
   * never depends on any of this — Spark re-applies every filter after the
   * scan, the same two-layer contract as [[CommitLog.readLatestWhere]].
@@ -851,7 +837,6 @@ private[graft] final class CommitLogFileIndex(spark: SparkSession,
     // files WITHOUT parquet footer reads at planning. Files/dirs without
     // recorded per-file stats are always kept — advisory, prune-only.
     val probes = CommitLogSource.evidenceProbes(commit, dataFilters)
-      .map { case (sc, lo, hi, _) => (sc, lo, hi) }
     Seq(PartitionDirectory(InternalRow.empty,
       byDir.filter(kv => keep(kv._1)).flatMap { case (d, fs) =>
         fs.filter(st =>

@@ -71,15 +71,9 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog
     GraftCatalog.readDescriptor(fs, metaPath(ident))
 
   private def writeMeta(ident: Identifier, provider: String, location: String,
-      schemaDDL: Option[String] = None): Unit = {
-    val out = fs.create(metaPath(ident), true)
-    val schema = schemaDDL
-      .map(d => s""", "schema": "${escapeJson(d)}"""").getOrElse("")
-    try out.write(
-      s"""{"provider": "${escapeJson(provider)}", "location": "${escapeJson(location)}"$schema}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
+      schemaDDL: Option[String] = None): Unit =
+    GraftCatalog.writeDescriptor(fs, metaPath(ident), provider, location,
+      schemaDDL)
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val r = new HPath(root)
@@ -773,35 +767,32 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog
 object GraftCatalog {
   val MetaFile = "_graft_table.json"
 
+  /** Write the `_graft_table.json` descriptor at `p`. */
+  private[sources] def writeDescriptor(fs: org.apache.hadoop.fs.FileSystem,
+      p: HPath, provider: String, location: String,
+      schemaDDL: Option[String]): Unit = {
+    val out = fs.create(p, true)
+    try out.write(Json.write("provider" -> provider, "location" -> location,
+      "schema" -> schemaDDL).getBytes("UTF-8"))
+    finally out.close()
+  }
+
   /** The `_graft_table.json` descriptor at `p`, parsed — (provider,
     * location, declared schema DDL). None when absent; a present file
     * that is not a descriptor throws (external damage, never guessed
     * around). The ONE descriptor parse, shared by the catalog's readMeta
     * and the connector's table-NAME resolution. */
   private[sources] def readDescriptor(fs: org.apache.hadoop.fs.FileSystem,
-      p: HPath): Option[(String, String, Option[String])] = {
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream(256)
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toString("UTF-8")
-      } finally in.close()
-      (text, text) match {
-        case (ProviderRe(prov), LocationRe(loc)) =>
-          val schema = text match {
-            case SchemaRe(ddl) => Some(unescapeJson(ddl))
-            case _ => None
-          }
-          Some((unescapeJson(prov), unescapeJson(loc), schema))
-        case _ => throw new IllegalStateException(
-          s"$p exists but is not a graft table descriptor: $text")
-      }
+      p: HPath): Option[(String, String, Option[String])] =
+    Json.readFile(fs, p).map { text =>
+      (for {
+        o <- Json.parse(text)
+        prov <- Json.str(o.path("provider"))
+        loc <- Json.str(o.path("location"))
+      } yield (prov, loc, Json.str(o.path("schema")))).getOrElse(
+        throw new IllegalStateException(
+          s"$p exists but is not a graft table descriptor: $text"))
     }
-  }
 
   /** Resolve a `<catalog>.<table>` NAME to its commit-log root (r14 —
     * VERDICT r13 #4): the bridge that lets every `graft.commitlog`
@@ -889,17 +880,6 @@ object GraftCatalog {
   val IndexProvider = "graft.index"
   val IvfProvider = "graft.ivf"
   val CommitLogProvider = "graft.commitlog"
-  // JSON-string values with escapes: a location containing a quote or
-  // backslash round-trips instead of bricking the table name (ADVICE r7).
-  // Escaping is CommitLog's FULL escaper (code review r13: the r13 schema
-  // field is a DDL — the same field class whose control chars ADVICE r12
-  // flagged in the commit JSON; two divergent escapers in sibling files
-  // would re-open that hole here).
-  private val ProviderRe = """"provider"\s*:\s*"((?:[^"\\]|\\.)+)"""".r.unanchored
-  private val LocationRe = """"location"\s*:\s*"((?:[^"\\]|\\.)+)"""".r.unanchored
-  private val SchemaRe = """"schema"\s*:\s*"((?:[^"\\]|\\.)+)"""".r.unanchored
-  private def escapeJson(s: String): String = CommitLog.escapeJson(s)
-  private def unescapeJson(s: String): String = CommitLog.unescapeJson(s)
 
   /** The `bucket` partition-transform function [[IndexScan]] reports its
     * [[org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning]]

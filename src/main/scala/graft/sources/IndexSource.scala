@@ -470,16 +470,14 @@ private[graft] final class IndexScan(val dir: String, val buckets: Int,
   * ≤ `maxSeg` has been delivered. */
 private[graft] final case class IndexSegOffset(maxSeg: Long)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"""{"maxSeg":$maxSeg}"""
+  override def json(): String = Json.write("maxSeg" -> maxSeg)
 }
 
 private[graft] object IndexSegOffset {
-  private val Re = """"maxSeg"\s*:\s*(-?\d+)""".r.unanchored
-  def fromJson(json: String): IndexSegOffset = json match {
-    case Re(v) => IndexSegOffset(v.toLong)
-    case _ => throw new IllegalArgumentException(
-      s"not a graft.index offset: $json")
-  }
+  def fromJson(json: String): IndexSegOffset =
+    Json.parse(json).flatMap(o => Json.long(o.path("maxSeg")))
+      .map(IndexSegOffset(_)).getOrElse(throw new IllegalArgumentException(
+        s"not a graft.index offset: $json"))
 }
 
 /** The READ twin of the connector's streaming-ingest write path: each

@@ -34,7 +34,6 @@ object InvertedIndex {
     * leading underscore keeps Spark's own file readers from treating it as
     * data. */
   private val MetaFile = "_graft_meta.json"
-  private val MetaBuckets = """"buckets"\s*:\s*(\d+)""".r.unanchored
 
   /** The active session's Hadoop configuration when one exists (so
     * `spark.hadoop.*` settings — object-store credentials, fs.defaultFS,
@@ -63,7 +62,7 @@ object InvertedIndex {
     val target = new org.apache.hadoop.fs.Path(p, MetaFile)
     val tmp = new org.apache.hadoop.fs.Path(p, s".$MetaFile.tmp")
     val out = fs.create(tmp, true)
-    try out.write(s"""{"buckets": $buckets}""".getBytes("UTF-8"))
+    try out.write(Json.write("buckets" -> buckets).getBytes("UTF-8"))
     finally out.close()
     if (!fs.rename(tmp, target)) {
       fs.delete(target, false)
@@ -77,29 +76,14 @@ object InvertedIndex {
   private[sources] def metaBuckets(dir: String,
       fallback: Int = DefaultBuckets): Int = {
     val (fs, p) = hadoopFs(dir)
-    val f = new org.apache.hadoop.fs.Path(p, MetaFile)
-    if (!fs.exists(f)) fallback
-    else {
-      // Read to EOF: a single InputStream.read may return a short count
-      // (remote stores especially), truncating the JSON so the regex missed
-      // and the code silently fell back to the default bucket count — the
-      // exact silent-wrong-bucket failure the meta file exists to prevent
-      // (ADVICE r6).
-      val in = fs.open(f)
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream(256)
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toString("UTF-8")
-      } finally in.close()
-      text match {
-        case MetaBuckets(b) => b.toInt
-        case _ => throw new IllegalStateException(
-          // a present-but-unparseable meta is corruption, not absence:
-          // falling back would re-open the silent-empty-lookup hole
-          s"$dir/$MetaFile exists but has no \"buckets\" field: $text")
-      }
+    Json.readFile(fs, new org.apache.hadoop.fs.Path(p, MetaFile)) match {
+      case None => fallback
+      case Some(text) =>
+        Json.parse(text).flatMap(o => Json.long(o.path("buckets")))
+          .map(_.toInt).getOrElse(throw new IllegalStateException(
+            // a present-but-unparseable meta is corruption, not absence:
+            // falling back would re-open the silent-empty-lookup hole
+            s"$dir/$MetaFile exists but has no \"buckets\" field: $text"))
     }
   }
 

@@ -1941,7 +1941,7 @@ class CommitLogSpec extends SparkSpec {
     }.get
     val kept = idx.prunedDirs(splitConj(expr))
     val libKept = CommitLog.statsKeepDirs(CommitLog.latest(spark, root).get,
-      "id", 210L, 240L, requireRecorded = true)
+      "id", 210L, 240L)
     assert(kept.toSet == libKept.toSet,
       s"connector dirs $kept must equal library dirs $libKept")
     // unrecognized filter shapes scan everything — conservative, never wrong
@@ -2028,51 +2028,6 @@ class CommitLogSpec extends SparkSpec {
         s"${del.dataDirs} -> ${m.dataDirs}")
     assert(CommitLog.readLatest(spark, root).get
       .filter(col("v") === "replaced").count() == 1L)
-  }
-
-  test("string-domain narrowing keeps dirs whose stats predate the typed encoding (ADVICE r17)") {
-    import spark.implicits._
-    val root = freshRoot()
-    // numeric STRINGS: the pre-r17 writer recorded their ranges through
-    // the legacy cast-to-long ("100" → 100), which the r17 prefix-encoded
-    // probe would misread as a tiny range and wrongly prune
-    CommitLog.commitAppend(spark, root, "w", "append",
-      statsCols = Seq("k"), createOnEmpty = true)(
-      Seq(("100", 1L), ("999", 2L)).toDF("k", "n"))
-    // forge the pre-r17 commit: legacy numeric ranges, no statsTyped
-    // tag, and no per-file stats either (both fields postdate the
-    // typed encoding — a real pre-r17 writer wrote neither)
-    val v1 = new java.io.File(root,
-      "_commits/v" + ("%020d".format(1L)) + ".json")
-    val raw = new String(Files.readAllBytes(v1.toPath), "UTF-8")
-    val fsAt = raw.indexOf(",\"fstats\":{")
-    val forged = (if (fsAt < 0) raw else raw.substring(0, fsAt) + "}")
-      .replaceAll("\"k\":\\[-?\\d+,-?\\d+\\]", "\"k\":[100,999]")
-      .replaceAll(",\"statsTyped\":\\[[^\\]]*\\]", "")
-    assert(!forged.contains("statsTyped") && !forged.contains("fstats"))
-    Files.write(v1.toPath, forged.getBytes("UTF-8"))
-    // a typed-encoding dir appended ON TOP of the legacy one: its own
-    // stats carry the r18 generation marker, the legacy dir stays untagged
-    CommitLog.commitAppend(spark, root, "w", "append",
-      statsCols = Seq("k"))(Seq(("aaa", 3L)).toDF("k", "n"))
-    val head = CommitLog.latest(spark, root).get
-    assert(head.statsTyped.size == 1 &&
-      !head.statsTyped.contains(head.dataDirs.head),
-      s"only the fresh dir is typed-tagged: ${head.statsTyped}")
-    // the probe encode('999') sits far above the legacy range [100, 999]
-    // — pre-fix this pruned the dir and silently lost the row
-    val q = spark.read.format("graft.commitlog").load(root)
-      .filter(col("k") === "999")
-    assert(rows(q) == Seq(Seq("999", 2L)),
-      "legacy-stats dirs must be KEPT under string-domain probes")
-    // …while the typed dir still prunes on the same probe, and numeric
-    // probes on long columns are ungated (the legacy domain is identical)
-    assert(scannedFiles(q) < scannedFiles(
-      spark.read.format("graft.commitlog").load(root)),
-      "the typed dir still prunes under the same string probe")
-    val nq = spark.read.format("graft.commitlog").load(root)
-      .filter(col("n") === 2L)
-    assert(rows(nq) == Seq(Seq("999", 2L)))
   }
 
   test("MERGE pins a non-deterministic source: one evaluation feeds every clause family (ADVICE r17)") {
@@ -2753,25 +2708,37 @@ class CommitLogSpec extends SparkSpec {
     assert(CommitLog.readVersion(spark, root, 1L).get.count() == 1L)
   }
 
-  test("json escaping: control chars round-trip, damaged escapes degrade literally, option conflicts fail clean") {
+  test("json escaping: control chars round-trip through a commit, damaged escapes make it unreadable, option conflicts fail clean") {
     import spark.implicits._
-    // full escaper round trip: every char class render escapes
-    val nasty = "a\"b\\c\nd\re\tfg"
-    assert(CommitLog.unescapeJson(CommitLog.escapeJson(nasty)) == nasty)
-    assert(!CommitLog.escapeJson(nasty).exists(_ < 0x20),
-      "escaped output must be valid JSON string content (no raw controls)")
-    // DAMAGED input (bit rot): an unrecognized escape and an invalid \u
-    // sequence emit BOTH chars literally (ADVICE r13 — the pre-fix code
-    // dropped the backslash, degrading damaged strings lossily)
-    assert(CommitLog.unescapeJson("x\\qy") == "x\\qy")
-    assert(CommitLog.unescapeJson("x\\" + "uZZ99y") == "x\\" + "uZZ99y")
-    assert(CommitLog.unescapeJson("x\\" + "u00") == "x\\" + "u00",
-      "a truncated \\u escape at end-of-string must not throw")
-    // option-combination conflicts fail with the clean conflict message
-    // BEFORE changesSinceTimestamp resolution does log I/O (ADVICE r13)
     val root = freshRoot()
     Seq((1L, "a")).toDF("id", "v")
       .write.format("graft.commitlog").save(root)
+    // every char class JSON escapes, a bare control char and a non-BMP
+    // char, in every field that carries user text
+    val nasty = "a\"b\\c\nd\re\tf\u0001g\uD83D\uDE00"
+    val head = CommitLog.latest(spark, root).get
+    val c = head.copy(version = 2L, schemaDDL = Some(nasty),
+      constraints = Seq("c1" -> nasty), defaults = Seq((nasty, 1L, nasty)),
+      colMap = Map(nasty -> nasty), gens = Seq(nasty -> nasty),
+      partitionBy = Seq(nasty), partVals = Map(head.dataDirs.head -> Seq(nasty)))
+    val json = CommitLog.encode(c)
+    assert(!json.exists(_ < 0x20),
+      "escaped output must be valid JSON string content (no raw controls)")
+    val p = java.nio.file.Paths.get(root, "_commits",
+      "v" + "%020d".format(2L) + ".json")
+    Files.write(p, json.getBytes("UTF-8"))
+    assert(CommitLog.commitAt(spark, root, 2L).contains(c))
+    // DAMAGED input (bit rot): an unrecognized escape, an invalid \u
+    // sequence and a truncated one make the file invalid JSON — the commit
+    // is unreadable, never read with a guessed string
+    Seq("\\q", "\\" + "uZZ99", "\\" + "u00\"").foreach { bad =>
+      Files.write(p, json.replaceFirst(java.util.regex.Pattern.quote("\\\""),
+        java.util.regex.Matcher.quoteReplacement(bad)).getBytes("UTF-8"))
+      assert(CommitLog.commitAt(spark, root, 2L).isEmpty, bad)
+    }
+    Files.delete(p)
+    // option-combination conflicts fail with the clean conflict message
+    // BEFORE changesSinceTimestamp resolution does log I/O (ADVICE r13)
     val conflict = intercept[IllegalArgumentException] {
       spark.read.format("graft.commitlog")
         .option("changesSinceTimestamp", "123")
@@ -3629,7 +3596,7 @@ class CommitLogSpec extends SparkSpec {
     }
   }
 
-  test("per-column stats: any recorded column prunes through both routes; legacy flat commits still parse and prune") {
+  test("per-column stats: any recorded column prunes through both routes") {
     import spark.implicits._
     val root = freshRoot()
     // four dirs: a in [k*10, k*10+9], b constant k/2 — recorded as a SET
@@ -3672,28 +3639,8 @@ class CommitLogSpec extends SparkSpec {
     assert(scannedFiles(byB) < scannedFiles(conn.filter(col("a") >= 0L)),
       "second-column pruning must reach the physical scan")
     // library route agrees (statsKeepDirs is the shared decision)
-    assert(CommitLog.statsKeepDirs(head, "b", 1L, 1L, requireRecorded = true) ==
+    assert(CommitLog.statsKeepDirs(head, "b", 1L, 1L) ==
       Seq(head.dataDirs(2), head.dataDirs(3)))
-    // LEGACY flat single-column JSON (pre-r13 shape): rewrite v1's claim
-    // to the old `"statsCol":"a","stats":{dir:[lo,hi]}` form — it must
-    // parse into the per-column model and keep pruning on `a`
-    val legacyRoot = freshRoot()
-    CommitLog.commitAppend(spark, legacyRoot, "w", "append",
-      statsCol = Some("a"))((0L until 10L).toDF("a"))
-    val lc = CommitLog.latest(spark, legacyRoot).get
-    val lp = java.nio.file.Paths.get(legacyRoot, "_commits",
-      "v" + "%020d".format(1L) + ".json")
-    Files.delete(lp)
-    Files.write(lp, (s"""{"version":1,"dataDirs":["${lc.dataDirs.head}"],""" +
-      s""""writer":"w","action":"append","statsCol":"a",""" +
-      s""""stats":{"${lc.dataDirs.head}":[0,9]}}""").getBytes("UTF-8"))
-    val legacy = CommitLog.latest(spark, legacyRoot).get
-    assert(legacy.statsCols == Seq("a") &&
-      legacy.stats(legacy.dataDirs.head) == Map("a" -> (0L, 9L)),
-      "flat pre-r13 stats parse into the per-column model")
-    assert(CommitLog.statsKeepDirs(legacy, "a", 50L, 60L,
-      requireRecorded = true).isEmpty,
-      "legacy stats still prune after the upgrade")
   }
 
   test("declared CLUSTER BY: CREATE records the spec, argument-less compact maintains it, ALTER re-declares and clears") {
