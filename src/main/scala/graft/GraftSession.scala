@@ -1,9 +1,25 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.SparkSession
 
-/** Single place for the session config the engine depends on. */
+/** Single place for the session config the engine depends on.
+  *
+  * Local filesystem: the `file` scheme resolves to
+  * [[GraftLocalFileSystem]], which sets permission bits in-process, so no
+  * write forks a `chmod` (the stock `RawLocalFileSystem` forks one per
+  * file, `.crc` sidecar and directory when `libhadoop` is absent). Modes,
+  * the `fs.permissions.umask-mode` umask and the checksum sidecars are
+  * exactly the stock filesystem's. Caveat: Hadoop caches filesystems per
+  * (scheme, authority, user), not per implementation class, so whichever
+  * caller resolves `file://` first in a JVM fixes the class for all
+  * others. When that was a bare `Configuration` (which resolves Hive's
+  * `ProxyLocalFileSystem` through the service loader), writes stay
+  * correct but fork again; [[install]] logs one WARN in that case. */
 object GraftSession {
+  private[graft] val LocalFsKey = "fs.file.impl"
+  private[graft] val LocalFsClass = classOf[GraftLocalFileSystem].getName
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -23,6 +39,7 @@ object GraftSession {
       // the layout already groups by cid / term-bucket
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(s"spark.hadoop.$LocalFsKey", LocalFsClass)
 
   def local(cpus: Int): SparkSession =
     install(builder(s"local[$cpus]", cpus).getOrCreate())
@@ -33,13 +50,34 @@ object GraftSession {
     * point sequenced AFTER the V2 push-down batch that creates the
     * V1ScanWrapper [[graft.plans.RestoreV1ScanStatistics]] rewrites
     * (injectOptimizerRule and injectPreCBORule both run before it).
-    * Idempotent; every engine entry point wraps its getOrCreate. */
+    * Idempotent; every engine entry point wraps its getOrCreate. It also
+    * resolves `file://` under the session's Hadoop conf, which claims the
+    * JVM's filesystem cache entry for [[GraftLocalFileSystem]] unless an
+    * earlier caller took it (then one WARN, see the object doc). */
   def install(s: SparkSession): SparkSession = {
     if (!s.experimental.extraOptimizations
         .contains(graft.plans.RestoreV1ScanStatistics))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+
           graft.plans.RestoreV1ScanStatistics
+    foreignLocalFs(s.sparkContext.hadoopConfiguration).foreach { cls =>
+      if (localFsWarned.compareAndSet(false, true))
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"file:// resolves to $cls, not $LocalFsClass: it was cached " +
+            "before the engine session, so local writes fork a chmod per file")
+    }
     s
+  }
+
+  private val localFsWarned = new AtomicBoolean(false)
+
+  /** The class `file://` resolves to under `conf` (through the JVM's
+    * filesystem cache) when it is not the engine's. */
+  private[graft] def foreignLocalFs(
+      conf: org.apache.hadoop.conf.Configuration): Option[String] = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), conf)
+    if (fs.isInstanceOf[GraftLocalFileSystem]) None
+    else Some(fs.getClass.getName)
   }
 }

@@ -56,6 +56,10 @@ object Tables {
     * size); single-row-group files can defeat the bytes term (splits
     * beyond the one row group come up empty), which errs toward skipping
     * the fan-out — the conservative side (no standing payload shuffle).
+    * The bytes term counts only when the size is known: a relation
+    * without statistics (a connector frame such as a commit-log change
+    * feed) reports `spark.sql.defaultSizeInBytes`, which would saturate
+    * it, so such a frame is judged by its file count alone.
     * NonFatal only: an OOM/Interrupted must propagate, not silently
     * degrade into a repartition decision. */
   private def scanParallelism(df: DataFrame): Int =
@@ -66,7 +70,8 @@ object Tables {
           .get("spark.sql.files.maxPartitionBytes", "128MB"))
       val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       val bySize =
-        (bytes / maxSplit).min(BigInt(Int.MaxValue)).toInt
+        if (bytes >= df.sparkSession.sessionState.conf.defaultSizeInBytes) 0
+        else (bytes / maxSplit).min(BigInt(Int.MaxValue)).toInt
       math.max(nFiles, bySize)
     } catch { case scala.util.control.NonFatal(_) => 0 }
 

@@ -1542,7 +1542,6 @@ private[sources] final class CommitLogStreamSource(spark: SparkSession,
   private def versionOf(o: Any): Long = o match {
     case l: LongOffset => l.offset
     case other: OffsetV2 => other.json().trim.toLong
-    case other: OffsetV1 => other.json().trim.toLong
   }
 
   override def commit(end: OffsetV1): Unit = () // progress is the checkpoint

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 /** On-disk inverted index: term → sorted posting list of doc_ids, stored
   * partitioned by a hash BUCKET of the term so a term lookup reads exactly
@@ -38,13 +39,17 @@ object InvertedIndex {
   /** The active session's Hadoop configuration when one exists (so
     * `spark.hadoop.*` settings — object-store credentials, fs.defaultFS,
     * filesystem impls — reach meta reads/writes exactly as they reach the
-    * data reads), falling back to a bare Configuration only outside any
-    * session. A bare `new Configuration()` here silently dropped those
-    * settings (ADVICE r6). */
+    * data reads), falling back only outside any session to defaults plus
+    * the engine's `file` filesystem, so a call before the first session
+    * does not cache the stock one for the JVM (see [[graft.GraftSession]]). */
   private[graft] def driverHadoopConf: org.apache.hadoop.conf.Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+      .getOrElse {
+        val c = new org.apache.hadoop.conf.Configuration()
+        c.set(graft.GraftSession.LocalFsKey, graft.GraftSession.LocalFsClass)
+        c
+      }
 
   private def hadoopFs(dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -101,6 +106,21 @@ object InvertedIndex {
   }
 
   private def toks = expr(graft.functions.TextTokens.ToksSql)
+
+  /** The postings files' columns as schema inference reads them back
+    * (every field nullable; doc ids are BIGINT, as the `graft.index`
+    * relation declares them). Reads pass it, so they run no one-task
+    * schema-inference job. The `bucket`/`seg` partition columns are left
+    * out: their types are still inferred from the directory names, a
+    * listing and not a job, so a read's schema is exactly the inferred
+    * one (a `seg` past the int range still reads as BIGINT). */
+  private[sources] val PostingsSchema: StructType = StructType(Seq(
+    StructField("term", StringType),
+    StructField("doc_ids", ArrayType(LongType)),
+    StructField("df", LongType)))
+
+  private def readPostings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(PostingsSchema).parquet(dir)
 
   /** (term, doc_id) pairs -> the on-disk postings layout. The shared tail
     * of the doc-tokenizing build/append paths AND the DataSourceV2 write
@@ -181,7 +201,7 @@ object InvertedIndex {
   def compact(spark: SparkSession, dir: String,
       buckets: Int = -1): Unit = {
     val b = resolveBuckets(dir, buckets)
-    val merged = spark.read.parquet(dir)
+    val merged = readPostings(spark, dir)
       .select(col("term"), explode(col("doc_ids")).as("doc_id"))
       .distinct()
       .groupBy("term")
@@ -201,7 +221,7 @@ object InvertedIndex {
   def lookup(spark: SparkSession, dir: String, term: String,
       buckets: Int = -1): DataFrame = {
     val b = resolveBuckets(dir, buckets)
-    spark.read.parquet(dir)
+    readPostings(spark, dir)
       .filter(col("bucket") === pmod(xxhash64(lit(term)), lit(b.toLong))
         && col("term") === term)
       .select(explode(col("doc_ids")).as("doc_id"))

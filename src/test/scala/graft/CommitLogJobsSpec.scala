@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.CommitLog
@@ -16,29 +13,6 @@ class CommitLogJobsSpec extends SparkSpec {
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft-jobs").toString
-
-  /** The jobs `body` starts. Counted by job group, so jobs of other
-    * threads never leak into the count. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count")
-    try {
-      val r = body
-      TestListenerBus.drain(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
 
   private def batch(from: Long, n: Long): DataFrame =
     spark.range(from, from + n).select(

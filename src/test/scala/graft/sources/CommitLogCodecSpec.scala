@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{Path => HPath}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.CommitLog.{Commit, IndexEntry, UnsupportedTableFeatureException}
 
@@ -11,14 +12,17 @@ import graft.sources.CommitLog.{Commit, IndexEntry, UnsupportedTableFeatureExcep
   * hand-written codec (`src/test/resources/commitlog-golden`: three commit
   * files, a checkpoint, a catalog descriptor and an index meta file), and
   * the per-field read contracts of the commit record. */
-class CommitLogCodecSpec extends AnyFunSuite {
+class CommitLogCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val golden =
     Paths.get(getClass.getResource("/commitlog-golden").toURI)
   private def text(rel: String) =
     new String(Files.readAllBytes(golden.resolve(rel)), "UTF-8")
   private def commitText(v: Long) = text(f"_commits/v$v%020d.json")
-  private val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-    new org.apache.hadoop.conf.Configuration())
+  // an uncached instance: a cached one resolved from a bare Configuration
+  // would fix the JVM's `file` filesystem for every later suite
+  private val fs = org.apache.hadoop.fs.FileSystem.newInstance(
+    java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+  override def afterAll(): Unit = fs.close()
 
   private val d1 = "data-0a1b2c3d-v1"
   private val d2 = "data-4e5f6a7b-v1"

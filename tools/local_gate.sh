@@ -21,8 +21,14 @@ if ! tail -1 "$OUT/compare.out" | grep -q " 0 FAILING"; then
 fi
 
 echo "== graft local gate: sbt test =="
-sbt -batch test > "$OUT/test.log" 2>&1 \
-  || { grep -E "FAILED|\*\*\*" "$OUT/test.log" | tail -20; exit 1; }
+rc=0
+sbt -batch test > "$OUT/test.log" 2>&1 || rc=$?
+# per-suite durations, summed from the -oD per-test lines
+python3 tools/suite_times.py "$OUT/test.log" | tee "$OUT/suite_times.md"
+if [ "$rc" -ne 0 ]; then
+  grep -E "\*\*\* (FAILED|ABORTED) \*\*\*|^\[info\]   [^+ ]|Failed tests" "$OUT/test.log" \
+    | tail -20; exit 1
+fi
 grep -E "Tests: succeeded" "$OUT/test.log" | tail -1
 
 echo "== gate PASSED (artifacts in $OUT) =="
