@@ -42,8 +42,9 @@ import java.nio.file.{Files, Paths}
   * the previous mid-suite 5→3→1 degradation gave alphabetically-late
   * queries fewer reps, making their medians position-dependent garbage:
   * r9's driver artifact read q_scalar_variant at 16.2 s single-rep vs
-  * 0.77 s at full reps on the same HEAD): the per-query cost map of the
-  * COMMITTED bench_out.json estimates one suite pass, and
+  * 0.77 s at full reps on the same HEAD): the per-query cost pin
+  * `bench_cost_pin.json` (tracked, read-only here; `bench_out.json` is
+  * this run's output and never an input) estimates one suite pass, and
   * `reps_effective = clamp((budget − warmup_pass) / pass, 1, reps)` is
   * fixed BEFORE the first query, identically for every query. A run whose
   * medians come from uniform reduced reps is comparable across the whole
@@ -95,15 +96,15 @@ object Bench {
     def r3(v: Double): String = f"$v%.3f"
 
     // Uniform up-front rep decision (VERDICT r9 #1). Pass-cost estimate =
-    // per-query medians of the COMMITTED bench_out.json (every round commits
-    // one, so a driver checkout always has it); queries it doesn't know
-    // (new this round) are priced at the known median-of-medians. The warmup
+    // per-query medians pinned in bench_cost_pin.json (a run never rewrites
+    // it, so one run cannot change the next run's rep count); queries it
+    // doesn't know are priced at the known median-of-medians. The warmup
     // pass is priced at 1.5× a steady-state pass (cold codegen + file
     // listings — r9 measured the 6-pass full protocol at ~6.2× one pass).
     // No estimate (fresh repo, SPARK_GRAFT_ONLY of all-new queries) =>
     // requested reps, and the emergency brake below is the only cap.
     val priorCosts: Map[String, Double] = {
-      val p = Paths.get("bench_out.json")
+      val p = Paths.get("bench_cost_pin.json")
       if (!Files.exists(p)) Map.empty
       else {
         val txt = Files.readString(p)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import graft.functions.{AdcDist, BloomOps, BpeTokenCount, CosineSimilarity, GramMaxCount, Grams, NearestCells, RollingFingerprint, Tokens}
-import graft.plans.{AsOfStrategy, IntervalJoinRewrite, PushFilterThroughAsOf, RestoreV1ScanStatistics, RowLevelSqlStrategy}
+import graft.plans.{AsOfStrategy, FinalSortPlacement, IntervalJoinRewrite, PushFilterThroughAsOf, RestoreV1ScanStatistics, RowLevelSqlStrategy}
 
 /** THE session-extension entry point: everything the engine injects into
   * Catalyst registers here (native functions, planner strategies, optimizer
@@ -41,5 +41,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Optimizers", the LAST batch) via GraftSession.install
     // opt-in via spark.graft.intervalJoin.enabled (see the rule's scaladoc)
     ext.injectOptimizerRule(_ => IntervalJoinRewrite)
+    // the output sort, from static size estimates and from AQE's sizes of
+    // finished stages
+    ext.injectOptimizerRule(_ => FinalSortPlacement)
+    ext.injectRuntimeOptimizerRule(_ => FinalSortPlacement)
   }
 }

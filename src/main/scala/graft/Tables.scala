@@ -27,41 +27,17 @@ object Tables {
   // table metadata, never rows or results.
   private val schemaCache = new SessionCache[StructType]()
 
-  /** r19: spread rows across the session's shuffle parallelism before a
-    * per-row-EXPENSIVE stage (heavy expressions, explode + partial
-    * aggregation). The testdata parquet files are single-row-group, so a
-    * scan is one task no matter the split config, and everything up to
-    * the first exchange would otherwise run serially — the single-file /
-    * single-row-group straggler shape (guide §2), which a production
-    * corpus hits whenever one input file dominates. The exchange carries
-    * the frame once (small at every gate scale); the parallelism comes
-    * from spark.sql.shuffle.partitions, which GraftSession derives from
-    * the session's core count — never a hard-coded local constant. An
-    * EXPLICIT partition count keeps AQE's small-shuffle coalescing from
-    * folding the fan-out back into one task.
-    *
-    * CONDITIONAL (r19 follow-up): the fan-out is an input-skew remedy, so
-    * it only fires when the scan is actually under-parallelized — fewer
-    * input files than the session's shuffle parallelism (splittability is
-    * at best one task per file here; with many files the scan already
-    * fans itself out and the extra exchange would just move the payload
-    * bytes once for nothing, the guide §8 anti-pattern). A production
-    * multi-file corpus therefore takes the identity path; the single-file
-    * testdata (and any one-giant-file ingest) takes the repartition. */
-  /** Estimated scan parallelism (r20, ADVICE r19): file count alone
-    * under-estimates — Spark splits a file larger than maxPartitionBytes
-    * across tasks, so one big multi-row-group file already scans in
-    * parallel and must not be fanned out (the exchange would move the
-    * payload for nothing). Estimate = max(files, total bytes / split
-    * size); single-row-group files can defeat the bytes term (splits
-    * beyond the one row group come up empty), which errs toward skipping
-    * the fan-out — the conservative side (no standing payload shuffle).
-    * The bytes term counts only when the size is known: a relation
+  /** Estimated scan parallelism: max(files, total bytes / split size).
+    * File count alone under-estimates, because Spark splits a file larger
+    * than `spark.sql.files.maxPartitionBytes` across tasks. Single-row-group
+    * files can defeat the bytes term (splits beyond the one row group come
+    * up empty), which errs toward skipping the fan-out, the conservative
+    * side. The bytes term counts only when the size is known: a relation
     * without statistics (a connector frame such as a commit-log change
     * feed) reports `spark.sql.defaultSizeInBytes`, which would saturate
-    * it, so such a frame is judged by its file count alone.
-    * NonFatal only: an OOM/Interrupted must propagate, not silently
-    * degrade into a repartition decision. */
+    * it, so such a frame is judged by its file count alone. NonFatal only:
+    * an OOM or interrupt must propagate, not degrade into a repartition
+    * decision. */
   private def scanParallelism(df: DataFrame): Int =
     try {
       val nFiles = df.inputFiles.length
@@ -75,6 +51,22 @@ object Tables {
       math.max(nFiles, bySize)
     } catch { case scala.util.control.NonFatal(_) => 0 }
 
+  /** Spreads rows across the session's shuffle parallelism before a
+    * per-row-expensive stage (heavy expressions, explode + partial
+    * aggregation). A single-row-group parquet file scans as one task
+    * whatever the split config, so everything up to the first exchange
+    * would otherwise run serially: the single-file straggler shape, which
+    * a production corpus hits whenever one input file dominates. The
+    * exchange carries the frame once; the parallelism is
+    * `spark.sql.shuffle.partitions`, which [[GraftSession]] derives from
+    * the session's core count. The explicit partition count keeps AQE's
+    * small-shuffle coalescing from folding the fan-out back into one task.
+    *
+    * Conditional: the fan-out is an input-skew remedy, so it fires only
+    * when the estimated scan parallelism ([[scanParallelism]]) is below
+    * the shuffle parallelism. A scan that already fans itself out (many
+    * files, or one file larger than a split) takes the identity path,
+    * since the extra exchange would move the payload once for nothing. */
   def fanOut(df: DataFrame): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     if (scanParallelism(df) >= parts) df else df.repartition(parts)
@@ -97,39 +89,6 @@ object Tables {
   def fanOutBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     if (scanParallelism(df) >= parts) df else df.repartition(parts, keys: _*)
-  }
-
-  /** Final presentation sort for REPORT-sized outputs (r20, guide §2.4
-    * "an orderBy used only to make output deterministic"). A trailing
-    * `.orderBy(keys)` plans as THREE extra steps per execution — a
-    * range-bounds sampling pass over the child, a range exchange, and the
-    * sort — i.e. two whole extra jobs under AQE, paid by every execution
-    * of ~every declared query. When the output is a bounded report (group
-    * counts over enum-grade keys: order status, return flag, language —
-    * cardinality independent of corpus size), `coalesce(1) +
-    * sortWithinPartitions` produces the IDENTICAL row sequence (same
-    * comparator, total keys, one partition = global order) with no
-    * sampling job and no range exchange; the single task sorts a handful
-    * of rows at ANY corpus scale, and the upstream aggregation keeps its
-    * parallelism (partial aggregates are unaffected; only the final,
-    * groups-sized reduce folds into the one task).
-    *
-    * NOT for O(input) outputs — full-table projections, per-row scores,
-    * change feeds: those keep the distributed range sort (a single-task
-    * sort of a billion rows is the straggler shape §2 exists to kill).
-    * Callers assert that the output is report-sized BY CONSTRUCTION
-    * (bounded group cardinality), not just small at the test SF. */
-  def reportSort(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
-    df.coalesce(1).sortWithinPartitions(keys: _*)
-
-  /** Chainable syntax for [[reportSort]]: `frame.reportSort("k")` is a
-    * drop-in replacement for a trailing `.orderBy("k")` on report-sized
-    * output (same row sequence — see [[reportSort]]'s contract). */
-  implicit class ReportSortSyntax(private val df: DataFrame) {
-    def reportSort(key: String, keys: String*): DataFrame =
-      df.coalesce(1).sortWithinPartitions(key, keys: _*)
-    def reportSort(keys: org.apache.spark.sql.Column*): DataFrame =
-      df.coalesce(1).sortWithinPartitions(keys: _*)
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {

@@ -183,12 +183,15 @@ object GeoOps {
     // EXPLODED probe side (≤6 keys/point) as the build once the canonical
     // scheme shrank it; the homes side is strictly smaller (one row per
     // point) and is the natural build relation (guide §3.1).
-    // r20: shuffle_hash, NOT broadcast — homes is one row per corpus
-    // point, so a broadcast pins an O(corpus) hash relation on the driver
-    // (fine at sf0.1, an OOM at 100 TB). A shuffled hash join with homes
-    // as the per-partition build side keeps the build O(corpus/partitions)
-    // and needs no sort — the same device the salted join and the dedup
-    // corpus self-join use.
+    // shuffle_hash, NOT broadcast — homes is one row per corpus point, so
+    // a broadcast pins an O(corpus) hash relation on the driver (fine at
+    // sf0.1, an OOM at 100 TB). The shuffled hash join builds homes per
+    // partition and needs no sort. Its key space is bounded, though: about
+    // 700 (band, cell) keys, geographically skewed (polar bands collapse
+    // to cell 0). So parallelism caps at the cell count whatever
+    // spark.sql.shuffle.partitions is, and one partition's build holds the
+    // points of its hottest cell, which a dense enough cell can still
+    // overflow.
     probes.join(homes.hint("shuffle_hash"), Seq("band", "cell"))
       .filter(col("da") =!= col("db"))
       // same-cell matches come from the self-probe in both orderings;

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -20,6 +19,18 @@ object Aggregates {
   type Q = (SparkSession, String) => DataFrame
 
   private val dec2 = DecimalType(18, 2)
+
+  private val pivotSegs =
+    Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+
+  /** Revenue by nation, one column per market segment, unsorted. */
+  private def pivoted(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+      .groupBy("n_name")
+      .pivot("c_mktsegment", pivotSegs)
+      .agg(sum(col("o_totalprice").cast(dec2)).cast("double"))
 
   val queries: Map[String, Q] = Map(
     // Flagship: TPC-H Q1-style pricing summary (SURVEY.md §2.4).
@@ -42,7 +53,7 @@ object Aggregates {
           (sumExact2(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
           (sumExact2(col("l_discount")) / count(lit(1))).as("avg_disc"),
           count(lit(1)).as("count_order"))
-        .reportSort("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus")),
 
     // Distinct aggregates (Expand-based two-phase distinct).
     "q_agg_distinct" -> ((s, d) =>
@@ -52,7 +63,7 @@ object Aggregates {
           countDistinct(col("o_custkey")).as("cd_cust"),
           countDistinct(col("o_orderpriority")).as("cd_prio"),
           count(lit(1)).as("cnt"))
-        .reportSort("o_orderstatus")),
+        .orderBy("o_orderstatus")),
 
     // Incremental aggregate maintenance (the materialized-view pattern
     // every 100 TB rollup pipeline runs): the stored partial-aggregate
@@ -82,7 +93,7 @@ object Aggregates {
           min(col("min_price")).as("min_price"),
           max(col("max_price")).as("max_price"))
         .withColumn("avg_qty", col("sum_qty") / col("cnt"))
-        .reportSort("l_returnflag")
+        .orderBy("l_returnflag")
     }),
 
     // HLL sketch — mergeable across partitions, O(1) memory per group; the
@@ -91,7 +102,7 @@ object Aggregates {
       Tables.events(s, d)
         .groupBy("event_type")
         .agg(approx_count_distinct(col("user_id")).as("approx_users"))
-        .reportSort("event_type")),
+        .orderBy("event_type")),
 
     // GK-sketch quantiles (percentile_approx) — mergeable, bounded memory
     // per group; THE 100 TB percentile path (the exact `percentile` in
@@ -115,7 +126,7 @@ object Aggregates {
           element_at(col("pa"), 1).as("p50_approx"),
           element_at(col("pa"), 2).as("p95_approx"),
           col("cnt"))
-        .reportSort("l_returnflag")),
+        .orderBy("l_returnflag")),
 
     // ROLLUP over a star join; grouping nulls coalesced to 'ALL' so null
     // ordering can't diverge between engines.
@@ -137,7 +148,7 @@ object Aggregates {
           coalesce(col("n_name"), lit("ALL")).as("nation"),
           coalesce(col("c_mktsegment"), lit("ALL")).as("segment"),
           col("revenue"), col("cnt"))
-        .reportSort("nation", "segment")),
+        .orderBy("nation", "segment")),
 
     // CUBE (all 4 grouping combinations via Expand).
     // r19: same pre-aggregation as q_agg_rollup — Expand quadruples ~15
@@ -152,7 +163,7 @@ object Aggregates {
           coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
           coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
           col("cnt"), col("revenue"))
-        .reportSort("status", "priority")),
+        .orderBy("status", "priority")),
 
     // GROUPING SETS via the SQL surface (SURVEY.md §4 entry point 2). The
     // SQL string is valid in both engines, so the oracle is the same text.
@@ -179,26 +190,16 @@ object Aggregates {
 
     // PIVOT: revenue by nation × market segment widened to one column per
     // segment (explicit value list => no extra distinct-values job).
-    "q_agg_pivot" -> ((s, d) => {
-      val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-      Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .pivot("c_mktsegment", segs)
-        .agg(sum(col("o_totalprice").cast(dec2)).cast("double"))
-        .reportSort("n_name")
-    }),
+    "q_agg_pivot" -> ((s, d) => pivoted(s, d).orderBy("n_name")),
 
     // UNPIVOT (melt): the pivoted wide frame back to (nation, segment,
     // revenue) long form. Oracle = UNION ALL of per-segment projections.
-    "q_agg_unpivot" -> ((s, d) => {
-      val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-      val wide = queries("q_agg_pivot")(s, d)
-      wide.unpivot(Array(col("n_name")), segs.map(col).toArray, "segment", "revenue")
+    "q_agg_unpivot" -> ((s, d) =>
+      pivoted(s, d)
+        .unpivot(Array(col("n_name")), pivotSegs.map(col).toArray,
+          "segment", "revenue")
         .filter(col("revenue").isNotNull)
-        .reportSort("n_name", "segment")
-    }),
+        .orderBy("n_name", "segment")),
 
     // Salted two-phase sum over a 3-value key — the skew-mitigation path
     // from SCALE.md as a first-class declared query. l_returnflag has ~3
@@ -210,7 +211,7 @@ object Aggregates {
       graft.functions.SkewOps
         .saltedSumExact2(Tables.lineitem(s, d), "l_returnflag",
           "l_extendedprice", salts = 16)
-        .reportSort("l_returnflag")),
+        .orderBy("l_returnflag")),
 
     // Conditional/boolean aggregate family: count_if + bool_and/bool_or —
     // the predicate-accounting shapes data-quality checks aggregate with
@@ -223,7 +224,7 @@ object Aggregates {
           bool_and(col("o_totalprice") > 0).as("all_positive"),
           bool_or(col("o_orderstatus") === "F").as("any_finished"),
           count(lit(1)).as("cnt"))
-        .reportSort("o_orderpriority")),
+        .orderBy("o_orderpriority")),
 
     // Fixed-width histogram: constant bucket edges => map-only bucketing +
     // one tiny-cardinality groupBy (at 100 TB the shuffle carries ~12 rows
@@ -236,7 +237,7 @@ object Aggregates {
         .groupBy("bucket")
         .agg(count(lit(1)).as("cnt"),
           sumExact2(col("l_extendedprice")).as("sum_price"))
-        .reportSort("bucket")),
+        .orderBy("bucket")),
 
     // Array-aggregation family: collect_set (distinct) with a pinned sort +
     // string serialization, so the grouped list is deterministic and both
@@ -261,7 +262,7 @@ object Aggregates {
           (round(corr(col("l_extendedprice"), col("l_discount")), 6) + 0.0).as("corr_pd"),
           (round(covar_samp(col("l_extendedprice"), col("l_quantity")), 4) + 0.0).as("cov_pq"),
           count(lit(1)).as("cnt"))
-        .reportSort("l_returnflag")),
+        .orderBy("l_returnflag")),
 
     // Stats family: min/max/stddev/exact percentiles.
     "q_agg_stats" -> ((s, d) =>
@@ -274,7 +275,7 @@ object Aggregates {
           expr("percentile(l_quantity, 0.5)").as("median_qty"),
           expr("percentile(l_quantity, 0.9)").as("p90_qty"),
           count(lit(1)).as("cnt"))
-        .reportSort("l_returnflag")),
+        .orderBy("l_returnflag")),
 
     // Mergeable-sketch rollup (DataSketches HLL): per-group sketches of
     // distinct customers, PLUS an 'ALL' row whose estimate comes from
@@ -296,7 +297,7 @@ object Aggregates {
         .agg(expr("hll_union_agg(sk)").as("u"))
         .select(lit("ALL").as("grp"),
           expr("hll_sketch_estimate(u)").cast("long").as("est_customers"))
-      groups.unionByName(all).reportSort("grp")
+      groups.unionByName(all).orderBy("grp")
     }),
 
     // MODE (most frequent value) per group with a DETERMINISTIC tie-break
@@ -317,7 +318,7 @@ object Aggregates {
         .filter(col("rn") === 1)
         .select(col("o_orderstatus"),
           col("o_orderpriority").as("mode_priority"), col("cnt"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // Exact INTERPOLATED percentiles (percentile_cont semantics: rank
@@ -410,7 +411,7 @@ object Aggregates {
             .as("est_union"))
         .withColumn("est_intersect",
           greatest(lit(0L), col("est_a") + col("est_b") - col("est_union")))
-        .reportSort("grp_a", "grp_b")
+        .orderBy("grp_a", "grp_b")
     }),
 
     // THETA/KMV INTERSECTION (functions/ThetaSketch.scala — VERDICT r11
@@ -444,7 +445,7 @@ object Aggregates {
             .cast("long").as("est_union"),
           graft.functions.Theta.intersectEstimate(col("ska"), col("skb"), k)
             .cast("long").as("est_intersect"))
-        .reportSort("grp_a", "grp_b")
+        .orderBy("grp_a", "grp_b")
     }),
 
     // THETA OVERLAPS FROM STORAGE (r13 — VERDICT r12 #8): the same
@@ -471,7 +472,7 @@ object Aggregates {
           graft.functions.Theta.estimate(col("skb"), k).cast("long").as("est_b"),
           graft.functions.Theta.intersectEstimate(col("ska"), col("skb"), k)
             .cast("long").as("est_intersect"))
-        .reportSort("grp_a", "grp_b")
+        .orderBy("grp_a", "grp_b")
     }),
 
     // Rollups from a PERSISTED sketch table (SketchStore): the stored
@@ -489,7 +490,7 @@ object Aggregates {
       val all = sk.agg(expr("hll_union_agg(sk)").as("u"))
         .select(lit("ALL").as("grp"),
           expr("hll_sketch_estimate(u)").cast("long").as("est_customers"))
-      byStatus.unionByName(all).reportSort("grp")
+      byStatus.unionByName(all).orderBy("grp")
     }))
 
   /** Runs verbatim in both Spark and DuckDB. */

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -130,7 +129,7 @@ object Behavior {
         .select(expr(
           "stack(3, '1_signup', c1, '2_then_view', c2, " +
             "'3_then_purchase', c3) as (stage, users)"))
-        .reportSort("stage")
+        .orderBy("stage")
     }),
 
     // Cohort retention: users bucketed by first-event week (vs the dataset
@@ -152,7 +151,7 @@ object Behavior {
         .distinct()
         .groupBy("cohort_week", "week_offset")
         .agg(count(lit(1)).as("users"))
-        .reportSort("cohort_week", "week_offset")
+        .orderBy("cohort_week", "week_offset")
     }),
 
     // Per-group feature standardization (z-score): each event's value
@@ -312,7 +311,7 @@ object Behavior {
         .filter(col("to_type").isNotNull)
         .groupBy(col("event_type").as("from_type"), col("to_type"))
         .agg(count(lit(1)).as("cnt"))
-        .reportSort("from_type", "to_type")
+        .orderBy("from_type", "to_type")
     }))
 
   val oracles: Map[String, String] = Map(

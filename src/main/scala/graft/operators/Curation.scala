@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -289,7 +288,7 @@ object Curation {
         .groupBy("lang")
         .agg(count(lit(1)).cast("int").as("n_kept"),
           round(avg("quality"), 6).as("avg_quality"))
-        .reportSort("lang")
+        .orderBy("lang")
     }),
 
     // Encoding scalar family: base64 / hex / byte length over utf-8 text —
@@ -308,11 +307,12 @@ object Curation {
     // The per-language count table is tiny → broadcast back to the corpus.
     "q_lang_rebalance" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      // r19: same shape fix as q_mix_temperature — materialize the
-      // group-sized count frame its two consumers share, broadcast the
-      // group-sized final join.
-      val n = docs.groupBy("lang").agg(count(lit(1)).as("n_total"))
-        .localCheckpoint()
+      // same shape fix as q_mix_temperature: materialize the group-sized
+      // count frame its two consumers share (as a local relation, which
+      // reports its exact size), broadcast the group-sized final join.
+      val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_total"))
+      val n = s.createDataFrame(
+        java.util.Arrays.asList(counts.collect(): _*), counts.schema)
       val u = (col("doc_id") * lit(2654435761L) + lit(97L)) % lit(1000000007L)
       val kept = docs.join(broadcast(n), "lang")
         .filter(u.cast("double") / 1000000007.0 <
@@ -321,7 +321,7 @@ object Curation {
       n.join(broadcast(kept), Seq("lang"), "left")
         .na.fill(0L, Seq("n_kept"))
         .select("lang", "n_total", "n_kept")
-        .reportSort("lang")
+        .orderBy("lang")
     }),
 
     // Substring-level dedup (the Lee et al. 2022 ExactSubstr concern at
@@ -386,14 +386,18 @@ object Curation {
     // filter.
     "q_mix_temperature" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      // r19: the per-source count frame is group-cardinality-sized but
-      // feeds the plan in three places (rate table ×2 + its own total);
-      // left lazy it re-scanned documents once per reference (5 scans, 8
-      // Exchanges, and a SortMergeJoin over the handful-of-sources frame
-      // in the before-plan). One materialization + broadcasting the final
-      // group-sized join leaves two document scans and no sort-merge.
-      val n = docs.groupBy("source").agg(count(lit(1)).as("n_total"))
-        .localCheckpoint()
+      // the per-source count frame is group-cardinality-sized but feeds
+      // the plan in three places (rate table ×2 + its own total); left
+      // lazy it re-scanned documents once per reference (5 scans, 8
+      // Exchanges, and a SortMergeJoin over the handful-of-sources frame).
+      // One materialization + broadcasting the final group-sized join
+      // leaves two document scans and no sort-merge. It is materialized as
+      // a local relation, which (unlike a local checkpoint) reports its
+      // exact size, so the output sort over the final join runs as one
+      // partition.
+      val counts = docs.groupBy("source").agg(count(lit(1)).as("n_total"))
+      val n = s.createDataFrame(
+        java.util.Arrays.asList(counts.collect(): _*), counts.schema)
       val w = n.withColumn("w",
         sqrt(col("n_total").cast("double")).cast("decimal(28,12)"))
       val tot = w.agg(sum(col("w")).as("tot"))
@@ -410,7 +414,7 @@ object Curation {
       rated.join(broadcast(kept), Seq("source"), "left")
         .na.fill(0L, Seq("n_kept"))
         .select("source", "n_total", "n_kept", "rate")
-        .reportSort("source")
+        .orderBy("source")
     }),
 
     // Hashed-feature linear quality classifier — the fastText shape

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -239,7 +238,7 @@ object DataModel {
         .join(edges.select(col("src").as("a"), col("nk")).distinct(), Seq("a"))
         .groupBy("nk").agg(sum(col("tri")).as("triangles"))
         .withColumnRenamed("nk", "c_nationkey")
-        .reportSort("c_nationkey")
+        .orderBy("c_nationkey")
     }),
 
     // Slowly-changing-dimension Type-2 build (Kimball): collapse each

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -525,7 +524,7 @@ object Dedup {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .reportSort("lang")
+        .orderBy("lang")
     }),
 
     // Ground-truth near-dup pairs by exact 3-shingle Jaccard >= 0.8
@@ -576,7 +575,7 @@ object Dedup {
       docs.join(exactClusters(s, d).filter(col("doc_id") =!= col("cluster")),
           Seq("doc_id"), "left_anti")
         .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .reportSort("lang")
+        .orderBy("lang")
     }),
 
     // Survivor selection with a KEEP-BEST policy — "keep the most complete
@@ -591,7 +590,7 @@ object Dedup {
       keepBestSurvivors(docs, exactClusters(s, d),
         Seq(col("n_chars").desc, col("doc_id").asc))
         .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .reportSort("lang")
+        .orderBy("lang")
     }),
 
     // The PRODUCTION dedup pipeline end-to-end: minhash+LSH candidates

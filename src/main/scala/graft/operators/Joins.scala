@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -156,7 +155,7 @@ object Joins {
         .join(broadcast(Tables.region(s, d)),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name").agg(count(lit(1)).as("n_nations"))
-        .reportSort("r_name")),
+        .orderBy("r_name")),
 
     // Equi-join, Catalyst picks the physical strategy (broadcast at this
     // scale; sort-merge/shuffled-hash when both sides are large).
@@ -165,7 +164,7 @@ object Joins {
         .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_orders"), sumExact2(col("o_totalprice")).as("revenue"))
-        .reportSort("c_mktsegment")),
+        .orderBy("c_mktsegment")),
 
     // 4-way star join: fact table joined to progressively smaller dims —
     // customer/nation broadcast; lineitem⋈orders co-shuffles on orderkey.
@@ -180,7 +179,7 @@ object Joins {
         .groupBy("n_name")
         .agg(sumExact(revenueExpr(col("l_extendedprice"), col("l_discount")), 4)
           .as("revenue"))
-        .reportSort("n_name")),
+        .orderBy("n_name")),
 
     // Left-semi ("has orders") and left-anti ("has none") as one 2-row frame.
     "q_join_semi_anti" -> ((s, d) => {
@@ -190,7 +189,7 @@ object Joins {
         .agg(count(lit(1)).as("cnt")).select(lit("with_orders").as("kind"), col("cnt"))
       val anti = c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
         .agg(count(lit(1)).as("cnt")).select(lit("without_orders").as("kind"), col("cnt"))
-      semi.union(anti).reportSort("kind")
+      semi.union(anti).orderBy("kind")
     }),
 
     // Left-outer with 0-filled counts; customers with no orders first.
@@ -209,7 +208,7 @@ object Joins {
           col("l_partkey") === col("p_partkey") && col("l_quantity") < col("p_size"))
         .groupBy("p_brand")
         .agg(count(lit(1)).as("cnt"), sumExact2(col("l_quantity")).as("sum_qty"))
-        .reportSort("p_brand")),
+        .orderBy("p_brand")),
 
     // Pure non-equi join (no equi key at all) => BroadcastNestedLoopJoin.
     // Deliberately bounded to the 25-row dim: the nested loop is O(n*m) and
@@ -222,7 +221,7 @@ object Joins {
       val n2 = n.select(col("n_nationkey").as("k2"))
       n1.join(n2, col("k1") < col("k2"))
         .groupBy("r1").agg(count(lit(1)).as("n_pairs"))
-        .reportSort("r1")
+        .orderBy("r1")
     }),
 
     // Interval-overlap join on the SCALE path: each order carries a
@@ -261,7 +260,7 @@ object Joins {
         .filter(col("os") < col("we") && col("ws") < col("oe"))
         .select("w_id", "o_orderkey").distinct()
         .groupBy("w_id").agg(count(lit(1)).as("cnt"))
-        .reportSort("w_id")
+        .orderBy("w_id")
     }),
 
     // The SAME interval-overlap join written NAIVELY (pure inequality
@@ -298,7 +297,7 @@ object Joins {
           (lit(1826) + col("n_nationkey") * lit(90) + lit(45)).as("we"))
         val df = w.join(o, col("os") < col("we") && col("ws") < col("oe"))
           .groupBy("w_id").agg(count(lit(1)).as("cnt"))
-          .reportSort("w_id")
+          .orderBy("w_id")
         org.apache.spark.sql.GraftBridge.ofRows(s,
           df.queryExecution.optimizedPlan)
       }),
@@ -332,7 +331,7 @@ object Joins {
         .agg(count(lit(1)).as("cnt"),
           sumExact(revenueExpr(col("l_extendedprice"), col("l_discount")), 4)
             .as("revenue"))
-        .reportSort("o_orderpriority")
+        .orderBy("o_orderpriority")
     }),
 
     // Production-shape skew handling: TWO-PHASE targeted salting. The naive
@@ -369,7 +368,7 @@ object Joins {
         .agg(count(lit(1)).as("cnt"),
           sum(col("value").cast(org.apache.spark.sql.types.DataTypes
             .createDecimalType(18, 4))).cast("double").as("sum_value"))
-        .reportSort("event_type")
+        .orderBy("event_type")
     }),
 
     // Co-located (bucketed) join: both fact tables pre-written bucketed by
@@ -390,7 +389,7 @@ object Joins {
         .agg(count(lit(1)).as("cnt"),
           sumExact(revenueExpr(col("l_extendedprice"), col("l_discount")), 4)
             .as("revenue"))
-        .reportSort("o_orderpriority")
+        .orderBy("o_orderpriority")
     }),
 
     // Correlated LATERAL subquery (top-2 customers by balance per nation)
@@ -417,7 +416,7 @@ object Joins {
       left.join(right, col("k") <=> col("rk"), "left_outer")
         .select(coalesce(col("k"), lit("UNSET")).as("status"),
           col("cnt_all"), coalesce(col("cnt_big"), lit(0L)).as("cnt_big"))
-        .reportSort("status")
+        .orderBy("status")
     }),
 
     // Fuzzy (edit-distance) self-join on nation names: levenshtein <= 3,

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -127,7 +126,7 @@ object Layout {
         .agg(count(lit(1)).as("n"),
           min("x16").as("min_x"), max("x16").as("max_x"),
           min("y16").as("min_y"), max("y16").as("max_y"))
-        .reportSort("bucket")
+        .orderBy("bucket")
     }))
 
   private val ZSql =

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,7 +62,7 @@ object Pipeline {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-        .reportSort("o_orderstatus")),
+        .orderBy("o_orderstatus")),
 
     // Stratified quota: exactly 20 documents per language, chosen by hash
     // order (md5 of the text) — a deterministic "uniform within stratum"
@@ -197,7 +196,7 @@ object Pipeline {
           Array(col("n_rows"), col("null_custkey"), col("nd_status"),
             col("nd_priority"), col("min_price"), col("max_price")),
           "metric", "value")
-        .reportSort("metric")
+        .orderBy("metric")
     }),
 
     // DISTRIBUTION DRIFT between two snapshots (population stability
@@ -227,7 +226,7 @@ object Pipeline {
         .groupBy("feature", "bucket")
         .agg(count_if(!col("__new")).as("n_old"),
           count_if(col("__new")).as("n_new"))
-      psiReportCounts(counts).reportSort("feature", "bucket")
+      psiReportCounts(counts).orderBy("feature", "bucket")
     }),
 
     // Referential-integrity gate (the cross-table half of the data-quality
@@ -251,7 +250,7 @@ object Pipeline {
       val dupKeys = o.groupBy("o_orderkey").agg(count(lit(1)).as("c"))
         .filter(col("c") > 1).agg(count(lit(1)).as("n"))
         .select(lit("duplicate_orderkeys").as("chk"), col("n"))
-      orphanLine.unionByName(orphanOrder).unionByName(dupKeys).reportSort("chk")
+      orphanLine.unionByName(orphanOrder).unionByName(dupKeys).orderBy("chk")
     }),
 
     // Deterministic train/val/test assignment: each doc's md5 band maps it
@@ -269,7 +268,7 @@ object Pipeline {
         .groupBy("lang", "split")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast("long").as("n_chars"))
-        .reportSort("lang", "split")),
+        .orderBy("lang", "split")),
 
     // Deterministic global training shuffle: an epoch's order is the
     // range-sort of a seeded hash key — reproducible across runs, engines,

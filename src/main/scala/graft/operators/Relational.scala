@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.Tables.ReportSortSyntax
 
 /** SURVEY.md §2.1 (scans/sources/sinks), §2.2 (projection/filter/predicates),
   * §2.6 (sort/limit/top-k), §2.7 (set ops).
@@ -1217,7 +1216,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // DELETION-VECTOR delete (r16 — VERDICT r15 #1, merge-on-read): one
@@ -1237,7 +1236,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // NESTED ADDITIVE EVOLUTION (r17 — VERDICT r16 #4): `ADD COLUMNS
@@ -1258,7 +1257,7 @@ object Relational {
           count(col("meta.bonus")).as("n_bonus"),
           count(col("meta.tier")).as("n_tier"),
           count(when(col("meta.tier") === "std", 1)).as("n_std"))
-        .reportSort("st")
+        .orderBy("st")
     }),
 
     // TYPED DATA SKIPPING (r17 — VERDICT r16 #2): a status-split table
@@ -1279,7 +1278,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("yr")
+        .orderBy("yr")
     }),
 
     // MERGE-ON-READ MERGE (r17 — VERDICT r16 #1): a scattered CDC
@@ -1299,7 +1298,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // COLUMN MAPPING (r16 — VERDICT r15 #2): `RENAME COLUMN` as ONE
@@ -1318,7 +1317,7 @@ object Relational {
             .as("total"),
           round(sum(col("meta.weight").cast("decimal(18,2)")).cast("double"), 2)
             .as("wtotal"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // SAFE TYPE WIDENING (r18 — VERDICT r17 #4; nested r19 — VERDICT
@@ -1335,7 +1334,7 @@ object Relational {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"), sum(col("qty")).as("sq"),
           sum(col("m.q2")).as("sq2"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // PARTITION COLUMNS (r19 — VERDICT r18 #1): a year-partitioned
@@ -1353,7 +1352,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("yr")
+        .orderBy("yr")
     }),
 
     // GENERATED COLUMNS (r19 — VERDICT r18 #2): `bucket BIGINT GENERATED
@@ -1369,7 +1368,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("bucket")
+        .orderBy("bucket")
     }),
 
     // The STATEMENT face of the DV delete (r16): `DELETE FROM <cat>.t
@@ -1384,7 +1383,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // PARTIAL OVERWRITE — replaceWhere (r13, the Delta restatement verb):
@@ -1402,7 +1401,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // Connector WRITE path end state (r13 — sources/CommitLogSource
@@ -1420,7 +1419,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // Catalog INSERT route (r13 — CommitLogCatalogTable.newWriteBuilder):
@@ -1436,7 +1435,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // TIMESTAMP AS OF (r13 — CommitLog.commitAtTimestamp + the connector's
@@ -1454,7 +1453,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // PER-COLUMN data skipping (r13 — the Delta multi-column min/max
@@ -1474,7 +1473,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // RESTORE through the commit log (CommitLog.restore — the Delta
@@ -1492,7 +1491,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // CALL procedure output as a DECLARED, oracle-gated query (r14 —
@@ -1512,7 +1511,7 @@ object Relational {
       s.sql(s"CALL $cat.history(`table` => 'orders_h')")
         .select(col("version"), col("writer"), col("action"),
           col("n_dirs"), col("row_invisible"))
-        .reportSort("version")
+        .orderBy("version")
     }),
 
     // COMMIT HISTORY audit surface (CommitLog.history, r12 as a declared
@@ -1528,7 +1527,7 @@ object Relational {
       graft.sources.CommitLog.history(s, root)
         .select(col("version"), col("writer"), col("action"),
           col("n_dirs"), col("row_invisible"))
-        .reportSort("version")
+        .orderBy("version")
     }),
 
     // CONNECTOR route over the commit log (sources/CommitLogSource.scala —
@@ -1548,7 +1547,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // ADDITIVE SCHEMA EVOLUTION on the commit log (CommitLog.commitAppend
@@ -1590,7 +1589,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // TIME TRAVEL over the same commit log: the declared result reads
@@ -1608,7 +1607,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // TABLE CONSTRAINTS end state (r14 — VERDICT r13 #3): a CHECK
@@ -1626,7 +1625,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // SQL UPDATE end state (r14 — VERDICT r13 #1, the single most common
@@ -1643,7 +1642,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // SQL MERGE INTO end state (r14 — VERDICT r13 #1): the classic
@@ -1659,7 +1658,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // MERGE … WHEN NOT MATCHED BY SOURCE (r15 — VERDICT r14 #1): the
@@ -1676,7 +1675,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // COMPOSITE-key MERGE (r15 — VERDICT r14 #2): the changeset is keyed
@@ -1686,7 +1685,7 @@ object Relational {
       val root = multiKeyLogFor(s, d)
       s.read.format("graft.commitlog").load(s"$root/table")
         .select(col("o_orderstatus"), col("bucket"), col("cnt"), col("total"))
-        .reportSort("o_orderstatus", "bucket")
+        .orderBy("o_orderstatus", "bucket")
     }),
 
     // NESTED-field SQL UPDATE (r15 — VERDICT r14 #4): `SET info.price =
@@ -1727,7 +1726,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // SQL REPLACE WHERE (r15): `INSERT INTO … REPLACE WHERE cond
@@ -1742,7 +1741,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // CTAS on a commit-log table (r15 — VERDICT r14 #3): CREATE TABLE …
@@ -1756,7 +1755,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // SQL TIME TRAVEL by table NAME (r14 — VERDICT r13 #2): the same v2
@@ -1796,7 +1795,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // DATA SKIPPING through commit-log min/max stats (CommitLog
@@ -1815,7 +1814,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // POINT-lookup data skipping via BLOOM SIDECARS (CommitLog
@@ -1831,7 +1830,7 @@ object Relational {
       val root = skipLogFor(s, d)
       graft.sources.CommitLog.readLatestPoint(s, root, "o_orderkey", 32L).get
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "bucket")
-        .reportSort("o_orderkey")
+        .orderBy("o_orderkey")
     }),
 
     // MERGE INTO through the commit log (CommitLog.merge — the Delta
@@ -1850,7 +1849,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // EXACTLY-ONCE idempotent appends (CommitLog.commitAppendOnce — the
@@ -1868,7 +1867,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
             .as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // CHANGE DATA FEED over the commit log (CommitLog.changesSince — the
@@ -1940,7 +1939,7 @@ object Relational {
         .maintainAggFromChanges(base, changes, "o_orderstatus", "o_totalprice")
         .select(col("o_orderstatus"), col("cnt"),
           round(col("total").cast("double"), 2).as("total"))
-        .reportSort("o_orderstatus")
+        .orderBy("o_orderstatus")
     }),
 
     // Schema-evolved read: one directory, two parquet generations, the
@@ -2046,7 +2045,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("value").cast("decimal(18,4)")).cast("double"), 4)
             .as("rev"))
-        .reportSort("day")
+        .orderBy("day")
     }),
 
     // Namespace iteration (reference walks __namespace__ [U]): one branch per
@@ -2057,7 +2056,7 @@ object Relational {
       val branches = (0 to 7).map(i => docs.filter(col("source") === s"src$i"))
       branches.reduce(_ unionByName _)
         .groupBy("source").agg(count(lit(1)).as("cnt"))
-        .reportSort("source")
+        .orderBy("source")
     }),
 
     // Equality property filter (Datastore's core predicate [U]).

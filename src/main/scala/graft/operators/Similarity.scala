@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1033,7 +1032,7 @@ object Similarity {
         .groupBy("label")
         .agg(count(lit(1)).cast("int").as("dims"),
           round(sqrt(sum(col("m") * col("m"))), 6).as("centroid_norm"))
-        .reportSort("label")),
+        .orderBy("label")),
 
     // Symmetric int8 quantization of the embedding column (per-vector
     // scale = max|x|/127) with the reconstruction-error report — the

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,7 +105,7 @@ object TextAnalysis {
           count(lit(1)).as("total_tokens"))
         .select(col("lang"), col("n_docs"), col("n_terms"), col("total_tokens"),
           (col("total_tokens").cast("double") / col("n_docs")).as("avg_tokens"))
-        .reportSort("lang")),
+        .orderBy("lang")),
 
     // Language-ID by marker-word counts, argmax with fixed tie order.
     "q_text_langid" -> ((s, d) => {
@@ -255,7 +254,7 @@ object TextAnalysis {
         .select(posexplode(col("top")).as(Seq("i", "te")))
         .select((col("i") + 1).as("rank"), col("te._1").as("term"),
           col("te._2").as("est_cnt"))
-        .reportSort("rank")
+        .orderBy("rank")
     }),
 
     // Rolling-hash document fingerprint: position-weighted char-code sum mod

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables.ReportSortSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -83,7 +82,7 @@ object Windows {
         col("day"),
         col("daily_dec").cast("double").as("daily"),
         sum(col("daily_dec")).over(w).cast("double").as("trailing7"))
-        .reportSort("day")
+        .orderBy("day")
     }),
 
     // ntile + percent_rank. NOTE: unpartitioned window = single-task sort;
@@ -179,7 +178,7 @@ object Windows {
         .toDF("p_brand", "p_partkey", "rev", "rn")
         .select(col("p_brand"), col("p_partkey"),
           col("rev").cast("double").as("revenue"), col("rn"))
-        .reportSort("p_brand", "rn")
+        .orderBy("p_brand", "rn")
     }),
 
     // TIME-interval RANGE frame (1 preceding hour per user) through the SQL
@@ -223,7 +222,7 @@ object Windows {
           col("rev_d").cast("double").as("revenue"),
           round(col("rev_d").cast("double") /
             col("region_rev_d").cast("double"), 6).as("share"))
-        .reportSort("r_name", "n_name")
+        .orderBy("r_name", "n_name")
     }))
 
   /** Runs verbatim in both Spark and DuckDB. */

@@ -3614,26 +3614,12 @@ object CommitLog {
     * [[readLatestPoint]] ignores them (full scan beats a wrong prune).
     * Absent for pre-marker tables: those keep the caller-asserted legacy
     * contract on the point-lookup path and never bloom-prune a merge. */
-  def bloomColumn(spark: SparkSession, root: String): Option[String] = {
-    val f = fs(spark, root)
-    val p = bloomColPath(root)
-    if (!f.exists(p)) None
-    else {
-      // exists-then-open races a concurrent sweep: absence = "no marker",
-      // the same advisory degrade readCommitFile applies (ADVICE r11)
-      val in = try f.open(p) catch {
-        case _: java.io.FileNotFoundException => return None
-      }
-      try scala.util.Try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        new String(out.toByteArray, StandardCharsets.UTF_8).trim
-      }.toOption.filter(_.nonEmpty)
-      finally in.close()
-    }
-  }
+  def bloomColumn(spark: SparkSession, root: String): Option[String] =
+    // a marker that is missing (a concurrent sweep may remove it at any
+    // time) or empty reads as "no marker", the same advisory degrade
+    // readCommitFile applies
+    Json.readFile(fs(spark, root), bloomColPath(root))
+      .map(_.trim).filter(_.nonEmpty)
 
   /** Build missing BLOOM SIDECARS over `colName` for the head's data
     * directories — the POINT-lookup complement of min/max stats: range

@@ -431,18 +431,11 @@ object StreamOps {
     val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.mkdirs(dir)
     val ckpt = new HPath(dir, "version")
-    def readLong(p: HPath): Option[Long] = {
-      val in = try f.open(p) catch {
-        case _: java.io.FileNotFoundException => return None
-      }
-      try scala.util.Try {
-        val out = new java.io.ByteArrayOutputStream(64)
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toString("UTF-8").trim.toLong
-      }.toOption finally in.close()
-    }
+    // a missing, empty or non-numeric file reads as no record; an I/O
+    // error fails the tail (reading it as "no checkpoint" would re-deliver
+    // the full head)
+    def readLong(p: HPath): Option[Long] =
+      graft.sources.Json.readFile(f, p).flatMap(_.trim.toLongOption)
     // the checkpoint is the MAX of the main file and any surviving
     // `.version-<v>` staging (code review r12): the advance below stages
     // the new version BEFORE delete-then-rename (Hadoop rename refuses an

@@ -268,6 +268,27 @@ class CommitLogSpec extends SparkSpec {
     assert(e.getMessage.contains("resync"))
   }
 
+  test("commit-log tail: a checkpoint that fails to open fails the run instead of re-delivering the head") {
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val root = freshRoot()
+    CommitLog.commit(spark, root, "w", "create") { _ => Seq(1L).toDF("id") }
+    val ckpt = Files.createTempDirectory("graft-cl-tail-io").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failopen.impl", classOf[FailOpenFileSystem].getName)
+    conf.setBoolean("fs.failopen.impl.disable.cache", true)
+    var delivered = 0
+    try {
+      val e = intercept[java.io.IOException](StreamOps.runCommitLogTail(
+        spark, root, s"failopen://$ckpt")((_, _) => delivered += 1))
+      assert(e.getMessage.contains("open refused"), e)
+    } finally {
+      conf.unset("fs.failopen.impl")
+      conf.unset("fs.failopen.impl.disable.cache")
+    }
+    assert(delivered == 0, "an unreadable checkpoint must not read as none")
+  }
+
   test("concurrent appends all land exactly once with sequential versions") {
     import spark.implicits._
     val root = freshRoot()
@@ -4570,4 +4591,14 @@ class CommitLogSpec extends SparkSpec {
     assert(CommitLog.readLatest(spark, root).get.columns.toSeq ==
       Seq("id2", "v"))
   }
+}
+
+/** The local filesystem under the `failopen` scheme, where every open
+  * fails with an I/O error other than `FileNotFoundException` (a refused
+  * permission or a store error). */
+class FailOpenFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failopen:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+    throw new java.io.IOException(s"open refused: $f")
 }

@@ -14,6 +14,46 @@ class PropertySpec extends SparkSpec {
   private def samples[A](gen: Gen[A], n: Int): Seq[A] =
     (0 until n).map(i => gen.pureApply(Gen.Parameters.default, Seed(42L + i)))
 
+  test("an output sort returns the same row sequence as one partition and as a range sort") {
+    import spark.implicits._
+    // nullable keys over small domains (many ties) plus a unique id, so
+    // every ordering below is total and fixes one row sequence
+    val frameGen = Gen.chooseNum(0, 80).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.option(Gen.chooseNum(-3, 3)), Gen.option(Gen.oneOf("a", "b", "c")))))
+      .map(_.zipWithIndex.map { case ((k1, k2), i) => (k1, k2, i.toLong) })
+    val orders = Seq(
+      Seq(col("k1"), col("k2"), col("id")),
+      Seq(col("k1").desc, col("id")),
+      Seq(col("k2").asc_nulls_last, col("k1").desc_nulls_first, col("id").desc),
+      Seq(col("k1").asc_nulls_first, col("k2").desc_nulls_last, col("id")))
+    // rows, and the final plan once AQE has run
+    def exec(df: org.apache.spark.sql.DataFrame): (Seq[Row], String) = {
+      val rs = df.collect().toSeq
+      (rs, df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan.toString
+        case p => p.toString
+      })
+    }
+    def both(q: => org.apache.spark.sql.DataFrame): Unit = {
+      val (small, smallPlan) = exec(q)
+      val (large, largePlan) = withConf(largeSorts)(exec(q))
+      assert(small == large)
+      // a frame of at most one row needs no sort at all
+      if (small.size > 1) assert(!smallPlan.contains("rangepartitioning") &&
+        largePlan.contains("rangepartitioning"), s"$smallPlan\n$largePlan")
+    }
+    samples(Gen.zip(frameGen, frameGen), 8).foreach { case (xs, ys) =>
+      val df = xs.toDF("k1", "k2", "id").repartition(3)
+      orders.foreach(o => both(df.orderBy(o: _*)))
+      // a grouped aggregate over a join, ordered by its group key
+      val dim = ys.map { case (k1, _, id) => (k1, id) }.toDF("fk", "w")
+      both(df.join(dim, col("k1") === col("fk"))
+        .groupBy("k2").agg(count(lit(1)).as("n"), sum("w").as("w"))
+        .orderBy(col("k2").desc_nulls_first))
+    }
+  }
+
   test("filter commutes with projection on disjoint columns") {
     import spark.implicits._
     samples(Gen.listOfN(30, Gen.zip(Gen.chooseNum(0L, 50L), Gen.alphaStr.map(_.take(5)))), 8)

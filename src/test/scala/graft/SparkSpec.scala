@@ -18,6 +18,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = { /* shared across suites; do not stop */ }
 
+  /** Runs `body` under the session settings `kvs`, then restores the
+    * previous values. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The setting under which every output sort counts as large and keeps
+    * the distributed range sort (see [[graft.plans.FinalSortPlacement]]). */
+  val largeSorts: (String, String) =
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"
+
   def physicalPlan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
