@@ -1,78 +1,48 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.Json
 
-/** Benchmark main.
+/** Benchmark main: every declared query through the `noop` write sink.
   *
-  * Timing: each query runs ONE discarded warmup rep (codegen + shuffle-file
-  * cache effects) and then `SPARK_GRAFT_REPS` timed reps (default 5)
-  * BACK-TO-BACK, reporting the per-query MEDIAN — round 2's single-shot
-  * timings moved ~2× with machine-wide noise on untouched queries, and
-  * round 5 showed median-of-3 still cannot resolve sub-2× movement.
-  * "value" is the sum of medians. The residual noise band is documented in
-  * BASELINE.md: treat per-query deltas within ±30% (and single-query spikes
-  * on untouched code) as machine noise.
+  * Timing protocol. Each query runs one discarded warmup rep, then
+  * `reps_effective` timed reps back to back; its figure is the median rep,
+  * and "value" is the sum of the medians of the queries that succeeded. A
+  * rep is the DataFrame build (`fn(spark, sfDir)`) plus the noop write of
+  * that frame, timed separately and summed. Reps run back to back because
+  * interleaving other queries between them cools the JIT, page cache and
+  * file-listing caches a query's own reps keep warm, and reads several
+  * times slower with no engine change. The noop sink materializes every
+  * output column (a `count()` would let Catalyst prune them) and discards
+  * the rows. A query that throws is recorded with its wall time until the
+  * failure, negated, skips its remaining reps and is listed in "failed".
   *
-  * A round-9 A/B rejected the whole-suite-pass alternative (each pass runs
-  * every query once, medians across passes): interleaving 133 queries
-  * between a query's executions cools every cache tier the back-to-back
-  * protocol keeps hot (JIT'd generated code, OS page cache, memoized file
-  * listings) and measured reps ~3× slower (≈1.03 s/q vs ≈0.35 s/q at
-  * sf0.1), which would have tripled "value" against every prior round and
-  * BASELINE.md with no engine change. Back-to-back medians stay the one
-  * protocol all rounds share.
+  * Budget. `SPARK_GRAFT_BUDGET_S` (default 240) bounds the query time
+  * after startup. Before the first query, the per-query costs pinned in the
+  * tracked `bench_cost_pin.json` (read only; a query it lacks is priced at
+  * the median known cost) estimate one pass, and
+  * `reps_effective = clamp((0.95 × budget − 1.5 × pass) / pass, 1, reps)`
+  * fixes the same rep count for every query (`SPARK_GRAFT_REPS`, default 5,
+  * when fewer than half the queries have a pinned cost). Once the elapsed
+  * time passes 1.25 × budget, the remaining queries run one rep each and
+  * the run reports `degraded: true`.
   *
-  * Each query is evaluated through the `noop` write sink, not `count()`:
-  * Catalyst prunes projected columns a count never reads, which under-bills
-  * projection-heavy queries (the r3 verdict's column-pruning hole). The noop
-  * sink materializes every output column at full cost, discards the rows.
+  * Output protocol.
+  *  - After each query: a `BENCH_Q: {"name","sec","reps","ok"}` line, and
+  *    `bench_out.json` and `bench_profile.json` rewritten whole, so a
+  *    killed run leaves valid files for every finished query.
+  *  - `bench_profile.json`: per query, one object per timed rep with its
+  *    `build_s` and `write_s` and the [[Profile]] of the rep's jobs
+  *    (jobs, stages, tasks, single-task stages, task CPU and run time,
+  *    shuffle and spill bytes). Each rep runs under its own job group.
+  *  - At the end, a `BENCH_JSON: ` line with the full result.
+  *  - The last stdout line is bare JSON printed by a shutdown hook, so it
+  *    comes last on a normal exit and, best effort, on SIGTERM: the full
+  *    result when it is at most 3,000 characters, otherwise the same line
+  *    without "queries" and with `"queries_in":"bench_out.json"`. The hook
+  *    prints only a string pre-rendered on the main thread. build.sbt keeps
+  *    sbt's footer and `[info]` prefixes off stdout for this line.
   *
-  * A query that throws is recorded with a NEGATIVE duration (its wall time
-  * until failure, negated, remaining reps skipped) and listed in "failed" —
-  * never as a normal-looking success.
-  *
-  * Driver-budget safety (round 6's BENCH artifact was rc:124 — the driver
-  * killed the run and got NO numbers): two defenses, both on by default.
-  * (1) Incremental emission — each query prints a short `BENCH_Q:` JSON line
-  * the moment it finishes, and bench_out.json is rewritten (always-valid
-  * JSON) after every query, so a killed run still yields per-query numbers
-  * in the tail and a parseable partial file. (2) A wall-clock budget
-  * (`SPARK_GRAFT_BUDGET_S`, default 240 s of post-startup query time) caps
-  * the run via a UNIFORM UP-FRONT rep decision (round 10, VERDICT r9 #1 —
-  * the previous mid-suite 5→3→1 degradation gave alphabetically-late
-  * queries fewer reps, making their medians position-dependent garbage:
-  * r9's driver artifact read q_scalar_variant at 16.2 s single-rep vs
-  * 0.77 s at full reps on the same HEAD): the per-query cost pin
-  * `bench_cost_pin.json` (tracked, read-only here; `bench_out.json` is
-  * this run's output and never an input) estimates one suite pass, and
-  * `reps_effective = clamp((budget − warmup_pass) / pass, 1, reps)` is
-  * fixed BEFORE the first query, identically for every query. A run whose
-  * medians come from uniform reduced reps is comparable across the whole
-  * suite and says so via `reps_effective`; `degraded:true` now marks ONLY
-  * the emergency brake (elapsed > 1.25× budget — the estimate was badly
-  * wrong, e.g. no committed cost map on a brand-new checkout), which drops
-  * remaining queries to one rep rather than risk the driver's hard kill.
-  *
-  * Output protocol (round 9 — fixes every prior round's `parsed: null`):
-  * the driver parses the LAST stdout line of a bounded (~4 KB,
-  * front-truncated) tail, so (1) build.sbt sets
-  * `Global / showSuccess := false` — sbt's `[success] Total time` footer
-  * kept shadowing the JSON — plus `outputStrategy := StdoutOutput` so the
-  * forked JVM's lines reach stdout without an `[info] ` prefix, and (2)
-  * the final bare-JSON line is emitted from a JVM shutdown hook so it is
-  * the last write on both normal and SIGTERM'd exits: the full per-query
-  * JSON when short enough to survive the tail window, otherwise a short
-  * total-only JSON (the full map then lives in the mid-run `BENCH_JSON:`
-  * sentinel and in bench_out.json). The hook prints only PRE-RENDERED
-  * `@volatile` strings built by writeSnapshot on the main thread (ADVICE
-  * r9 medium: rendering inside the hook iterated the mutable results
-  * buffer concurrently with main-thread appends — a mid-resize read could
-  * throw and emit nothing on exactly the SIGTERM path the hook protects).
-  * The last-line guarantee on SIGTERM is best-effort: JVM shutdown hooks
-  * run concurrently in unspecified order, and Spark/Hadoop register their
-  * own — acceptable because their cleanup logs default to stderr.
-  *
-  * Dev loop: SPARK_GRAFT_ONLY=q_a,q_b restricts the run to named queries.
+  * `SPARK_GRAFT_ONLY=q_a,q_b` restricts the run to the named queries.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -93,24 +63,14 @@ object Bench {
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "240").toDouble
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    def r3(v: Double): String = f"$v%.3f"
+    def r3(v: Double): BigDecimal = BigDecimal(f"$v%.3f")
 
-    // Uniform up-front rep decision (VERDICT r9 #1). Pass-cost estimate =
-    // per-query medians pinned in bench_cost_pin.json (a run never rewrites
-    // it, so one run cannot change the next run's rep count); queries it
-    // doesn't know are priced at the known median-of-medians. The warmup
-    // pass is priced at 1.5× a steady-state pass (cold codegen + file
-    // listings — r9 measured the 6-pass full protocol at ~6.2× one pass).
-    // No estimate (fresh repo, SPARK_GRAFT_ONLY of all-new queries) =>
-    // requested reps, and the emergency brake below is the only cap.
     val priorCosts: Map[String, Double] = {
       val p = Paths.get("bench_cost_pin.json")
       if (!Files.exists(p)) Map.empty
-      else {
-        val txt = Files.readString(p)
-        "\"(q_[A-Za-z0-9_]+)\":(-?[0-9.]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> math.abs(m.group(2).toDouble)).toMap
-      }
+      else Json.parse(Files.readString(p))
+        .flatMap(o => Json.map(o.path("queries"))(Json.num))
+        .getOrElse(Map.empty).map { case (k, v) => k -> math.abs(v) }
     }
     val repsEffective: Int = {
       val known = selected.flatMap { case (n, _) => priorCosts.get(n) }
@@ -119,7 +79,6 @@ object Bench {
         val fallback = known.sorted.apply(known.size / 2)
         val pass = selected.map { case (n, _) =>
           priorCosts.getOrElse(n, fallback) }.sum
-        // budget covers 1.5 warmup-equivalents + repsEffective timed passes
         ((budgetS * 0.95 - 1.5 * pass) / pass).toInt.max(1).min(reps)
       }
     }
@@ -128,44 +87,35 @@ object Bench {
 
     // (name, medianOrNegFailTime, ok, repsUsed)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Boolean, Int)]
-    @volatile var latestJson: String = null
-    // Pre-rendered short fallback for the shutdown hook (ADVICE r9 medium):
-    // the hook must never touch the mutable `results` buffer — a SIGTERM
-    // mid-append could observe a mid-resize buffer and throw, emitting
-    // nothing. Both strings are built on the main thread per snapshot.
+    val profiles = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Any])]
+    // The shutdown hook reads only this immutable string, never `results`.
     @volatile var latestShortJson: String = null
     def writeSnapshot(): String = {
-      val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + r3(v) }
-        .mkString("{", ",", "}")
-      val failed = results.collect { case (k, _, false, _) => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
       val total = results.collect { case (_, v, true, _) => v }.sum
-      // degraded=true ONLY when the emergency brake fired (some query ran
-      // below the uniform reps_effective): such medians are position-
-      // dependent. A uniform reduced-rep run (reps_effective < reps) is NOT
-      // degraded — every query got the same protocol; compare against runs
-      // with the same reps_effective (BASELINE.md).
-      val degraded = results.exists(_._4 < repsEffective)
-      val common = s""""failed":$failed,"reps":$reps,"reps_effective":$repsEffective,"degraded":$degraded,"budget_s":${r3(budgetS)},"done":${results.size},"of":${selected.size},"sf":"$sfDir""""
-      val json =
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,$common}"""
-      // Rewritten after EVERY query: a killed run leaves a valid partial.
+      // degraded only when the emergency brake gave some query fewer reps
+      // than reps_effective: such medians depend on the query's position
+      val common = Seq(
+        "failed" -> results.collect { case (k, _, false, _) => k },
+        "reps" -> reps, "reps_effective" -> repsEffective,
+        "degraded" -> results.exists(_._4 < repsEffective),
+        "budget_s" -> r3(budgetS), "done" -> results.size,
+        "of" -> selected.size, "sf" -> sfDir)
+      val head = Seq("metric" -> "total", "value" -> r3(total), "unit" -> "sec")
+      val json = Json.write(head ++ (("queries" -> Json.obj(
+        results.map { case (k, v, _, _) => k -> r3(v) }.toSeq: _*)) +: common): _*)
       Files.writeString(Paths.get("bench_out.json"), json + "\n")
+      Files.writeString(Paths.get("bench_profile.json"), Json.write(
+        "sf" -> sfDir, "cores" -> cpus.toInt,
+        "queries" -> Json.obj(profiles.toSeq: _*)) + "\n")
       // A >3 KB line can be front-truncated by the driver's tail window into
       // unparseable JSON; the fallback total-only line always fits.
       latestShortJson =
         if (json.length <= 3000) json
-        else s"""{"metric":"total","value":${r3(total)},"unit":"sec",$common,"queries_in":"bench_out.json"}"""
-      latestJson = json
+        else Json.write(head ++ common :+ ("queries_in" -> "bench_out.json"): _*)
       json
     }
-    // The shutdown hook is the ONLY emitter of the final bare-JSON line: it
-    // runs after all in-band prints on a normal exit and still fires on
-    // SIGTERM, so the driver's last-line parse sees valid JSON either way.
-    // Best-effort on SIGTERM: other shutdown hooks (Spark's) run
-    // concurrently in unspecified order, but they log to stderr.
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val snap = latestShortJson // volatile read; immutable pre-built string
+      val snap = latestShortJson
       if (snap != null) {
         System.out.println(snap)
         System.out.flush()
@@ -173,35 +123,47 @@ object Bench {
     }))
 
     selected.foreach { case (name, fn) =>
-      // Uniform reps for every query; the emergency brake (estimate badly
-      // wrong or absent) drops to a single rep only beyond 1.25× budget —
-      // completing the suite beats precision once the driver's own kill
-      // timer is the alternative.
       val repsThis = if (elapsedS > budgetS * 1.25) 1 else repsEffective
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val repProfiles = scala.collection.mutable.ArrayBuffer.empty[Any]
       var failed = false
-      // one warmup rep per query, EXCLUDED from the median: first executions
-      // pay codegen compilation and cold file listing that no steady-state
-      // rep pays, and they land unpredictably — dropping the rep removes a
-      // noise source instead of averaging over it (it still counts as the
-      // failure witness if the query throws)
+      // the warmup pays codegen and cold listings no later rep pays; it
+      // still witnesses a failure
       val w0 = System.nanoTime()
       try evaluate(fn(spark, sfDir)) catch { case _: Throwable => failed = true }
       val warmup = (System.nanoTime() - w0) / 1e9
       var rep = 0
       while (rep < repsThis && !failed) {
         val t0 = System.nanoTime()
-        try { evaluate(fn(spark, sfDir)) }
-        catch { case _: Throwable => failed = true }
-        times += (System.nanoTime() - t0) / 1e9
+        var t1 = t0
+        try {
+          val (t2, p) = Profile.of(spark) {
+            val df = fn(spark, sfDir)
+            t1 = System.nanoTime()
+            evaluate(df)
+            System.nanoTime()
+          }
+          times += (t2 - t0) / 1e9
+          repProfiles += Json.obj("build_s" -> r3((t1 - t0) / 1e9),
+            "write_s" -> r3((t2 - t1) / 1e9), "jobs" -> p.jobs,
+            "stages" -> p.stages, "tasks" -> p.tasks,
+            "single_task_stages" -> p.singleTaskStages,
+            "task_cpu_s" -> r3(p.taskCpuS), "task_run_s" -> r3(p.taskRunS),
+            "shuffle_read_bytes" -> p.shuffleReadBytes,
+            "shuffle_write_bytes" -> p.shuffleWriteBytes,
+            "spill_bytes" -> p.spillBytes)
+        } catch { case _: Throwable =>
+          failed = true
+          times += (System.nanoTime() - t0) / 1e9
+        }
         rep += 1
       }
       val sorted = times.sorted
       val median = if (sorted.isEmpty) warmup else sorted(sorted.size / 2)
       results += ((name, if (failed) -times.lastOption.getOrElse(warmup) else median, !failed, repsThis))
-      // Per-query line the instant it completes — a killed run's tail still
-      // carries every finished query.
-      println(s"""BENCH_Q: {"name":"$name","sec":${r3(median)},"reps":$repsThis,"ok":${!failed}}""")
+      profiles += (name -> repProfiles.toSeq)
+      println("BENCH_Q: " + Json.write("name" -> name, "sec" -> r3(median),
+        "reps" -> repsThis, "ok" -> !failed))
       writeSnapshot()
     }
     val json = writeSnapshot()

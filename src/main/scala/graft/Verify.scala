@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,25 +11,22 @@ object Verify {
       GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // Each query runs under its own Profile. jobs.json records the jobs and
+    // stages of every query that dumped, with the data directory and core
+    // count they were counted at; tools/compare.py checks them against
+    // plans/jobs.json.
+    val counts = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        val (_, p) = Profile.of(spark)(fn(spark, sfDir).coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/$name"))
+        Some(name -> Json.obj("jobs" -> p.jobs, "stages" -> p.stages))
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        None
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    Files.writeString(Paths.get(s"$outDir/jobs.json"), Json.write(
+      "sf" -> sfDir, "cores" -> cpus.toInt, "queries" -> counts.toMap) + "\n")
     // Defensive self-containment: TESTDATA.md's table list omits
     // documents/embeddings, so if the driver's DuckDB session registers only
     // the listed names, those oracles would fail to resolve. Rewriting bare
@@ -56,10 +53,8 @@ object Verify {
       tableRef.replaceAllIn(sql, m =>
         s"${m.group(1)} '$sfDir/${m.group(2).toLowerCase}.parquet'")
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(selfContained(k, v))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(
+      SparkEntry.oracleSql.toSeq.map { case (k, v) => k -> selfContained(k, v) }: _*))
     spark.stop()
   }
 }

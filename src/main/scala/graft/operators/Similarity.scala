@@ -357,15 +357,6 @@ object Similarity {
       * than bare edge pairs. */
     val QueryBatchCutoff: Int = 1 << 16
 
-    /** The distinct cell ids a [[searchOnDisk]] with these queries and
-      * `nprobe` would touch — probe-planning introspection (ScaleBench's
-      * pruned-vs-full bytes band, operator debugging). Bounded by the
-      * quantizer's cell count regardless of query count. */
-    def probedCells(spark: SparkSession, dir: String, queries: DataFrame,
-        nprobe: Int): Seq[Int] =
-      probeCells(queries, loadCentroids(spark, dir), nprobe)
-        .select(col("cid")).distinct().collect().map(_.getInt(0)).toSeq.sorted
-
     def searchOnDisk(spark: SparkSession, dir: String, queries: DataFrame,
         nprobe: Int, k: Int, queryCutoff: Int = QueryBatchCutoff): DataFrame = {
       val cents = loadCentroids(spark, dir)

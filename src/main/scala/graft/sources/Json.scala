@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{BooleanNode, LongNode, ObjectNode, TextNode}
+import com.fasterxml.jackson.databind.node.{BooleanNode, DecimalNode, LongNode, ObjectNode, TextNode}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** The one JSON codec of the engine's on-disk metadata: commit-log commits
@@ -15,15 +15,17 @@ private[graft] object Json {
   private val mapper = new ObjectMapper()
     .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
-  /** `v` as a JSON tree: strings, longs, ints, booleans, pairs (as
-    * two-element arrays), maps (keys sorted), other iterables (in order),
-    * ready-made nodes and `Some` of any of these. */
+  /** `v` as a JSON tree: strings, longs, ints, decimals (written with
+    * their scale, so `BigDecimal("0.500")` stays `0.500`), booleans, pairs
+    * (as two-element arrays), maps (keys sorted), other iterables (in
+    * order), ready-made nodes and `Some` of any of these. */
   def tree(v: Any): JsonNode = v match {
     case n: JsonNode => n
     case Some(x) => tree(x)
     case s: String => TextNode.valueOf(s)
     case l: Long => LongNode.valueOf(l)
     case i: Int => LongNode.valueOf(i.toLong)
+    case d: BigDecimal => DecimalNode.valueOf(d.bigDecimal)
     case b: Boolean => BooleanNode.valueOf(b)
     case (a, b) => tree(Seq(a, b))
     case m: Map[_, _] =>
@@ -71,6 +73,8 @@ private[graft] object Json {
     if (n.isTextual) Some(n.textValue) else None
   def long(n: JsonNode): Option[Long] =
     if (n.isIntegralNumber && n.canConvertToLong) Some(n.longValue) else None
+  def num(n: JsonNode): Option[Double] =
+    if (n.isNumber) Some(n.doubleValue) else None
   def bool(n: JsonNode): Option[Boolean] =
     if (n.isBoolean) Some(n.booleanValue) else None
   def pair(n: JsonNode): Option[(Long, Long)] =

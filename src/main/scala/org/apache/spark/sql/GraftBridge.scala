@@ -23,6 +23,11 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
 
+  /** Blocks until every listener event posted so far has been delivered,
+    * so a listener's counts are complete when they are read. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** `st` with every field, array element and map value nullable — the
     * schema a file-source read reports whatever the writer declared. */
   def asNullable(st: StructType): StructType = st.asNullable

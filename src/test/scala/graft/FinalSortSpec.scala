@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, QueryExecution, SortExec, SparkPlan, TakeOrderedAndProjectExec}
@@ -25,8 +24,9 @@ class FinalSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Sinks.writeWarehouse(df,
       Files.createTempDirectory("graft-final-sort").toString + "/out")
 
-  /** The final executed plans of the actions `body` ran, and its jobs. */
-  private def run(body: => Unit): (Seq[SparkPlan], Int) = {
+  /** The final executed plans of the actions `body` ran, and its
+    * profile. */
+  private def run(body: => Unit): (Seq[SparkPlan], ExecProfile) = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]
     val l = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -35,8 +35,8 @@ class FinalSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     spark.listenerManager.register(l)
     try {
-      val jobs = jobsOf(body)._2
-      (plans.asScala.toSeq, jobs)
+      val prof = Profile.of(spark)(body)._2
+      (plans.asScala.toSeq, prof)
     } finally spark.listenerManager.unregister(l)
   }
 
@@ -75,32 +75,25 @@ class FinalSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         "noop" -> (noop _))) {
       val q = SparkEntry.queries(name)
       act(q(spark, sf)) // warm-up
-      val (plan, n) = run(act(q(spark, sf)))
+      val (plan, prof) = run(act(q(spark, sf)))
       assert(if (name == "q_funnel") !rangeExchanged(plan) else placed(plan),
         s"$name/$sink:\n${plan.mkString("\n")}")
-      assert(n == jobs, s"$name/$sink ran $n jobs")
+      assert(prof.jobs == jobs, s"$name/$sink ran ${prof.jobs} jobs")
     }
   }
 
   test("q_agg_rollup's output sort runs as one partition through the V1 parquet sink") {
     val q = SparkEntry.queries("q_agg_rollup")
     warehouse(q(spark, sf)) // warm-up
-    val (plan, n) = run(warehouse(q(spark, sf)))
+    val (plan, prof) = run(warehouse(q(spark, sf)))
     assert(placed(plan), plan.mkString("\n"))
-    assert(n == 5, s"ran $n jobs")
+    assert(prof.jobs == 5, s"ran ${prof.jobs} jobs")
   }
 
   test("q_scalar_json's fanned-out projection stays parallel below its one-partition sort") {
     val q = SparkEntry.queries("q_scalar_json")
     noop(q(spark, sf)) // warm-up
-    val tasks = new ConcurrentLinkedQueue[Int]
-    val l = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        tasks.add(e.stageInfo.numTasks)
-    }
-    spark.sparkContext.addSparkListener(l)
-    val (plan, _) = try run(noop(q(spark, sf)))
-      finally spark.sparkContext.removeSparkListener(l)
+    val (plan, prof) = run(noop(q(spark, sf)))
     assert(!rangeSorted(plan), plan.mkString("\n"))
     // gathered by an exchange into the sorting task, not by a coalesce
     // that would pull the JSON parses into that task
@@ -109,16 +102,16 @@ class FinalSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }.nonEmpty), plan.mkString("\n"))
     assert(!plan.exists(p => collect(p) { case c: CoalesceExec => c }.nonEmpty),
       plan.mkString("\n"))
-    assert(tasks.asScala.exists(_ > 1), tasks)
+    assert(prof.stageTasks.exists(_ > 1), prof.stageTasks)
   }
 
   test("above AQE's minimum partition size the same frames keep the range sort") {
     withConf(largeSorts) {
       for ((name, jobs) <- handPlaced :+ ("q_agg_rollup" -> 5)) {
         val df = SparkEntry.queries(name)(spark, sf)
-        val (plan, n) = run(df.collect())
+        val (plan, prof) = run(df.collect())
         assert(rangeSorted(plan), s"$name:\n${plan.mkString("\n")}")
-        assert(n >= jobs, s"$name ran $n jobs")
+        assert(prof.jobs >= jobs, s"$name ran ${prof.jobs} jobs")
       }
       val (plan, _) = run(warehouse(SparkEntry.queries("q_agg_rollup")(spark, sf)))
       assert(rangeSorted(plan), plan.mkString("\n"))

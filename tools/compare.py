@@ -6,8 +6,14 @@ Reads each <out>/<name> parquet written by graft.Verify plus oracle_sql.json,
 runs each oracle in DuckDB over the same source parquet tables, and compares
 row count, sorted column names, and cell values (exact for ints/strings,
 bit-exact for floats, lists compared elementwise).
+
+It also compares the per-query job and stage counts in <out>/jobs.json with
+the committed plans/jobs.json and prints every query whose jobs or stages
+rose. The last line counts the oracle failures and the rises. To accept a
+rise, copy the new jobs.json over plans/jobs.json and give the reason in
+CHANGES.md.
 """
-import json, math, sys
+import json, math, os, sys
 import duckdb
 import pandas as pd
 
@@ -98,11 +104,42 @@ def main(sf_dir, out_dir):
     for k, v in sorted(results.items()):
         flag = "  " if v == "OK" or str(v).startswith("no-oracle") else "!!"
         print(f"{flag} {k}: {v}")
-    print(f"\n{n_ok} OK, {n_no} no-oracle, {len(results) - n_ok - n_no} FAILING of {len(results)}")
     # Also sanity-check oracles for queries Verify failed to write
     for name in oracles:
         if name not in results:
             print(f"!! {name}: declared oracle but NO VERIFY OUTPUT DIR")
+    rose = job_count_rises(os.path.join(out_dir, "jobs.json"), BASELINE_JOBS)
+    print(f"\n{n_ok} OK, {n_no} no-oracle, {len(results) - n_ok - n_no} FAILING "
+          f"of {len(results)}; {len(rose)} ROSE in job counts")
+
+
+BASELINE_JOBS = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "..", "plans", "jobs.json")
+
+
+def job_count_rises(got_path, want_path):
+    """Queries whose jobs or stages in got_path exceed want_path's, printed
+    one a line. A missing file, or one counted at another scale factor or
+    core count, counts as one rise, so the gate cannot pass unchecked."""
+    if not os.path.isfile(got_path):
+        print(f"!! job counts: {got_path} is missing")
+        return ["<missing>"]
+    got, want = json.load(open(got_path)), json.load(open(want_path))
+    where = lambda d: (os.path.basename(d["sf"].rstrip("/")), d["cores"])
+    if where(got) != where(want):
+        print(f"!! job counts: counted at (sf, cores) {where(got)}, "
+              f"the baseline at {where(want)}")
+        return ["<setting>"]
+    rose = []
+    for name, g in sorted(got["queries"].items()):
+        w = want["queries"].get(name)
+        if w is None:
+            print(f"   {name}: jobs={g['jobs']} stages={g['stages']} (no baseline)")
+        elif g["jobs"] > w["jobs"] or g["stages"] > w["stages"]:
+            print(f"!! {name}: jobs {w['jobs']} -> {g['jobs']}, "
+                  f"stages {w['stages']} -> {g['stages']}")
+            rose.append(name)
+    return rose
 
 
 if __name__ == "__main__":

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
-# The pre-round-end local gate (VERDICT r3 "missing" #1): every declared
-# query oracle-compared against DuckDB at sf0.01 + the full ScalaTest suite.
-# Any FAILING row or failed test is a stop-ship.
+# The local gate: every declared query oracle-compared against DuckDB at
+# sf0.01, its job and stage counts checked against plans/jobs.json (counted
+# at 4 cores), and the full ScalaTest suite. Any FAILING row, any rise in a
+# query's jobs or stages, or any failed test is a stop-ship.
 #
 # Usage: tools/local_gate.sh [sfDir]   (default /root/testdata/sf0.01)
 set -euo pipefail
@@ -10,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-gate.XXXXXX)"
 
 echo "== graft local gate: verify+oracle at $SF =="
-sbt -batch "runMain graft.Verify $SF $OUT" > "$OUT/verify.log" 2>&1 \
+SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.Verify $SF $OUT" > "$OUT/verify.log" 2>&1 \
   || { tail -20 "$OUT/verify.log"; exit 1; }
 if grep "\[verify\]" "$OUT/verify.log"; then
   echo "STOP-SHIP: queries failed to dump (above)"; exit 1
@@ -18,6 +19,9 @@ fi
 python3 tools/compare.py "$SF" "$OUT" | tee "$OUT/compare.out"
 if ! tail -1 "$OUT/compare.out" | grep -q " 0 FAILING"; then
   echo "STOP-SHIP: oracle mismatches (see above)"; exit 1
+fi
+if ! tail -1 "$OUT/compare.out" | grep -q "; 0 ROSE"; then
+  echo "STOP-SHIP: job or stage counts rose over plans/jobs.json (see above)"; exit 1
 fi
 
 echo "== graft local gate: sbt test =="
