@@ -6,8 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SaveMode, SparkSess
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min, when}
 import org.apache.spark.sql.types.StructType
 
-/** Lakehouse-style OPTIMISTIC COMMIT LOG (SURVEY.md §3.2; VERDICT r10
-  * missing #4 — the [U] capability model's task-queue lease analogue):
+/** Lakehouse-style OPTIMISTIC COMMIT LOG (SURVEY.md §3.2; the [U]
+  * capability model's task-queue lease analogue):
   * multiple uncoordinated writers mutate one logical table with
   * serializable read-modify-write semantics and readers always see a
   * complete committed snapshot — the guarantee [[graft.AtomicSwap]]'s
@@ -19,14 +19,11 @@ import org.apache.spark.sql.types.StructType
   *  - `<root>/_commits/v<seq>.json` is the log; a table VERSION exists iff
   *    its commit file does. The commit file names the snapshot data
   *    directory; data directories are immutable once committed.
-  *  - A writer: reads the latest version, builds the FULL next snapshot
-  *    from it (copy-on-write — the builder sees the current state), stages
-  *    it to a fresh `data-<uuid>` directory, then CLAIMS version N+1 by
-  *    creating `v<N+1>.json` create-exclusive. Exactly one concurrent
-  *    claimant wins; losers delete their staged directory, re-read the new
-  *    state, REBUILD, and retry — optimistic concurrency, serializability
-  *    by construction (every committed version's builder saw exactly the
-  *    previous version).
+  *  - A writer: reads the latest version, stages the next snapshot
+  *    built from it, then CLAIMS version N+1 by creating `v<N+1>.json`
+  *    create-exclusive; a loser rebuilds against the new head. Every write
+  *    verb runs this through one loop, [[optimistic]], which states the
+  *    protocol in full.
   *  - A reader: lists `_commits`, loads the newest PARSEABLE commit's data
   *    directory. Commit files become visible atomically-or-torn only at
   *    the log tail (a crash mid-write); readers skip a torn tail (they see
@@ -1015,7 +1012,7 @@ object CommitLog {
       df: DataFrame, partCols: Seq[String], colMap: Map[String, String],
       tentative: Long): Seq[(String, Seq[String])] = {
     val f = fs(spark, root)
-    val stage = s"stage-${java.util.UUID.randomUUID().toString.take(8)}-v$tentative"
+    val stage = stagedName("stage", tentative)
     val phys = partCols.map(c => colMap.getOrElse(c, c))
     val shadows = phys.indices.map(i => s"__gp$i")
     // the shadow names are reserved: a real column called __gp<i> would
@@ -1564,40 +1561,210 @@ object CommitLog {
           s"${bad.head} — the batch was rejected before any commit")
     }
 
-  /** METADATA-ONLY commit: claim the next version with the head's data
-    * directories unchanged and `mutate` applied to the carried record —
-    * the [[addConstraint]]/[[dropConstraint]] engine. rowInvisible by
-    * construction (the snapshot is row-identical to its parent), so
-    * incremental consumers ride through; the ordinary optimistic loop,
-    * with `mutate` re-run against the fresh head after a lost claim
-    * (serializable like every verb). */
-  private def metadataCommit(spark: SparkSession, root: String,
-      writer: String, action: String, maxAttempts: Int = 20,
-      rowInvisible: Boolean = true)(
-      mutate: Commit => Commit): Commit = {
+  /** What one claim attempt staged: the commit it offers for the claim,
+    * and every path it wrote for that commit (data dirs, `_changes/<key>`
+    * feeds, `_dv/<name>` vectors, bloom sidecars). `reused` staging stays
+    * valid against a newer head (an append's delta): a lost claim keeps
+    * it for the next attempt, and only giving up deletes it. */
+  private final case class Staged(next: Commit, paths: Seq[HPath],
+      reused: Boolean = false)
+
+  /** THE OPTIMISTIC WRITE: every verb that changes the table commits
+    * through this one loop.
+    *
+    *  - Claim. Each attempt repairs a torn tail, reads the newest
+    *    committed version and refuses a head carrying writer
+    *    obligations this binary does not implement. `body` then
+    *    builds against exactly that head: it answers without claiming
+    *    (`Left` — a no-op, a batch already applied, or a shape another
+    *    path commits), or stages the next snapshot (`Right`). The loop
+    *    claims version head + 1 create-exclusive; exactly one concurrent
+    *    claimant wins, and the winner advances the head pointer.
+    *  - Serializability. Every committed version's builder saw exactly
+    *    the previous version, whatever the writers' interleaving: a
+    *    claim succeeds only if no commit landed after the head it built
+    *    on.
+    *  - Cleanup. A lost claim deletes what the attempt staged (reused
+    *    staging waits for the next attempt), so a rebuild never leaves
+    *    an orphan behind.
+    *  - Back-off. 50 ms × attempt before rebuilding against the new
+    *    head; this also paces retries while a young torn tail ages past
+    *    the repair grace.
+    *  - Give-up. After `maxAttempts` lost claims the writer throws an
+    *    IOException, with nothing of its own left staged.
+    *
+    * Returns the attempt's answer or the winning commit. */
+  private def optimistic[R](spark: SparkSession, root: String,
+      writer: String, action: String, maxAttempts: Int)(
+      body: Option[Commit] => Either[R, Staged]): Either[R, Commit] = {
     requireTag(writer, "writer"); requireTag(action, "action")
+    init(spark, root)
     val f = fs(spark, root)
+    var kept: Seq[HPath] = Nil
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       repairTornTail(spark, root)
-      val cur = latest(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLog: $action on an empty table at $root"))
-      requireWritable(cur)
-      val m = mutate(cur)
-      val c = m.copy(version = cur.version + 1, writer = writer,
-        action = action, rowInvisible = rowInvisible, txn = None,
-        schemaDDL = Some(carriedDDL(m, schemaOf(spark, root, cur))),
-        tsMs = Some(System.currentTimeMillis()))
-      if (tryClaim(spark, root, c.version, encode(c))) {
-        writeHeadPointer(f, root, c.version); return c
+      val cur = latest(spark, root)
+      cur.foreach(requireWritable)
+      body(cur) match {
+        case Left(answer) => return Left(answer)
+        case Right(s) =>
+          if (tryClaim(spark, root, s.next.version, encode(s.next))) {
+            writeHeadPointer(f, root, s.next.version)
+            return Right(s.next)
+          }
+          kept = if (s.reused) s.paths
+            else { s.paths.foreach(f.delete(_, true)); Nil }
       }
       Thread.sleep(50L * attempt)
     }
+    kept.foreach(f.delete(_, true))
     throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive $action claims on $root")
+      s"CommitLog: $writer lost $maxAttempts consecutive $action claims " +
+        s"on $root — pathological contention; raise maxAttempts or reduce " +
+        "writers")
   }
+
+  private def nextVersion(head: Option[Commit]): Long =
+    head.fold(1L)(_.version + 1)
+
+  /** A fresh name for a dir or vector staged for version `v`. */
+  private def stagedName(kind: String, v: Long): String =
+    s"$kind-${java.util.UUID.randomUUID().toString.take(8)}-v$v"
+
+  /** THE NEXT RECORD of every data verb, built on `head`: its `carried`
+    * dirs plus the `added` dirs the attempt staged (with their partition
+    * values), whose footers give the new dirs' stats, per-file stats and
+    * exact row counts over `statsCols`.
+    *
+    * One carry rule for every per-dir map (`stats`, `fstats`, `rows`,
+    * `partVals`, `dv`, `dvRows`): a carried dir keeps its head entry, an
+    * added dir takes its footer's, every other entry drops — so each key
+    * names a dir of the new commit. The commit records `statsCols`, or
+    * the head's set when the verb names none, and only with stats. Table
+    * state (constraints, declared clustering, defaults, partition spec,
+    * generated columns) is the head's, and so is the column map unless
+    * the verb re-stages under another (`colMap`).
+    * `dv` points dirs at a vector the attempt staged; `dvRows` is the
+    * rows that vector adds per dir, summed onto the dir's recorded count
+    * when that count is known or the dir had no vector. Otherwise the
+    * dir's count drops out: an unknown vectored share stays unknown and
+    * never reads as 0. */
+  private def nextCommit(spark: SparkSession, root: String,
+      head: Option[Commit], writer: String, action: String,
+      carried: Seq[String], added: Seq[(String, Seq[String])],
+      statsCols: Seq[String], schemaDDL: String,
+      rowInvisible: Boolean = false, clusterSpec: Option[String] = None,
+      txn: Option[(String, Long)] = None,
+      colMap: Option[Map[String, String]] = None,
+      dv: Map[String, String] = Map.empty,
+      dvRows: Map[String, Long] = Map.empty): Commit = {
+    val keep = carried.toSet
+    def carry[V](m: Commit => Map[String, V]): Map[String, V] =
+      head.fold(Map.empty[String, V])(m(_).filter { case (d, _) => keep(d) })
+    def state[V](s: Commit => Seq[V]): Seq[V] = head.fold(Seq.empty[V])(s)
+    val map = colMap.getOrElse(head.fold(Map.empty[String, String])(_.colMap))
+    val ft = footers(spark, root, added.map(_._1), statsCols, map)
+    val stats = carry(_.stats) ++ ft.stats
+    val priorDvRows = carry(_.dvRows)
+    Commit(nextVersion(head), carried ++ added.map(_._1), writer, action,
+      stats = stats, rowInvisible = rowInvisible,
+      statsCols =
+        if (stats.isEmpty) Nil
+        else if (statsCols.nonEmpty) statsCols
+        else state(_.statsCols),
+      txn = txn, clusterSpec = clusterSpec, schemaDDL = Some(schemaDDL),
+      tsMs = Some(System.currentTimeMillis()),
+      constraints = state(_.constraints),
+      dv = carry(_.dv) ++ dv,
+      clusterBy = head.flatMap(_.clusterBy),
+      defaults = state(_.defaults),
+      colMap = map,
+      fstats = carryFstats(head.map(_.fstats).getOrElse(Map.empty), carried) ++
+        ft.fstats,
+      partitionBy = state(_.partitionBy),
+      partVals = carry(_.partVals) ++
+        added.collect { case (d, vs) if vs.nonEmpty => d -> vs },
+      rows = carry(_.rows) ++ ft.rows,
+      dvRows = (priorDvRows -- dv.keys) ++ dvRows.collect {
+        case (d, n) if priorDvRows.contains(d) || !head.exists(_.dv.contains(d)) =>
+          d -> (priorDvRows.getOrElse(d, 0L) + n) },
+      gens = state(_.gens))
+  }
+
+  /** Stage `df` for version `v` under the physical names of `colMap`:
+    * split into one dir per tuple of `partBy` ([[stagePartitioned]]), or
+    * one `data-<id>-v<v>` dir for an unpartitioned table. An empty split
+    * stages one (empty) dir as well — a rewrite's commit must list a dir
+    * and its change feed keys on the first — unless `emptyDir` is false
+    * (an append of no rows adds no dir). Returns dir → partition values. */
+  private def stageDirs(spark: SparkSession, root: String, df: DataFrame,
+      partBy: Seq[String], colMap: Map[String, String], v: Long,
+      emptyDir: Boolean = true): Seq[(String, Seq[String])] = {
+    val split =
+      if (partBy.isEmpty) Nil
+      else stagePartitioned(spark, root, df, partBy, colMap, v)
+    if (split.nonEmpty || (partBy.nonEmpty && !emptyDir)) split
+    else {
+      val d = stagedName("data", v)
+      toPhysical(df, colMap).write.mode(SaveMode.Overwrite)
+        .parquet(s"$root/$d")
+      Seq(d -> Nil)
+    }
+  }
+
+  private def dirPaths(root: String,
+      dirs: Seq[(String, Seq[String])]): Seq[HPath] =
+    dirs.map(d => new HPath(root, d._1))
+
+  /** Write `df` as the parquet dataset at `p` (a `_dv/` vector or a
+    * `_changes/` feed) before the claim, and return `p` for the staged
+    * list: a reader that sees the commit always sees what it keys. */
+  private def stageAt(spark: SparkSession, root: String, df: DataFrame,
+      p: HPath): HPath = {
+    fs(spark, root).mkdirs(p.getParent)
+    df.write.mode(SaveMode.Overwrite).parquet(p.toString)
+    p
+  }
+
+  /** Bloom sidecars for the `dirs` a rewrite staged, over each bloom
+    * column `only` admits (logical `schema`, stored through `colMap`), so
+    * the next merge or point read prunes a bloomed table's rewrite output
+    * without waiting for the [[addBloom]] cadence. Appends skip this:
+    * they stay O(delta) and rely on the cadence. Returns the sidecar
+    * paths, staged like the dirs. */
+  private def stageSidecars(spark: SparkSession, root: String,
+      dirs: Seq[String], schema: StructType, colMap: Map[String, String],
+      only: String => Boolean = _ => true): Seq[HPath] = {
+    val legacy = bloomColumn(spark, root)
+    val cols = (legacy.toSeq ++ extraBloomColumns(fs(spark, root), root))
+      .distinct.filter(only)
+    for (bc <- cols; d <- dirs) yield {
+      val p = sidecarPathFor(root, legacy, bc, d)
+      buildSidecarAt(spark, root, d, schema, colMap, bc, fpp = 0.001, p)
+      p
+    }
+  }
+
+  /** METADATA-ONLY commit: the head's data directories unchanged and
+    * `mutate` applied to the carried record, re-run against the fresh
+    * head after a lost claim. rowInvisible by construction (the snapshot
+    * is row-identical to its parent), so incremental consumers ride
+    * through. */
+  private def metadataCommit(spark: SparkSession, root: String,
+      writer: String, action: String, maxAttempts: Int = 20,
+      rowInvisible: Boolean = true)(
+      mutate: Commit => Commit): Commit =
+    optimistic[Commit](spark, root, writer, action, maxAttempts) { cur =>
+      val head = cur.getOrElse(throw new IllegalStateException(
+        s"CommitLog: $action on an empty table at $root"))
+      val m = mutate(head)
+      Right(Staged(m.copy(version = head.version + 1, writer = writer,
+        action = action, rowInvisible = rowInvisible, txn = None,
+        schemaDDL = Some(carriedDDL(m, schemaOf(spark, root, head))),
+        tsMs = Some(System.currentTimeMillis())), Nil))
+    }.merge
 
   /** ADD a CHECK constraint (r14 — the Delta `ALTER TABLE ADD CONSTRAINT
     * CHECK` verb): records (name → SQL expression) in a new audited
@@ -2791,8 +2958,8 @@ object CommitLog {
   /** Newest version NUMBER present in the log — committed OR torn (a torn
     * tail is still a file). Fast path (ADVICE r12): start from the
     * advisory head pointer and probe FORWARD by existence checks, the
-    * same dense-suffix argument [[latest]] uses — so writer claim loops
-    * (which call [[repairTornTail]] every attempt) stop paying the
+    * same dense-suffix argument [[latest]] uses — so the claim loop
+    * (which calls [[repairTornTail]] every attempt) stops paying the
     * O(retained-history) listing the pointer was built to remove. A
     * missing/stale-beyond-retention pointer degrades to the listing walk. */
   private def newestPresentVersion(spark: SparkSession, root: String): Option[Long] = {
@@ -2828,17 +2995,12 @@ object CommitLog {
     }.foreach(v => f.delete(commitPath(root, v), false))
   }
 
-  /** OPTIMISTIC READ-MODIFY-WRITE commit (full rewrite). `build` receives
-    * the CURRENT committed snapshot (None for an empty table) and returns
-    * the full next snapshot; on a lost claim the staged data is discarded
-    * and `build` re-runs against the new state — so the committed history
-    * is serializable regardless of writer interleaving. Returns the
-    * winning commit. `maxAttempts` bounds livelock under pathological
-    * contention. `statsCol` names a long-typed column whose per-dir
-    * [min, max] is recorded for [[readLatestWhere]] data skipping;
-    * `statsCols` (r13) extends the recorded set to MULTIPLE columns —
-    * the Delta per-column min/max shape — so predicates on any recorded
-    * column prune (one extra agg pair per column, same single scan). */
+  /** FULL-REWRITE commit: `build` receives the current snapshot (None
+    * for an empty table) and returns the whole next one, re-run against
+    * the new head after a lost claim ([[optimistic]]). `statsCol` and
+    * `statsCols` name the columns whose per-dir [min, max] the commit
+    * records from the new files' footers, so predicates on any of them
+    * prune in [[readLatestWhere]] and the connector. */
   def commit(spark: SparkSession, root: String, writer: String, action: String,
       maxAttempts: Int = 20, statsCol: Option[String] = None,
       statsCols: Seq[String] = Nil,
@@ -2848,109 +3010,55 @@ object CommitLog {
       (statsCol.toSeq ++ statsCols).distinct, rowInvisible = false,
       createOnEmpty = createOnEmpty)(build)
 
-  /** The rewrite engine behind [[commit]] (rowInvisible=false, always)
-    * and [[compact]] (rowInvisible=true — only row-preserving internal
-    * verbs may claim consumer-skippability). */
-  /** `createOnEmpty` (code review r14): the audit action is decided PER
-    * CLAIM ATTEMPT from the head the attempt actually builds on — a
-    * first commit records "create", anything else the caller's verb. A
-    * pre-loop exists check would mislabel under a racing first writer
-    * (the loser's retry would still stamp "create" at version 2). */
+  /** The rewrite engine behind [[commit]] (rowInvisible = false) and the
+    * full [[compact]] (rowInvisible = true: only row-preserving verbs may
+    * let incremental consumers skip them). A rewrite records logical
+    * names (no column map) and no vectors. With `createOnEmpty` the
+    * action is decided per attempt from the head it builds on: "create"
+    * for the first commit, the caller's verb otherwise — so a writer that
+    * loses the first claim to a racing creator does not stamp "create"
+    * at version 2. */
   private def commitImpl(spark: SparkSession, root: String, writer: String,
       action: String, maxAttempts: Int, statsCols: Seq[String],
       rowInvisible: Boolean,
       clusterSpec: Option[String] = None,
       createOnEmpty: Boolean = false)(
       build: Option[DataFrame] => DataFrame): Commit = {
-    requireTag(writer, "writer"); requireTag(action, "action")
     statsCols.foreach(sc => requireTag(sc, "statsCol"))
-    init(spark, root)
-    val f = fs(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      repairTornTail(spark, root)
-      val cur = latest(spark, root)
-      cur.foreach(requireWritable) // writer gates refuse before staging
-      val nextV = cur.map(_.version).getOrElse(0L) + 1
-      // GENERATED columns (r19): conform-or-refuse the rebuilt snapshot
-      // like any batch; rowInvisible verbs (compact) are row-identical
-      // to a parent that already passed
+    optimistic[Commit](spark, root, writer, action, maxAttempts) { cur =>
       val gens = cur.map(_.gens).getOrElse(Nil)
       val next0 = build(cur.map(c => load(spark, root, c)))
+      // generated columns and CHECK constraints gate the rebuilt rows;
+      // a row-preserving rewrite re-stages rows its parent already passed
       val next =
         if (rowInvisible) next0
         else conformGenerated(next0, gens, cur.map(c =>
           schemaOf(spark, root, c).fieldNames.toSeq).getOrElse(Nil))
-      // a bad statsCol must fail BEFORE the snapshot write, not after
-      // minutes of I/O with an orphaned staging left behind
+      // a bad statsCol fails before the snapshot write, not after it
       statsCols.foreach(sc => require(next.columns.contains(sc),
         s"statsCol '$sc' not in snapshot schema ${next.schema.simpleString}"))
-      // CHECK constraints gate every rewrite before staging (r14);
-      // rowInvisible verbs (compact) are row-identical to a parent that
-      // already passed, so re-scanning the table would buy nothing
-      val cons = cur.map(_.constraints).getOrElse(Nil)
-      if (!rowInvisible) { enforceConstraints(next, cons)
-        enforceGenerated(next, gens) }
-      // partition spec (r19): a partitioned table's rewrite stages SPLIT
-      // per partition tuple (logical names — the rewrite clears any map)
-      val pby = cur.map(_.partitionBy).getOrElse(Nil)
-      val staged: Seq[(String, Seq[String])] = {
-        val split =
-          if (pby.isEmpty) Nil
-          else stagePartitioned(spark, root, next, pby, Map.empty, nextV)
-        // unpartitioned — or an EMPTY partitioned snapshot, which splits
-        // to zero dirs but a commit must list at least one (parse rule):
-        // stage the one (possibly empty) unsplit dir instead
-        if (split.nonEmpty) split
-        else {
-          val d = s"data-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
-          next.write.mode(SaveMode.Overwrite).parquet(s"$root/$d")
-          Seq(d -> Nil)
-        }
+      if (!rowInvisible) {
+        enforceConstraints(next, cur.map(_.constraints).getOrElse(Nil))
+        enforceGenerated(next, gens)
       }
-      val ft = footers(spark, root, staged.map(_._1), statsCols)
-      val c = Commit(nextV, staged.map(_._1), writer,
+      val staged = stageDirs(spark, root, next,
+        cur.map(_.partitionBy).getOrElse(Nil), Map.empty, nextVersion(cur))
+      Right(Staged(nextCommit(spark, root, cur, writer,
         if (createOnEmpty && cur.isEmpty) "create" else action,
-        ft.stats, rowInvisible,
-        statsCols = if (ft.stats.nonEmpty) statsCols else Nil,
-        clusterSpec = clusterSpec, schemaDDL = Some(recordedDDL(next.schema)),
-        tsMs = Some(System.currentTimeMillis()),
-        constraints = cons,
-        clusterBy = cur.flatMap(_.clusterBy),
-        defaults = cur.map(_.defaults).getOrElse(Nil),
-        fstats = ft.fstats,
-        partitionBy = pby,
-        partVals = staged.collect { case (d, vs) if vs.nonEmpty => d -> vs }
-          .toMap,
-        rows = ft.rows,
-        gens = gens)
-      if (tryClaim(spark, root, nextV, encode(c))) {
-        writeHeadPointer(f, root, nextV); return c
-      }
-      // lost the race: another writer committed nextV first — discard the
-      // stale staging (built against an outdated snapshot), back off
-      // linearly (also paces retries while a torn-young tail ages past
-      // the repair grace), and retry
-      staged.foreach(dn => f.delete(new HPath(s"$root/${dn._1}"), true))
-      Thread.sleep(50L * attempt)
-    }
-    throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive claims on $root — " +
-        "pathological contention; raise maxAttempts or reduce writers")
+        carried = Nil, staged, statsCols, recordedDDL(next.schema),
+        rowInvisible = rowInvisible, clusterSpec = clusterSpec,
+        colMap = Some(Map.empty)), dirPaths(root, staged)))
+    }.merge
   }
 
   /** O(DELTA) APPEND commit: writes ONLY `delta`'s rows into a fresh
     * directory and commits prior dirs + the delta — appending to a 100 TB
     * table costs the new rows plus one log file, never a table rewrite.
-    * The delta's content is independent of the table head, so a lost
-    * claim retries by RE-REFERENCING the new head's directory list; the
-    * staged delta is written once and never rebuilt (the optimistic
-    * conflict cost of an append is a re-list, ~free). Callers own schema
-    * compatibility with the existing snapshot, as with any parquet
-    * append. `statsCol` records the delta dir's [min, max] for
-    * [[readLatestWhere]]; prior dirs keep whatever stats their own
-    * commits recorded (carried forward through the head). */
+    * The delta does not depend on the head, so a lost claim re-references
+    * the new head's dirs instead of rewriting it. The delta must match the
+    * head's schema (or add columns after it, with `evolve`). `statsCol`
+    * records the delta dir's [min, max] for [[readLatestWhere]]; prior
+    * dirs keep the stats their own commits recorded. */
   def commitAppend(spark: SparkSession, root: String, writer: String,
       action: String, maxAttempts: Int = 20,
       statsCol: Option[String] = None,
@@ -3019,53 +3127,27 @@ object CommitLog {
       txn = Some((appId, batchId)), evolve = false)(delta)
   }
 
+  /** The append engine behind [[commitAppend]] and [[commitAppendOnce]].
+    * The delta is staged once, against the first head an attempt sees,
+    * and re-referenced after a lost claim; it is re-validated whenever
+    * the head moved, and re-staged only when the new head's column map or
+    * partition spec changed or a default landed after its staged version
+    * (its rows would then read the new default instead of their NULLs). */
   private def appendImpl(spark: SparkSession, root: String, writer: String,
       action: String, maxAttempts: Int, statsCols: Seq[String],
       txn: Option[(String, Long)], evolve: Boolean,
       createOnEmpty: Boolean = false)(delta0: DataFrame): Commit = {
-    requireTag(writer, "writer"); requireTag(action, "action")
     statsCols.foreach(sc => requireTag(sc, "statsCol"))
-    init(spark, root)
     val f = fs(spark, root)
-    // already-applied batch: answer from the log alone, before any
-    // schema read or delta write
-    txn.foreach { case (app, b) =>
-      if (lastTxn(spark, root, app).exists(_ >= b))
-        return latest(spark, root).getOrElse(throw new IllegalStateException(
-          s"CommitLog: txn watermark for $app exists but no commit parses"))
-    }
-    repairTornTail(spark, root)
-    // SCHEMA enforcement: the head is read as the union of dirs, so a
-    // delta whose columns drift (renamed, re-typed) would silently merge
-    // into a franken-schema on the next read. Names + types must match
-    // the head exactly (nullability may widen — parquet reads it back
-    // nullable anyway).
-    val headNow = latest(spark, root)
-    headNow.foreach(requireWritable) // writer gates refuse pre-staging
-    // GENERATED columns (r19): an omitted generated column materializes
-    // from its recorded expression BEFORE the schema check compares like
-    // for like; supplied columns validate in validateSchemaAgainst
-    val delta = headNow.map(h => conformGenerated(delta0, h.gens,
-        schemaOf(spark, root, h).fieldNames.toSeq))
-      .getOrElse(delta0)
-    // ADDITIVE SCHEMA EVOLUTION (r12): under an EXPLICIT evolve=true, a
-    // delta may carry a superset of the head's columns — the new commit
-    // then RECORDS the widened schema (head's fields in their order, new
-    // fields after) in its JSON, and every reader pins it, so
-    // pre-evolution directories fill the new columns with typed NULLs
-    // (the q_source_evolved union, answered from the log instead of a
-    // mergeSchema footer sweep). Without evolve the contract stays exact:
-    // silent drift is the bug this check exists to catch.
-    //
-    // Validation runs against a SPECIFIC head and is RE-RUN inside the
-    // claim loop whenever the head moved (code review r12): computed only
-    // against the pre-loop head, a lost claim against a CONCURRENT
-    // EVOLUTION would commit a recorded schema derived from the stale
-    // head — silently clipping the racing writer's new column from every
-    // pinned read. Re-validating against the fresh head turns that race
-    // into the same loud additive-only/exact-match error a sequential
-    // mismatch gets.
-    def validateSchemaAgainst(h: Commit): String = {
+    // SCHEMA enforcement against head `h`, returning the DDL the append
+    // records. The head reads as the union of its dirs, so names and
+    // types must match it exactly (nullability may widen); under an
+    // explicit `evolve` the delta may add columns after the head's, and
+    // the commit records the widened schema, so older dirs read them as
+    // typed NULL. Re-run against every new head: validated only against
+    // a stale one, a racing evolution would be clipped from every pinned
+    // read instead of failing loudly here.
+    def ddlFor(h: Commit, delta: DataFrame): String = {
       val headSchema = schemaOf(spark, root, h)
       val added = if (!evolve) {
         val same = headSchema.length == delta.schema.length &&
@@ -3088,9 +3170,8 @@ object CommitLog {
             s"in delta ${delta.schema.simpleString}")
         val added = delta.schema.filterNot(f =>
           headSchema.fieldNames.contains(f.name))
-        // sound-or-refuse under an active column mapping (r16): an
-        // evolve-append would need to mint physical names mid-claim-loop
-        // — the ALTER TABLE ADD COLUMNS verb owns that; append after
+        // minting physical names mid-claim-loop is the ALTER TABLE ADD
+        // COLUMNS verb's job, so a column-mapped table refuses here
         require(added.isEmpty || h.colMap.isEmpty,
           "commitAppend(evolve) on a column-mapped table — ALTER TABLE " +
             "ADD COLUMNS first (it extends the mapping), then append")
@@ -3104,147 +3185,73 @@ object CommitLog {
             s"the table's recorded stats columns " +
             s"${h.statsCols.mkString("[", ",", "]")} — one stats column " +
             "set per table; change it with a rewrite")
-      // CHECK constraints gate the delta BEFORE its staging write (r14) —
-      // re-run against the fresh head on a lost claim like the schema
-      // check, so a concurrently-added constraint still rejects the batch
+      // CHECK constraints and supplied generated values gate the delta
+      // before its staging write, against this head's declarations
       enforceConstraints(delta, h.constraints)
-      // supplied GENERATED-column values must equal the recorded
-      // expression (r19) — re-run against the fresh head like the rest
       enforceGenerated(delta, h.gens)
-      // the schema this append records: the widened one under an
-      // evolution, the head's otherwise (pre-evolution dirs stay in the
-      // union)
       if (added.isEmpty) carriedDDL(h, headSchema)
       else recordedDDL(StructType(headSchema.fields ++ added))
     }
-    // an append creating the table records the delta's schema
-    def ddlFor(h: Option[Commit]): String =
-      h.map(validateSchemaAgainst).getOrElse(recordedDDL(delta.schema))
-    var validatedAt: Option[Long] = headNow.map(_.version)
-    var ddl = ddlFor(headNow)
-    // a bad statsCol must fail BEFORE the delta write (no orphan staging)
-    statsCols.foreach(sc => require(delta.columns.contains(sc),
-      s"statsCol '$sc' not in delta schema ${delta.schema.simpleString}"))
-    var tentative = headNow.map(_.version).getOrElse(0L) + 1
-    // column mapping (r16): stage under the head's frozen PHYSICAL names
-    var stagedMap = headNow.map(_.colMap).getOrElse(Map.empty)
-    // partition spec (r19): a partitioned table's delta stages SPLIT per
-    // partition tuple — one dir per tuple, each with its recorded values
-    var stagedPartBy = headNow.map(_.partitionBy).getOrElse(Nil)
-    def stageDelta(): Seq[(String, Seq[String])] =
-      if (stagedPartBy.isEmpty) {
-        val d = s"data-${java.util.UUID.randomUUID().toString.take(8)}-v$tentative"
-        toPhysical(delta, stagedMap).write
-          .mode(SaveMode.Overwrite).parquet(s"$root/$d")
-        Seq(d -> Nil)
-      } else stagePartitioned(spark, root, delta, stagedPartBy, stagedMap,
-        tentative)
-    var deltaDirs = stageDelta()
-    def deleteStaged(): Unit =
-      deltaDirs.foreach(dn => f.delete(new HPath(s"$root/${dn._1}"), true))
-    def footersOfStaged(): Footers =
-      footers(spark, root, deltaDirs.map(_._1), statsCols, stagedMap)
-    var deltaFt = footersOfStaged()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      repairTornTail(spark, root)
-      val cur = latest(spark, root)
-      cur.foreach(requireWritable)
-      // zombie-writer guard: a racing instance of the same app may have
-      // committed this batch since the pre-check. Re-verify AFTER reading
-      // `cur` (ordering matters): our claim succeeds only if no commit
-      // landed after `cur`, and any commit already in `cur` is visible to
-      // this later watermark listing — so a duplicate either loses the
-      // claim or sees the watermark; it can never append.
-      txn.foreach { case (app, b) =>
-        if (lastTxn(spark, root, app).exists(_ >= b)) {
-          deleteStaged()
-          return latest(spark, root).getOrElse(throw new IllegalStateException(
-            s"CommitLog: txn watermark for $app exists but no commit parses"))
+    case class Delta(v: Long, colMap: Map[String, String],
+        partBy: Seq[String], dirs: Seq[(String, Seq[String])])
+    // the delta with omitted generated columns materialized, against the
+    // first head seen; the head version and DDL it was last validated
+    // against; what is staged
+    var delta: Option[DataFrame] = None
+    var validated: Option[(Option[Long], String)] = None
+    var staged: Option[Delta] = None
+    def discard(): Unit = staged.foreach(s =>
+      dirPaths(root, s.dirs).foreach(f.delete(_, true)))
+    optimistic[Commit](spark, root, writer, action, maxAttempts) { cur =>
+      // already applied: checked after reading `cur`, so a racing instance
+      // of the same app either sees the winner's watermark here or loses
+      // the claim — a batch can never land twice
+      if (txn.exists { case (app, b) => lastTxn(spark, root, app).exists(_ >= b) }) {
+        discard()
+        Left(latest(spark, root).getOrElse(throw new IllegalStateException(
+          s"CommitLog: txn watermark for ${txn.get._1} exists but no commit parses")))
+      } else {
+        val d = delta.getOrElse(cur.map(h => conformGenerated(delta0, h.gens,
+          schemaOf(spark, root, h).fieldNames.toSeq)).getOrElse(delta0))
+        delta = Some(d)
+        if (!validated.exists(_._1 == cur.map(_.version))) {
+          // an append creating the table records the delta's schema
+          val ddl =
+            try cur.map(ddlFor(_, d)).getOrElse(recordedDDL(d.schema))
+            catch { case e: Throwable => discard(); throw e }
+          validated = Some(cur.map(_.version) -> ddl)
         }
+        // a bad statsCol fails before the delta write (no orphan staging)
+        statsCols.foreach(sc => require(d.columns.contains(sc),
+          s"statsCol '$sc' not in delta schema ${d.schema.simpleString}"))
+        val colMap = cur.map(_.colMap).getOrElse(Map.empty[String, String])
+        val partBy = cur.map(_.partitionBy).getOrElse(Nil)
+        if (!staged.exists(s => s.colMap == colMap && s.partBy == partBy &&
+            !cur.exists(_.defaults.exists(_._2 > s.v)))) {
+          discard()
+          val v = nextVersion(cur)
+          staged = Some(Delta(v, colMap, partBy,
+            stageDirs(spark, root, d, partBy, colMap, v, emptyDir = false)))
+        }
+        val s = staged.get
+        Right(Staged(nextCommit(spark, root, cur, writer,
+          if (createOnEmpty && cur.isEmpty) "create" else action,
+          carried = cur.map(_.dataDirs).getOrElse(Nil), s.dirs, statsCols,
+          validated.get._2, txn = txn), dirPaths(root, s.dirs), reused = true))
       }
-      // the head MOVED since validation (a lost claim, or a commit landing
-      // between the pre-check and attempt 1): re-validate the delta and
-      // recompute the recorded schema against the commit we now build on —
-      // a concurrent evolution fails loudly here (delete the staging
-      // first) instead of committing a stale recorded schema
-      if (cur.map(_.version) != validatedAt) {
-        ddl =
-          try ddlFor(cur)
-          catch { case e: Throwable => deleteStaged(); throw e }
-        validatedAt = cur.map(_.version)
-      }
-      // a DEFAULTED evolution landed after we staged (r16): our dir's
-      // name-embedded version predates the default's `since`, so readers
-      // would wrongly coalesce the delta's explicit NULLs to the
-      // constant; a RENAME/DROP landed: our staging's physical names are
-      // stale; a PARTITION SPEC landed (r19): our staging isn't split.
-      // Either way: re-stage the same rows under fresh names with the
-      // fresh map/spec (rare race; one extra delta write).
-      if (cur.exists(_.defaults.exists(_._2 > tentative)) ||
-          cur.map(_.colMap).getOrElse(Map.empty) != stagedMap ||
-          cur.map(_.partitionBy).getOrElse(Nil) != stagedPartBy) {
-        deleteStaged()
-        tentative = cur.map(_.version).getOrElse(0L) + 1
-        stagedMap = cur.map(_.colMap).getOrElse(Map.empty)
-        stagedPartBy = cur.map(_.partitionBy).getOrElse(Nil)
-        deltaDirs = stageDelta()
-        deltaFt = footersOfStaged()
-      }
-      val nextV = cur.map(_.version).getOrElse(0L) + 1
-      val allStats = cur.map(_.stats).getOrElse(Map.empty) ++ deltaFt.stats
-      val effCols =
-        if (statsCols.nonEmpty) statsCols
-        else cur.map(_.statsCols).getOrElse(Nil)
-      val c = Commit(nextV,
-        cur.map(_.dataDirs).getOrElse(Nil) ++ deltaDirs.map(_._1),
-        writer,
-        // per-attempt create labeling (code review r14, see commitImpl)
-        if (createOnEmpty && cur.isEmpty) "create" else action,
-        allStats,
-        statsCols = if (allStats.nonEmpty) effCols else Nil,
-        txn = txn,
-        schemaDDL = Some(ddl),
-        tsMs = Some(System.currentTimeMillis()),
-        constraints = cur.map(_.constraints).getOrElse(Nil),
-        // an append never touches stored rows: prior dirs' deletion
-        // vectors carry verbatim (dropping one would resurrect rows)
-        dv = cur.map(_.dv).getOrElse(Map.empty),
-        clusterBy = cur.flatMap(_.clusterBy),
-        defaults = cur.map(_.defaults).getOrElse(Nil),
-        colMap = stagedMap,
-        fstats = cur.map(_.fstats).getOrElse(Map.empty) ++ deltaFt.fstats,
-        partitionBy = stagedPartBy,
-        partVals = cur.map(_.partVals).getOrElse(Map.empty) ++
-          deltaDirs.collect { case (d, vs) if vs.nonEmpty => d -> vs },
-        rows = cur.map(_.rows).getOrElse(Map.empty) ++ deltaFt.rows,
-        dvRows = cur.map(_.dvRows).getOrElse(Map.empty),
-        gens = cur.map(_.gens).getOrElse(Nil))
-      if (tryClaim(spark, root, nextV, encode(c))) {
-        writeHeadPointer(f, root, nextV); return c
-      }
-      Thread.sleep(50L * attempt)
-    }
-    // give up: remove the never-committed delta so it reads as a lost
-    // staging (vacuum would sweep it anyway once its version is passed)
-    deleteStaged()
-    throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive append claims on $root")
+    }.merge
   }
 
   /** COMPACTION (the lakehouse OPTIMIZE): consolidate the head's
     * accumulated directory fragmentation — a packed base plus N append
-    * deltas, each with its own small files — committed through the
-    * optimistic claim loop as action="compact". Rows are read-equivalent
-    * by construction (the build is identity over the visible rows), and
-    * serializable under concurrent writers: if an append lands
-    * mid-compact, the lost claim re-reads the NEW head and re-plans, so
-    * no committed row is ever dropped. `coalesce` (not repartition)
-    * collapses the read partitions without a shuffle — the same
-    * bin-packing-without-shuffle shape Delta's OPTIMIZE uses.
+    * deltas, each with its own small files — as action="compact". Rows are
+    * read-equivalent by construction (the build is identity over the
+    * visible rows); an append landing mid-compact makes it re-plan
+    * against the new head, so no committed row is dropped. `coalesce`
+    * (not repartition) collapses the read partitions without a shuffle —
+    * the bin-packing-without-shuffle shape Delta's OPTIMIZE uses.
     *
-    * TWO modes (r18 — VERDICT r17 #1). The argument-less cadence BIN-
+    * TWO modes. The argument-less cadence BIN-
     * PACKS ([[packCompact]]): only dirs under `packBytes` of parquet or
     * carrying a deletion vector consolidate into one new dir; every
     * well-packed dir carries byte-identical with stats preserved — each
@@ -3262,7 +3269,7 @@ object CommitLog {
     *
     * Scale: an uncompacted 1000-append day leaves 1000 directories whose
     * listing + footer reads dominate scan planning long before the data
-    * scan starts (SCALE.md r10 measured 8.3 s of planning per 2048 files);
+    * scan starts (SCALE.md measured 8.3 s of planning per 2048 files);
     * compact + [[vacuum]] bound the head at O(packed dirs +
     * appends-since-compact) files regardless of history length, at the
     * cost of rewriting the fragmented tail — amortized across the appends
@@ -3282,8 +3289,8 @@ object CommitLog {
     latest(spark, root).map { head =>
       (sortCols ++ zorderCols).foreach(c => requireTag(c, "cluster column"))
       val explicit = sortCols.nonEmpty || zorderCols.nonEmpty
-      // no explicit columns: default to the table's DECLARED spec (r16 —
-      // `CREATE/ALTER TABLE … CLUSTER BY` via [[setClusterBy]]), so a
+      // no explicit columns: default to the table's DECLARED spec
+      // (`CREATE/ALTER TABLE … CLUSTER BY` via [[setClusterBy]]), so a
       // scheduled argument-less compact maintains the declared layout —
       // the liquid-clustering cadence. Explicit arguments override.
       val (effSortCols, effZorderCols) =
@@ -3301,7 +3308,7 @@ object CommitLog {
         else None
       val effStatsCols =
         if (statsCol.nonEmpty) statsCol.toSeq else head.statsCols
-      // FULL-vs-INCREMENTAL (r18 — VERDICT r17 #1): explicit layout
+      // FULL-vs-INCREMENTAL: explicit layout
       // arguments demand a whole-head re-cluster (the OPTIMIZE FULL
       // shape), as does a DECLARED spec the retained history shows was
       // never applied (or was applied differently) by a maintenance
@@ -3353,7 +3360,7 @@ object CommitLog {
     None
   }
 
-  /** The whole-head rewrite (pre-r18 compact): one consolidated dir of
+  /** The whole-head rewrite: one consolidated dir of
     * `targetFiles` files, everything materialized (vectors, defaults,
     * logical names — commitImpl records no dv/colMap; its schemaDDL is
     * the rewritten rows' schema). Plain
@@ -3370,7 +3377,7 @@ object CommitLog {
       effZorderCols: Seq[String], requested: Option[String]): Commit = {
     // multi-dir heads always compact — count files (one listing per
     // dir) only in the single-dir case, where it decides the no-op.
-    // A head carrying deletion vectors ALWAYS compacts (r16): the
+    // A head carrying deletion vectors ALWAYS compacts: the
     // rewrite reads visible rows, so compaction is what MATERIALIZES
     // vectors away — a dv-bearing head is never "already compact".
     def nFiles = {
@@ -3398,37 +3405,28 @@ object CommitLog {
     }
   }
 
-  /** INCREMENTAL (bin-packing) compaction (r18 — VERDICT r17 #1, the
-    * Delta OPTIMIZE bin-pack): consolidate ONLY the under-packed tail —
-    * dirs below `packBytes` of parquet, plus every dv-bearing dir (the
-    * rewrite materializes its vector away) — into one new directory,
-    * carrying every well-packed dir BYTE-IDENTICAL with its stats,
-    * vectors (none, by construction), and column-map entries preserved:
-    * the prunedRewrite carry discipline applied to the maintenance verb
-    * itself. On an append cadence each hit costs O(appends since the
-    * last pack), never O(table) — the last O(table) maintenance verb
-    * gone. No-ops (returns the head) when packing would buy nothing:
-    * at most one under-packed dir, no vectors, and that dir within the
-    * file target. Degenerates to [[fullCompact]] when EVERY dir is
-    * under-packed (nothing to carry — the full rewrite additionally
-    * materializes logical names and clears the column map, which a
-    * carrying pack must preserve). Under a declared same-spec
-    * clustering cadence the packed tail is clustered by the spec —
-    * incremental liquid clustering; carried dirs keep the layout their
-    * own maintenance pass gave them. */
+  /** INCREMENTAL (bin-packing) compaction, the Delta OPTIMIZE bin-pack:
+    * consolidate ONLY the under-packed tail — dirs below `packBytes` of
+    * parquet, plus every dv-bearing dir (the rewrite materializes its
+    * vector away) — into one new directory (one per partition tuple on a
+    * partitioned table), carrying every well-packed dir byte-identical
+    * with its stats and column-map entries. On an append cadence each hit
+    * costs O(appends since the last pack), never O(table). No-ops
+    * (returns the head) when packing would buy nothing: at most one
+    * under-packed dir, no vectors, and that dir within the file target.
+    * Degenerates to [[fullCompact]] when EVERY dir is under-packed
+    * (nothing to carry; the full rewrite also materializes logical names
+    * and clears the column map, which a carrying pack must preserve).
+    * Under a declared clustering the packed tail is clustered by the
+    * spec; carried dirs keep the layout their own pass gave them. */
   private def packCompact(spark: SparkSession, root: String, writer: String,
       targetFiles: Int, maxAttempts: Int, declaredStats: Seq[String],
       effSortCols: Seq[String], effZorderCols: Seq[String],
       requested: Option[String], packBytes: Long): Commit = {
-    init(spark, root)
     val f = fs(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      repairTornTail(spark, root)
-      val head = latest(spark, root).getOrElse(throw new IllegalStateException(
+    def attempt(cur: Option[Commit]): Either[Commit, Staged] = {
+      val head = cur.getOrElse(throw new IllegalStateException(
         s"CommitLog: compact lost the head of $root mid-flight — vacuumed?"))
-      requireWritable(head)
       val effCols = if (declaredStats.nonEmpty) declaredStats else head.statsCols
       val files: Map[String, Seq[org.apache.hadoop.fs.FileStatus]] =
         head.dataDirs.map { d =>
@@ -3443,20 +3441,16 @@ object CommitLog {
       // otherwise the cadence no-ops (schedulable on quiescent tables)
       val needsWork = under.size >= 2 || under.exists(head.dv.contains) ||
         under.exists(d => files(d).size > targetFiles)
-      if (!needsWork) return head
+      if (!needsWork) return Left(head)
+      // carried dirs are never dv-bearing (dv ⇒ under-packed ⇒ rewritten)
       val carried = head.dataDirs.filterNot(under.toSet)
       if (carried.isEmpty)
-        return fullCompact(spark, root, writer, head, targetFiles,
-          maxAttempts, effCols, effSortCols, effZorderCols, requested)
-      val nextV = head.version + 1
-      // visible rows of ONLY the under-packed dirs — DV-aware and
-      // defaults-aware (the prunedRewrite read); staged under PHYSICAL
-      // names so carried and packed dirs stay uniformly readable.
-      // Output files size by BYTES (VERDICT r17 #1's "relatedly"): the
-      // tail's input bytes divided by packBytes decide the file count —
-      // a production pack emits ~packBytes files, never `targetFiles`
-      // slivers of a tiny tail or one monolith of a huge one;
-      // targetFiles stays the caller's cap.
+        return Left(fullCompact(spark, root, writer, head, targetFiles,
+          maxAttempts, effCols, effSortCols, effZorderCols, requested))
+      // visible rows of ONLY the under-packed dirs (DV- and
+      // defaults-aware), staged under PHYSICAL names so carried and packed
+      // dirs stay uniformly readable. Output files size by bytes: the
+      // tail's input bytes over packBytes, capped at targetFiles
       val tailBytes = under.iterator.map(d => files(d).map(_.getLen).sum).sum
       val outFiles = math.min(targetFiles.toLong,
         math.max(1L, (tailBytes + packBytes - 1L) / packBytes)).toInt
@@ -3468,70 +3462,16 @@ object CommitLog {
         else stage0
           .repartitionByRange(outFiles, effSortCols.map(col): _*)
           .sortWithinPartitions(effSortCols.map(col): _*)
-      // partition spec (r19): the packed tail splits per partition tuple
-      // so the consolidated dirs keep exact partition identity (pruning
-      // survives the pack cadence); an empty tail stages one empty dir
-      val newDirs: Seq[(String, Seq[String])] = {
-        val split =
-          if (head.partitionBy.isEmpty) Nil
-          else stagePartitioned(spark, root, stage, head.partitionBy,
-            head.colMap, nextV)
-        if (split.nonEmpty) split
-        else {
-          val d = s"data-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
-          toPhysical(stage, head.colMap).write
-            .mode(SaveMode.Overwrite).parquet(s"$root/$d")
-          Seq(d -> Nil)
-        }
-      }
+      val newDirs = stageDirs(spark, root, stage, head.partitionBy,
+        head.colMap, head.version + 1)
       val headSchema = schemaOf(spark, root, head)
-      // self-maintaining bloom evidence, the rewrite-verbs rule
-      locally {
-        val legacySb = bloomColumn(spark, root)
-        bloomColumns(spark, root).foreach(bc =>
-          newDirs.foreach { case (nd, _) =>
-            buildSidecarAt(spark, root, nd, headSchema, head.colMap, bc,
-              fpp = 0.001, sidecarPathFor(root, legacySb, bc, nd)) })
-      }
-      val ft = footers(spark, root, newDirs.map(_._1), effCols, head.colMap)
-      val allStats = head.stats
-        .filter { case (d, _) => carried.contains(d) } ++ ft.stats
-      val c = Commit(nextV, carried ++ newDirs.map(_._1), writer,
-        "compact", allStats,
-        rowInvisible = true,
-        statsCols = if (allStats.nonEmpty) effCols else Nil,
-        clusterSpec = requested,
-        schemaDDL = Some(carriedDDL(head, headSchema)),
-        tsMs = Some(System.currentTimeMillis()),
-        constraints = head.constraints,
-        // carried dirs are never dv-bearing (dv ⇒ under-packed ⇒
-        // rewritten), so the packed head holds no vectors for the
-        // packed region and the carried region alike
-        dv = head.dv.filter { case (d, _) => carried.contains(d) },
-        clusterBy = head.clusterBy,
-        defaults = head.defaults,
-        colMap = head.colMap,
-        fstats = carryFstats(head.fstats, carried) ++ ft.fstats,
-        partitionBy = head.partitionBy,
-        partVals = head.partVals.filter { case (d, _) =>
-          carried.contains(d) } ++
-          newDirs.collect { case (d, vs) if vs.nonEmpty => d -> vs },
-        rows = head.rows.filter { case (d, _) =>
-          carried.contains(d) } ++ ft.rows,
-        dvRows = head.dvRows.filter { case (d, _) => carried.contains(d) },
-        gens = head.gens)
-      if (tryClaim(spark, root, nextV, encode(c))) {
-        writeHeadPointer(f, root, nextV); return c
-      }
-      // lost the race: the under-packed set may differ under the new head
-      newDirs.foreach { case (nd, _) =>
-        f.delete(new HPath(s"$root/$nd"), true)
-        deleteSidecars(f, root, nd)
-      }
-      Thread.sleep(50L * attempt)
+      val sidecars = stageSidecars(spark, root, newDirs.map(_._1), headSchema,
+        head.colMap)
+      Right(Staged(nextCommit(spark, root, cur, writer, "compact", carried,
+        newDirs, effCols, carriedDDL(head, headSchema), rowInvisible = true,
+        clusterSpec = requested), dirPaths(root, newDirs) ++ sidecars))
     }
-    throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive compact claims on $root")
+    optimistic(spark, root, writer, "compact", maxAttempts)(attempt).merge
   }
 
   /** RESTORE (the Delta RESTORE verb, r12): make the table's head the
@@ -3582,15 +3522,6 @@ object CommitLog {
     if (!f.exists(bloomColsDir(root))) Nil
     else Option(f.listStatus(bloomColsDir(root))).toSeq.flatten
       .map(_.getPath.getName).filterNot(_.startsWith(".tmp-")).sorted
-
-  /** Delete every per-column sidecar of `dir` (legacy + r17 extras) —
-    * lost-claim cleanup and vacuum both need the full set. */
-  private def deleteSidecars(f: org.apache.hadoop.fs.FileSystem,
-      root: String, dir: String): Unit = {
-    f.delete(bloomPath(root, dir), false)
-    extraBloomColumns(f, root).foreach(c =>
-      f.delete(new HPath(bloomDir(root), s"col=$c/$dir.bin"), false))
-  }
 
   /** Every bloom column of the table — the legacy marker's column first
     * (flat sidecar layout), then the r17 extra columns (per-column
@@ -3821,13 +3752,12 @@ object CommitLog {
   /** PURGE (retention enforcement / right-to-be-forgotten): commit a head
     * WITHOUT the rows matching `pred`, then drop ALL retained history, so
     * no API path — readLatest, readVersion, appendedSince — can reach a
-    * purged row again. The rewrite rides the [[prunedRewrite]] loop
+    * purged row again. The rewrite is a [[prunedRewrite]]
     * (action="purge", row-VISIBLE: downstream consumers must resync,
     * because rows they already received are being retracted — silently
     * skipping a retraction would be the bug). NULL-evaluating rows are
-    * KEPT (r13 — "matching pred" means pred is TRUE, the SQL rule; the
-    * earlier `filter(!pred)` silently over-purged rows where the
-    * predicate evaluated NULL). The logical purge is
+    * KEPT: "matching pred" means pred is TRUE, the SQL rule. The logical
+    * purge is
     * IMMEDIATE: vacuum(keep=1) deletes old commit files synchronously, so
     * dropped versions stop resolving the moment this returns; the retired
     * data DIRECTORIES linger up to `graceMs` (the same window that
@@ -3835,14 +3765,12 @@ object CommitLog {
     * later vacuum — call again with graceMs=0 once writers are quiesced
     * if physical deletion must also be synchronous.
     *
-    * Scale (r13): the rewrite is DIR-PRUNED by the shared evidence
-    * decision — directories whose recorded stats/bloom prove no matching
-    * row carry into the purge commit untouched (they hold nothing to
-    * forget), so purging a keyed or time-ranged slice of a clustered
-    * 100 TB history rewrites the matching dirs, never the table; the
-    * recorded stats column set survives (the pre-r13 path recorded no
-    * stats on the purged head, silently disabling skipping). Returns
-    * None on an empty table. */
+    * Scale: the rewrite is DIR-PRUNED by the shared evidence decision —
+    * directories whose recorded stats/bloom prove no matching row carry
+    * into the purge commit untouched (they hold nothing to forget), so
+    * purging a keyed or time-ranged slice of a clustered 100 TB history
+    * rewrites the matching dirs, never the table; the recorded stats
+    * column set survives. Returns None on an empty table. */
   def purge(spark: SparkSession, root: String, writer: String,
       graceMs: Long = 600000L)(
       pred: org.apache.spark.sql.Column): Option[Commit] =
@@ -3862,7 +3790,7 @@ object CommitLog {
     * non-null (null never equi-matches — a null-keyed "update" would
     * silently insert). [[mergeOn]]'s `multiInsertKeys` opt-in relaxes
     * the one-row rule to SQL multi-insert semantics for all-non-delete
-    * duplicates (r15, ADVICE r14); a multi-row key carrying a delete
+    * duplicates; a multi-row key carrying a delete
     * flag refuses loudly either way.
     *
     * COPY-ON-WRITE with DIRECTORY PRUNING — the scale story: only
@@ -3884,8 +3812,8 @@ object CommitLog {
     * deletes of absent keys no-op) — and to a no-op returning the head
     * when there is nothing to insert either.
     *
-    * MERGE-ON-READ (r17 — VERDICT r16 #1, the [[delete]]/[[update]] DV
-    * economics applied to the merge verb): when the matched fraction of
+    * MERGE-ON-READ (the [[delete]]/[[update]] DV economics applied to
+    * the merge verb): when the matched fraction of
     * the affected dirs' visible rows is ≤ `dvMaxFraction`, the stored
     * pre-image rows are DV-DELETED in place (one tiny folded `_dv`
     * dataset) and the changeset's rows land as ONE appended dir — a
@@ -3896,7 +3824,7 @@ object CommitLog {
     * decision costs one counting scan of the affected dirs' visible
     * rows (warm for the CoW fallback, which re-reads them);
     * `dvMaxFraction = 0` forces copy-on-write and skips it. A matched
-    * count of ZERO (evidence false-positive) now degrades to the pure
+    * count of ZERO (evidence false-positive) degrades to the pure
     * O(delta) insert append instead of a pointless rewrite.
     *
     * At 100 TB: a changeset touching k of N sorted/bloomed directories
@@ -3912,9 +3840,8 @@ object CommitLog {
     * resync — except the pure-insert path, which commits append-shaped
     * and flows through [[appendedSince]] like any append.
     *
-    * Concurrency: the ordinary optimistic loop — pruning and the rebuild
-    * re-run against the fresh head after every lost claim, so a racing
-    * append landing a merge key between attempts is re-pruned, never
+    * Pruning and the rebuild re-run against the new head after a lost
+    * claim, so a racing append landing a merge key is re-pruned, never
     * missed. Returns the winning commit (or the unchanged head for a
     * no-op). */
   def merge(spark: SparkSession, root: String, writer: String, keyCol: String,
@@ -3924,8 +3851,8 @@ object CommitLog {
     mergeOn(spark, root, writer, Seq(keyCol), changes, deleteCol, statsCol,
       maxAttempts, maxProbeKeys, dvMaxFraction = dvMaxFraction)
 
-  /** [[merge]] keyed by a column LIST (r15 — VERDICT r14 #2, the
-    * (id, date)-style compound key real tables merge on): a change row's
+  /** [[merge]] keyed by a column LIST (the (id, date)-style compound key
+    * real tables merge on): a change row's
     * key is the TUPLE of `keyCols` values. Everything in [[merge]]'s
     * contract holds per tuple, and the pruning evidence COMPOSES: a
     * directory is rewritten only when, for EVERY key column with
@@ -3934,9 +3861,8 @@ object CommitLog {
     * provably-absent component prunes the dir, so multi-column keys
     * prune at least as well as their strongest single column.
     *
-    * Key-tuple cardinality (r15, ADVICE r14 + code review): by DEFAULT
-    * one row per tuple, refused loudly otherwise — the r14 contract,
-    * protecting a non-deaggregated upsert changeset from silent row
+    * Key-tuple cardinality: by DEFAULT one row per tuple, refused loudly
+    * otherwise, protecting a non-deaggregated upsert changeset from silent row
     * multiplication. With `multiInsertKeys = true` (the SQL MERGE
     * route's explicit opt-in), a tuple appearing on MULTIPLE change
     * rows is allowed when every one of its rows is a non-delete: the
@@ -3961,7 +3887,7 @@ object CommitLog {
       s"deleteCol '$dc' not in changes schema ${changes.schema.simpleString}"))
     keyCols.foreach(k => require(changes.columns.contains(k),
       s"keyCol '$k' not in changes schema ${changes.schema.simpleString}"))
-    // materialize the changeset ONCE (ADVICE r11): validation, pruning
+    // materialize the changeset ONCE: validation, pruning
     // metadata, each claim attempt's staged rewrite, and the CDF pre-image
     // join all re-evaluate the plan — a non-deterministic changeset
     // (rand(), a re-read mutable source) could pass the key-cardinality
@@ -3977,7 +3903,7 @@ object CommitLog {
   }
 
   /** [[mergeOn]] body over the checkpoint-pinned changeset. `evolveTo`
-    * (r16 — VERDICT r15 #4) is a STAGED additive widening the merge
+    * is a STAGED additive widening the merge
     * folds into its ONE row-visible commit: the target schema becomes
     * head ++ evolveTo (columns a concurrent commit already landed drop
     * out, same-name/different-type collides loudly), carried dirs read
@@ -3990,8 +3916,6 @@ object CommitLog {
       maxProbeKeys: Int, multiInsertKeys: Boolean,
       evolveTo: Seq[org.apache.spark.sql.types.StructField] = Nil,
       dvMaxFraction: Double = 0.2): Commit = {
-    init(spark, root)
-    val f = fs(spark, root)
     val delFlag = deleteCol.map(col).getOrElse(lit(false))
 
     // changeset invariants + pruning metadata, computed ONCE (the
@@ -4010,10 +3934,10 @@ object CommitLog {
         org.apache.spark.sql.functions.count_distinct(keyTuple).as("keys"),
         count(when(flagNull, 1)).as("flagnulls")) ++
         keyCols.flatMap { k =>
-          // the typed stat domain (r17): string/date/timestamp key
-          // columns now contribute range evidence through the same
-          // encoding the write side records, so string-keyed merges
-          // stats-prune too. Remaining types keep try_cast, not cast:
+          // the typed stat domain: string/date/timestamp key columns
+          // contribute range evidence through the same encoding the
+          // write side records, so string-keyed merges stats-prune
+          // too. Remaining types keep try_cast, not cast:
           // an unconvertible key column simply yields NO range evidence
           // — under ANSI mode a plain cast would throw out of the merge
           val kc = col(k)
@@ -4040,9 +3964,9 @@ object CommitLog {
     // reject it at the edge like null keys
     require(kstats.getLong(3) == 0,
       s"merge delete flags ('${deleteCol.getOrElse("")}') must be non-null")
-    // key-tuple cardinality (r15, ADVICE r14 + code review): duplicates
-    // refuse by default (the r14 contract — a non-deaggregated upsert
-    // must fail loudly, never multiply rows); under the multiInsertKeys
+    // key-tuple cardinality: duplicates refuse by default (a
+    // non-deaggregated upsert must fail loudly, never multiply rows);
+    // under the multiInsertKeys
     // opt-in, all-non-delete duplicates are the SQL multi-insert shape
     // and a tuple mixing a delete flag with any other row still refuses.
     // The group pass runs only when duplicates exist at all — the common
@@ -4089,12 +4013,7 @@ object CommitLog {
       else None
     val hasInserts = changes.filter(!delFlag).limit(1).count() > 0
 
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      repairTornTail(spark, root)
-      val cur = latest(spark, root)
-      cur.foreach(requireWritable)
+    def attempt(cur: Option[Commit]): Either[Commit, Staged] = {
       val (dirs, stage, effStatsCols, cdf, ddl, mintedMap,
         dvPlan) = cur match {
         case None =>
@@ -4108,7 +4027,7 @@ object CommitLog {
             Map.empty[String, String], None)
         case Some(head) =>
           val baseSchema = schemaOf(spark, root, head)
-          // fold a staged evolution (r16): columns a concurrent commit
+          // fold a staged evolution: columns a concurrent commit
           // already landed drop out; a same-name/different-type head
           // column is a real conflict — loud, never a silent retype
           val pendingEff = evolveTo.filterNot { f =>
@@ -4130,8 +4049,8 @@ object CommitLog {
             if (pendingEff.isEmpty) carriedDDL(head, baseSchema)
             else recordedDDL(headSchema)
           // under an ACTIVE column mapping, folded-evolution columns
-          // mint fresh physicals (r16 code review: re-adding a DROPPED
-          // logical name must never resurrect its old physical bytes)
+          // mint fresh physicals (re-adding a DROPPED logical name must
+          // never resurrect its old physical bytes)
           val minted: Map[String, String] =
             if (head.colMap.isEmpty) Map.empty
             else pendingEff.map(f => f.name ->
@@ -4157,27 +4076,24 @@ object CommitLog {
           val inserts = changes.filter(!delFlag)
             .select(headSchema.fieldNames.map(col): _*)
           // CHECK constraints gate the changeset's landing rows BEFORE
-          // any staging (r14); stored rows the merge keeps satisfy by
+          // any staging; stored rows the merge keeps satisfy by
           // induction (they passed when written), deletes land nothing.
-          // GENERATED columns validate on the same landing surface (r19).
+          // GENERATED columns validate on the same landing surface.
           enforceConstraints(inserts, head.constraints)
           enforceGenerated(inserts, head.gens)
-          // COMPOSED evidence (r15): a dir might contain a matching row
-          // only if EVERY key column's evidence allows it — one column
+          // COMPOSED evidence: a dir might contain a matching row only
+          // if EVERY key column's evidence allows it — one column
           // provably absent prunes the dir (a tuple match needs all
-          // components present). Bloom evidence exists for at most one
-          // column (the table's `_bloom/_column` marker); stats per
-          // recorded column.
-          // multi-column blooms (r17): EVERY registered bloom column
-          // among the merge keys contributes point evidence — composite
-          // keys now prune on each bloomed component, not just one
+          // components present). Every registered bloom column among the
+          // merge keys contributes point evidence, and every recorded
+          // stats column its range.
           val legacyBloom = bloomColumn(spark, root)
           val bloomKeyCols = bloomColumns(spark, root).toSet
             .intersect(keyCols.toSet)
           def mightContain(d: String): Boolean = keyCols.forall { k =>
             // missing/swept/corrupt sidecar ⇒ no bloom evidence for this
             // dir (fall through to stats/rewrite), never an exception out
-            // of merge (ADVICE r11; readSidecar owns the degrade)
+            // of merge (readSidecarAt owns the degrade)
             val byBloom: Option[Boolean] =
               if (!bloomKeyCols.contains(k) || probeKeys.isEmpty) None
               else readSidecarAt(fs(spark, root),
@@ -4198,13 +4114,13 @@ object CommitLog {
             // and the merge is a pure insert (append shape, O(delta));
             // no CDF file: [[changesSince]] synthesizes the inserts from
             // the committed delta dir itself
-            if (!hasInserts && pendingEff.isEmpty) return head // full no-op
+            if (!hasInserts && pendingEff.isEmpty) return Left(head) // full no-op
             (head.dataDirs, inserts, eff, None,
               ddl,
               minted, None)
           } else {
             // affected dirs read DV-aware WITH (file, position) identity
-            // retained (r17 — VERDICT r16 #1): the positions feed the
+            // retained: the positions feed the
             // merge-on-read decision and, under the threshold, the new
             // deletion vector. A folded evolution's new columns read as
             // typed NULL for the kept stored rows.
@@ -4243,10 +4159,10 @@ object CommitLog {
             if (matched == 0) {
               // evidence false-positive: NO stored row actually carries
               // a merge key. Deletes no-op; the merge degrades to the
-              // pure O(delta) insert append (pre-r17: a pointless
-              // rewrite of the affected dirs)
+              // pure O(delta) insert append, not a pointless rewrite of
+              // the affected dirs
               preT.unpersist()
-              if (!hasInserts && pendingEff.isEmpty) return head
+              if (!hasInserts && pendingEff.isEmpty) return Left(head)
               (head.dataDirs, inserts, eff, None,
                 ddl,
                 minted, None)
@@ -4263,9 +4179,8 @@ object CommitLog {
                 when(col("__present"), lit("update_postimage"))
                   .otherwise(lit("insert")))
               .select(headCols :+ col("_change_type"): _*)
-            // MERGE-ON-READ vs COPY-ON-WRITE (r17 — VERDICT r16 #1, the
-            // deleteViaDv/updateViaDv economics applied to the merge
-            // verb): when the matched fraction of the affected dirs'
+            // MERGE-ON-READ vs COPY-ON-WRITE (the deleteViaDv/updateViaDv
+            // economics applied to the merge verb): when the matched fraction of the affected dirs'
             // visible rows is under the threshold, the stored pre-image
             // rows are DV-DELETED in place and the changeset's rows land
             // as ONE O(changeset) appended dir — a k-key CDC upsert
@@ -4300,117 +4215,47 @@ object CommitLog {
             }
           }
       }
-      val nextV = cur.map(_.version).getOrElse(0L) + 1
-      val newDir = s"data-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
+      val nextV = nextVersion(cur)
       val attemptMap = cur.map(_.colMap).getOrElse(Map.empty) ++ mintedMap
       // a merge-on-read changeset with NO inserts is pure retraction (the
-      // [[deleteViaDv]] shape): it adds no data dir — staging an empty
-      // one would only leave a spurious file — and its feed keys by the
-      // new vector instead (changesSince already resolves both shapes)
+      // [[deleteViaDv]] shape): it adds no data dir, and its feed keys by
+      // the new vector instead (changesSince resolves both shapes)
       val stageData = dvPlan.isEmpty || hasInserts
-      if (stageData) toPhysical(stage, attemptMap).write
-        .mode(SaveMode.Overwrite).parquet(s"$root/$newDir")
-      // merge-on-read (r17): stage the folded deletion vector BEFORE the
-      // claim, like the data dir — a crash leaves one more orphan for
-      // vacuum, never a half-visible commit
-      val dvName = s"dv-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
-      dvPlan.foreach { case (newPos, touched) =>
-        val allDv = foldVectors(spark, root, cur.get, touched, newPos)
-        f.mkdirs(dvDir(root))
-        allDv.write.mode(SaveMode.Overwrite)
-          .parquet(dvPath(root, dvName).toString)
-      }
-      // change feed written BEFORE the claim, keyed by the new dir name
-      // (unique to this attempt; the new vector's name for a no-dir DV
-      // merge): any reader that can see the merge commit can see its
-      // feed — there is no claim-to-feed window forcing a spurious
-      // resync; a crash here leaves only a staged dir + feed orphan
-      // pair for vacuum
-      val feedKey = if (stageData) newDir else dvName
-      cdf.foreach { case (typed, _) =>
-        f.mkdirs(changesDir(root))
-        typed.write.mode(SaveMode.Overwrite)
-          .parquet(changesPath(root, feedKey).toString)
-      }
-      // SELF-MAINTAINING evidence (r11 close): when the table blooms this
-      // key column, the merge gives its own output dir a sidecar
-      // immediately — one extra scan of the (affected-sized) dir it just
-      // wrote. Without this, every post-merge dir is evidence-less until
-      // the addBloom cadence runs, and successive merges re-rewrite
-      // their predecessors' output (SCALE.md measured the escalation).
-      // Appends stay lean by contrast (cadence-bloomed): an append is
-      // the hot path and must cost O(delta) writes only.
-      if (stageData) {
-        val legacySb = bloomColumn(spark, root)
-        bloomColumns(spark, root).filter(keyCols.contains)
-          .foreach(k => buildSidecarAt(spark, root, newDir,
-            StructType.fromDDL(ddl), attemptMap, k, fpp = 0.001,
-            sidecarPathFor(root, legacySb, k, newDir)))
-      }
-      val ft = footers(spark, root, if (stageData) Seq(newDir) else Nil,
-        effStatsCols, attemptMap)
-      val carried = cur.map(_.stats).getOrElse(Map.empty)
-        .filter { case (d, _) => dirs.contains(d) }
-      val allStats = carried ++ ft.stats
-      val commitDirs = if (stageData) dirs :+ newDir else dirs
-      val c = Commit(nextV, commitDirs, writer, "merge", allStats,
-        statsCols = if (allStats.nonEmpty) effStatsCols else Nil,
-        schemaDDL = Some(ddl),
-        tsMs = Some(System.currentTimeMillis()),
-        constraints = cur.map(_.constraints).getOrElse(Nil),
-        // carried dirs keep their deletion vectors; rewritten dirs'
-        // vectors are MATERIALIZED by the DV-aware affected read above;
-        // under merge-on-read (r17) every touched dir repoints at the
-        // ONE new folded vector instead
-        dv = {
-          val kept = cur.map(_.dv).getOrElse(Map.empty)
-            .filter { case (d, _) => dirs.contains(d) }
-          dvPlan match {
-            case Some((_, touched)) =>
-              (kept -- touched) ++ touched.map(_ -> dvName)
-            case None => kept
-          }
-        },
-        clusterBy = cur.flatMap(_.clusterBy),
-        defaults = cur.map(_.defaults).getOrElse(Nil),
-        colMap = attemptMap,
-        fstats = carryFstats(cur.map(_.fstats).getOrElse(Map.empty), dirs) ++
-          ft.fstats,
-        partitionBy = cur.map(_.partitionBy).getOrElse(Nil),
-        // the merged output dir carries no partition identity (kept by
-        // every partition filter — conservative); carried dirs ride
-        partVals = cur.map(_.partVals).getOrElse(Map.empty)
-          .filter { case (d, _) => dirs.contains(d) },
-        rows = cur.map(_.rows).getOrElse(Map.empty)
-          .filter { case (d, _) => dirs.contains(d) } ++ ft.rows,
-        // touched dirs' vectored share changed without a per-dir count
-        // in hand — drop their entries (their statistics degrade to the
-        // size estimate, never to a wrong exact count)
-        dvRows = cur.map(_.dvRows).getOrElse(Map.empty)
-          .filter { case (d, _) => dirs.contains(d) } --
-          dvPlan.map(_._2).getOrElse(Nil),
-        gens = cur.map(_.gens).getOrElse(Nil))
-      // release the pre-image checkpoint whether the claim wins, loses,
-      // or THROWS (a transient store error must not leak the blocks) —
-      // each attempt materializes its own
-      val won =
-        try tryClaim(spark, root, nextV, encode(c))
-        finally cdf.foreach { case (_, ckpt) => ckpt.unpersist() }
-      if (won) { writeHeadPointer(f, root, nextV); return c }
-      // lost the race: the affected set may have changed under the new
-      // head — discard the staged dir, its feed, its self-built sidecar,
-      // and any staged vector, then re-prune from scratch
-      f.delete(new HPath(s"$root/$newDir"), true)
-      f.delete(changesPath(root, feedKey), true)
-      deleteSidecars(f, root, newDir)
-      if (dvPlan.isDefined) f.delete(dvPath(root, dvName), true)
-      Thread.sleep(50L * attempt)
+      val dvName = stagedName("dv", nextV)
+      // the pre-image checkpoint is released once the staging that reads
+      // it is written, whether or not the staging succeeds
+      try {
+        val newDirs =
+          if (stageData) stageDirs(spark, root, stage, Nil, attemptMap, nextV)
+          else Nil
+        val vector = dvPlan.map { case (newPos, touched) =>
+          stageAt(spark, root, foldVectors(spark, root, cur.get, touched,
+            newPos), dvPath(root, dvName)) }
+        // the change feed keys on the new dir (the new vector for a
+        // no-dir merge)
+        val feedKey = newDirs.headOption.fold(dvName)(_._1)
+        val feed = cdf.map { case (typed, _) =>
+          stageAt(spark, root, typed, changesPath(root, feedKey)) }
+        // a merge on a bloomed key column blooms its own output dir (one
+        // scan of the dir it just wrote), so successive merges keep
+        // pruning each other's output without waiting on the cadence
+        val sidecars = stageSidecars(spark, root, newDirs.map(_._1),
+          StructType.fromDDL(ddl), attemptMap, keyCols.contains)
+        // carried dirs keep their vectors; rewritten dirs' vectors were
+        // materialized by the DV-aware affected read; under merge-on-read
+        // every touched dir points at the ONE new folded vector, and its
+        // vectored row count (not counted per dir here) drops out
+        val touched = dvPlan.map(_._2).getOrElse(Nil)
+        Right(Staged(nextCommit(spark, root, cur, writer, "merge", dirs,
+          newDirs, effStatsCols, ddl, colMap = Some(attemptMap),
+          dv = touched.map(_ -> dvName).toMap),
+          dirPaths(root, newDirs) ++ vector ++ feed ++ sidecars))
+      } finally cdf.foreach { case (_, ckpt) => ckpt.unpersist() }
     }
-    throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive merge claims on $root")
+    optimistic(spark, root, writer, "merge", maxAttempts)(attempt).merge
   }
 
-  /** PARTIAL OVERWRITE — the Delta `replaceWhere` verb (r13): one
+  /** PARTIAL OVERWRITE — the Delta `replaceWhere` verb: one
     * serializable rewrite commit (action "replace") swaps exactly the
     * rows matching `cond` for `data` — the idempotent "restate this
     * day/partition" pattern. Delta's constraint holds: every incoming row
@@ -4432,8 +4277,8 @@ object CommitLog {
     * a time-clustered 1000-dir history rewrites the matching dirs plus
     * the incoming rows, never the table.
     *
-    * Row-VISIBLE (rows are retracted), WITH a persisted changeset (r14
-    * close): the replaced region's rows land as `delete`s and the
+    * Row-VISIBLE (rows are retracted), WITH a persisted changeset: the
+    * replaced region's rows land as `delete`s and the
     * incoming frame as `insert`s, so [[changesSince]] and the CDF
     * stream ride through the restatement. The incoming frame is
     * localCheckpoint-pinned: validation and every claim attempt's stage
@@ -4463,9 +4308,9 @@ object CommitLog {
     * carry untouched with stats preserved; a predicate provably matching
     * nothing returns the head unchanged. History stays time-travelable
     * (unlike [[purge]], which also drops it). None on an empty table.
-    * The `DELETE FROM` statement on catalog tables routes here (r13).
+    * The `DELETE FROM` statement on catalog tables routes here.
     *
-    * MERGE-ON-READ vs COPY-ON-WRITE (r16 — VERDICT r15 #1): the verb
+    * MERGE-ON-READ vs COPY-ON-WRITE: the verb
     * measures the matched fraction of the affected dirs' visible rows in
     * one pass and picks the commit shape per the Delta DV economics —
     *  - fully-matched dirs simply leave the directory list (a metadata
@@ -4483,7 +4328,7 @@ object CommitLog {
     * dirs' visible rows; on the CoW fallback that pass is EXTRA read
     * work (the rewrite re-scans the same dirs) — the price of choosing,
     * bounded by the affected set and warm by the time the rewrite runs.
-    * `dvMaxFraction = 0` forces copy-on-write (the pre-r16 shape) and
+    * `dvMaxFraction = 0` forces copy-on-write and
     * skips the pass entirely. */
   def delete(spark: SparkSession, root: String, writer: String,
       cond: org.apache.spark.sql.Column,
@@ -4498,26 +4343,17 @@ object CommitLog {
     * the copy-on-write engine should run instead — the matched fraction
     * exceeded the threshold, every matched dir was FULLY matched (a
     * rewrite-shaped drop the CoW path commits with its change feed), or
-    * the table emptied under a racing writer. Optimistic like every
-    * verb: the decision re-runs against the fresh head per attempt. */
+    * the table emptied under a racing writer. */
   private def deleteViaDv(spark: SparkSession, root: String,
       writer: String, cond: org.apache.spark.sql.Column,
       maxAttempts: Int, dvMaxFraction: Double): Option[Commit] = {
-    requireTag(writer, "writer")
-    if (dvMaxFraction <= 0) return None
-    init(spark, root)
-    val f = fs(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      repairTornTail(spark, root)
-      val head = latest(spark, root).getOrElse(return None)
-      requireWritable(head)
+    def attempt(cur: Option[Commit]): Either[Option[Commit], Staged] = {
+      val head = cur.getOrElse(return Left(None))
       val conjuncts = predicateConjuncts(spark, root, head, cond)
       val affected =
         if (conjuncts.isEmpty) head.dataDirs
         else CommitLogSource.pruneDirsByEvidence(spark, root, head, conjuncts)
-      if (affected.isEmpty) return Some(head) // provably nothing matches
+      if (affected.isEmpty) return Left(Some(head)) // provably nothing matches
       val headSchema = schemaOf(spark, root, head)
       // ONE pass over the affected dirs' VISIBLE rows decides the shape:
       // per-dir total and cond-TRUE counts (when(cond, 1) counts TRUE
@@ -4528,96 +4364,60 @@ object CommitLog {
         .agg(count(lit(1)).as("__n"), count(when(cond, 1)).as("__m"))
         .collect() // O(affected dirs) rows — the planning decision
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val matchedTotal = perDir.map(_._3).sum
-      if (matchedTotal == 0) return Some(head) // TRUE nowhere: no-op
+      if (perDir.map(_._3).sum == 0) return Left(Some(head)) // TRUE nowhere
       val fullDirs = perDir.filter(t => t._3 == t._2).map(_._1).toSet
       val partial = perDir.filter(t => t._3 > 0 && t._3 < t._2)
       // every matched dir fully matched: a pure drop — rewrite-shaped,
       // let the CoW engine commit it (it stages the empty remainder and
       // persists the change feed keyed by its new dir)
-      if (partial.isEmpty) return None
+      if (partial.isEmpty) return Left(None)
       // the threshold rule: a vector is only worth carrying while it is
       // SMALL relative to what it filters — past the fraction, rewrite
       if (partial.map(_._3).sum > dvMaxFraction * partial.map(_._2).sum)
-        return None
+        return Left(None)
       val partialDirs = partial.map(_._1).toSeq
-      val nextV = head.version + 1
-      val dvName = s"dv-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
+      val dvName = stagedName("dv", head.version + 1)
       // the matched region, pinned ONCE (changeset-sized): it feeds both
       // the new vector (positions) and the change feed (typed rows)
       val m = withPos.filter(cond).localCheckpoint(true)
       try {
         val newPos = m.filter(col(DvDirCol).isin(partialDirs: _*))
           .select(relPath(col(DvPathCol)).as("path"), col(DvPosCol).as("pos"))
-        val allDv = foldVectors(spark, root, head, partialDirs, newPos)
-        f.mkdirs(dvDir(root))
-        allDv.write.mode(SaveMode.Overwrite)
-          .parquet(dvPath(root, dvName).toString)
-        // CHANGE FEED, the prunedRewrite pattern: the deleted rows land
-        // in `_changes/<dvName>` BEFORE the claim — keyed by the new
-        // vector's unique name since a DV commit adds no data dir —
-        // so [[changesSince]] and the CDF stream ride through
-        f.mkdirs(changesDir(root))
-        m.select(headSchema.fieldNames.map(col).toSeq: _*)
-          .withColumn("_change_type", lit("delete"))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(changesPath(root, dvName).toString)
-        val keptDirs = head.dataDirs.filterNot(fullDirs)
-        val c = Commit(nextV, keptDirs, writer, "delete",
-          head.stats.filter { case (d, _) => keptDirs.contains(d) },
-          statsCols = head.statsCols,
-          schemaDDL = Some(carriedDDL(head, headSchema)),
-          tsMs = Some(System.currentTimeMillis()),
-          constraints = head.constraints,
-          // dropped dirs lose their mapping; every partial dir points at
-          // the ONE new folded vector; untouched dirs keep theirs. Dir
-          // stats stay as committed — a vector only narrows a dir's
-          // actual range, so recorded [min, max] remain conservative
-          // (prune-sound) bounds
-          dv = (head.dv -- fullDirs -- partialDirs) ++
-            partialDirs.map(_ -> dvName),
-          clusterBy = head.clusterBy,
-          defaults = head.defaults,
-          colMap = head.colMap,
-          fstats = carryFstats(head.fstats, keptDirs),
-          partitionBy = head.partitionBy,
-          partVals = head.partVals.filter { case (d, _) =>
-            keptDirs.contains(d) },
-          // recorded totals stay AS-WRITTEN; the vectored share rides in
-          // dvRows (cumulative across folds) so visible = rows − dvRows
-          rows = head.rows.filter { case (d, _) => keptDirs.contains(d) },
-          // cumulative only when the prior vectored share is KNOWN: a
-          // dir whose earlier fold dropped its count (the merge-on-read
-          // degrade) stays absent — seeding it at 0 would let the exact
-          // visible-rows statistic silently undercount (code review r19)
-          dvRows = (head.dvRows -- fullDirs) ++ partial.collect {
-            case (d, _, m) if head.dvRows.contains(d) || !head.dv.contains(d) =>
-              d -> (head.dvRows.getOrElse(d, 0L) + m) },
-          gens = head.gens)
-        if (tryClaim(spark, root, nextV, encode(c))) {
-          writeHeadPointer(f, root, nextV); return Some(c)
-        }
-        // lost the race: discard the staged vector + feed and re-decide
-        // against the new head (the affected set may have changed)
-        f.delete(dvPath(root, dvName), true)
-        f.delete(changesPath(root, dvName), true)
+        val vector = stageAt(spark, root,
+          foldVectors(spark, root, head, partialDirs, newPos),
+          dvPath(root, dvName))
+        // the deleted rows feed `_changes/<dvName>`: a DV commit adds no
+        // data dir, so the feed keys on the new vector's unique name
+        val feed = stageAt(spark, root,
+          m.select(headSchema.fieldNames.map(col).toSeq: _*)
+            .withColumn("_change_type", lit("delete")),
+          changesPath(root, dvName))
+        // fully matched dirs leave the list; partial dirs point at the
+        // new folded vector. Dir stats stay as committed — a vector only
+        // narrows a dir's range, so recorded [min, max] stay prune-sound
+        Right(Staged(nextCommit(spark, root, cur, writer, "delete",
+          head.dataDirs.filterNot(fullDirs), Nil, head.statsCols,
+          carriedDDL(head, headSchema),
+          dv = partialDirs.map(_ -> dvName).toMap,
+          dvRows = partial.map(t => t._1 -> t._3).toMap),
+          Seq(vector, feed)))
       } finally m.unpersist()
-      Thread.sleep(50L * attempt)
     }
-    throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive delete claims on $root")
+    if (dvMaxFraction <= 0) None
+    else optimistic(spark, root, writer, "delete", maxAttempts)(attempt)
+      .fold(identity, Some(_))
   }
 
   /** UPDATE the rows where `cond` is TRUE (NULL/false evaluations keep
     * their values — the SQL rule), applying `assignments` (column name →
     * new-value expression, evaluated per row over the table's columns
     * and cast to the column's head type) as one serializable dir-pruned
-    * rewrite commit (action "update", r14 — the engine behind SQL
+    * rewrite commit (action "update", the engine behind SQL
     * `UPDATE` on catalog tables): directories the shared evidence
     * decision proves predicate-free carry untouched with stats
     * preserved; a predicate provably matching nothing returns the head
     * unchanged. Row-VISIBLE (stored rows change), WITH a persisted
-    * changeset (r14 close): the cond-TRUE region's pre- and post-images
+    * changeset: the cond-TRUE region's pre- and post-images
     * land in the change feed, so [[changesSince]] and the CDF stream
     * ride through instead of resyncing. None on an empty table. */
   def update(spark: SparkSession, root: String, writer: String,
@@ -4633,30 +4433,20 @@ object CommitLog {
           assignments = assignments)))
   }
 
-  /** The merge-on-read half of [[update]] (r16, the [[deleteViaDv]]
-    * economics applied to UPDATE — Delta's DV-update shape): when the
-    * matched fraction of the affected dirs' visible rows is under the
-    * threshold, the stored pre-image rows are DV-DELETED in place and
-    * the assigned post-image rows land as one O(changeset) appended
-    * dir — one commit, ~changeset bytes written, instead of rewriting
-    * every might-match dir. Some(commit) when it landed this way (or
-    * the update provably matched nothing); None when the copy-on-write
-    * engine should run. The CDF carries update_preimage/postimage rows
-    * keyed by the new dir, so [[changesSince]] rides through. */
+  /** The merge-on-read half of [[update]] (the [[deleteViaDv]]
+    * economics, Delta's DV-update shape): when the matched fraction of
+    * the affected dirs' visible rows is under the threshold, the stored
+    * pre-image rows are DV-deleted in place and the assigned post-image
+    * rows land as one O(changeset) appended dir. Some(commit) when it
+    * landed this way (or the update provably matched nothing); None when
+    * the copy-on-write engine should run. The change feed carries
+    * update_preimage/postimage rows keyed by the new dir. */
   private def updateViaDv(spark: SparkSession, root: String,
       writer: String, cond: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int, dvMaxFraction: Double): Option[Commit] = {
-    requireTag(writer, "writer")
-    if (dvMaxFraction <= 0) return None
-    init(spark, root)
-    val f = fs(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      repairTornTail(spark, root)
-      val head = latest(spark, root).getOrElse(return None)
-      requireWritable(head)
+    def attempt(cur: Option[Commit]): Either[Option[Commit], Staged] = {
+      val head = cur.getOrElse(return Left(None))
       val headSchema = schemaOf(spark, root, head)
       assignments.foreach { case (n, _) =>
         require(headSchema.fieldNames.contains(n),
@@ -4666,17 +4456,16 @@ object CommitLog {
       val affected =
         if (conjuncts.isEmpty) head.dataDirs
         else CommitLogSource.pruneDirsByEvidence(spark, root, head, conjuncts)
-      if (affected.isEmpty) return Some(head) // provably nothing matches
+      if (affected.isEmpty) return Left(Some(head)) // provably nothing matches
       val withPos = visibleWithPos(spark, root, head, affected)
       val counts = withPos
         .agg(count(lit(1)).as("__n"), count(when(cond, 1)).as("__m"))
         .head()
       val (total, matched) = (counts.getLong(0), counts.getLong(1))
-      if (matched == 0) return Some(head) // TRUE nowhere: no-op
-      if (matched > dvMaxFraction * total) return None // CoW is cheaper
+      if (matched == 0) return Left(Some(head)) // TRUE nowhere: no-op
+      if (matched > dvMaxFraction * total) return Left(None) // CoW is cheaper
       val nextV = head.version + 1
-      val dvName = s"dv-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
-      val newDir = s"data-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
+      val dvName = stagedName("dv", nextV)
       // the matched pre-image region, pinned ONCE (changeset-sized): it
       // feeds the vector (positions), the post-images (assigned values),
       // and the typed change feed
@@ -4694,77 +4483,41 @@ object CommitLog {
         enforceConstraints(post, head.constraints)
         enforceGenerated(post, head.gens)
         // only dirs that actually contributed matched rows take the
-        // vector; evidence false-positives carry untouched (counts per
-        // dir feed the dvRows statistics — r19)
-        val touchedCounts = m.select(dirOfPath(col(DvPathCol)).as("__d"))
+        // vector; evidence false-positives carry untouched
+        val touched = m.select(dirOfPath(col(DvPathCol)).as("__d"))
           .groupBy(col("__d")).agg(count(lit(1)).as("__m"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val touched = touchedCounts.keySet
         val newPos = m.select(relPath(col(DvPathCol)).as("path"),
           col(DvPosCol).as("pos"))
-        val allDv = foldVectors(spark, root, head, touched.toSeq, newPos)
-        f.mkdirs(dvDir(root))
-        allDv.write.mode(SaveMode.Overwrite)
-          .parquet(dvPath(root, dvName).toString)
-        toPhysical(post, head.colMap).write
-          .mode(SaveMode.Overwrite).parquet(s"$root/$newDir")
-        // CDF keyed by the NEW DIR (the commit adds one — the merge
-        // pattern): pre-images then post-images, delta-sized
-        f.mkdirs(changesDir(root))
-        m.select(headSchema.fieldNames.map(col).toSeq: _*)
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(post.withColumn("_change_type",
-            lit("update_postimage")))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(changesPath(root, newDir).toString)
-        locally {
-          val legacySb = bloomColumn(spark, root)
-          bloomColumns(spark, root).foreach(bc =>
-            buildSidecarAt(spark, root, newDir, headSchema, head.colMap, bc,
-              fpp = 0.001, sidecarPathFor(root, legacySb, bc, newDir)))
-        }
-        val effCols = head.statsCols
-        val ft = footers(spark, root, Seq(newDir), effCols, head.colMap)
-        val c = Commit(nextV, head.dataDirs :+ newDir, writer, "update",
-          head.stats ++ ft.stats,
-          statsCols = if ((head.stats ++ ft.stats).nonEmpty) effCols else Nil,
-          schemaDDL = Some(carriedDDL(head, headSchema)),
-          tsMs = Some(System.currentTimeMillis()),
-          constraints = head.constraints,
-          dv = (head.dv -- touched) ++ touched.toSeq.map(_ -> dvName),
-          clusterBy = head.clusterBy,
-          defaults = head.defaults,
-          colMap = head.colMap,
-          fstats = head.fstats ++ ft.fstats,
-          partitionBy = head.partitionBy,
-          // the post-image dir carries no partition identity (kept by
-          // every partition filter — conservative); existing entries ride
-          partVals = head.partVals,
-          rows = head.rows ++ ft.rows,
-          // same unknown-stays-unknown rule as the delete fold (code
-          // review r19): never seed a dv-bearing dir's count at 0
-          dvRows = head.dvRows ++ touchedCounts.collect {
-            case (d, n) if head.dvRows.contains(d) || !head.dv.contains(d) =>
-              d -> (head.dvRows.getOrElse(d, 0L) + n) },
-          gens = head.gens)
-        if (tryClaim(spark, root, nextV, encode(c))) {
-          writeHeadPointer(f, root, nextV); return Some(c)
-        }
-        f.delete(dvPath(root, dvName), true)
-        f.delete(new HPath(s"$root/$newDir"), true)
-        f.delete(changesPath(root, newDir), true)
-        deleteSidecars(f, root, newDir)
+        val vector = stageAt(spark, root,
+          foldVectors(spark, root, head, touched.keys.toSeq, newPos),
+          dvPath(root, dvName))
+        // the post-image dir carries no partition identity (kept by every
+        // partition filter — conservative)
+        val newDirs = stageDirs(spark, root, post, Nil, head.colMap, nextV)
+        val feed = stageAt(spark, root,
+          m.select(headSchema.fieldNames.map(col).toSeq: _*)
+            .withColumn("_change_type", lit("update_preimage"))
+            .unionByName(post.withColumn("_change_type",
+              lit("update_postimage"))),
+          changesPath(root, newDirs.head._1))
+        val sidecars = stageSidecars(spark, root, newDirs.map(_._1),
+          headSchema, head.colMap)
+        Right(Staged(nextCommit(spark, root, cur, writer, "update",
+          head.dataDirs, newDirs, head.statsCols, carriedDDL(head, headSchema),
+          dv = touched.keys.map(_ -> dvName).toMap, dvRows = touched),
+          Seq(vector, feed) ++ dirPaths(root, newDirs) ++ sidecars))
       } finally m.unpersist()
-      Thread.sleep(50L * attempt)
     }
-    throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive update claims on $root")
+    if (dvMaxFraction <= 0) None
+    else optimistic(spark, root, writer, "update", maxAttempts)(attempt)
+      .fold(identity, Some(_))
   }
 
   /** The optimized predicate's conjuncts over `head`'s snapshot — the
     * input to the shared evidence pruning ([[CommitLogSource
     * .pruneDirsByEvidence]]), factored from [[prunedRewrite]] so the DV
-    * delete route prunes IDENTICALLY (r16). No Filter in the optimized
+    * delete route prunes IDENTICALLY. No Filter in the optimized
     * plan (a constant-true predicate) means no evidence: Nil, and the
     * caller conservatively treats every dir as affected. */
   private def predicateConjuncts(spark: SparkSession, root: String,
@@ -4799,26 +4552,18 @@ object CommitLog {
       incoming: Option[DataFrame], declared: Seq[String],
       maxAttempts: Int,
       assignments: Seq[(String, org.apache.spark.sql.Column)] = Nil): Commit = {
-    requireTag(writer, "writer"); requireTag(action, "action")
     declared.foreach(sc => requireTag(sc, "statsCol"))
-    init(spark, root)
-    val f = fs(spark, root)
     val keep = !org.apache.spark.sql.functions.coalesce(cond, lit(false))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      repairTornTail(spark, root)
-      val cur = latest(spark, root)
-      cur.foreach(requireWritable)
+    def attempt(cur: Option[Commit]): Either[Commit, Staged] = {
       val head = cur.getOrElse(incoming match {
-        // empty table: a restatement is a create (ordinary commit loop;
-        // the incoming rows were validated by the caller); a purge of an
-        // empty table has nothing to rewrite
+        // empty table: a restatement is a create (a full-rewrite
+        // [[commit]]; the incoming rows were validated by the caller);
+        // a purge of an empty table has nothing to rewrite
         case Some(inc) =>
           // the creating verb, like every sibling write path on an
-          // empty table (code review r13: audit consumers key on it)
-          return commit(spark, root, writer, "create", maxAttempts,
-            statsCols = declared)(_ => inc)
+          // empty table (audit consumers key on it)
+          return Left(commit(spark, root, writer, "create", maxAttempts,
+            statsCols = declared)(_ => inc))
         case None => throw new IllegalStateException(
           s"CommitLog: $action on an empty table — nothing to rewrite")
       })
@@ -4836,9 +4581,8 @@ object CommitLog {
           s"statsCols ${declared.mkString("[", ",", "]")} conflict with " +
             s"the table's recorded ${head.statsCols.mkString("[", ",", "]")}")
       val effCols = if (declared.nonEmpty) declared else head.statsCols
-      // a bad statsCol must fail BEFORE the staged snapshot write (the
-      // commitImpl/appendImpl guard; code review r13: without it a typo
-      // pays the full rewrite I/O and strands the staging)
+      // a bad statsCol must fail BEFORE the staged snapshot write, not
+      // after paying the full rewrite I/O
       effCols.foreach(sc => require(headSchema.fieldNames.contains(sc),
         s"statsCol '$sc' not in head schema ${headSchema.simpleString}"))
       // affected dirs: resolve the predicate against the head snapshot
@@ -4852,7 +4596,7 @@ object CommitLog {
       // a predicate provably absent from every dir: a purge is a no-op
       // (the head already holds nothing to forget); a restatement still
       // commits (it INSERTS its region even where nothing matched)
-      if (affected.isEmpty && incoming.isEmpty) return head
+      if (affected.isEmpty && incoming.isEmpty) return Left(head)
       // assigned columns must exist in the head schema, checked before
       // any staging I/O (the statsCol-guard rule)
       assignments.foreach { case (n, _) =>
@@ -4881,10 +4625,10 @@ object CommitLog {
               }
             }: _*))
         }
-      // CHECK constraints (r14): a restatement's incoming rows and an
-      // update's rewritten rows are NEW values and gate before staging;
+      // CHECK constraints: a restatement's incoming rows and an update's
+      // rewritten rows are NEW values and gate before staging;
       // delete/purge keeps only rows that satisfied when written.
-      // GENERATED columns (r19) validate on the same new-value surfaces.
+      // GENERATED columns validate on the same new-value surfaces.
       incoming.foreach { inc => enforceConstraints(inc, head.constraints)
         enforceGenerated(inc, head.gens) }
       if (assignments.nonEmpty)
@@ -4896,29 +4640,14 @@ object CommitLog {
         case (None, Some(inc)) => inc
         case (None, None) => throw new IllegalStateException("unreachable")
       }
-      val nextV = head.version + 1
-      // partition spec (r19): a partitioned table's restatement stages
-      // SPLIT per partition tuple — a one-day restatement then rewrites
-      // only that day's dirs and every other partition carries
-      // byte-identical. An empty remainder still stages one (possibly
-      // empty) dir: the commit needs a feed key and ≥1 dir is free.
-      val newDirs: Seq[(String, Seq[String])] = {
-        val split =
-          if (head.partitionBy.isEmpty) Nil
-          else stagePartitioned(spark, root, stage, head.partitionBy,
-            head.colMap, nextV)
-        if (split.nonEmpty) split
-        else {
-          val d = s"data-${java.util.UUID.randomUUID().toString.take(8)}-v$nextV"
-          toPhysical(stage, head.colMap).write
-            .mode(SaveMode.Overwrite).parquet(s"$root/$d")
-          Seq(d -> Nil)
-        }
-      }
+      // a partitioned table's restatement stages one dir per tuple, so a
+      // one-day restatement rewrites only that day's dirs
+      val newDirs = stageDirs(spark, root, stage, head.partitionBy,
+        head.colMap, head.version + 1)
       // the change feed keys on the FIRST new dir ([[changesSince]]
       // probes the added dirs for the one feed file)
       val newDir = newDirs.head._1
-      // CHANGE FEED for the pruned-rewrite verbs (r14): delete, update,
+      // CHANGE FEED for the pruned-rewrite verbs: delete, update,
       // and replaceWhere persist their typed changeset to
       // `_changes/<newDir>` BEFORE the claim — the merge pattern — so
       // [[changesSince]] and the CDF stream ride through them instead of
@@ -4929,10 +4658,10 @@ object CommitLog {
       // incoming rows. PURGE deliberately persists NOTHING — a feed that
       // retained purged rows would defeat right-to-be-forgotten, so its
       // consumers still resync (changesSince → None). SKIPPED when no
-      // dir was affected (code review r14 close): the commit is then
+      // dir was affected: the commit is then
       // append-shaped and [[changesSince]] synthesizes the inserts from
       // the new dir itself — the feed file would never be read.
-      if (action != "purge" && affected.nonEmpty) {
+      val feed = if (action == "purge" || affected.isEmpty) None else {
         val matchedTrue = // the SQL-rule complement of the keep set
           readCommitDirs(spark, root, head, affected)
             .filter(cond).select(headCols: _*)
@@ -4943,7 +4672,7 @@ object CommitLog {
             // pre/post images derive from ONE materialized read of the
             // delta-sized matched region (the merge pinning pattern —
             // unpinned, the union's write would scan the affected dirs
-            // twice more; code review r14 close)
+            // twice more)
             val m = matchedTrue.localCheckpoint(true)
             val am = assignments.toMap
             val post = m.select(headSchema.fields.toSeq.map { f =>
@@ -4962,59 +4691,19 @@ object CommitLog {
               .withColumn("_change_type", lit("insert"))))
               .getOrElse(dels), None)
         }
-        try {
-          f.mkdirs(changesDir(root))
-          typed.write.mode(SaveMode.Overwrite)
-            .parquet(changesPath(root, newDir).toString)
-        } finally ckpt.foreach(_.unpersist())
+        try Some(stageAt(spark, root, typed, changesPath(root, newDir)))
+        finally ckpt.foreach(_.unpersist())
       }
-      // self-maintaining bloom evidence, the merge rule: a bloomed
-      // table's rewrite output gets its sidecar immediately (marker read
-      // ONCE — code review r13)
-      {
-        val legacySb = bloomColumn(spark, root)
-        bloomColumns(spark, root).foreach(bc =>
-          newDirs.foreach { case (nd, _) =>
-            buildSidecarAt(spark, root, nd, headSchema, head.colMap, bc,
-              fpp = 0.001, sidecarPathFor(root, legacySb, bc, nd)) })
-      }
-      val ft = footers(spark, root, newDirs.map(_._1), effCols, head.colMap)
-      val allStats = head.stats
-        .filter { case (d, _) => carried.contains(d) } ++ ft.stats
-      val c = Commit(nextV, carried ++ newDirs.map(_._1), writer, action,
-        allStats,
-        statsCols = if (allStats.nonEmpty) effCols else Nil,
-        schemaDDL = Some(carriedDDL(head, headSchema)),
-        tsMs = Some(System.currentTimeMillis()),
-        constraints = head.constraints,
-        // carried dirs keep their deletion vectors; the affected dirs'
-        // vectors are MATERIALIZED by the DV-aware reads above
-        dv = head.dv.filter { case (d, _) => carried.contains(d) },
-        clusterBy = head.clusterBy,
-        defaults = head.defaults,
-        colMap = head.colMap,
-        fstats = carryFstats(head.fstats, carried) ++ ft.fstats,
-        partitionBy = head.partitionBy,
-        partVals = head.partVals.filter { case (d, _) =>
-          carried.contains(d) } ++
-          newDirs.collect { case (d, vs) if vs.nonEmpty => d -> vs },
-        rows = head.rows.filter { case (d, _) =>
-          carried.contains(d) } ++ ft.rows,
-        dvRows = head.dvRows.filter { case (d, _) => carried.contains(d) },
-        gens = head.gens)
-      if (tryClaim(spark, root, nextV, encode(c))) {
-        writeHeadPointer(f, root, nextV); return c
-      }
-      // lost the race: the affected set may differ under the new head
-      newDirs.foreach { case (nd, _) =>
-        f.delete(new HPath(s"$root/$nd"), true)
-        deleteSidecars(f, root, nd)
-      }
-      f.delete(changesPath(root, newDir), true)
-      Thread.sleep(50L * attempt)
+      // a bloomed table's rewrite output gets its sidecars immediately
+      val sidecars = stageSidecars(spark, root, newDirs.map(_._1), headSchema,
+        head.colMap)
+      // carried dirs keep their deletion vectors; the affected dirs'
+      // vectors are MATERIALIZED by the DV-aware reads above
+      Right(Staged(nextCommit(spark, root, cur, writer, action, carried,
+        newDirs, effCols, carriedDDL(head, headSchema)),
+        dirPaths(root, newDirs) ++ feed ++ sidecars))
     }
-    throw new java.io.IOException(
-      s"CommitLog: $writer lost $maxAttempts consecutive $action claims on $root")
+    optimistic(spark, root, writer, action, maxAttempts)(attempt).merge
   }
 
   /** Retain only the newest `keep` committed versions: older commit FILES

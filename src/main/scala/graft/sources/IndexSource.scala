@@ -534,12 +534,18 @@ private[graft] final class IndexMicroBatchStream(dir: String, buckets: Int,
   private val allowedBuckets: Option[Set[Long]] =
     terms.map(_.map(IndexSource.bucketOf(_, buckets)))
 
-  /** (path, seg) of every postings file in the tailed scope. A structured
-    * `bucket=B/seg=S` walk, NOT a blind recursive listing: a concurrent
-    * appender keeps `.spark-staging-*`/`_temporary` trees under the root
-    * whose files vanish mid-listing — recursing into them races and
-    * crashes the stream; the layout walk never enters them. */
-  private def segFiles(): Seq[(String, Long, Long)] = {
+  /** (path, bucket, seg) of every postings file in the tailed scope whose
+    * seg `wanted` admits. A structured `bucket=B/seg=S` walk, NOT a blind
+    * recursive listing: a concurrent appender keeps
+    * `.spark-staging-*`/`_temporary` trees under the root whose files
+    * vanish mid-listing — recursing into them races and crashes the
+    * stream; the layout walk never enters them. A seg dir a dynamic
+    * partition overwrite is re-landing can vanish between the bucket
+    * listing and its own; with `skipVanished` it is left out of this
+    * listing (offset discovery finds it on a later trigger), otherwise
+    * the failure propagates. */
+  private def segFiles(wanted: Long => Boolean = _ => true,
+      skipVanished: Boolean = true): Seq[(String, Long, Long)] = {
     val root = new HPath(dir)
     val fs = root.getFileSystem(conf.value)
     if (!fs.exists(root)) return Seq.empty
@@ -553,27 +559,38 @@ private[graft] final class IndexMicroBatchStream(dir: String, buckets: Int,
            if segDir.isDirectory && segDir.getPath.getName.startsWith("seg=")) {
       val bucket = b.getPath.getName.stripPrefix("bucket=").toLong
       val seg = segDir.getPath.getName.stripPrefix("seg=").toLong
-      for (f <- fs.listStatus(segDir.getPath).toSeq
-             if f.getPath.getName.endsWith(".parquet"))
-        found += ((f.getPath.toString, bucket, seg))
+      if (wanted(seg)) {
+        val files =
+          try fs.listStatus(segDir.getPath).toSeq
+          catch { case _: java.io.IOException if skipVanished => Nil }
+        for (f <- files if f.getPath.getName.endsWith(".parquet"))
+          found += ((f.getPath.toString, bucket, seg))
+      }
     }
     found.sortBy(_._1).toSeq
   }
 
+  /** The highest seg [[latestOffset]] reported: a skipped mid-replace seg
+    * never pulls the reported offset back below it. */
+  @volatile private var reported = -1L
+
   override def initialOffset(): Offset = IndexSegOffset(-1L)
-  override def latestOffset(): Offset =
-    IndexSegOffset(segFiles().foldLeft(-1L)((m, f) => math.max(m, f._3)))
+  override def latestOffset(): Offset = {
+    reported = segFiles().foldLeft(reported)((m, f) => math.max(m, f._3))
+    IndexSegOffset(reported)
+  }
   override def deserializeOffset(json: String): Offset =
     IndexSegOffset.fromJson(json)
 
   override def getDefaultReadLimit: ReadLimit =
     maxSegsPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
 
+  /** Lists only segs past `start`: a delivered seg being re-landed (the
+    * replay of a committed append) is never touched. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[IndexSegOffset].maxSeg
-    val fresh = segFiles().map(_._3)
-      .filter(seg => seg > s && availableNowEnd.forall(seg <= _))
-      .distinct.sorted
+    val fresh = segFiles(seg => seg > s && availableNowEnd.forall(seg <= _))
+      .map(_._3).distinct.sorted
     val admitted = limit match {
       case m: ReadMaxFiles => fresh.take(m.maxFiles())
       case _ => fresh
@@ -584,9 +601,11 @@ private[graft] final class IndexMicroBatchStream(dir: String, buckets: Int,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[IndexSegOffset].maxSeg
     val e = end.asInstanceOf[IndexSegOffset].maxSeg
-    segFiles().collect {
-      case (p, bucket, seg) if seg > s && seg <= e =>
-        IndexFilePartition(p, bucket.toInt): InputPartition
+    // a batch reads each of its segs whole: a seg of (s, e] that fails
+    // to list fails the batch (a restart re-plans it from the
+    // checkpoint) instead of being dropped from it
+    segFiles(seg => seg > s && seg <= e, skipVanished = false).map {
+      case (p, bucket, _) => IndexFilePartition(p, bucket.toInt): InputPartition
     }.toArray
   }
 

@@ -65,7 +65,7 @@ class CommitLogJobsSpec extends SparkSpec {
     assert(df.count() == 450L)
   }
 
-  test("per-verb job counts (reported)") {
+  test("per-verb job counts") {
     val root = table()
     val (_, merge) = jobsOf(CommitLog.merge(spark, root, "w", "k",
       batch(100L, 100L)))
@@ -73,12 +73,24 @@ class CommitLogJobsSpec extends SparkSpec {
       col("k") < 50L, dvMaxFraction = 0.0))
     val (_, dv) = jobsOf(CommitLog.delete(spark, root, "w",
       col("k") === 300L))
+    val (_, dvUpdate) = jobsOf(CommitLog.update(spark, root, "w",
+      col("k") === 301L, Seq("name" -> lit("updated"))))
+    val (_, cowUpdate) = jobsOf(CommitLog.update(spark, root, "w",
+      col("k") < 80L, Seq("name" -> lit("updated")), dvMaxFraction = 0.0))
+    val (_, replace) = jobsOf(CommitLog.replaceWhere(spark, root, "w",
+      col("k") >= 400L, batch(400L, 50L)))
     val (_, where) = jobsOf(CommitLog.readLatestWhere(spark, root, "k",
       0L, 10L).get)
     val (_, point) = jobsOf(CommitLog.readLatestPoint(spark, root, "k",
       7L).get)
     info(s"merge $merge, copy-on-write delete $cow, dv delete $dv, " +
-      s"readLatestWhere build $where, readLatestPoint build $point")
+      s"dv update $dvUpdate, copy-on-write update $cowUpdate, " +
+      s"replaceWhere $replace, readLatestWhere build $where, " +
+      s"readLatestPoint build $point")
+    // the counts each verb ran when they were pinned; a verb's jobs change
+    // only with what it computes, never with how it commits
+    assert(merge == 18 && cow == 2 && dv == 5)
+    assert(dvUpdate == 10 && cowUpdate == 3 && replace == 7)
     assert(where == 0 && point == 0)
   }
 }

@@ -549,6 +549,42 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("graft.index streaming read: a seg dir that fails to list while it is replaced arrives on a later trigger") {
+    // a dynamic partition overwrite re-landing a seg removes its dir for a
+    // moment; the stream's listing of that dir then fails. The
+    // `failseglist` scheme fails the first listing of a seg dir that way.
+    import org.apache.spark.sql.functions._
+    val docs = Tables.documents(spark, sf).select(col("doc_id"),
+      explode(expr(graft.functions.TextTokens.ToksSql)).as("term"))
+      .select("term", "doc_id")
+    val dir = Files.createTempDirectory("graft-idx-relist").toString
+    docs.write.format("graft.index").option("dir", dir)
+      .mode("overwrite").save()
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failseglist.impl", classOf[FailSegListFileSystem].getName)
+    conf.setBoolean("fs.failseglist.impl.disable.cache", true)
+    FailSegListFileSystem.armed.set(true)
+    try {
+      val q = spark.readStream.format("graft.index")
+        .option("dir", s"failseglist://$dir").load()
+        .writeStream.format("memory").queryName("idx_relist")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        q.processAllAvailable()
+        assert(!FailSegListFileSystem.armed.get,
+          "the stream must have met the failing seg listing")
+        assert(rows(spark.table("idx_relist").orderBy("term", "doc_id")) ==
+          rows(spark.read.format("graft.index").option("dir", dir).load()
+            .orderBy("term", "doc_id")))
+      } finally q.stop()
+    } finally {
+      FailSegListFileSystem.armed.set(false)
+      conf.unset("fs.failseglist.impl")
+      conf.unset("fs.failseglist.impl.disable.cache")
+    }
+  }
+
   test("maxSegsPerTrigger drains a segment backlog in bounded micro-batches") {
     // Admission control (SupportsAdmissionControl, the Kafka
     // maxOffsetsPerTrigger / file-source maxFilesPerTrigger shape): a tail
@@ -1408,4 +1444,23 @@ class StreamingSpec extends SparkSpec {
         .start()
     }
   }
+}
+
+/** The local filesystem under the `failseglist` scheme, where the first
+  * listing of a `seg=` dir after [[FailSegListFileSystem.armed]] is set
+  * fails the way Hadoop's local listing does when the dir vanishes
+  * mid-listing. */
+class FailSegListFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failseglist:///")
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    if (f.getName.startsWith("seg=") &&
+        FailSegListFileSystem.armed.getAndSet(false))
+      throw new java.io.IOException(
+        s"Invalid directory or I/O error occurred for dir: $f")
+    else super.listStatus(f)
+}
+
+object FailSegListFileSystem {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
