@@ -59,11 +59,13 @@ import graft.sources.{CommitLog, CommitLogCatalogTable}
   *    through the ANALYZER (r15 — VERDICT r14 #5: the table declares
   *    AUTOMATIC_SCHEMA_EVOLUTION, so ResolveMergeIntoSchemaEvolution
   *    computes the source-vs-target column adds and routes them through
-  *    GraftCatalog.alterTable → [[CommitLog.evolveSchema]], ONE audited
-  *    metadata-only commit, then re-resolves the target with the widened
-  *    schema — old dirs read the new columns as typed NULLs and
-  *    incremental consumers ride through; non-additive changes refuse in
-  *    alterTable). Refused: reassigning an ON key column to a new value
+  *    GraftCatalog.alterTable, which STAGES the top-level adds instead
+  *    of committing them ([[CommitLog.evolveColumns]] is the explicit
+  *    ALTER TABLE face); the merge execution folds the widening into its
+  *    one row-visible commit, and the analyzer re-resolves the target
+  *    with the widened schema — old dirs read the new columns as typed
+  *    NULLs; nested and non-additive changes refuse in alterTable).
+  *    Refused: reassigning an ON key column to a new value
   *    (a key change is a DELETE plus an INSERT), assigning struct FIELDS
   *    of an ON key column, and MERGE-cardinality violations — a target
   *    key taking a matched UPDATE more than once (duplicate source keys

@@ -904,7 +904,8 @@ object CommitLog {
         (math.min(p._1, q._1), math.max(p._2, q._2)))
     def chunk(cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
         : Option[Range] = {
-      val st = cc.getStatistics
+      val st: org.apache.parquet.column.statistics.Statistics[_] =
+        cc.getStatistics
       val m = footerDomain(cc.getPrimitiveType)
       if (st.hasNonNullValue)
         for (lo <- m(st.genericGetMin); hi <- m(st.genericGetMax))
@@ -1766,7 +1767,7 @@ object CommitLog {
         tsMs = Some(System.currentTimeMillis())), Nil))
     }.merge
 
-  /** ADD a CHECK constraint (r14 — the Delta `ALTER TABLE ADD CONSTRAINT
+  /** ADD a CHECK constraint (the Delta `ALTER TABLE ADD CONSTRAINT
     * CHECK` verb): records (name → SQL expression) in a new audited
     * metadata commit after validating that EVERY existing row satisfies
     * it (the Delta add-constraint table scan, re-run against the fresh
@@ -1780,10 +1781,9 @@ object CommitLog {
     addConstraints(spark, root, writer, Seq(name -> exprSql), maxAttempts)
 
   /** ADD several CHECK constraints in ONE audited metadata commit — the
-    * `CREATE TABLE (… CHECK …, … CHECK …)` face (ADVICE r14: per-
-    * constraint commits meant a failed later constraint left the earlier
-    * ones live on a pre-existing external table, and the corrected
-    * retry then hit 'already exists'). All names are validated against
+    * `CREATE TABLE (… CHECK …, … CHECK …)` face, so a failing later
+    * constraint never leaves the earlier ones live on a pre-existing
+    * external table. All names are validated against
     * the head AND each other, and EVERY existing row is checked against
     * every new predicate, before anything commits — all-or-nothing. */
   def addConstraints(spark: SparkSession, root: String, writer: String,
@@ -1806,36 +1806,30 @@ object CommitLog {
     }
   }
 
-  /** METADATA-ONLY additive schema evolution (r14 — the `ALTER TABLE …
-    * ADD COLUMNS` face of the r12 evolve-append): record the widened
-    * schema (head's fields, new NULLABLE fields after) in a new audited
-    * metadata commit WITHOUT writing any data — every reader pins the
-    * recorded DDL, so existing directories fill the new columns with
-    * typed NULLs, exactly the evolve-append semantics minus the delta.
-    * rowInvisible (no row changes — consumers ride through); later
-    * appends must carry the widened schema, the exact-match contract. */
-  def evolveSchema(spark: SparkSession, root: String, writer: String,
-      added: Seq[org.apache.spark.sql.types.StructField],
-      maxAttempts: Int = 20,
-      defaults: Map[String, String] = Map.empty): Commit = {
-    require(added.nonEmpty, "evolveSchema needs at least one column")
-    evolveColumns(spark, root, writer, added, defaults, Nil, maxAttempts)
-  }
+  /** The classes of the time- or session-dependent calls (`current_*`,
+    * `now`, `localtimestamp`) in analyzed expressions `es`. `deterministic`
+    * admits them (current_date() is constant within one query), but a
+    * recorded expression evaluated again later, or by another writer's
+    * session, must not depend on them. */
+  private def sessionDependent(
+      es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[String] =
+    es.flatMap(_.collect {
+      case x if x.getClass.getSimpleName.startsWith("Current") ||
+          x.getClass.getSimpleName == "Now" ||
+          x.getClass.getSimpleName == "LocalTimestamp" => x.getClass.getSimpleName
+    }).distinct
 
-  /** Validate `defaults` for an evolution adding the columns/fields in
-    * `added` — keys are top-level names OR dot-joined nested paths (r19),
-    * each mapping to the added field it attaches to (extracted from
-    * [[evolveSchema]] so the combined verb shares it verbatim). */
+  /** Validate the existence `defaults` of an evolution adding `added`:
+    * each key names an added field (by its dot-joined path), and each
+    * expression is a deterministic constant castable to the field's type,
+    * evaluated once before anything commits, since a malformed default
+    * would fail every later read. A default is evaluated again at every
+    * read, so a time- or session-dependent one would change a committed
+    * snapshot's answer over time. */
   private def validateDefaults(spark: SparkSession,
       added: Map[String, org.apache.spark.sql.types.StructField],
       defaults: Map[String, String]): Unit = {
-    // EXISTENCE defaults (r16 — VERDICT r15 #5): recorded per added
-    // column, applied by readers to pre-evolution dirs only (their
-    // typed-NULL fill coalesces to the constant; later writes store
-    // explicit values). The expression must be a deterministic constant
-    // — validated by evaluating it once, typed, before anything commits
-    // (a malformed default must not brick every future read).
-    // default column names embed UNESCAPED in the defaults block
+    // default names embed unescaped in the defaults block
     defaults.keys.foreach(n => requireTag(n, "defaulted column name"))
     val badDefault = defaults.keySet -- added.keySet
     require(badDefault.isEmpty,
@@ -1848,229 +1842,95 @@ object CommitLog {
       require(probe.queryExecution.analyzed.expressions
         .forall(_.deterministic),
         s"DEFAULT for '$n' must be deterministic, got: $e")
-      // `deterministic` admits time/session-dependent expressions
-      // (current_date() is "deterministic" within one query) — but an
-      // existence default is re-evaluated at EVERY read, so such an
-      // expression would make the same committed snapshot answer
-      // differently tomorrow (r16 code review). Reject the CurrentLike
-      // family outright; the recorded text must be a true constant.
-      val timeish = probe.queryExecution.analyzed.expressions
-        .flatMap(_.collect {
-          case x if x.getClass.getSimpleName.startsWith("Current") ||
-              x.getClass.getSimpleName == "Now" ||
-              x.getClass.getSimpleName == "LocalTimestamp" => x
-        })
+      val timeish = sessionDependent(probe.queryExecution.analyzed.expressions)
       require(timeish.isEmpty,
         s"DEFAULT for '$n' must be a CONSTANT — '$e' is time/session-" +
-          s"dependent (${timeish.map(_.getClass.getSimpleName).distinct
-            .mkString(", ")}); a re-evaluated default would change the " +
-          "same committed snapshot's answer over time")
+          s"dependent (${timeish.mkString(", ")}); a re-evaluated default " +
+          "would change the same committed snapshot's answer over time")
       probe.collect() // evaluates: a bad cast or unresolvable fails HERE
     }
   }
 
-  /** ONE-STATEMENT additive evolution, top-level AND nested (ADVICE r17:
-    * the catalog's `ALTER TABLE … ADD COLUMNS` used to commit top-level
-    * adds first and then one commit PER parent struct path, so a
-    * statement mixing valid and invalid adds could leave the table
-    * half-evolved — and broke the documented 'one statement = one
-    * evolution commit' invariant). Every path and name is validated
-    * against the head schema INSIDE the one claim attempt, so nothing
-    * commits unless everything resolves; nested paths resolve against
-    * the schema WITH the statement's own top-level adds applied (a
-    * statement may add a struct and a field inside it). */
+  /** ADD COLUMNS, top-level and nested, as ONE metadata commit that
+    * writes no data. Each added field comes with its parent path: `Nil`
+    * for a top-level column, the struct column's path for a field at any
+    * depth. The commit records the widened schema; every reader pins the
+    * recorded DDL, and parquet's schema-clipped read fills a column or
+    * nested field missing from an older file with typed NULL, so existing
+    * dirs, merges, compactions and the connector and catalog routes read
+    * through the change. rowInvisible (no row changes, so incremental
+    * consumers ride through); later appends must carry the widened
+    * schema, the exact-match contract.
+    *
+    * Fields are NULLABLE and appended at the end of their struct (no
+    * FIRST/AFTER reordering of committed parquet). A parent path resolves
+    * case-insensitively, Spark's rule, and must name a struct column
+    * (array and map element structs are out of scope); a name already at
+    * the target, in any case, refuses, since Spark would then find every
+    * later reference ambiguous. Top-level adds apply first, so one
+    * statement may add a struct and a field inside it. Every path and name
+    * is validated against the head inside the claim attempt: nothing
+    * commits unless everything resolves.
+    *
+    * `defaults` are EXISTENCE defaults keyed by the added field's
+    * dot-joined path (its name at top level): dirs staged before this
+    * commit read the constant wherever the parent exists, later writes
+    * store explicit values. A dotted key gates the 'defaults-nested'
+    * reader feature. Under an active column mapping each added field takes
+    * a fresh `col-<id>` physical name, so a name re-added after a DROP
+    * never reads the dropped field's bytes. */
   def evolveColumns(spark: SparkSession, root: String, writer: String,
-      topAdded: Seq[org.apache.spark.sql.types.StructField],
-      defaults: Map[String, String],
-      nested: Seq[(Seq[String], Seq[org.apache.spark.sql.types.StructField])],
+      added: Seq[(Seq[String], org.apache.spark.sql.types.StructField)],
+      defaults: Map[String, String] = Map.empty,
       maxAttempts: Int = 20): Commit = {
     import org.apache.spark.sql.types.StructType
-    require(topAdded.nonEmpty || nested.nonEmpty,
-      "evolveColumns needs at least one added column or nested field")
-    nested.foreach { case (path, fs) =>
-      require(path.nonEmpty,
-        "evolveColumns: a nested add needs the struct column's path")
-      require(fs.nonEmpty,
-        s"evolveColumns: no fields to add under ${path.mkString(".")}")
-      require(fs.forall(_.nullable),
-        "evolveColumns adds NULLABLE fields only — existing rows read " +
-          "the new field as NULL")
-      val inDup = fs.groupBy(_.name.toLowerCase).filter(_._2.size > 1)
-      require(inDup.isEmpty,
-        s"evolveColumns: duplicate added fields ${inDup.keys.mkString(", ")} " +
-          s"under ${path.mkString(".")}")
-    }
-    // defaults key by top-level NAME or dot-joined nested PATH (r19 —
-    // VERDICT r18 #3): a dotted key attaches to the nested field this
-    // statement adds at that path. Dotted keys demand dot-free path
-    // segments (a segment containing '.' would make the key ambiguous —
-    // the colmap rule applied to the defaults block).
-    // a TOP-LEVEL added column whose literal name contains '.' could
-    // carry a default that applyDefaults would misread as a nested
-    // path (grouped under a head segment that doesn't exist — the
-    // constant would silently never coalesce); refuse the combination
-    // (code review r19)
+    require(added.nonEmpty, "evolveColumns needs at least one column")
+    require(added.forall(_._2.nullable),
+      "evolveColumns adds NULLABLE columns only — existing rows read " +
+        "the new column as NULL (or its recorded DEFAULT)")
+    // a dotted top-level name would be misread as a nested path by the
+    // path-keyed defaults block, and its constant would never coalesce
     defaults.keys.filter(_.contains('.')).foreach(k =>
-      require(!topAdded.exists(_.name == k),
+      require(!added.exists(a => a._1.isEmpty && a._2.name == k),
         s"DEFAULT for added column '$k': its name contains '.', which " +
           "is ambiguous with path-keyed nested defaults — rename the " +
           "column"))
-    val defaultTargets: Map[String, org.apache.spark.sql.types.StructField] =
-      topAdded.map(f => f.name -> f).toMap ++
-        nested.flatMap { case (path, fs) =>
-          fs.map(f => (path :+ f.name).mkString(".") -> f) }
-    if (defaults.keys.exists(_.contains('.')))
-      nested.foreach { case (path, fs) =>
-        (path ++ fs.map(_.name)).foreach(seg =>
-          require(!seg.contains('.'),
-            s"evolveColumns: '$seg' contains '.' — ambiguous under " +
-              "path-keyed nested defaults"))
-      }
-    validateDefaults(spark, defaultTargets, defaults)
+    validateDefaults(spark, added.map { case (p, f) =>
+      (p :+ f.name).mkString(".") -> f }.toMap, defaults)
     metadataCommit(spark, root, writer, "evolve", maxAttempts) { cur =>
       val headSchema = schemaOf(spark, root, cur)
-      // CASE-INSENSITIVE duplicate checks (code review r14 close): Spark
-      // resolves case-insensitively by default, so committing both 'id'
-      // and 'ID' would make every later reference AMBIGUOUS_REFERENCE
-      val headLower = headSchema.fieldNames.map(_.toLowerCase).toSet
-      val dup = topAdded.map(_.name).filter(n => headLower(n.toLowerCase))
-      require(dup.isEmpty,
-        s"evolveSchema: ${dup.mkString(", ")} already in head schema " +
-          headSchema.simpleString)
-      val inDup = topAdded.groupBy(_.name.toLowerCase).filter(_._2.size > 1)
-      require(inDup.isEmpty,
-        s"evolveSchema: duplicate added columns ${inDup.keys.mkString(", ")}")
-      require(topAdded.forall(_.nullable),
-        "evolveSchema adds NULLABLE columns only — existing rows read " +
-          "the new column as NULL (or its recorded DEFAULT)")
-      if (defaults.keys.exists(_.contains('.'))) {
-        val dotted = headSchema.fieldNames.filter(_.contains('.'))
-        require(dotted.isEmpty,
-          s"evolveColumns: top-level column(s) ${dotted.mkString("'", "', '", "'")} " +
-            "contain '.', ambiguous against path-keyed nested defaults — " +
-            "rename them first")
+      // nested entries keyed by dot-joined paths need dot-free names
+      if (cur.colMap.nonEmpty || defaults.keys.exists(_.contains('.')))
+        added.collect { case (p, f) if p.nonEmpty => p :+ f.name }
+          .foreach(requireDotFreeFor("ADD COLUMNS", _, headSchema))
+      val ordered = added.sortBy(_._1.length)
+      val widened = ordered.foldLeft(headSchema) { case (st, (p, f)) =>
+        editPath(st, p, AddField(f)) }
+      // physical keys take the schema's spelling of each parent path
+      def canonical(st: StructType, p: Seq[String]): Seq[String] = p match {
+        case seg +: rest =>
+          val f = st.fields.find(_.name.equalsIgnoreCase(seg)).get
+          f.name +: (f.dataType match {
+            case s: StructType => canonical(s, rest)
+            case _ => Nil
+          })
+        case _ => Nil
       }
-      // nested adds widen AFTER the top-level adds, against the same
-      // in-statement schema — every path must resolve or nothing commits
-      val topWidened = StructType(headSchema.fields ++ topAdded)
-      val widened = nested.foldLeft(topWidened) { case (st, (path, fs)) =>
-        widenStructAt(st, path, fs, "<root>")
-      }
-      // under an ACTIVE mapping (r18 — nested column mapping), nested
-      // adds take fresh path-keyed physicals like top-level ones: a
-      // nested name re-added after a DROP must never resurrect the
-      // dropped field's stored bytes. Keys canonicalize to the schema's
-      // segment spelling (paths resolve case-insensitively above).
-      def canonicalPath(st: StructType, p: Seq[String]): Seq[String] =
-        p match {
-          case Seq() => Nil
-          case seg +: rest =>
-            val f = st.fields.find(_.name.equalsIgnoreCase(seg)).get
-            f.name +: (f.dataType match {
-              case s: StructType => canonicalPath(s, rest)
-              case _ => Nil
-            })
-        }
-      val nestedPhysicals =
-        if (cur.colMap.isEmpty) Nil
-        else nested.flatMap { case (path, fs) =>
-          (path ++ fs.map(_.name)).foreach(seg =>
-            require(!seg.contains('.'),
-              s"ADD COLUMNS: '$seg' contains '.' — ambiguous under " +
-                "path-keyed column mapping"))
-          fs.map(f => canonicalPath(widened, path :+ f.name).mkString(".") ->
-            s"col-${java.util.UUID.randomUUID().toString.take(8)}")
-        }
       cur.copy(schemaDDL = Some(widened.toDDL),
-        // since = THIS commit's version: dirs staged before it predate
-        // the column and coalesce to the constant; dirs at-or-after
-        // store explicit values
+        // dirs staged before this version predate the column and read
+        // the constant; dirs at or after it store explicit values
         defaults = cur.defaults ++ defaults.toSeq.sortBy(_._1)
           .map { case (n, e) => (n, cur.version + 1, e) },
-        // under an ACTIVE column mapping (r16), added columns take a
-        // fresh physical name — a logical name re-added after a DROP
-        // must never resurrect the dropped column's stored bytes
         colMap =
           if (cur.colMap.isEmpty) cur.colMap
-          else cur.colMap ++ topAdded.map(f => f.name ->
-            s"col-${java.util.UUID.randomUUID().toString.take(8)}") ++
-            nestedPhysicals)
+          else cur.colMap ++ ordered.map { case (p, f) =>
+            canonical(widened, p :+ f.name).mkString(".") ->
+              s"col-${java.util.UUID.randomUUID().toString.take(8)}" })
     }
-  }
-
-  /** `st` with `fields` appended to the struct at `path` (case-
-    * insensitive segment resolution, loud refusal on a non-struct or
-    * missing segment and on duplicate names at the target) — the nested
-    * widening shared by [[evolveStructFields]] and [[evolveColumns]]. */
-  private def widenStructAt(st: org.apache.spark.sql.types.StructType,
-      path: Seq[String],
-      fields: Seq[org.apache.spark.sql.types.StructField],
-      at: String): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.StructType
-    path match {
-      case Seq() =>
-        val lower = st.fieldNames.map(_.toLowerCase).toSet
-        val dup = fields.map(_.name).filter(n => lower(n.toLowerCase))
-        require(dup.isEmpty,
-          s"evolveStructFields: ${dup.mkString(", ")} already in " +
-            s"$at (${st.simpleString})")
-        StructType(st.fields ++ fields)
-      case seg +: rest =>
-        val i = st.fields.indexWhere(_.name.equalsIgnoreCase(seg))
-        require(i >= 0, s"evolveStructFields: no field '$seg' in $at " +
-          s"(${st.simpleString})")
-        st.fields(i).dataType match {
-          case inner: StructType =>
-            StructType(st.fields.updated(i, st.fields(i)
-              .copy(dataType = widenStructAt(inner, rest, fields, s"$at.$seg"))))
-          case other => throw new IllegalArgumentException(
-            s"evolveStructFields: '$at.$seg' is ${other.simpleString}, " +
-              "not a struct — only struct columns take nested adds")
-        }
-    }
-  }
-
-  /** NESTED additive schema evolution (r17 — VERDICT r16 #4): add
-    * NULLABLE fields INSIDE an existing struct column, arbitrarily
-    * deep — the `ALTER TABLE … ADD COLUMNS (s.f T)` shape real event
-    * schemas evolve by. ONE rowInvisible metadata commit records the
-    * widened DDL and NOTHING else moves: parquet's schema-clipped read
-    * (the same pinned-DDL scan every route already uses) fills a
-    * nested field missing from a pre-evolution file with typed NULL,
-    * at any depth — probed on this Spark and spec-asserted — so old
-    * dirs, merges, compactions, and the connector/catalog routes all
-    * ride through the widening with zero data I/O. Restrictions, each
-    * loud: fields are NULLABLE and appended at the end of their struct
-    * (no FIRST/AFTER reordering of committed parquet), the path must
-    * resolve to a STRUCT column (array/map element structs are out of
-    * scope), case-insensitive duplicate checks like the top-level
-    * verb. Existence DEFAULTS at depth (r19 — VERDICT r18 #3) key by
-    * the added field's NAME here (recorded under its dot-joined path):
-    * pre-evolution dirs read the constant wherever the parent struct
-    * exists — [[applyDefaults]]'s `withField` rebuild — and the commit
-    * gates the reader-required 'defaults-nested' feature, since a
-    * top-level-only defaults binary would silently read NULL where the
-    * constant belongs. Column mapping composes: only TOP-LEVEL names
-    * are mapped, so the nested widening keys by the parent's logical
-    * name and the physical scan translates the top level as always. */
-  def evolveStructFields(spark: SparkSession, root: String, writer: String,
-      path: Seq[String], added: Seq[org.apache.spark.sql.types.StructField],
-      maxAttempts: Int = 20,
-      defaults: Map[String, String] = Map.empty): Commit = {
-    require(path.nonEmpty,
-      "evolveStructFields needs the struct column's path — top-level " +
-        "adds go through evolveSchema")
-    val badKey = defaults.keySet -- added.map(_.name).toSet
-    require(badKey.isEmpty,
-      s"evolveStructFields: defaults for ${badKey.mkString(", ")} — " +
-        "keys are the added fields' names")
-    evolveColumns(spark, root, writer, Nil,
-      defaults.map { case (n, e) => (path :+ n).mkString(".") -> e },
-      Seq(path -> added), maxAttempts)
   }
 
   /** RECORD (or, with `cols` empty, CLEAR) the table's DECLARED
-    * clustering spec (r16 — VERDICT r15 #3, the `CREATE/ALTER TABLE …
+    * clustering spec (the `CREATE/ALTER TABLE …
     * CLUSTER BY` verb): one audited rowInvisible metadata commit whose
     * `clusterBy` every later verb carries forward. One column declares a
     * range-sort layout, two or more a ZORDER layout — [[compact]] called
@@ -2098,11 +1958,10 @@ object CommitLog {
   }
 
   /** True when the table holds NO committed rows — the gate for
-    * declaring (or clearing) partitioning/generation. Pre-r19 commits
-    * record no per-dir `rows` entry, so an absent entry falls back to
-    * ONE driver-side footer count per dir (code review r19: treating
-    * absence as non-empty locked genuinely empty legacy tables out of
-    * the declarations forever). */
+    * declaring (or clearing) partitioning/generation. A dir without a
+    * recorded `rows` entry falls back to ONE driver-side footer count
+    * (treating absence as non-empty would lock a genuinely empty table
+    * out of the declarations forever). */
   private def tableIsEmpty(spark: SparkSession, root: String,
       cur: Commit): Boolean =
     cur.dataDirs.forall(d => cur.rows.get(d) match {
@@ -2110,7 +1969,7 @@ object CommitLog {
       case None => footers(spark, root, Seq(d), Nil).rows(d) == 0L
     })
 
-  /** Partition-value types the spec accepts (r19): atomic types whose
+  /** Partition-value types the spec accepts: atomic types whose
     * string rendering under Spark's cast is deterministic and
     * reproducible from a pushed literal — what [[stagePartitioned]]
     * records and the connector's partition pruning re-renders. */
@@ -2120,7 +1979,7 @@ object CommitLog {
       BooleanType)
   }
 
-  /** DECLARE the table's partition columns (r19 — VERDICT r18 #1, the
+  /** DECLARE the table's partition columns (the
     * `CREATE TABLE … PARTITIONED BY` face): one audited metadata commit
     * recording the spec; every later write verb stages its data SPLIT
     * per partition tuple (one dir per tuple, exact per-dir values in the
@@ -2181,7 +2040,7 @@ object CommitLog {
       cur.copy(gens = Nil)
     }
 
-  /** DECLARE generated columns (r19 — VERDICT r18 #2, the Delta
+  /** DECLARE generated columns (the Delta
     * `GENERATED ALWAYS AS (expr)` face): one audited metadata commit
     * recording (column, expression SQL). From this commit on every write
     * verb MATERIALIZES an omitted generated column from its expression
@@ -2218,23 +2077,14 @@ object CommitLog {
               s"against ${head.schema.simpleString}"))
         require(analyzed.expressions.forall(_.deterministic),
           s"GENERATED column '$n': expression ($e) must be deterministic")
-        // `deterministic` admits SESSION-dependent foldables —
-        // current_database(), current_user(), current_date() — whose
-        // value differs writer to writer: enforceGenerated would then
-        // refuse valid rows written under another session's identity,
-        // and the derived partition probe would fold a different value
-        // than the writer recorded and mis-prune (code review r19; the
-        // validateDefaults rule applied to generation)
-        val sessionish = analyzed.expressions.flatMap(_.collect {
-          case x if x.getClass.getSimpleName.startsWith("Current") ||
-              x.getClass.getSimpleName == "Now" ||
-              x.getClass.getSimpleName == "LocalTimestamp" => x
-        })
+        // a session-dependent value differs writer to writer:
+        // enforceGenerated would refuse valid rows written under another
+        // session, and the derived partition probe would mis-prune
+        val sessionish = sessionDependent(analyzed.expressions)
         require(sessionish.isEmpty,
           s"GENERATED column '$n': expression ($e) is time/session-" +
-            s"dependent (${sessionish.map(_.getClass.getSimpleName)
-              .distinct.mkString(", ")}) — generation must compute the " +
-            "same value under every writer's session")
+            s"dependent (${sessionish.mkString(", ")}) — generation must " +
+            "compute the same value under every writer's session")
         val refs = analyzed.expressions.flatMap(_.references.map(_.name))
         require(!refs.exists(genNames.contains),
           s"GENERATED column '$n': expression ($e) may not reference " +
@@ -2244,210 +2094,122 @@ object CommitLog {
     }
   }
 
-  /** Attribute names a recorded constraint expression references, for
-    * the rename/drop guards — resolved against the head's logical
-    * schema, never a string match. A constraint that does NOT resolve
-    * against the head is refused loudly (VERDICT r16 watch-item #3:
-    * failing open here would let a RENAME/DROP proceed past a
-    * constraint it cannot prove unrelated — and an unresolvable
-    * constraint already means the table is broken; enforcement would
-    * fail the next write anyway, so fail the DDL first, with the name). */
-  private def constraintRefs(spark: SparkSession, root: String,
-      cur: Commit, name: String, exprSql: String): Set[String] =
-    scala.util.Try(
-      load(spark, root, cur)
-        .select(org.apache.spark.sql.functions.expr(exprSql))
-        .queryExecution.analyzed.expressions
-        .flatMap(_.references.map(_.name)).toSet
-    ).getOrElse(throw new IllegalStateException(
-      s"constraint '$name' (`$exprSql`) does not resolve against the " +
-        s"head schema of $root — the table is already inconsistent; " +
-        "drop the constraint before renaming or dropping columns"))
-
-  /** The table's column map with MAPPING ACTIVATED: the existing map,
-    * or (first rename/drop) the identity over the current logical
-    * schema — freezing every column's physical name. */
-  private def activatedMap(cur: Commit,
-      headSchema: org.apache.spark.sql.types.StructType): Map[String, String] =
-    if (cur.colMap.nonEmpty) cur.colMap
-    else headSchema.fieldNames.map(n => n -> n).toMap
-
-  /** RENAME a column (r16 — VERDICT r15 #2, the Delta column-mapping
-    * verb): ONE metadata commit, ZERO data rewritten — the logical name
-    * re-points at the column's frozen physical name; every carried
-    * artifact keyed by the logical name (recorded schema, stats column
-    * set and per-dir ranges, declared clustering, existence defaults)
-    * re-keys in the same commit. Refused when a CHECK constraint
-    * references the column (re-resolving user SQL silently would be a
-    * guess — drop the constraint first) or when it is the table's bloom
-    * column (sidecar marker files live outside the commit protocol).
-    * ROW-VISIBLE resync semantics: rows don't move, but the column
-    * contract changed — incremental consumers' downstream schemas would
-    * silently diverge, so `appendedSince`/CDF/streaming treat it like a
-    * rewrite (map inequality breaks the chain). Time travel to
-    * pre-rename versions shows the OLD name (their commits record it). */
-  def renameColumn(spark: SparkSession, root: String, writer: String,
-      from: String, to: String, maxAttempts: Int = 20): Commit = {
-    // the new name re-keys statsCols / clusterBy, which embed UNESCAPED
-    // in the commit JSON (code review r16): reject at the API edge like
-    // every other tag — a quote or comma would corrupt a COMMITTED claim
-    requireTag(to, "column name")
-    // and dot-free (r18): path-keyed nested mapping joins paths with
-    // '.', so a dotted top-level logical name would be ambiguous
-    require(!to.contains('.'),
-      s"RENAME COLUMN: '$to' contains '.' — ambiguous under path-keyed " +
-        "column mapping")
-    metadataCommit(spark, root, writer, "rename-column", maxAttempts,
-        rowInvisible = false) { cur =>
-      val headSchema = schemaOf(spark, root, cur)
-      require(headSchema.fieldNames.contains(from),
-        s"RENAME COLUMN: no column '$from' in ${headSchema.simpleString}")
-      require(!headSchema.fieldNames.exists(_.equalsIgnoreCase(to)),
-        s"RENAME COLUMN: '$to' already exists in ${headSchema.simpleString}")
-      val blocking = cur.constraints.filter { case (cn, e) =>
-        constraintRefs(spark, root, cur, cn, e).contains(from) }
-      require(blocking.isEmpty,
-        s"RENAME COLUMN '$from': constraint" +
-          s" ${blocking.map(_._1).mkString(", ")} references it — drop " +
-          "the constraint, rename, re-add it under the new name")
-      require(!bloomColumns(spark, root).contains(from),
-        s"RENAME COLUMN '$from': it is one of the table's bloom columns — " +
-          "sidecars are keyed outside the log; compact+rebuild first")
-      // a generation EXPRESSION referencing the column is SQL text the
-      // verb cannot rewrite — refuse, the constraints rule (r19); the
-      // generated column itself re-keys below like statsCols/clusterBy
-      val genBlocking = cur.gens.filter { case (gn, ge) =>
-        constraintRefs(spark, root, cur, s"generated '$gn'", ge)
-          .contains(from) }
-      require(genBlocking.isEmpty,
-        s"RENAME COLUMN '$from': generated column" +
-          s" ${genBlocking.map(_._1).mkString(", ")} computes from it — " +
-          "redeclare the table to change generation inputs")
-      val base = activatedMap(cur, headSchema)
-      // nested entries under the renamed column follow their parent
-      // (r18 — the path-keyed map keys by CURRENT logical paths)
-      val reKeyed = base.map { case (k, v) =>
-        (if (k.startsWith(from + ".")) to + k.substring(from.length)
-         else k) -> v
-      }
-      cur.copy(
-        schemaDDL = Some(org.apache.spark.sql.types.StructType(
-          headSchema.fields.map(f =>
-            if (f.name == from) f.copy(name = to) else f)).toDDL),
-        colMap = (reKeyed - from) + (to -> base.getOrElse(from, from)),
-        statsCols = cur.statsCols.map(n => if (n == from) to else n),
-        stats = cur.stats.map { case (d, byCol) =>
-          d -> byCol.map { case (n, r) => (if (n == from) to else n) -> r } },
-        fstats = cur.fstats.map { case (k, byCol) =>
-          k -> byCol.map { case (n, r) => (if (n == from) to else n) -> r } },
-        defaults = cur.defaults.map { case (n, v, e) =>
-          (if (n == from) to
-           else if (n.startsWith(from + ".")) to + n.substring(from.length)
-           else n, v, e) },
-        // partition spec and generated-column NAMES re-key like
-        // statsCols (r19); partVals are name-free values, untouched
-        partitionBy = cur.partitionBy.map(n => if (n == from) to else n),
-        gens = cur.gens.map { case (n, e) =>
-          (if (n == from) to else n, e) },
-        clusterBy = cur.clusterBy.map { sp =>
-          val (pre, cols) =
-            if (sp.startsWith("z:")) ("z:", sp.stripPrefix("z:"))
-            else ("sort:", sp.stripPrefix("sort:"))
-          pre + cols.split(',').toSeq
-            .map(n => if (n == from) to else n).mkString(",")
-        })
-    }
-  }
-
-  /** Struct-extraction paths a recorded constraint references, resolved
-    * against the head — the path-wise hazard check for NESTED
-    * rename/drop (r18): `s.f > 0` yields Seq("s","f"); a whole-struct
-    * reference yields Seq("s"). Same refuse-loudly contract as
-    * [[constraintRefs]]. */
+  /** The column paths a recorded expression references, resolved against
+    * the head's logical schema, never by string match: `s.f > 0` yields
+    * Seq("s", "f"), a top-level or whole-struct reference its one
+    * segment, spelled as the schema spells it. An expression that does not
+    * resolve refuses loudly: the verb cannot prove it unrelated, and the
+    * next write would fail on it anyway. `what` names it in the error. */
   private def constraintRefPaths(spark: SparkSession, root: String,
-      cur: Commit, name: String, exprSql: String): Set[Seq[String]] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GetStructField}
-    def pathOf(e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Option[Seq[String]] = e match {
+      cur: Commit, what: String, exprSql: String): Set[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GetStructField}
+    def pathOf(e: Expression): Option[Seq[String]] = e match {
       case a: AttributeReference => Some(Seq(a.name))
-      case g: GetStructField =>
-        pathOf(g.child).map(_ :+ g.extractFieldName)
+      case g: GetStructField => pathOf(g.child).map(_ :+ g.extractFieldName)
       case _ => None
     }
     scala.util.Try {
       val analyzed = load(spark, root, cur)
         .select(org.apache.spark.sql.functions.expr(exprSql))
         .queryExecution.analyzed.expressions
-      // MAXIMAL paths only: a GetStructField chain records its full
-      // path WITHOUT also recording its child attribute — the bare
-      // Seq("s") would overlap every field under s and spuriously
-      // block sibling renames
+      // maximal paths only: recording a chain's bare root Seq("s") too
+      // would overlap every field under s and block sibling changes
       val acc = scala.collection.mutable.Set.empty[Seq[String]]
-      def walk(e: org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-        e match {
-          case g: GetStructField => pathOf(g) match {
-            case Some(p) => acc += p
-            case None => g.children.foreach(walk)
-          }
-          case a: AttributeReference => acc += Seq(a.name)
-          case other => other.children.foreach(walk)
+      def walk(e: Expression): Unit = e match {
+        case g: GetStructField => pathOf(g) match {
+          case Some(p) => acc += p
+          case None => g.children.foreach(walk)
         }
+        case a: AttributeReference => acc += Seq(a.name)
+        case other => other.children.foreach(walk)
+      }
       analyzed.foreach(walk)
       acc.toSet
     }.getOrElse(throw new IllegalStateException(
-      s"constraint '$name' (`$exprSql`) does not resolve against the " +
-        s"head schema of $root — the table is already inconsistent; " +
-        "drop the constraint before renaming or dropping fields"))
+      s"$what (`$exprSql`) does not resolve against the head schema of " +
+        s"$root — the table is already inconsistent; drop the constraint " +
+        "before renaming, dropping or retyping columns"))
   }
 
-  /** True when constraint path `p` and DDL-target path `q` overlap —
-    * either is a prefix of the other (renaming s.f breaks `s.f > 0`
-    * AND `s IS NOT NULL`; renaming s breaks both). Case-insensitive,
-    * Spark's resolution rule. */
-  private def pathsOverlap(p: Seq[String], q: Seq[String]): Boolean = {
-    val n = math.min(p.length, q.length)
-    (0 until n).forall(i => p(i).equalsIgnoreCase(q(i)))
-  }
+  /** True when paths `p` and `q` overlap, either a prefix of the other
+    * (renaming s.f breaks `s.f > 0` and `s IS NOT NULL`; renaming s
+    * breaks both). Case-insensitive, Spark's resolution rule. */
+  private def pathsOverlap(p: Seq[String], q: Seq[String]): Boolean =
+    p.zip(q).forall { case (a, b) => a.equalsIgnoreCase(b) }
 
-  /** `st` with the struct field at `path` renamed (`to` nonEmpty) or
-    * DROPPED (`to` empty) — segments resolve exactly; intermediates
-    * must be structs. */
-  private def renameOrDropAt(st: org.apache.spark.sql.types.StructType,
-      path: Seq[String], to: Option[String], at: String)
+  /** One change to the field at a path, applied by [[editPath]]. */
+  private[graft] sealed trait FieldEdit
+  private[graft] final case class RenameTo(name: String) extends FieldEdit
+  private[graft] case object DropField extends FieldEdit
+  private[graft] final case class RetypeTo(to: org.apache.spark.sql.types.DataType)
+    extends FieldEdit
+  /** Appends the field to the struct AT the path (`Nil`: the table). */
+  private[graft] final case class AddField(f: org.apache.spark.sql.types.StructField)
+    extends FieldEdit
+
+  /** The one field-path editor: `st` with `edit` applied at `path`. Rename,
+    * drop and retype address the field at `path`, whose segments match
+    * exactly; an add addresses the struct at `path`, whose segments match
+    * case-insensitively (Spark's rule for ADD COLUMNS). Every segment
+    * before the target must be a struct. Refuses loudly a missing
+    * segment, a non-struct intermediate, a name that already exists in
+    * any case, dropping a struct's (or the table's) last field, and a
+    * retype outside [[requireSafeWidening]]. `at` is the path walked so
+    * far, for the messages. */
+  private[graft] def editPath(st: org.apache.spark.sql.types.StructType,
+      path: Seq[String], edit: FieldEdit, at: Seq[String] = Nil)
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.StructType
-    val i = st.fields.indexWhere(_.name == path.head)
-    require(i >= 0, s"no field '${path.head}' in $at (${st.simpleString})")
-    path match {
-      case Seq(_) => to match {
-        case Some(t) =>
-          require(!st.fields.exists(f => f.name.equalsIgnoreCase(t)),
-            s"'$t' already exists in $at (${st.simpleString})")
-          StructType(st.fields.updated(i, st.fields(i).copy(name = t)))
-        case None =>
-          require(st.length > 1,
-            s"cannot drop the last field of $at (${st.simpleString})")
-          StructType(st.fields.patch(i, Nil, 1))
-      }
-      case _ +: rest => st.fields(i).dataType match {
-        case inner: StructType =>
-          StructType(st.fields.updated(i, st.fields(i).copy(dataType =
-            renameOrDropAt(inner, rest, to, s"$at.${path.head}"))))
-        case other => throw new IllegalArgumentException(
-          s"'$at.${path.head}' is ${other.simpleString}, not a struct")
-      }
+    def where = if (at.isEmpty) s"the table (${st.simpleString})"
+      else s"'${at.mkString(".")}' (${st.simpleString})"
+    def index(seg: String): Int = {
+      val i = st.fields.indexWhere(f =>
+        if (edit.isInstanceOf[AddField]) f.name.equalsIgnoreCase(seg)
+        else f.name == seg)
+      require(i >= 0, s"no field '$seg' in $where")
+      i
+    }
+    def fresh(name: String): Unit =
+      require(!st.fieldNames.exists(_.equalsIgnoreCase(name)),
+        s"'$name' already exists in $where")
+    def set(i: Int, f: org.apache.spark.sql.types.StructField) =
+      StructType(st.fields.updated(i, f))
+    (path, edit) match {
+      case (Seq(), AddField(f)) =>
+        fresh(f.name)
+        StructType(st.fields :+ f)
+      case (Seq(seg), RenameTo(to)) =>
+        val i = index(seg)
+        fresh(to)
+        set(i, st.fields(i).copy(name = to))
+      case (Seq(seg), DropField) =>
+        val i = index(seg)
+        require(st.length > 1, s"cannot drop the last field of $where")
+        StructType(st.fields.patch(i, Nil, 1))
+      case (Seq(seg), RetypeTo(to)) =>
+        val i = index(seg)
+        requireSafeWidening(s"'${(at :+ seg).mkString(".")}'",
+          st.fields(i).dataType, to)
+        set(i, st.fields(i).copy(dataType = to))
+      case (seg +: rest, _) =>
+        val i = index(seg)
+        st.fields(i).dataType match {
+          case inner: StructType =>
+            set(i, st.fields(i).copy(dataType = editPath(inner, rest, edit, at :+ seg)))
+          case other => throw new IllegalArgumentException(
+            s"'${(at :+ seg).mkString(".")}' is ${other.simpleString}, not " +
+              "a struct")
+        }
+      case _ =>
+        throw new IllegalArgumentException("an empty path names no field")
     }
   }
 
-  /** Shared pre-flight for the NESTED mapping verbs: dotted names would
-    * be ambiguous against the dot-joined path keys, so both the table's
-    * top-level names and every path segment must be dot-free before a
-    * nested entry may exist. */
+  /** Refusal for a nested `path` (two or more segments): path-keyed
+    * entries join segments with '.', so every segment and every top-level
+    * column name must be dot-free before a nested entry may exist. */
   private def requireDotFreeFor(verb: String, path: Seq[String],
       headSchema: org.apache.spark.sql.types.StructType): Unit = {
-    require(path.length >= 2,
-      s"$verb takes a NESTED field path (s.f…) — top-level columns go " +
-        "through the column verb")
     path.foreach(seg => require(!seg.contains('.'),
       s"$verb: path segment '$seg' contains '.' — unsupported under " +
         "path-keyed column mapping"))
@@ -2458,230 +2220,167 @@ object CommitLog {
         "rename them first")
   }
 
-  /** RENAME a struct FIELD (r18 — VERDICT r17 #3, nested column
-    * mapping): ONE metadata commit, ZERO data rewritten — the logical
-    * path re-points at the field's frozen physical name in the
-    * path-keyed column map; deeper entries under the renamed field
-    * re-key with it. Activating the map freezes top-level names exactly
-    * like [[renameColumn]] (the commit gates "colmap", and any nested
-    * entry additionally gates "colmap-nested" — a top-level-only binary
-    * must refuse rather than read logical nested names that don't exist
-    * physically). Refused path-wise when a CHECK constraint references
-    * the field or any ancestor/descendant. ROW-VISIBLE resync
-    * semantics, the rename contract; time travel to pre-rename versions
-    * shows the old nested name (their commits record it). */
-  def renameStructField(spark: SparkSession, root: String, writer: String,
-      path: Seq[String], to: String, maxAttempts: Int = 20): Commit = {
-    requireTag(to, "field name")
-    require(!to.contains('.'),
-      s"RENAME nested field: '$to' contains '.' — unsupported under " +
-        "path-keyed column mapping")
-    metadataCommit(spark, root, writer, "rename-column", maxAttempts,
+  /** One column change as a metadata commit that rewrites no data, on the
+    * field at `path` (a one-segment path is a top-level column): `change`
+    * gets the head and its logical schema and returns the next record.
+    * rowInvisible =
+    * false: rows do not move, but the column contract changed, so
+    * incremental consumers (`appendedSince`, the change feed, streams)
+    * resync instead of silently diverging downstream. Time travel to an
+    * earlier version shows the old shape, which its commit records.
+    *
+    * Refused before the claim while a generation expression references
+    * the path, an ancestor or a descendant of it (SQL text the verb cannot
+    * rewrite); and, unless the change `keepsName`, while a CHECK
+    * constraint does, or the path is one of the table's bloom columns
+    * (sidecar markers live outside the commit protocol). */
+  private def columnChange(spark: SparkSession, root: String, writer: String,
+      action: String, verb: String, path: Seq[String], maxAttempts: Int,
+      keepsName: Boolean = false)(
+      change: (Commit, org.apache.spark.sql.types.StructType) => Commit): Commit =
+    metadataCommit(spark, root, writer, action, maxAttempts,
         rowInvisible = false) { cur =>
       val headSchema = schemaOf(spark, root, cur)
-      requireDotFreeFor("RENAME nested field", path, headSchema)
-      val blocking = cur.constraints.filter { case (cn, e) =>
-        constraintRefPaths(spark, root, cur, cn, e)
-          .exists(p => pathsOverlap(p, path)) }
-      require(blocking.isEmpty,
-        s"RENAME nested field '${path.mkString(".")}': constraint" +
-          s" ${blocking.map(_._1).mkString(", ")} references it — drop " +
-          "the constraint, rename, re-add it under the new path")
-      // a generation EXPRESSION referencing the path is SQL text the
-      // verb cannot rewrite — refuse path-wise like constraints (r19)
-      val genBlocking = cur.gens.filter { case (gn, ge) =>
-        constraintRefPaths(spark, root, cur, s"generated '$gn'", ge)
-          .exists(p => pathsOverlap(p, path)) }
-      require(genBlocking.isEmpty,
-        s"RENAME nested field '${path.mkString(".")}': generated column" +
-          s" ${genBlocking.map(_._1).mkString(", ")} computes from it — " +
-          "redeclare the table to change generation inputs")
-      val widened = renameOrDropAt(headSchema, path, Some(to), "<root>")
-      val base = activatedMap(cur, headSchema)
-      val key = path.mkString(".")
-      val newKey = (path.init :+ to).mkString(".")
-      // deeper entries under the renamed field follow their parent
-      val reKeyed = base.map { case (k, v) =>
-        (if (k.startsWith(key + ".")) newKey + k.substring(key.length)
-         else k) -> v
+      if (path.length > 1) requireDotFreeFor(verb, path, headSchema)
+      val next = change(cur, headSchema)
+      val what = s"$verb '${path.mkString(".")}'"
+      def refs(kind: String, xs: Seq[(String, String)]): Seq[String] =
+        xs.collect { case (n, e) if constraintRefPaths(spark, root, cur,
+          s"$kind '$n'", e).exists(pathsOverlap(_, path)) => n }
+      if (!keepsName) {
+        val cs = refs("constraint", cur.constraints)
+        require(cs.isEmpty, s"$what: constraint ${cs.mkString(", ")} " +
+          "references it — drop the constraint first")
+        require(!bloomColumns(spark, root).contains(path.mkString(".")),
+          s"$what: it is one of the table's bloom columns — sidecars are " +
+            "keyed outside the log; compact+rebuild first")
       }
-      cur.copy(
-        schemaDDL = Some(widened.toDDL),
-        colMap = (reKeyed - key) +
-          (newKey -> base.getOrElse(key, path.last)),
-        // path-keyed existence defaults follow the rename (r19) — on
-        // the field itself and on anything deeper under it
-        defaults = cur.defaults.map { case (n, v, e) =>
-          (if (n == key) newKey
-           else if (n.startsWith(key + ".")) newKey + n.substring(key.length)
-           else n, v, e) })
+      val gs = refs("generated", cur.gens)
+      require(gs.isEmpty, s"$what: generated column ${gs.mkString(", ")} " +
+        "computes from it — redeclare the table to change generation inputs")
+      next
+    }
+
+  /** `cur` with the column at `path` renamed to `to`, or dropped when `to`
+    * is None, in the recorded schema and in every entry keyed by it.
+    * Mapping is ACTIVATED first: the existing column map, or the identity
+    * over the top-level names of `headSchema`, freezing every physical
+    * name. Path-keyed entries (the column map, existence defaults) move
+    * by prefix with the column, or go; the top-level names in statsCols,
+    * stats, fstats, partitionBy, gens and clusterBy move or go when they
+    * name it. Partition values are name-free and stay. */
+  private def reKey(cur: Commit,
+      headSchema: org.apache.spark.sql.types.StructType,
+      path: Seq[String], to: Option[String]): Commit = {
+    val base =
+      if (cur.colMap.nonEmpty) cur.colMap
+      else headSchema.fieldNames.map(n => n -> n).toMap
+    val key = path.mkString(".")
+    val newKey = to.map(t => (path.init :+ t).mkString("."))
+    def moved(k: String): Option[String] =
+      if (k == key || k.startsWith(key + "."))
+        newKey.map(_ + k.substring(key.length))
+      else Some(k)
+    def name(n: String): Option[String] = if (n == key) newKey else Some(n)
+    def names[V](m: Map[String, V]): Map[String, V] =
+      m.flatMap { case (n, x) => name(n).map(_ -> x) }
+    cur.copy(
+      schemaDDL = Some(editPath(headSchema, path,
+        to.fold[FieldEdit](DropField)(RenameTo)).toDDL),
+      colMap = base.flatMap { case (k, v) => moved(k).map(_ -> v) } ++
+        newKey.map(_ -> base.getOrElse(key, path.last)),
+      defaults = cur.defaults.flatMap { case (n, v, e) =>
+        moved(n).map((_, v, e)) },
+      statsCols = cur.statsCols.flatMap(name),
+      stats = cur.stats.map { case (d, byCol) => d -> names(byCol) },
+      fstats = cur.fstats.map { case (f, byCol) => f -> names(byCol) },
+      partitionBy = cur.partitionBy.flatMap(name),
+      gens = cur.gens.flatMap { case (n, e) => name(n).map(_ -> e) },
+      clusterBy = cur.clusterBy.map { sp =>
+        val (kind, cols) = sp.splitAt(sp.indexOf(':') + 1)
+        kind + cols.split(',').flatMap(name).mkString(",") })
+  }
+
+  /** RENAME the column or struct field at `path` to `to`: the logical
+    * name re-points at its frozen physical name, entries under it follow,
+    * and every artifact keyed by the name re-keys in the same commit
+    * ([[reKey]]); no data is rewritten. A path-keyed (nested) map entry
+    * gates 'colmap-nested', so a binary that maps top-level names only
+    * refuses rather than read logical nested names that do not exist
+    * physically. Refusals: [[columnChange]]'s, a name that exists at the
+    * target in any case, and a `to` containing '.' (ambiguous against
+    * dot-joined path keys). */
+  def renameColumn(spark: SparkSession, root: String, writer: String,
+      path: Seq[String], to: String, maxAttempts: Int = 20): Commit = {
+    // the new name re-keys statsCols / clusterBy, which embed unescaped
+    // in the commit record
+    requireTag(to, "column name")
+    require(!to.contains('.'),
+      s"RENAME COLUMN: '$to' contains '.' — ambiguous under path-keyed " +
+        "column mapping")
+    columnChange(spark, root, writer, "rename-column", "RENAME COLUMN", path,
+        maxAttempts) { (cur, headSchema) =>
+      reKey(cur, headSchema, path, Some(to))
     }
   }
 
-  /** DROP a struct FIELD (r18): ONE metadata commit, ZERO data
-    * rewritten — the logical schema loses the field, its path-keyed map
-    * entries go with it, and the physical bytes stay unread forever. A
-    * later re-ADD of the same nested name takes a fresh `col-<uuid>`
-    * physical ([[evolveColumns]] under an active map), so dropped data
-    * can never resurrect. Same refusals and resync semantics as
-    * [[renameStructField]]; additionally refused for a struct's last
-    * field (drop the column instead). */
-  def dropStructField(spark: SparkSession, root: String, writer: String,
-      path: Seq[String], maxAttempts: Int = 20): Commit =
-    metadataCommit(spark, root, writer, "drop-column", maxAttempts,
-        rowInvisible = false) { cur =>
-      val headSchema = schemaOf(spark, root, cur)
-      requireDotFreeFor("DROP nested field", path, headSchema)
-      val blocking = cur.constraints.filter { case (cn, e) =>
-        constraintRefPaths(spark, root, cur, cn, e)
-          .exists(p => pathsOverlap(p, path)) }
-      require(blocking.isEmpty,
-        s"DROP nested field '${path.mkString(".")}': constraint" +
-          s" ${blocking.map(_._1).mkString(", ")} references it — drop " +
-          "the constraint first")
-      val genBlocking = cur.gens.filter { case (gn, ge) =>
-        constraintRefPaths(spark, root, cur, s"generated '$gn'", ge)
-          .exists(p => pathsOverlap(p, path)) }
-      require(genBlocking.isEmpty,
-        s"DROP nested field '${path.mkString(".")}': generated column" +
-          s" ${genBlocking.map(_._1).mkString(", ")} computes from it — " +
-          "redeclare the table to change generation inputs")
-      val narrowed = renameOrDropAt(headSchema, path, None, "<root>")
-      val base = activatedMap(cur, headSchema)
-      val key = path.mkString(".")
-      cur.copy(
-        schemaDDL = Some(narrowed.toDDL),
-        colMap = base.filterNot { case (k, _) =>
-          k == key || k.startsWith(key + ".") },
-        // path-keyed existence defaults on the dropped field (or under
-        // it) go with it (r19)
-        defaults = cur.defaults.filterNot { case (n, _, _) =>
-          n == key || n.startsWith(key + ".") })
-    }
-
-  /** DROP a column (r16): ONE metadata commit, ZERO data rewritten —
-    * the logical schema and column map lose the entry; the physical
-    * bytes stay in existing dirs, unread forever (column pruning never
-    * scans them), and a later re-ADD of the same logical name takes a
-    * fresh `col-<uuid>` physical so the dropped data can never
-    * resurrect. Same refusals and resync semantics as [[renameColumn]];
-    * additionally refused for the last column, the declared clustering's
-    * columns, and the recorded stats columns' SOLE member would simply
-    * drop out of the set. */
+  /** DROP the column or struct field at `path`: the logical schema and
+    * the column map lose it and everything under it, and its bytes stay
+    * in existing dirs, unread (column pruning never scans them). A later
+    * re-ADD of the same name takes a fresh `col-<id>` physical
+    * ([[evolveColumns]] under an active map), so dropped data never
+    * resurrects. Refusals: [[columnChange]]'s, the last field of the table
+    * or of a struct, and a column the declared CLUSTER BY, the partition
+    * spec or a GENERATED ALWAYS AS declaration names. */
   def dropColumn(spark: SparkSession, root: String, writer: String,
-      name: String, maxAttempts: Int = 20): Commit =
-    metadataCommit(spark, root, writer, "drop-column", maxAttempts,
-        rowInvisible = false) { cur =>
-      val headSchema = schemaOf(spark, root, cur)
-      require(headSchema.fieldNames.contains(name),
-        s"DROP COLUMN: no column '$name' in ${headSchema.simpleString}")
-      require(headSchema.length > 1,
-        "DROP COLUMN: cannot drop the table's last column")
-      val blocking = cur.constraints.filter { case (cn, e) =>
-        constraintRefs(spark, root, cur, cn, e).contains(name) }
-      require(blocking.isEmpty,
-        s"DROP COLUMN '$name': constraint" +
-          s" ${blocking.map(_._1).mkString(", ")} references it — drop " +
-          "the constraint first")
-      require(!bloomColumns(spark, root).contains(name),
-        s"DROP COLUMN '$name': it is one of the table's bloom columns — " +
-          "sidecars are keyed outside the log; compact+rebuild first")
+      path: Seq[String], maxAttempts: Int = 20): Commit =
+    columnChange(spark, root, writer, "drop-column", "DROP COLUMN", path,
+        maxAttempts) { (cur, headSchema) =>
+      val name = path.mkString(".")
       require(!cur.clusterBy.exists(sp =>
         sp.stripPrefix("z:").stripPrefix("sort:").split(',').contains(name)),
         s"DROP COLUMN '$name': the declared CLUSTER BY references it — " +
           "re-declare the clustering first")
       // partition columns give every dir its identity; generated columns
-      // (and their inputs) are declared invariants — both refuse (r19)
+      // are declared invariants
       require(!cur.partitionBy.contains(name),
         s"DROP COLUMN '$name': it is a partition column — per-dir " +
           "partition identity keys on it; rewrite explicitly")
       require(!cur.gens.exists(_._1 == name),
         s"DROP COLUMN '$name': it is GENERATED ALWAYS AS — redeclare " +
           "the table to remove the generation")
-      val genBlocking = cur.gens.filter { case (gn, ge) =>
-        constraintRefs(spark, root, cur, s"generated '$gn'", ge)
-          .contains(name) }
-      require(genBlocking.isEmpty,
-        s"DROP COLUMN '$name': generated column" +
-          s" ${genBlocking.map(_._1).mkString(", ")} computes from it — " +
-          "redeclare the table to change generation inputs")
-      val base = activatedMap(cur, headSchema)
-      cur.copy(
-        schemaDDL = Some(org.apache.spark.sql.types.StructType(
-          headSchema.fields.filterNot(_.name == name)).toDDL),
-        // nested entries under the dropped column go with it (r18)
-        colMap = base.filterNot { case (k, _) =>
-          k == name || k.startsWith(name + ".") },
-        statsCols = cur.statsCols.filterNot(_ == name),
-        stats = cur.stats.map { case (d, byCol) => d -> (byCol - name) },
-        fstats = cur.fstats.map { case (k, byCol) => k -> (byCol - name) },
-        // path-keyed defaults under the dropped column go with it (r19)
-        defaults = cur.defaults.filterNot { case (n, _, _) =>
-          n == name || n.startsWith(name + ".") })
+      reKey(cur, headSchema, path, None)
     }
 
-  /** SAFE type widening (r18 — VERDICT r17 #4, the Delta/Iceberg `ALTER
-    * COLUMN … TYPE` evolution): retype a top-level column to a strictly
-    * WIDER type as ONE metadata commit, ZERO data rewritten — the
-    * recorded DDL pins the new type and every route's pinned-schema scan
-    * reads old directories through parquet's lossless read-side
-    * promotion (int32 files under a bigint schema, float under double,
-    * decimal precision growth — supported by this Spark's vectorized
-    * reader and spec-probed). Allowed, losslessly and only losslessly:
-    * byte→short/int/long, short→int/long, int→long, float→double, and
-    * decimal(p,s)→decimal(p',s) with p'>p (same scale). Everything else
-    * keeps refusing loudly — narrowing or cross-family retypes would
-    * corrupt stored values. Nested struct FIELDS widen through
-    * [[widenStructFieldType]] (r19) under the same whitelist.
+  /** SAFE type widening of the column or struct field at `path` (the
+    * Delta/Iceberg `ALTER COLUMN … TYPE` evolution): the recorded DDL
+    * pins the wider type, no data is rewritten, and every route's
+    * pinned-schema scan reads older dirs through parquet's lossless
+    * read-side promotion, per leaf column, so nested leaves promote like
+    * top-level ones. Only the [[requireSafeWidening]] whitelist passes;
+    * narrowing or cross-family retypes would corrupt stored values.
     *
-    * Collateral soundness, each checked rather than assumed: recorded
-    * per-dir STATS keep their domain (every integral maps to the one
-    * long domain unchanged; fractional/decimal columns never narrow a
-    * probe — litLong returns None — so their recorded ranges are inert);
-    * BLOOM sidecars hash integrals as longs on both build and probe, so
-    * int-built sidecars answer long probes identically; existence
-    * DEFAULTS re-cast to the recorded (now wider) type at read;
-    * CONSTRAINTS reference the unchanged name. rowInvisible = false:
-    * the column CONTRACT changed, so incremental consumers resync like
-    * a rename (downstream schemas would silently diverge otherwise). */
+    * Collateral stays sound: integral stats keep the one long domain, and
+    * fractional or decimal ranges never narrow a probe; bloom sidecars
+    * hash integrals as longs on build and probe; a recorded default,
+    * nested or not, re-casts to the wider type at read; CHECK constraints
+    * reference the unchanged name. Refused for a GENERATED ALWAYS AS
+    * column (its expression's type would no longer match) and, like every
+    * [[columnChange]], while a generation expression reads the path. */
   def widenColumnType(spark: SparkSession, root: String, writer: String,
-      name: String, to: org.apache.spark.sql.types.DataType,
-      maxAttempts: Int = 20): Commit = {
-    import org.apache.spark.sql.types._
-    metadataCommit(spark, root, writer, "retype", maxAttempts,
-        rowInvisible = false) { cur =>
-      val headSchema = schemaOf(spark, root, cur)
-      val i = headSchema.fieldNames.indexOf(name)
-      require(i >= 0,
-        s"ALTER COLUMN TYPE: no top-level column '$name' in " +
-          s"${headSchema.simpleString} — nested fields widen through " +
-          "the (s.f) path form")
-      val from = headSchema.fields(i).dataType
-      requireSafeWidening(s"'$name'", from, to)
-      // a generation PRODUCING the column (its expression's type would
-      // no longer match the recorded schema) or READING it (the
-      // materialized output type changes) would silently break every
-      // later omit-and-materialize append with a misleading
-      // schema-mismatch error — refuse like rename/drop (code review
-      // r19)
+      path: Seq[String], to: org.apache.spark.sql.types.DataType,
+      maxAttempts: Int = 20): Commit =
+    columnChange(spark, root, writer, "retype", "ALTER COLUMN TYPE", path,
+        maxAttempts, keepsName = true) { (cur, headSchema) =>
+      val name = path.mkString(".")
       require(!cur.gens.exists(_._1 == name),
         s"ALTER COLUMN TYPE: '$name' is GENERATED ALWAYS AS — " +
           "redeclare the table to change the generated type")
-      val genBlocking = cur.gens.filter { case (gn, ge) =>
-        constraintRefs(spark, root, cur, s"generated '$gn'", ge)
-          .contains(name) }
-      require(genBlocking.isEmpty,
-        s"ALTER COLUMN TYPE '$name': generated column" +
-          s" ${genBlocking.map(_._1).mkString(", ")} computes from it — " +
-          "redeclare the table to change generation inputs")
-      cur.copy(schemaDDL = Some(StructType(headSchema.fields.updated(i,
-        headSchema.fields(i).copy(dataType = to))).toDDL))
+      cur.copy(schemaDDL = Some(editPath(headSchema, path, RetypeTo(to)).toDDL))
     }
-  }
 
-  /** The ONE safe-widening whitelist [[widenColumnType]] and
-    * [[widenStructFieldType]] share — lossless read-side promotions
-    * only. */
+  /** The safe-widening whitelist of [[widenColumnType]]: lossless
+    * read-side promotions only. */
   private def requireSafeWidening(what: String,
       from: org.apache.spark.sql.types.DataType,
       to: org.apache.spark.sql.types.DataType): Unit = {
@@ -2703,63 +2402,6 @@ object CommitLog {
         "column instead")
   }
 
-  /** SAFE type widening of a NESTED struct field (r19 — VERDICT r18 #3):
-    * `ALTER COLUMN s.f TYPE bigint` as ONE metadata commit, ZERO data
-    * rewritten — the same whitelist and contract as the top-level
-    * [[widenColumnType]]; parquet's read-side promotion is per LEAF
-    * column, so a nested int32 leaf under a pinned bigint schema
-    * promotes exactly like a top-level one (spec-probed across mixed
-    * narrow/wide dirs on the library, connector, and catalog routes).
-    * Path segments resolve exactly through structs ([[renameOrDropAt]]'s
-    * rule); collateral stays sound by construction: per-dir STATS,
-    * BLOOM sidecars, PARTITION and GENERATED columns are all top-level
-    * names (nested fields can't carry them), a recorded NESTED DEFAULT
-    * re-casts to the widened type at read (the dotted-path type lookup
-    * in [[applyDefaults]]), and CONSTRAINTS reference the unchanged
-    * path. rowInvisible = false like the top-level verb: the field's
-    * CONTRACT changed, incremental consumers resync. */
-  def widenStructFieldType(spark: SparkSession, root: String,
-      writer: String, path: Seq[String],
-      to: org.apache.spark.sql.types.DataType,
-      maxAttempts: Int = 20): Commit = {
-    import org.apache.spark.sql.types.StructType
-    metadataCommit(spark, root, writer, "retype", maxAttempts,
-        rowInvisible = false) { cur =>
-      val headSchema = schemaOf(spark, root, cur)
-      requireDotFreeFor("ALTER nested COLUMN TYPE", path, headSchema)
-      // generation-input guard, path-wise like the nested rename/drop
-      // verbs (code review r19)
-      val genBlocking = cur.gens.filter { case (gn, ge) =>
-        constraintRefPaths(spark, root, cur, s"generated '$gn'", ge)
-          .exists(p => pathsOverlap(p, path)) }
-      require(genBlocking.isEmpty,
-        s"ALTER COLUMN TYPE '${path.mkString(".")}': generated column" +
-          s" ${genBlocking.map(_._1).mkString(", ")} computes from it — " +
-          "redeclare the table to change generation inputs")
-      def retypeAt(st: StructType, p: Seq[String], at: String): StructType = {
-        val i = st.fields.indexWhere(_.name == p.head)
-        require(i >= 0,
-          s"ALTER COLUMN TYPE: no field '${p.head}' in $at " +
-            s"(${st.simpleString})")
-        p match {
-          case Seq(_) =>
-            requireSafeWidening(s"'${path.mkString(".")}'",
-              st.fields(i).dataType, to)
-            StructType(st.fields.updated(i, st.fields(i).copy(dataType = to)))
-          case seg +: rest => st.fields(i).dataType match {
-            case inner: StructType =>
-              StructType(st.fields.updated(i, st.fields(i).copy(dataType =
-                retypeAt(inner, rest, s"$at.$seg"))))
-            case other => throw new IllegalArgumentException(
-              s"ALTER COLUMN TYPE: '$at.$seg' is ${other.simpleString}, " +
-                "not a struct")
-          }
-        }
-      }
-      cur.copy(schemaDDL = Some(retypeAt(headSchema, path, "<root>").toDDL))
-    }
-  }
-
   /** DROP a constraint by name — an audited metadata commit; unknown
     * names fail loudly (a typo'd drop must not silently "succeed"). */
   def dropConstraint(spark: SparkSession, root: String, writer: String,
@@ -2767,10 +2409,9 @@ object CommitLog {
     dropConstraints(spark, root, writer, Seq(name), maxAttempts)
 
   /** DROP several constraints in ONE audited metadata commit — the bulk
-    * twin of [[addConstraints]] (ADVICE r15: [[GraftCatalog]]'s rollback
-    * of a failed CREATE previously issued per-constraint drop commits
-    * that could themselves partially fail, leaving the pre-existing
-    * external table half-rolled-back). All names are validated against
+    * twin of [[addConstraints]], which [[GraftCatalog]]'s rollback of a
+    * failed CREATE uses so a pre-existing external table is never left
+    * half-rolled-back. All names are validated against
     * the head before anything commits — all-or-nothing, like the add. */
   def dropConstraints(spark: SparkSession, root: String, writer: String,
       names: Seq[String], maxAttempts: Int = 20): Commit = {
@@ -4022,7 +3663,7 @@ object CommitLog {
             throw new IllegalStateException(
               "merge into an empty table with no inserts — nothing to commit")
           val payload = changes.filter(!delFlag)
-            .select(changes.columns.filterNot(deleteCol.contains).map(col): _*)
+            .select(changes.columns.toSeq.filterNot(deleteCol.contains).map(col): _*)
           (Nil, payload, statsCol.toSeq, None, recordedDDL(payload.schema),
             Map.empty[String, String], None)
         case Some(head) =>
@@ -4074,7 +3715,7 @@ object CommitLog {
                 "column set per table")
           val eff = if (statsCol.nonEmpty) statsCol.toSeq else head.statsCols
           val inserts = changes.filter(!delFlag)
-            .select(headSchema.fieldNames.map(col): _*)
+            .select(headSchema.fieldNames.toSeq.map(col): _*)
           // CHECK constraints gate the changeset's landing rows BEFORE
           // any staging; stored rows the merge keeps satisfy by
           // induction (they passed when written), deletes land nothing.
@@ -4136,7 +3777,7 @@ object CommitLog {
             // every change row carries sign +1 (insert/update_postimage)
             // or −1 (update_preimage/delete). Costs one extra
             // changeset-bounded pass over the affected dirs.
-            val headCols = headSchema.fieldNames.map(col)
+            val headCols = headSchema.fieldNames.toSeq.map(col)
             // ONE pass over the affected dirs harvests every pre-image
             // with its delete flag AND its (file, pos) identity; the
             // result is changeset-bounded (stored copies of changeset
@@ -4205,7 +3846,7 @@ object CommitLog {
               val keys = changes.select(keyCols.map(col): _*).distinct()
               val keyed = if (probeKeys.isDefined) broadcast(keys) else keys
               val rebuilt = old.join(keyed, keyCols, "left_anti")
-                .select(headSchema.fieldNames.map(col): _*)
+                .select(headSchema.fieldNames.toSeq.map(col): _*)
                 .union(inserts)
               (head.dataDirs.filterNot(affected.contains), rebuilt, eff,
                 Some((preTyped.union(post), preT)),
@@ -4604,7 +4245,7 @@ object CommitLog {
           s"$action assigns '$n', not in head schema ${headSchema.simpleString}")
       }
       val carried = head.dataDirs.filterNot(affected.contains)
-      val headCols = headSchema.fieldNames.map(col)
+      val headCols = headSchema.fieldNames.toSeq.map(col)
       val kept =
         if (affected.isEmpty) None
         else if (assignments.isEmpty)

@@ -1227,12 +1227,19 @@ private[graft] final class CommitLogCatalogTable(root: String,
                     .reduce(_ && _)
                   CommitLog.replaceWhere(data.sparkSession, root, "catalog",
                     cond, renamed)
-                case None if overwrite || overwriteFlag =>
-                  CommitLog.commit(data.sparkSession, root, "catalog",
-                    "overwrite", createOnEmpty = true)(_ => renamed)
                 case None =>
-                  CommitLog.commitAppend(data.sparkSession, root, "catalog",
-                    "append", createOnEmpty = true)(renamed)
+                  // the table's stats columns, so the new dirs record
+                  // ranges and a rewrite keeps the set
+                  val statsCols = CommitLog.latest(data.sparkSession, root)
+                    .toSeq.flatMap(_.statsCols)
+                  if (overwrite || overwriteFlag)
+                    CommitLog.commit(data.sparkSession, root, "catalog",
+                      "overwrite", statsCols = statsCols,
+                      createOnEmpty = true)(_ => renamed)
+                  else
+                    CommitLog.commitAppend(data.sparkSession, root, "catalog",
+                      "append", statsCols = statsCols,
+                      createOnEmpty = true)(renamed)
               }
               ()
             }

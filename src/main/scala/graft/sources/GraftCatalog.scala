@@ -367,9 +367,9 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog
     * surface routes `ALTER TABLE … ADD/DROP CONSTRAINT` here only when
     * this capability is declared). */
   override def capabilities(): java.util.Set[TableCatalogCapability] =
-    // SUPPORT_COLUMN_DEFAULT_VALUE (r16): gates `ALTER TABLE … ADD
+    // SUPPORT_COLUMN_DEFAULT_VALUE: gates `ALTER TABLE … ADD
     // COLUMNS (c T DEFAULT …)` routing here — recorded as an EXISTENCE
-    // default in the commit metadata (CommitLog.evolveSchema); CREATE
+    // default in the commit metadata (CommitLog.evolveColumns); CREATE
     // TABLE with column defaults still refuses (sound-or-refuse: the
     // engine substitutes nothing at INSERT time)
     // SUPPORTS_CREATE_TABLE_WITH_GENERATED_COLUMNS (r19): gates `CREATE
@@ -380,71 +380,51 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog
       TableCatalogCapability.SUPPORT_COLUMN_DEFAULT_VALUE,
       TableCatalogCapability.SUPPORTS_CREATE_TABLE_WITH_GENERATED_COLUMNS)
 
-  /** `ALTER TABLE` on commit-log tables (r14): three statement shapes
-    * compile onto the audited metadata verbs — `ADD CONSTRAINT name
-    * CHECK (…)` → [[CommitLog.addConstraint]] (validates existing data,
-    * then every write verb enforces), `DROP CONSTRAINT` →
-    * [[CommitLog.dropConstraint]], and `ADD COLUMNS` →
-    * [[CommitLog.evolveSchema]] (metadata-only additive widening;
-    * existing rows read the new column as typed NULL). Anything else —
-    * non-CHECK constraint kinds, NOT ENFORCED, renames/retypes/drops,
-    * positioned or defaulted columns — refuses loudly: the verbs cannot
-    * reproduce those semantics exactly. Index/ivf tables stay fixed. */
+  /** `ALTER TABLE` on commit-log tables compiles onto the audited
+    * metadata verbs: `ADD CONSTRAINT name CHECK (…)` →
+    * [[CommitLog.addConstraint]] (validates existing data, then every
+    * write verb enforces), `DROP CONSTRAINT` → [[CommitLog.dropConstraint]],
+    * `ADD COLUMNS` → [[CommitLog.evolveColumns]] (one commit per
+    * statement; existing rows read a new column as typed NULL or its
+    * DEFAULT), `CLUSTER BY` → [[CommitLog.setClusterBy]], and `RENAME
+    * COLUMN`, `DROP COLUMN` and `ALTER COLUMN … TYPE` →
+    * [[CommitLog.renameColumn]], [[CommitLog.dropColumn]] and
+    * [[CommitLog.widenColumnType]], each addressed by the column's field
+    * path. Anything else — non-CHECK constraint kinds, NOT ENFORCED,
+    * positioned columns, unsafe retypes — refuses loudly: the verbs
+    * cannot reproduce those semantics exactly. Index/ivf tables stay
+    * fixed. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table =
     readMeta(ident) match {
       case Some((CommitLogProvider, loc, declaredDDL)) =>
         val spark = org.apache.spark.sql.SparkSession.active
         // a SQL-created table may have NO commits yet; metadata verbs
         // need a head, so bootstrap the same empty create commit the
-        // constraint-declaring CREATE TABLE materializes (code review
-        // r14 close: ALTER before the first INSERT is a valid workflow)
+        // constraint-declaring CREATE TABLE materializes (ALTER before
+        // the first INSERT is a valid workflow)
         def materialize(): Unit = declaredDDL match {
           case Some(ddl) =>
             materializeIfEmpty(spark, loc, StructType.fromDDL(ddl))
           case None => () // commits exist, or addConstraint's own
                           // empty-table error is the right message
         }
-        // ONE statement = one evolution commit: all AddColumn changes —
-        // top-level AND nested (r17 / ADVICE r17) — batch into a single
-        // CommitLog.evolveColumns, which validates every name and path
-        // against the head before claiming, so a failing column never
-        // leaves half the statement committed. Nested `ADD COLUMNS
-        // (s.f T)` rewrites nothing (parquet's clipped read fills the
-        // missing nested field with typed NULL, or its recorded
-        // DEFAULT — r19). No FIRST/AFTER, nullable only.
-        val nestedCols = changes.collect {
-          case add: TableChange.AddColumn if add.fieldNames().length > 1 =>
-            require(add.position() == null,
-              "graft.commitlog ADD COLUMNS appends at the end — FIRST/" +
-                "AFTER would reorder committed parquet")
-            require(add.isNullable,
-              "graft.commitlog ADD COLUMNS adds NULLABLE fields — " +
-                "existing rows hold no value for them")
-            // nested DEFAULT (r19 — VERDICT r18 #3): recorded under the
-            // dot-joined path; pre-evolution dirs read the constant
-            // wherever the parent struct exists (the withField rebuild,
-            // 'defaults-nested'-gated)
-            (add.fieldNames().init.toSeq,
-              org.apache.spark.sql.types.StructField(
-                add.fieldNames().last, add.dataType(), nullable = true),
-              Option(add.defaultValue()).map(_.getSql()))
-        }
-        val addedCols = changes.collect {
-          case add: TableChange.AddColumn if add.fieldNames().length == 1 =>
+        // ONE statement = one evolution commit: every AddColumn, top-level
+        // or nested, goes into a single CommitLog.evolveColumns, which
+        // validates every name and path against the head before claiming,
+        // so a failing column never leaves half the statement committed.
+        // No FIRST/AFTER, nullable only. A DEFAULT is recorded as an
+        // existence default under the field's dot-joined path.
+        val addedCols = changes.collect { case add: TableChange.AddColumn =>
           require(add.position() == null,
             "graft.commitlog ADD COLUMNS appends at the end — FIRST/" +
               "AFTER would reorder committed parquet")
           require(add.isNullable,
             "graft.commitlog ADD COLUMNS adds NULLABLE columns — " +
               "existing rows hold no value for them")
-          // DEFAULT (r16 — VERDICT r15 #5): recorded as an EXISTENCE
-          // default — pre-evolution dirs read the constant (their
-          // typed-NULL fill coalesces); post-evolution writes store
-          // explicit values. The SQL text is validated by evolveSchema
-          // (deterministic constant, castable) before anything commits.
-          val default = Option(add.defaultValue()).map(_.getSql())
-          (org.apache.spark.sql.types.StructField(
-            add.fieldNames()(0), add.dataType(), nullable = true), default)
+          (add.fieldNames().init.toSeq,
+            org.apache.spark.sql.types.StructField(
+              add.fieldNames().last, add.dataType(), nullable = true),
+            Option(add.defaultValue()).map(_.getSql()))
         }
         changes.foreach {
           case ac: TableChange.AddConstraint => ac.constraint match {
@@ -464,8 +444,8 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog
             if (exists || !dc.ifExists)
               CommitLog.dropConstraint(spark, loc, "catalog", dc.name())
           case _: TableChange.AddColumn => () // batched below
-          // ALTER TABLE … CLUSTER BY (cols) / CLUSTER BY NONE (r16 —
-          // VERDICT r15 #3): record/clear the declared clustering spec
+          // ALTER TABLE … CLUSTER BY (cols) / CLUSTER BY NONE:
+          // record/clear the declared clustering spec
           // the argument-less compact cadence maintains
           case cb: TableChange.ClusterBy =>
             val cols = cb.clusteringColumns().toSeq.map { r =>
@@ -477,98 +457,66 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog
             }
             materialize()
             CommitLog.setClusterBy(spark, loc, "catalog", cols)
-          // RENAME / DROP COLUMN via column mapping (r16 — VERDICT r15
-          // #2): one metadata commit each, zero data rewritten — the
-          // logical name re-points at (or leaves) its frozen physical
+          // RENAME / DROP COLUMN through column mapping and ALTER COLUMN
+          // TYPE (safe widenings): one metadata commit each, zero data
+          // rewritten, at top level or at any depth
           case rn: TableChange.RenameColumn =>
             materialize()
-            // nested paths (r18 — VERDICT r17 #3) take the path-keyed
-            // mapping verb; top-level keeps the r16 column verb
-            if (rn.fieldNames().length == 1)
-              CommitLog.renameColumn(spark, loc, "catalog",
-                rn.fieldNames()(0), rn.newName())
-            else CommitLog.renameStructField(spark, loc, "catalog",
+            CommitLog.renameColumn(spark, loc, "catalog",
               rn.fieldNames().toSeq, rn.newName())
           case del: TableChange.DeleteColumn =>
             materialize()
-            if (del.fieldNames().length == 1) {
-              val exists = CommitLog.readLatest(spark, loc)
-                .exists(_.schema.fieldNames.contains(del.fieldNames()(0)))
-              if (exists || del.ifExists() == null || !del.ifExists())
-                CommitLog.dropColumn(spark, loc, "catalog",
-                  del.fieldNames()(0))
-            } else CommitLog.dropStructField(spark, loc, "catalog",
-              del.fieldNames().toSeq)
-          // ALTER COLUMN … TYPE (r18 — VERDICT r17 #4): safe widenings
-          // only, one metadata commit, old dirs read through parquet's
-          // lossless read-side promotion
+            val path = del.fieldNames().toSeq
+            val exists = CommitLog.readLatest(spark, loc).exists { df =>
+              val parent = path.init.foldLeft(Option(df.schema)) { (st, seg) =>
+                st.flatMap(_.fields.find(_.name == seg)).map(_.dataType)
+                  .collect { case s: StructType => s } }
+              parent.exists(_.fieldNames.contains(path.last))
+            }
+            if (exists || del.ifExists() == null || !del.ifExists())
+              CommitLog.dropColumn(spark, loc, "catalog", path)
           case ut: TableChange.UpdateColumnType =>
             materialize()
-            if (ut.fieldNames().length == 1)
-              CommitLog.widenColumnType(spark, loc, "catalog",
-                ut.fieldNames()(0), ut.newDataType())
-            else
-              // nested struct fields widen under the same whitelist
-              // (r19 — VERDICT r18 #3), one metadata commit
-              CommitLog.widenStructFieldType(spark, loc, "catalog",
-                ut.fieldNames().toSeq, ut.newDataType())
+            CommitLog.widenColumnType(spark, loc, "catalog",
+              ut.fieldNames().toSeq, ut.newDataType())
           case other => throw new UnsupportedOperationException(
             s"graft.commitlog ALTER TABLE supports ADD/DROP CONSTRAINT, " +
               s"ADD COLUMNS, CLUSTER BY, RENAME COLUMN, DROP COLUMN and " +
               s"ALTER COLUMN TYPE (safe widenings); got $other")
         }
-        require(nestedCols.isEmpty || !GraftCatalog.fromMergeEvolution,
-          "graft.commitlog MERGE schema evolution is top-level " +
-            "additive only — nested source fields need an explicit " +
-            "ALTER TABLE … ADD COLUMNS (s.f T) first")
-        if (addedCols.nonEmpty) {
-          if (GraftCatalog.fromMergeEvolution) {
-            // MERGE … WITH SCHEMA EVOLUTION (r16 — VERDICT r15 #4 /
-            // ADVICE r15): the analyzer's widening is STAGED, not
-            // committed — the merge EXECUTION folds it into its one
-            // row-visible commit (the Delta single-transaction shape),
-            // so an EXPLAINed or subsequently-failing statement leaves
-            // NO commit. The analyzer API carries no provenance, so the
-            // origin is read off the call stack (the rule's class name
-            // is the only signal Spark exposes); explicit `ALTER TABLE
-            // … ADD COLUMNS` keeps its immediate audited commit below.
-            // The staged widening is visible ONLY to the rule's own
-            // re-resolution (loadTable from the same rule) and to the
-            // merge execution via the analyzed table instance — a
-            // lingering entry from an EXPLAIN is invisible to every
-            // other read and simply overwritten by the next evolution.
-            materialize()
-            val headSchema = CommitLog.readLatest(spark, loc).get.schema
-            val headLower = headSchema.fieldNames.map(_.toLowerCase).toSet
-            require(addedCols.forall(_._2.isEmpty),
-              "merge evolution adds source columns — DEFAULT is an " +
-                "ALTER TABLE capability")
-            val fresh = addedCols.map(_._1)
-              .filterNot(f => headLower(f.name.toLowerCase))
-            if (fresh.nonEmpty) GraftCatalog.pendingEvolve.put(loc, fresh)
-          } else {
-            // nested adds fold into the SAME commit (ADVICE r17: the
-            // old shape committed top-level first and then one commit
-            // per parent struct path, so a statement mixing valid and
-            // invalid adds could leave the table half-evolved) —
-            // evolveColumns validates every path before claiming
-            materialize()
-            CommitLog.evolveColumns(spark, loc, "catalog",
-              addedCols.map(_._1),
-              defaults = addedCols.collect {
-                case (f, Some(sql)) => f.name -> sql }.toMap ++
-                nestedCols.collect { case (path, f, Some(sql)) =>
-                  (path :+ f.name).mkString(".") -> sql },
-              nested = nestedCols.groupBy(_._1).toSeq.sortBy(_._1.mkString("."))
-                .map { case (path, fs) => path -> fs.map(_._2) })
-          }
-        } else if (nestedCols.nonEmpty) {
+        if (addedCols.nonEmpty && GraftCatalog.fromMergeEvolution) {
+          require(addedCols.forall(_._1.isEmpty),
+            "graft.commitlog MERGE schema evolution is top-level " +
+              "additive only — nested source fields need an explicit " +
+              "ALTER TABLE … ADD COLUMNS (s.f T) first")
+          // MERGE … WITH SCHEMA EVOLUTION: the analyzer's widening is
+          // STAGED, not committed — the merge EXECUTION folds it into its
+          // one row-visible commit (the Delta single-transaction shape),
+          // so an EXPLAINed or subsequently-failing statement leaves NO
+          // commit. The analyzer API carries no provenance, so the origin
+          // is read off the call stack (the rule's class name is the only
+          // signal Spark exposes); explicit `ALTER TABLE … ADD COLUMNS`
+          // keeps its immediate audited commit below. The staged widening
+          // is visible ONLY to the rule's own re-resolution (loadTable
+          // from the same rule) and to the merge execution via the
+          // analyzed table instance — a lingering entry from an EXPLAIN
+          // is invisible to every other read and simply overwritten by
+          // the next evolution.
           materialize()
-          CommitLog.evolveColumns(spark, loc, "catalog", Nil,
-            nestedCols.collect { case (path, f, Some(sql)) =>
-              (path :+ f.name).mkString(".") -> sql }.toMap,
-            nestedCols.groupBy(_._1).toSeq.sortBy(_._1.mkString("."))
-              .map { case (path, fs) => path -> fs.map(_._2) })
+          val headSchema = CommitLog.readLatest(spark, loc).get.schema
+          val headLower = headSchema.fieldNames.map(_.toLowerCase).toSet
+          require(addedCols.forall(_._3.isEmpty),
+            "merge evolution adds source columns — DEFAULT is an " +
+              "ALTER TABLE capability")
+          val fresh = addedCols.map(_._2)
+            .filterNot(f => headLower(f.name.toLowerCase))
+          if (fresh.nonEmpty) GraftCatalog.pendingEvolve.put(loc, fresh)
+        } else if (addedCols.nonEmpty) {
+          materialize()
+          CommitLog.evolveColumns(spark, loc, "catalog",
+            addedCols.map { case (p, f, _) => p -> f },
+            addedCols.collect { case (p, f, Some(sql)) =>
+              (p :+ f.name).mkString(".") -> sql }.toMap)
         }
         loadTable(ident)
       case Some(_) => throw new UnsupportedOperationException(

@@ -299,10 +299,10 @@ class PartitionSpec extends SparkSpec {
         Seq("day" -> "CAST(current_date() AS STRING)")) }
     CommitLog.setGeneratedColumns(spark, root3, "w", Seq("b" -> "i % 5"))
     intercept[IllegalArgumentException] { // the generated column itself
-      CommitLog.widenColumnType(spark, root3, "w", "b",
+      CommitLog.widenColumnType(spark, root3, "w", Seq("b"),
         org.apache.spark.sql.types.LongType) }
     intercept[IllegalArgumentException] { // its input
-      CommitLog.widenColumnType(spark, root3, "w", "i",
+      CommitLog.widenColumnType(spark, root3, "w", Seq("i"),
         org.apache.spark.sql.types.LongType) }
   }
 
@@ -526,7 +526,7 @@ class PartitionSpec extends SparkSpec {
         "control: the size estimate alone must NOT broadcast")
       // the count SURVIVES colmap (rename activates the mapping → the
       // V1 DV-aware route) and dv (vectored deletes subtract)
-      CommitLog.renameColumn(spark, root, "w", "nm", "name")
+      CommitLog.renameColumn(spark, root, "w", Seq("nm"), "name")
       CommitLog.delete(spark, root, "w", col("k") >= 32L,
         dvMaxFraction = 0.99)
       val h2 = CommitLog.latest(spark, root).get

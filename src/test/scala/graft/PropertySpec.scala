@@ -54,6 +54,68 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("the field-path editor: rename and back is the identity, drop and widen touch only their field, bad paths refuse") {
+    import org.apache.spark.sql.types._
+    import graft.sources.CommitLog.{AddField, DropField, RenameTo, RetypeTo, editPath}
+    // nested schemas up to three levels: int, float and string leaves,
+    // struct children; fields f0..f3 per struct
+    def structGen(depth: Int): Gen[StructType] =
+      Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n,
+        if (depth >= 3) Gen.oneOf(IntegerType, FloatType, StringType)
+        else Gen.frequency(3 -> Gen.oneOf(IntegerType, FloatType, StringType),
+          2 -> Gen.lzy(structGen(depth + 1)))))
+        .map(ts => StructType(ts.zipWithIndex.map { case (t, i) =>
+          StructField(s"f$i", t) }))
+    def paths(st: StructType): Seq[Seq[String]] = st.fields.toSeq.flatMap { f =>
+      Seq(f.name) +: (f.dataType match {
+        case s: StructType => paths(s).map(f.name +: _)
+        case _ => Nil
+      })
+    }
+    def typeAt(st: StructType, p: Seq[String]): DataType =
+      p.tail.foldLeft(st(p.head).dataType) {
+        case (s: StructType, seg) => s(seg).dataType
+        case (t, _) => t
+      }
+    def refuses(body: => Any): Unit = intercept[IllegalArgumentException](body)
+    samples(structGen(1), 40).foreach { st =>
+      paths(st).foreach { p =>
+        val renamed = editPath(st, p, RenameTo("renamed"))
+        assert(paths(renamed).contains(p.init :+ "renamed"))
+        assert(editPath(renamed, p.init :+ "renamed", RenameTo(p.last)) == st)
+        val siblings = if (p.size == 1) st else typeAt(st, p.init)
+        if (siblings.asInstanceOf[StructType].length > 1)
+          assert(paths(editPath(st, p, DropField)) ==
+            paths(st).filterNot(_.startsWith(p)))
+        else refuses(editPath(st, p, DropField))
+        val wider = typeAt(st, p) match {
+          case IntegerType => Some(LongType)
+          case FloatType => Some(DoubleType)
+          case _ => None
+        }
+        wider match {
+          case Some(w) =>
+            val widened = editPath(st, p, RetypeTo(w))
+            assert(paths(widened) == paths(st))
+            paths(st).filterNot(q => typeAt(st, q).isInstanceOf[StructType])
+              .foreach(q => assert(typeAt(widened, q) ==
+                (if (q == p) w else typeAt(st, q))))
+          case None => refuses(editPath(st, p, RetypeTo(BinaryType)))
+        }
+        refuses(editPath(st, p.init :+ "missing", DropField))
+        refuses(editPath(st, p, RenameTo(p.last.toUpperCase)))
+        typeAt(st, p) match {
+          case _: StructType =>
+            assert(paths(editPath(st, p, AddField(StructField("added", LongType))))
+              .contains(p :+ "added"))
+          case _ =>
+            refuses(editPath(st, p :+ "x", DropField))
+            refuses(editPath(st, p, AddField(StructField("x", LongType))))
+        }
+      }
+    }
+  }
+
   test("filter commutes with projection on disjoint columns") {
     import spark.implicits._
     samples(Gen.listOfN(30, Gen.zip(Gen.chooseNum(0L, 50L), Gen.alphaStr.map(_.take(5)))), 8)

@@ -106,7 +106,7 @@ class StreamingSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-incr-out").toString
     val ckpt = Files.createTempDirectory("graft-incr-ckpt").toString
     val all = splitEventsIntoChunks(6)
-    val parts = new java.io.File(all).listFiles()
+    val parts = new java.io.File(all).listFiles().toSeq
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     def arrive(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
       Files.copy(f.toPath, java.nio.file.Paths.get(src, f.getName))
@@ -134,7 +134,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-cl-ckpt").toString
     val root = Files.createTempDirectory("graft-cl-root").toString
     val all = splitEventsIntoChunks(6)
-    val parts = new java.io.File(all).listFiles()
+    val parts = new java.io.File(all).listFiles().toSeq
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     def arrive(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
       Files.copy(f.toPath, java.nio.file.Paths.get(src, f.getName))
@@ -914,7 +914,7 @@ class StreamingSpec extends SparkSpec {
     // and nulling renamed columns)
     val dv = CommitLog.delete(spark, root, "w", col("id") % 50 === 3).get
     assert(dv.dv.nonEmpty, "fixture must land as a vector")
-    CommitLog.renameColumn(spark, root, "w", "v", "w")
+    CommitLog.renameColumn(spark, root, "w", Seq("v"), "w")
     val batches = drainCommitLogTail(root,
       Files.createTempDirectory("graft-clstream-mor-ck").toString)
     assert(batches.size == 1, s"one bootstrap state batch: ${batches.size}")
@@ -965,8 +965,8 @@ class StreamingSpec extends SparkSpec {
     // bare file scan delivered NULL)
     CommitLog.commitAppend(spark, root, "w", "append")(
       Seq((2L, 20L)).toDF("id", "v"))
-    CommitLog.evolveSchema(spark, root, "w",
-      Seq(org.apache.spark.sql.types.StructField("bonus",
+    CommitLog.evolveColumns(spark, root, "w",
+      Seq(Nil -> org.apache.spark.sql.types.StructField("bonus",
         org.apache.spark.sql.types.DoubleType)),
       defaults = Map("bonus" -> "1.5"))
     val inc = drainCommitLogTail(root, ckpt)
@@ -1000,10 +1000,10 @@ class StreamingSpec extends SparkSpec {
     CommitLog.commitAppend(spark, root, "w", "append")(
       Seq((2L, "b")).toDF("id", "st")
         .select(col("id"), struct(col("st")).as("m")))
-    CommitLog.evolveStructFields(spark, root, "w", Seq("m"),
-      Seq(org.apache.spark.sql.types.StructField("tier",
+    CommitLog.evolveColumns(spark, root, "w",
+      Seq(Seq("m") -> org.apache.spark.sql.types.StructField("tier",
         org.apache.spark.sql.types.StringType)),
-      defaults = Map("tier" -> "'std'"))
+      defaults = Map("m.tier" -> "'std'"))
     val inc = drainCommitLogTail(root, ckpt)
     assert(inc.size == 1 && inc.head.size == 1, inc.toString)
     val m = inc.head.head(1).asInstanceOf[org.apache.spark.sql.Row]
