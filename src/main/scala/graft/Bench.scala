@@ -33,7 +33,8 @@ import graft.sources.Json
   *  - `bench_profile.json`: per query, one object per timed rep with its
   *    `build_s` and `write_s` and the [[Profile]] of the rep's jobs
   *    (jobs, stages, tasks, single-task stages, task CPU and run time,
-  *    shuffle and spill bytes). Each rep runs under its own job group.
+  *    shuffle and spill bytes, and `compiles`, the classes the rep
+  *    compiled). Each rep runs under its own job group.
   *  - At the end, a `BENCH_JSON: ` line with the full result.
   *  - The last stdout line is bare JSON printed by a shutdown hook, so it
   *    comes last on a normal exit and, best effort, on SIGTERM: the full
@@ -151,7 +152,7 @@ object Bench {
             "task_cpu_s" -> r3(p.taskCpuS), "task_run_s" -> r3(p.taskRunS),
             "shuffle_read_bytes" -> p.shuffleReadBytes,
             "shuffle_write_bytes" -> p.shuffleWriteBytes,
-            "spill_bytes" -> p.spillBytes)
+            "spill_bytes" -> p.spillBytes, "compiles" -> p.compiles)
         } catch { case _: Throwable =>
           failed = true
           times += (System.nanoTime() - t0) / 1e9

@@ -16,8 +16,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       RollingFingerprint.builder))
     ext.injectFunction((BpeTokenCount.identifier, BpeTokenCount.info,
       BpeTokenCount.builder))
-    // r19 optimization round: fused JVM replacements for interpreted
-    // HOF pipelines on the IVF-probe and repetition-score hot paths
+    // fused JVM replacements for interpreted higher-order-function
+    // pipelines on the IVF-probe and repetition-score paths
     ext.injectFunction((NearestCells.identifier, NearestCells.info,
       NearestCells.builder))
     ext.injectFunction((GramMaxCount.identifier, GramMaxCount.info,
@@ -30,11 +30,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((BloomOps.mightIdentifier, BloomOps.mightInfo,
       BloomOps.mightBuilder))
     ext.injectPlannerStrategy(_ => AsOfStrategy)
-    // SQL UPDATE / MERGE INTO on commit-log catalog tables (r14): runs
+    // SQL UPDATE / MERGE INTO on commit-log catalog tables: runs
     // before Spark's BasicOperators, which otherwise rejects both
     ext.injectPlannerStrategy(_ => RowLevelSqlStrategy)
     ext.injectOptimizerRule(_ => PushFilterThroughAsOf)
-    // NOTE: RestoreV1ScanStatistics (r19) is NOT injectable here — every
+    // NOTE: RestoreV1ScanStatistics is NOT injectable here — every
     // extensions hook (optimizer rule, pre-CBO) runs BEFORE the V2
     // push-down batch that creates the V1ScanWrapper it rewrites; it
     // installs as experimental.extraOptimizations ("User Provided

@@ -20,6 +20,24 @@ object GraftSession {
   private[graft] val LocalFsKey = "fs.file.impl"
   private[graft] val LocalFsClass = classOf[GraftLocalFileSystem].getName
 
+  /** Entries of Spark's compiled-class cache
+    * (`spark.sql.codegen.cache.maxEntries`), sized so that every class the
+    * declared queries generate is compiled once per JVM, not once per
+    * execution. At Spark's default of 100 the 16 queries of one benchmark
+    * pass (about 205 distinct classes) evict each other, and every
+    * execution compiles its code again.
+    *
+    * Contract: the cache is one LRU per JVM. It is a static SQL conf that
+    * Spark reads when its code generator first loads, so the first session
+    * that generates code fixes the size for the life of the JVM, and a
+    * later session's setting has no effect.
+    *
+    * Measured over all 215 declared queries on 4 cores: 2,366 distinct
+    * classes at sf0.01 and 2,378 at sf0.1. Holding the 2,366 costs about
+    * +16 MB of Metaspace, +3 MB of compressed class space and +8 MB of
+    * code heap; a full cache, scaled linearly, about 1.7 times that. */
+  private[graft] val CodegenCacheEntries = 4096
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -40,12 +58,13 @@ object GraftSession {
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config(s"spark.hadoop.$LocalFsKey", LocalFsClass)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
 
   def local(cpus: Int): SparkSession =
     install(builder(s"local[$cpus]", cpus).getOrCreate())
 
   /** Post-create installation for the one hook the extensions API cannot
-    * reach (r19): `experimental.extraOptimizations` runs as the LAST
+    * reach: `experimental.extraOptimizations` runs as the LAST
     * optimizer batch ("User Provided Optimizers") — the only injection
     * point sequenced AFTER the V2 push-down batch that creates the
     * V1ScanWrapper [[graft.plans.RestoreV1ScanStatistics]] rewrites

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 
@@ -11,10 +12,13 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
   * order; a stage skipped because its shuffle output was reused is not
   * counted. Shuffle read sums local and remote bytes; spill sums the
   * memory and disk sizes of spilled data, as Spark's stage metrics report
-  * them. */
+  * them. `compiles` is the number of Janino compilations of generated code
+  * made while the code ran, a miss of Spark's compiled-class cache each.
+  * Unlike the other counters it is JVM-wide, not scoped to the job group:
+  * compilations by other threads meanwhile are counted too. */
 final case class ExecProfile(jobs: Int, stageTasks: Seq[Int],
     taskRunS: Double, taskCpuS: Double, shuffleReadBytes: Long,
-    shuffleWriteBytes: Long, spillBytes: Long) {
+    shuffleWriteBytes: Long, spillBytes: Long, compiles: Long) {
   def stages: Int = stageTasks.size
   def tasks: Int = stageTasks.sum
   def singleTaskStages: Int = stageTasks.count(_ == 1)
@@ -35,15 +39,21 @@ object Profile {
     val l = new Counters(s"graft-profile-${java.util.UUID.randomUUID()}")
     sc.addSparkListener(l)
     sc.setJobGroup(l.group, "graft.Profile")
+    val compiles0 = compileCount
     try {
       val r = body
       GraftBridge.drainListenerBus(sc)
-      (r, l.profile)
+      (r, l.profile(compileCount - compiles0))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
     }
   }
+
+  /** Janino compilations in this JVM so far: the count of Spark's
+    * compile-time histogram, which records one sample per compiled class. */
+  private def compileCount: Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private final case class Stage(tasks: Int, runMs: Long, cpuNs: Long,
       shuffleRead: Long, shuffleWrite: Long, spill: Long)
@@ -71,11 +81,11 @@ object Profile {
           m.memoryBytesSpilled + m.diskBytesSpilled))
     }
 
-    def profile: ExecProfile = {
+    def profile(compiles: Long): ExecProfile = {
       val ss = stages.asScala.toSeq.sortBy(_._1).map(_._2)
       ExecProfile(jobs.get, ss.map(_.tasks), ss.map(_.runMs).sum / 1e3,
         ss.map(_.cpuNs).sum / 1e9, ss.map(_.shuffleRead).sum,
-        ss.map(_.shuffleWrite).sum, ss.map(_.spill).sum)
+        ss.map(_.shuffleWrite).sum, ss.map(_.spill).sum, compiles)
     }
   }
 }

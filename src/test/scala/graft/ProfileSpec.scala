@@ -53,6 +53,21 @@ class ProfileSpec extends SparkSpec {
     assert(p.jobs == 1 && p.stageTasks == Seq(2))
   }
 
+  test("compiles counts the classes compiled for the body") {
+    val frame = spark.range(0, 100, 1, 2).selectExpr("id * 3 + 1 AS x")
+      .filter("x % 5 = 0")
+    Profile.of(spark)(frame.collect())
+    val (again, p) = Profile.of(spark)(frame.collect())
+    assert(again.length == 20)
+    assert(p.compiles == 0)
+    // Spark inlines an integral literal into the generated source, so a
+    // literal this JVM has not seen before makes a new class
+    val k = System.nanoTime()
+    val (_, fresh) = Profile.of(spark)(
+      spark.range(0, 100, 1, 2).selectExpr(s"id * $k AS x").collect())
+    assert(fresh.compiles > 0)
+  }
+
   test("counts are complete when of returns, with no wait") {
     // Query listeners run on the listener bus: this one holds it up after
     // the first action, so the grouped plan's events are still queued
